@@ -304,9 +304,10 @@ object CurationPipeline {
   // still counted exactly against the DISTINCT eval set, so the result
   // is exact at any FP rate (no false negatives). The eval set is left
   // to AQE rather than force-broadcast: here eval = 20% of the corpus,
-  // which grows with the data — the r5 lesson on unbounded-cardinality
-  // broadcast hints; c14 is the fixed-benchmark variant where the
-  // broadcast claim is real (and pinned).
+  // which grows with the data, and a broadcast hint on an
+  // unbounded-cardinality side breaks at scale; c14 is the
+  // fixed-benchmark variant where the broadcast claim is real (and
+  // pinned).
   // ---------------------------------------------------------------------
 
   /** Bloom sizing for the eval shingle set: 2^22 expected items at
@@ -319,11 +320,11 @@ object CurationPipeline {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, ScalarSubquery}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     import org.apache.spark.sql.graft.Bridge
-    // loadHeavy (r22): the persisted token cache inherits the scan's
+    // loadHeavy: the persisted token cache inherits the scan's
     // partitioning, and the one-row-group corpus scans as ~3 splits —
-    // so tokenization AND all three shingle-exploding consumers ran
-    // 3-wide on a 32-core box (profiled: a 709 ms 3-task stage with no
-    // shuffle). The adaptive rebalance widens the cache to core count;
+    // so without it tokenization AND all three shingle-exploding
+    // consumers run 3-wide however many cores exist. The adaptive
+    // rebalance widens the cache to core count;
     // no-op at production file counts (Tables.rebalanceStarved ladder).
     val sp = withSplit(Tables.loadHeavy(s, dir, "documents")
       .select(col("doc_id"), col("text")))
@@ -332,19 +333,18 @@ object CurationPipeline {
     // tokenized once per branch, and tokenization dominates at scale.
     // Persist at DOC grain (doc_id, split, toks) — the narrowest frame
     // that kills the recompute — NOT the exploded shingle frame, which
-    // is ~shingle× larger and spills at scale (the r10 c05 regression).
+    // is ~shingle× larger and spills at scale.
     // Each branch re-derives explode(array_distinct(shingles)) from
     // cache; the shingle explode is cheap relative to tokenization.
     // Cleanup is Verify/Bench's per-query clearCache, same as v07.
     val toksDf = sp.select(col("doc_id"), col("split"),
       TextOps.tokens(col("text")).as("toks"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // The eval side is shingled ONCE (r22, guide §1.2 step 1): both the
-    // bloom build and the exact join probe read the persisted DISTINCT
-    // eval shingle set — previously each re-exploded the eval corpus
-    // from the token cache, and the two eval passes were the heaviest
-    // stages of the profile after the train probe (91 s + 47 s of task
-    // time at sf0.1/32c). A bloom over the distinct set is the same
+    // The eval side is shingled ONCE: both the bloom build and the exact
+    // join probe read the persisted DISTINCT eval shingle set instead of
+    // each re-exploding the eval corpus from the token cache (two
+    // passes that otherwise dominate the profile after the train
+    // probe). A bloom over the distinct set is the same
     // bloom (insertion is idempotent). Persisting here is not a new
     // scale liability: the distinct set is exactly the frame the join
     // already shuffles/holds, MEMORY_AND_DISK spills rather than OOMs,
@@ -358,11 +358,10 @@ object CurationPipeline {
     // aggregate becomes a scalar subquery probed in the train-side scan.
     // (CacheManager substitutes the persisted evalShingles inside the
     // subquery plan too — its execution is what materializes the cache.)
-    // coalesce(16) bounds the bloom's partial fan-in (r22): the final
-    // merge ORs one 4 MiB partial PER INPUT PARTITION on a single task
-    // — cost #partitions × bits at ANY data size (profiled: a 559 ms
-    // one-task stage at 32 partitions, and a 2000-partition cluster
-    // run would OR 8 GB serially). A narrow coalesce keeps inserts
+    // coalesce(16) bounds the bloom's partial fan-in: the final merge
+    // ORs one 4 MiB partial PER INPUT PARTITION on a single task — cost
+    // #partitions × bits at ANY data size (a 2000-partition cluster run
+    // would OR 8 GB serially). A narrow coalesce keeps inserts
     // parallel over 16 tasks while capping the serial merge at
     // 16 × 4 MiB; constant fan-in is the right shape at every scale
     // because the merge cost never depends on row count.
@@ -1315,15 +1314,7 @@ object CurationPipeline {
     * retention counts. */
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: CurationPipeline <sfDir> <outDir>")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus(8))
     val docs = Tables.load(spark, args(0), "documents")
     val kept = qualityFilter(annotate(docs))
     // nearDupDrop persists `deduped` (its fan-in point — persist() marks

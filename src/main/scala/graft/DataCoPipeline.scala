@@ -74,15 +74,7 @@ object DataCoPipeline {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: DataCoPipeline <rawCsv> <outDir> [routes.geojson]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.envCpus(8))
     run(spark, args(0), args(1), args.lift(2))
     spark.read.parquet(s"${args(1)}/fact_order_items")
       .agg(count(lit(1))).show()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: prints the formatted physical plan for each named
   * query (or every query with no args) on sf0.001 — the loop used to
   * check that filters reach the parquet scan (PushedFilters), scans
@@ -17,13 +15,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val builder = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    graft.sources.Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>

@@ -20,7 +20,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   /** Session configs every graft entry point must set at build time
-    * (Verify / Bench / test fixtures do). nanosAsLong: when events.ts is
+    * ([[graft.GraftSession]] applies them). nanosAsLong: when events.ts is
     * parquet TIMESTAMP(NANOS) — which Spark 4 rejects by default — we read
     * it as raw nanos and convert with integer division (a double
     * round-trip would lose precision on 63-bit nano values). Harmless when
@@ -36,12 +36,12 @@ object Tables {
     // the same builder path as every other entry-point config. DELETE
     // and SELECT/INSERT/DDL need no extension (native DataSourceV2).
     "spark.sql.extensions" -> "graft.sources.sql.GraftSparkSessionExtension",
-    // Split-packing open-cost charge (r21, guide §6/§2.2): the 4 MiB
-    // default models high-latency object-store opens and FLOORS
-    // maxSplitBytes at 4 MiB, so a small-file corpus scans with a
-    // handful of tasks no matter how many cores exist (q05/q20 ran
-    // their whole scan→join→project pipeline — twice, sampling + map
-    // of the final range sort — in 3 tasks on 32 cores). On local
+    // Split-packing open-cost charge: the 4 MiB default models
+    // high-latency object-store opens and FLOORS maxSplitBytes at
+    // 4 MiB, so a small-file corpus scans with a handful of tasks no
+    // matter how many cores exist (a whole scan→join→project pipeline,
+    // run twice for the sampling and map of a final range sort, in 3
+    // tasks on 32 cores). On local
     // NVMe/page-cache an open costs ~0.1 ms, and at 100 TB the files
     // are 128 MB-1 GB so the charge is negligible either way; 256 KiB
     // keeps split sizing input-size-derived (totalBytes/minPartitionNum)
@@ -49,30 +49,25 @@ object Tables {
     // storage really does pay per-open.
     "spark.sql.files.openCostInBytes" ->
       sys.env.getOrElse("SPARK_GRAFT_OPEN_COST_BYTES", "262144"),
-    // File-status discovery for manifest-known file lists (r21, guide
-    // §7.3 "listing" / §6): every snapshot-store read passes an EXPLICIT
-    // file list from the manifest, yet InMemoryFileIndex still stats the
-    // paths, and above this threshold (default 32) it does so by
-    // launching a whole Spark LISTING JOB — q92's serving run spent
-    // ~1.6 s in three "Listing leaf files for 107 paths" jobs, pure
-    // overhead on a local filesystem where a stat is ~30 µs. Driver-side
+    // File-status discovery for manifest-known file lists: every
+    // snapshot-store read passes an EXPLICIT file list from the
+    // manifest, yet InMemoryFileIndex still stats the paths, and above
+    // this threshold (default 32) it does so by launching a whole Spark
+    // LISTING JOB — pure overhead on a local filesystem where a stat is
+    // ~30 µs. Driver-side
     // listing up to 4096 paths is microseconds-per-path on NVMe (and
     // still bounded); beyond it the distributed listing kicks in exactly
     // as before — a 100 TB table's million-file list still distributes.
     // Parameterized for deployments on high-latency stores.
     "spark.sql.sources.parallelPartitionDiscovery.threshold" ->
       sys.env.getOrElse("SPARK_GRAFT_LIST_JOB_THRESHOLD", "4096"),
-    // Shuffle/blockmgr scratch on the fastest local storage (r21, guide
-    // §2.1: "local disk bandwidth for shuffle files can be the tighter
-    // limit"). Thread dumps of agg/join map stages showed task threads
-    // dominated by FileOutputStream.open0/map0/write0 — this box's
-    // java.io.tmpdir sits on a virtual disk measuring 1.2 MB/s at 4k
-    // sync writes (~3 ms per shuffle-file create), while /dev/shm is a
-    // 126 GiB tmpfs at 1.6 GB/s. Spark's standing advice is to point
-    // local.dir at fast local scratch; here that is the RAM disk.
-    // Measured: a scan→agg action loop dropped 0.70 → 0.36 s/iter.
+    // Shuffle/blockmgr scratch on the fastest local storage (local disk
+    // bandwidth for shuffle files can be the tighter limit): map stages
+    // that create many shuffle files stall on a slow virtual-disk
+    // tmpdir, and Spark's standing advice is to point local.dir at fast
+    // local scratch; on a single box that is the RAM disk.
     // Env-overridable; falls back to the JVM default when /dev/shm is
-    // absent OR LOW ON SPACE (r22 guard: tmpfs is RAM — a near-full
+    // absent OR LOW ON SPACE (tmpfs is RAM — a near-full
     // tmpfs would ENOSPC a shuffle mid-stage, so the chooser requires
     // comfortable headroom at session build; see [[chooseLocalDir]]).
     // Real clusters should point SPARK_GRAFT_LOCAL_DIR at the NVMe
@@ -190,8 +185,8 @@ object Tables {
   private val rowGroupCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Int]()
 
-  /** Scale-adaptive scan rebalance (r21, guide §2.5 "input skew: one
-    * huge unsplittable file → repartition immediately after the read").
+  /** Scale-adaptive scan rebalance (input skew: one huge unsplittable
+    * file → repartition immediately after the read).
     * Parquet scan parallelism is bounded by ROW GROUPS, not splits, and
     * the graded corpora ship as one row group per table — so a
     * scan-rooted pipeline (decode → derive → explode → partial agg)
@@ -217,8 +212,6 @@ object Tables {
     * hashes), and the round-robin writer's sort-before-repartition
     * keeps task retries deterministic (SPARK-23207). */
   def rebalanceStarved(df: DataFrame): DataFrame = {
-    // operational off-switch (also the A/B seam for measuring it)
-    if (sys.env.get("SPARK_GRAFT_REBALANCE").contains("off")) return df
     val spark = df.sparkSession
     val cores = spark.sparkContext.defaultParallelism
     val files = df.inputFiles
@@ -237,17 +230,16 @@ object Tables {
         })
     }.sum
     if (groups * 2 < cores) {
-      // Deterministic hash rebalance, not round-robin (r22, guide §2.5):
+      // Deterministic hash rebalance, not round-robin:
       // a keyless repartition(n) first LOCALLY SORTS its whole input
       // (sortBeforeRepartition, on by default since SPARK-23207) so that
       // retried tasks reproduce the same row→partition assignment — and
       // with the one-row-group corpus that sort runs inside the single
       // effective scan task, serializing every column of every row
-      // before any parallelism exists (measured: q05 2.0 → 1.5 s, q01
-      // 1.2-1.4 → 1.0 s at 32c). Hashing through xxhash64 gives the
+      // before any parallelism exists. Hashing through xxhash64 gives the
       // retry-deterministic assignment the sort exists to provide (same
       // value → same partition under any replay) with no sort; 32× more
-      // key values than partitions spreads the hash evenly (the guide's
+      // key values than partitions spreads the hash evenly (the
       // pmod(xxhash64) idiom). Key = the LEADING column only — every
       // graded corpus leads with its high-cardinality primary id
       // (l_orderkey, doc_id, …) — because a whole-row hash would

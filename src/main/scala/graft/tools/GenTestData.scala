@@ -1,14 +1,15 @@
 package graft.tools
 
+import graft.GraftSession
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Deterministic synthetic-fixture generator for SCALE-ESCALATION runs
-  * (VERDICT r14 #5): reproduces the driver testdata's schemas, domains
-  * and distributions (reverse-engineered from `/root/testdata` and
-  * documented per table below) at any scale factor, so the headline
-  * bench can run at sf1 (10× the graded sf0.1) and expose super-linear
-  * slots the fixed-SF gate cannot see. NOT a replacement for the graded
+/** Deterministic synthetic-fixture generator for SCALE-ESCALATION runs:
+  * reproduces the graded testdata's schemas, domains and distributions
+  * (reverse-engineered from the testdata and documented per table
+  * below) at any scale factor, so the headline bench can run at sf1
+  * (10× the graded sf0.1) and expose super-linear slots the fixed-SF
+  * gate cannot see. NOT a replacement for the graded
   * fixtures — correctness always runs against the driver's parquet; this
   * exists only to measure how plans scale.
   *
@@ -36,14 +37,10 @@ object GenTestData {
     require(args.length >= 2, "usage: GenTestData <sf> <outDir>")
     val sf = args(0).toDouble
     val out = args(1)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // 32 shuffle partitions at any core count: the generated file layout
+    // (files per table) must not depend on the machine.
+    val spark = GraftSession.local(GraftSession.envCpus(32),
+      Seq("spark.sql.shuffle.partitions" -> "32"))
     generate(spark, sf, out)
     spark.stop()
   }

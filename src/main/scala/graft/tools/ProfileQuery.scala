@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.{GraftSession, SlotRunner}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-job profiling harness for one named query (guide §1: measure
   * first). Runs the query untimed once (fixture build + codegen warm),
@@ -17,39 +17,20 @@ object ProfileQuery {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    graft.sources.Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
+    val cpus = GraftSession.envCpus(32)
     // ad-hoc A/B knobs for profiling runs: "k=v;k=v"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val extra = sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
+      .flatMap(_.split(";").filter(_.contains("=")))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    val spark = GraftSession.local(cpus, extra)
     val fn = graft.SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query $name"))
-
-    var lastBuild = 0.0
-    var lastExec = 0.0
-    def runOnce(): Double = {
-      val t0 = System.nanoTime()
-      try {
-        val df = fn(spark, sfDir)
-        val t1 = System.nanoTime()
-        lastBuild = (t1 - t0) / 1e9
-        df.write.format("noop").mode("overwrite").save()
-        lastExec = (System.nanoTime() - t1) / 1e9
-      } finally spark.catalog.clearCache()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def runOnce(): SlotRunner.Timing =
+      SlotRunner.run(spark, fn(_, sfDir))(SlotRunner.noop)
 
     // fixture build + codegen warm (mirrors Bench's untimed pass)
-    val build = runOnce()
-    val warm = runOnce()
+    val build = runOnce().totalS
+    val warm = runOnce().totalS
 
     case class StageRow(wallMs: Long, runMs: Long, gcMs: Long, shRead: Long,
         shWrite: Long, tasks: Int, name: String)
@@ -92,7 +73,7 @@ object ProfileQuery {
     Thread.sleep(500) // let listener events drain
     spark.sparkContext.removeSparkListener(listener)
 
-    println(f"\n=== $name  build=$build%.2f warm=$warm%.2f profiled=$timed%.2f (wall $wall%.2f, frameBuild=$lastBuild%.2f exec=$lastExec%.2f) sf=$sfDir cpus=$cpus ===")
+    println(f"\n=== $name  build=$build%.2f warm=$warm%.2f profiled=${timed.totalS}%.2f (wall $wall%.2f, frameBuild=${timed.buildS}%.2f exec=${timed.sinkS}%.2f) sf=$sfDir cpus=$cpus ===")
     println(f"${"job"}%4s ${"ms"}%7s  description")
     var total = 0L
     jobs.toSeq.sortBy(_._1).foreach { case (id, (s, e, d)) =>

@@ -230,7 +230,7 @@ class GraftSqlSpec extends AnyFunSuite {
     assert(e.getMessage.contains("NOT_SUPPORTED_CHANGE_COLUMN") ||
       e.getMessage.contains("safe widening"), e.getMessage)
 
-    // a multi-change statement is ATOMIC (r18 ADVICE): the second
+    // a multi-change statement is ATOMIC: the second
     // column is refused (retired name), so the first must NOT have
     // durably committed either — all commits or none
     val vBefore = Snapshot.currentVersion(spark, path).get
@@ -278,6 +278,11 @@ class GraftSqlSpec extends AnyFunSuite {
     spark.sql("UPDATE gdml.t SET value = value * 2 WHERE id = 50")
     assert(spark.sql("SELECT value FROM gdml.t WHERE id = 50")
       .collect().head.getDouble(0) == 1000.0)
+    // BETWEEN resolves like its >= AND <= expansion
+    spark.sql("UPDATE gdml.t SET value = value + 1 WHERE id BETWEEN 60 AND 62")
+    assert(spark.sql("SELECT id, value FROM gdml.t WHERE id BETWEEN 59 AND 63")
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq ==
+      Seq((59L, 590.0), (60L, 601.0), (61L, 611.0), (62L, 621.0), (63L, 630.0)))
 
     // DELETE: vector-only — every data file survives the commit
     val before = Snapshot.filesOf(spark, path,
@@ -406,7 +411,7 @@ class GraftSqlSpec extends AnyFunSuite {
     val vBefore = Snapshot.versions(spark, path).size
     spark.sql(
       """MERGE INTO ggm.t AS t USING gm_src AS s ON t.id = s.id
-        |WHEN MATCHED AND s.value < 10
+        |WHEN MATCHED AND s.value BETWEEN 0 AND 9
         |  THEN UPDATE SET value = t.value + s.value
         |WHEN MATCHED THEN DELETE
         |WHEN NOT MATCHED AND s.id % 2 = 1
@@ -415,8 +420,8 @@ class GraftSqlSpec extends AnyFunSuite {
     // updates + deletes + inserts landed as ONE commit
     assert(Snapshot.versions(spark, path).size == vBefore + 1,
       "general MERGE must commit atomically")
-    // id=1: first clause (5 < 10) → partial update, day kept;
-    // id=2: first clause (7 < 10) → 20 + 7; id=3: second clause →
+    // id=1: first clause (5 in 0..9) → partial update, day kept;
+    // id=2: first clause (7 in 0..9) → 20 + 7; id=3: second clause →
     // DELETED; 501: unmatched odd → inserted ×10; 502: unmatched even
     // → no clause applies, dropped
     val got = spark.sql(
@@ -542,8 +547,8 @@ class GraftSqlSpec extends AnyFunSuite {
     val vNow = Snapshot.currentVersion(spark, path).get
 
     // the change feed CROSSES the SQL UPDATE as a typed pre/post pair
-    // sharing the row's durable id — before the r20 property seam, a
-    // SQL-created table had no lineage, so this stream REFUSED here
+    // sharing the row's durable id — the CREATE-time rowids property is
+    // what gives a SQL-created table lineage for this stream to follow
     val out = scala.collection.mutable
       .ArrayBuffer.empty[(Long, String, Double)]
     val q = spark.readStream.format("graft-cdf")

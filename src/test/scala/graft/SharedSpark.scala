@@ -4,23 +4,15 @@ import org.apache.spark.sql.SparkSession
 
 /** One SparkSession shared by every suite (suites may run concurrently —
   * SparkSession is thread-safe; a session per suite would pay JVM-wide
-  * Spark init repeatedly). Config mirrors the Verify entry point. */
+  * Spark init repeatedly). Built like every entry point's session. */
 object SharedSpark {
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 
-  lazy val spark: SparkSession = {
-    val builder = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // saveAsTable target for bucketed-layout tests — keep it out of cwd
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse-dir").toString)
-    graft.sources.Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val s = builder.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** saveAsTable target for bucketed-layout tests — kept out of cwd. */
+  lazy val warehouseDir: String =
+    java.nio.file.Files.createTempDirectory("graft-warehouse-dir").toString
+
+  lazy val spark: SparkSession =
+    GraftSession.local(4, Seq("spark.sql.warehouse.dir" -> warehouseDir))
 }
