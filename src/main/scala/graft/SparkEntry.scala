@@ -31,7 +31,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                             (content-based skipping where min/max is
   *                             useless by construction); q49:
   *                             forget-user graded through the
-  *                             partition-surgical storage delete;
+  *                             snapshot-committed storage delete;
   *                             q55/q58/q60/q61: the snapshot-manifest
   *                             store — forget-user with reader
   *                             isolation, pinned-version time travel

@@ -1196,18 +1196,18 @@ object Analytics {
 
   // ---------------------------------------------------------------------
   // q49 — right-to-be-forgotten, graded end-to-end at the STORAGE layer:
-  // a date-partitioned serving copy is published, user 3's rows are
-  // deleted from it via Sink.deleteWhere (dirty partitions rewritten to
-  // survivors, clean ones physically untouched, ts clustering restored),
-  // and the report is computed from the MUTATED layout — graded against
-  // SQL over the flat table excluding the user. A delete that drops a
+  // a date-partitioned serving copy is published and bootstrapped as a
+  // snapshot, user 3's rows are deleted from it via Snapshot.deleteWhere
+  // (dirty partitions rewritten to survivors, clean ones physically
+  // untouched, ts clustering restored, one manifest commit), and the
+  // report is computed from the MUTATED snapshot — graded against SQL
+  // over the flat table excluding the user. A delete that drops a
   // survivor, misses a partition, or double-rewrites cannot hash-match.
   // q46 grades the same request at the VIEW layer (rollup retraction);
   // together they are the complete forget-user path: storage + derived
   // aggregates. The layout copy is private to this query (its own
   // artifact family) so the mutation never leaks into q41's pristine
-  // date layout; reruns find the deletion already applied (deleteWhere
-  // is idempotent) and pay nothing.
+  // date layout; reruns find nothing dirty and commit nothing.
   // ---------------------------------------------------------------------
   private val ForgottenUser = 3L
 
@@ -1222,9 +1222,10 @@ object Analytics {
         .sortWithinPartitions(col("event_date"), col("ts"))
         .write.partitionBy("event_date").parquet(stg)
     }
-    graft.sources.Sink.deleteWhere(
+    graft.sources.Snapshot.init(s, path, "event_date")
+    graft.sources.Snapshot.deleteWhere(
       s, path, "event_date", col("user_id") === ForgottenUser, Seq("ts"))
-    s.read.parquet(path)
+    graft.sources.Snapshot.readSnapshot(s, path)
       .groupBy(col("event_type"))
       .agg(
         count(lit(1)).as("n_events"),
@@ -1248,11 +1249,11 @@ object Analytics {
        |ORDER BY 1""".stripMargin
 
   // ---------------------------------------------------------------------
-  // q55 — forget-user committed through the SNAPSHOT MANIFEST: the same
-  // right-to-be-forgotten request as q49, but the storage layer is the
-  // reader-isolated store (Snapshot.scala) instead of raw-Hive renames.
-  // The layout is published deliberately OVERSPLIT (several files per
-  // date), so the graded pass exercises the full maintenance cycle:
+  // q55 — forget-user through the full SNAPSHOT maintenance cycle: the
+  // same right-to-be-forgotten request as q49 on the reader-isolated
+  // store (Snapshot.scala), but the layout is published deliberately
+  // OVERSPLIT (several files per date), so the graded pass exercises
+  // the full maintenance cycle:
   // init (manifest bootstrap) → deleteWhere (single-job probe, dirty
   // partitions rewritten to survivors, one atomic commit) → compact
   // (file-count repair, second atomic commit) → report served from

@@ -34,7 +34,7 @@ import org.apache.spark.sql.types._
   * — orders of magnitude below the event count — and the merge shuffles
   * only rollup-grain rows on the grain key. At 100 TB the base rollup
   * partitions by event_date, so a daily delta merge rewrites only the
-  * touched dates (Sink.compactPartitions' surgical-refresh discipline).
+  * touched dates ([[maintainSnapshot]]).
   */
 object MatView {
 
@@ -95,11 +95,11 @@ object MatView {
     * surgical recompute: grains untouched by the deletion keep their
     * rollup row byte-for-byte (never re-read); touched grains are
     * rebuilt from their REMAINING raw rows only — a semi-join-bounded
-    * rescan (at 100 TB: only the touched date partitions, the
-    * compactPartitions pruning), never a full-corpus rebuild. Grains
-    * whose rows are all deleted disappear, matching R(events ∖ deleted)
-    * exactly (MatViewSpec proves row-for-row equality; q46 grades the
-    * served report through the hash gate).
+    * rescan (at 100 TB: only the touched date partitions), never a
+    * full-corpus rebuild. Grains whose rows are all deleted disappear,
+    * matching R(events ∖ deleted) exactly (MatViewSpec proves
+    * row-for-row equality; q46 grades the served report through the
+    * hash gate).
     *
     * `remaining` is the post-deletion raw table (events ∖ deleted) —
     * the caller owns how deletion is expressed (predicate, tombstone
@@ -184,98 +184,28 @@ object MatView {
       |GROUP BY 1
       |ORDER BY 1""".stripMargin
 
-  /** HLL-sketch rollup: per (event_date, event_type), a DataSketches
-    * HLL sketch of the day's user ids plus the algebraic event count.
-    * This is the OTHER production answer to "distinct isn't algebraic":
-    * [[eventPartials]] keeps user_id in the grain for EXACT distincts at
-    * O(|grain|) state; the sketch rollup collapses the user dimension to
-    * a fixed-size mergeable summary — O(|dates × types|) rows of ~KB
-    * sketches — trading ≤2% error for state that no longer grows with
-    * the user population. At 100 TB both coexist: sketches for
-    * interactive dashboards, the exact grain for billing-grade counts.
-    * Sketches union associatively (order-independent), so this rollup
-    * merges/maintains exactly like the exact one. Published once per
-    * corpus fingerprint. */
-  /** Bootstrap a DATE-PARTITIONED rollup store — the physical layout
-    * [[maintainPartitioned]] maintains. Grain includes event_date, so
-    * each `event_date=…` dir holds exactly its own grains: maintenance
-    * is partition-local by construction. */
-  def bootstrapPartitioned(events: DataFrame, path: String): Unit =
-    Sink.overwritePartitioned(eventPartials(events), path, "event_date")
-
-  /** Incremental maintenance against the partitioned store, rewriting
-    * ONLY the dates the delta touches — the claim the scaladoc above
-    * makes, implemented: the delta's partials name their dates; the
-    * store's rows for THOSE dates (a partition-pruned read) merge with
-    * them; `Sink.refreshPartitions` (dynamic overwrite) swaps in just
-    * those partitions. A daily batch carrying yesterday plus a few
-    * late stragglers rewrites a handful of date dirs out of years —
-    * O(touched dates), never O(table) — and untouched partitions keep
-    * their exact physical files (MatViewSpec proves it, plus read-back
-    * ≡ the full-corpus rollup).
-    *
-    * NOT idempotent on its own: re-applying the same delta folds it
-    * twice. The caller must gate each delta behind an applied ledger
-    * (q52's marker; in production a table format's commit log commits
-    * the partition swap and the ledger entry atomically — on a raw
-    * Hive layout a crash between the overwrite and the marker leaves a
-    * window where a rerun double-applies, the same class of gap as
-    * compactPartitions' two-rename swap). */
-  def maintainPartitioned(spark: SparkSession, path: String, delta: DataFrame): Unit = {
-    // partials are used twice (date probe + merge input): pin them so the
-    // delta aggregation runs once, not per consumer
-    val dp = eventPartials(delta).persist()
-    try {
-      // The touched-date set is tiny BY CONSTRUCTION (a daily batch names
-      // yesterday plus a few stragglers), so collect it into a LITERAL
-      // isin filter: the store read then prunes partitions at PLANNING
-      // time and the merge reads O(touched dates) — matching the
-      // O(touched) write below. The previous semi-join form could not be
-      // planning-pruned (the date set was data-derived) and nothing
-      // guaranteed DPP on a plain parquet read, so at 100 TB the merge's
-      // read side scanned every date partition of the store. (VERDICT r14)
-      val dates = dp.select(col("event_date")).distinct()
-        .collect().map(_.getDate(0)).toSeq
-      if (dates.nonEmpty) {
-        val merged = merge(storeSlice(spark, path, dates), dp)
-        // Stage the merged partials OUTSIDE the live partitions before
-        // the dynamic overwrite: reading and rewriting the same path in
-        // one job happens to work (input listing at planning time,
-        // deletes at commit), but a crash during the multi-partition
-        // commit would leave some dates merged and others not WITH the
-        // pre-merge input already gone — unrepairable because the merge
-        // is not idempotent. From the staged copy the refresh can always
-        // be retried. Dot-prefixed: readers and the overwrite's own
-        // listing skip hidden dirs. (ADVICE r14)
-        val stg = new org.apache.hadoop.fs.Path(
-          path, s".staging-maintain-${Sink.procTag}-${java.util.UUID.randomUUID()}")
-        val fs = stg.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        merged.write.parquet(stg.toString)
-        Sink.refreshPartitions(
-          spark.read.parquet(stg.toString), path, "event_date")
-        fs.delete(stg, true): Unit
-      }
-    } finally dp.unpersist(): Unit
-  }
-
-  /** [[maintainPartitioned]] on a SNAPSHOT-MANAGED rollup store — the
-    * version that closes the crash window its raw-Hive sibling
-    * documents: the merged touched-date partials and the applied-delta
-    * ledger entry (`delta=<id>` in the manifest header) commit in ONE
-    * atomic manifest rename via [[Snapshot.replacePartitions]], so
-    * "partition swapped but ledger unwritten" (or vice versa) is not a
-    * reachable state; a crash before the commit leaves only invisible
-    * staged files and a rerun redoes the pass. Replays are detected
-    * from the manifests themselves: a committed version already
-    * carrying this (runId, deltaId) no-ops. A FOREIGN runId against a
-    * store whose maintenance history names a different run fails loudly
-    * (the [[graft.streaming.EventStreams.appendBatchToSnapshot]]
-    * pairing discipline — a lost checkpoint replays deltas from source
-    * start and would double-merge every grain). Readers get snapshot
+  /** Incremental maintenance of a DATE-PARTITIONED, snapshot-managed
+    * rollup store, rewriting ONLY the dates the delta touches: the
+    * delta's partials name their dates; the store's rows for THOSE
+    * dates (a planning-time partition-pruned read) merge with them; the
+    * merged touched-date partials and the applied-delta ledger entry
+    * (`delta=<id>` in the manifest header) commit in ONE atomic
+    * manifest rename via [[Snapshot.replacePartitions]]. A daily batch
+    * carrying yesterday plus a few late stragglers rewrites a handful
+    * of date partitions out of years — O(touched dates), never
+    * O(table). "Partition swapped but ledger unwritten" (or vice versa)
+    * is not a reachable state; a crash before the commit leaves only
+    * invisible staged files and a rerun redoes the pass. Replays are
+    * detected from the manifests themselves: a committed version
+    * already carrying this (runId, deltaId) no-ops. A FOREIGN runId
+    * against a store whose maintenance history names a different run
+    * fails loudly (the
+    * [[graft.streaming.EventStreams.appendBatchToSnapshot]] pairing
+    * discipline — a lost checkpoint replays deltas from source start
+    * and would double-merge every grain). Readers get snapshot
     * isolation during maintenance and time travel to pre-maintenance
-    * versions for free. Same scale shape as maintainPartitioned:
-    * touched-date manifest entries swap, untouched dates' files are
-    * never read or rewritten. */
+    * versions for free; untouched dates' files are never read or
+    * rewritten. */
   def maintainSnapshot(spark: SparkSession, path: String, delta: DataFrame,
       deltaId: Long, runId: Option[String] = None): Unit = {
     // ONE current-manifest read answers both guards at any history depth:
@@ -334,13 +264,6 @@ object MatView {
     }
   }
 
-  /** The maintained store restricted to `dates` as a PLANNING-TIME
-    * partition-pruned read (literal isin over the partition column —
-    * PlanSpec pins the PartitionFilters and the pruned file count). */
-  def storeSlice(spark: SparkSession, path: String,
-      dates: Seq[java.sql.Date]): DataFrame =
-    spark.read.parquet(path).where(col("event_date").isin(dates: _*))
-
   /** Sketch partials of any events frame — [[sketchRollup]]'s build
     * unit and the delta side of [[mergeSketch]]. */
   def sketchPartials(events: DataFrame): DataFrame =
@@ -392,6 +315,18 @@ object MatView {
     untouched.unionByName(patched)
   }
 
+  /** HLL-sketch rollup: per (event_date, event_type), a DataSketches
+    * HLL sketch of the day's user ids plus the algebraic event count.
+    * This is the OTHER production answer to "distinct isn't algebraic":
+    * [[eventPartials]] keeps user_id in the grain for EXACT distincts at
+    * O(|grain|) state; the sketch rollup collapses the user dimension to
+    * a fixed-size mergeable summary — O(|dates × types|) rows of ~KB
+    * sketches — trading ≤2% error for state that no longer grows with
+    * the user population. At 100 TB both coexist: sketches for
+    * interactive dashboards, the exact grain for billing-grade counts.
+    * Sketches union associatively (order-independent), so this rollup
+    * merges/maintains exactly like the exact one. Published once per
+    * corpus fingerprint. */
   def sketchRollup(spark: SparkSession, dir: String): DataFrame = {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     Sink.fingerprintedArtifact(
@@ -525,36 +460,33 @@ object MatView {
       |ORDER BY 1""".stripMargin
 
   // ---------------------------------------------------------------------
-  // q52 — partitioned maintenance graded end-to-end: the rollup store is
-  // BOOTSTRAPPED from the pre-growth corpus (everything up to Jan 23,
-  // minus a held-back straggler sliver of Jan 10), then ONE maintenance
-  // batch lands the realistic daily delta — the tail dates plus the
-  // late-arriving Jan 10 stragglers — via maintainPartitioned, and the
-  // daily report is computed from the MAINTAINED store against raw
-  // full-corpus SQL. A maintenance bug (double-merged date, dropped
-  // straggler, unwritten new partition) cannot hash-match. Idempotence
-  // across reruns comes from an applied-delta marker inside the
-  // fingerprinted store dir — the ledger every incremental system keeps
-  // (a table format's commit log plays this role): a rerun finds the
-  // delta applied and serves, exactly like q49's idempotent delete.
+  // q52 / q59 — partitioned maintenance graded end-to-end: the rollup
+  // store is BOOTSTRAPPED from the pre-growth corpus (everything up to
+  // Jan 23, minus a held-back straggler sliver of Jan 10) as snapshot
+  // v1, then ONE maintenance batch lands the realistic daily delta —
+  // the tail dates plus the late-arriving Jan 10 stragglers — via
+  // maintainSnapshot, and the daily report is computed from the
+  // MAINTAINED store against raw full-corpus SQL. A double-merged date,
+  // dropped straggler, or unwritten partition cannot hash-match. The
+  // applied-delta ledger commits in the same manifest as the data, so
+  // a rerun no-ops off the manifest header and the pre-maintenance
+  // rollup stays time-travelable. The two queries run the same
+  // pipeline, each on its own artifact family.
   // ---------------------------------------------------------------------
-  private def q52(s: SparkSession, dir: String): DataFrame = {
+  private def maintainedRollupReport(s: SparkSession, dir: String,
+      family: String): DataFrame = {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val fp = Sink.corpusFingerprint(s, s"$dir/events.parquet")
-    val root = s"${Sink.artifactRoot}/events_rollup_part/$tag/fp_$fp"
+    val root = s"${Sink.artifactRoot}/$family/$tag/fp_$fp"
     val events = Tables.load(s, dir, "events")
       .withColumn("d", to_date(col("ts")))
     val late = col("d") === "2024-01-10" && pmod(col("event_id"), lit(5)) === 0
     val isDelta = col("d") > "2024-01-23" || late
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(root, "_DELTA_APPLIED_1")
-    if (!fs.exists(marker)) {
-      bootstrapPartitioned(events.where(!isDelta).drop("d"), root)
-      maintainPartitioned(s, root, events.where(isDelta).drop("d"))
-      fs.create(marker, true).close()
-    }
-    s.read.parquet(root)
+    // delta 0 bootstraps the empty store, delta 1 is the maintenance
+    // batch; on a rerun the ledger marks both applied and each call no-ops
+    maintainSnapshot(s, root, events.where(!isDelta).drop("d"), deltaId = 0L)
+    maintainSnapshot(s, root, events.where(isDelta).drop("d"), deltaId = 1L)
+    Snapshot.readSnapshot(s, root)
       .groupBy(col("event_date"))
       .agg(
         sum(col("n_events")).as("n_events"),
@@ -666,49 +598,6 @@ object MatView {
         sum(col("n_events")).as("n_events"),
         count_distinct(col("user_id")).as("n_users"),
         count_distinct(col("event_type")).as("n_types"),
-        min(col("min_event")).as("min_event"),
-        max(col("max_event")).as("max_event"),
-        sum(col("sum_value")).cast(DoubleType).as("total_value"))
-      .orderBy(col("event_date"))
-  }
-
-  // ---------------------------------------------------------------------
-  // q59 — q52's maintained-store lifecycle moved onto the SNAPSHOT
-  // manifest (maintainSnapshot above): same cohorts (pre-growth
-  // bootstrap = everything to Jan 23 minus a held-back Jan-10 straggler
-  // sliver; one maintenance batch lands the tail dates + stragglers),
-  // same daily report, same raw full-corpus oracle VERBATIM — but the
-  // applied-delta ledger is IN the commit, not a sidecar marker, so the
-  // crash window q52's comment documents ("a rerun double-applies if we
-  // die between overwrite and marker") is structurally gone, reruns
-  // no-op off the manifest header, and the pre-maintenance rollup stays
-  // time-travelable. A double-merged date, dropped straggler, or
-  // unwritten partition cannot hash-match.
-  // ---------------------------------------------------------------------
-  private def q59(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val fp = Sink.corpusFingerprint(s, s"$dir/events.parquet")
-    val root = s"${Sink.artifactRoot}/events_rollup_snap/$tag/fp_$fp"
-    val events = Tables.load(s, dir, "events")
-      .withColumn("d", to_date(col("ts")))
-    val late = col("d") === "2024-01-10" && pmod(col("event_id"), lit(5)) === 0
-    val isDelta = col("d") > "2024-01-23" || late
-    if (Snapshot.currentVersion(s, root).isEmpty) {
-      val p = new org.apache.hadoop.fs.Path(root)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true): Unit
-      eventPartials(events.where(!isDelta).drop("d"))
-        .repartition(col("event_date"))
-        .sortWithinPartitions(col("event_date"), col("event_type"), col("user_id"))
-        .write.partitionBy("event_date").parquet(root)
-      Snapshot.init(s, root, "event_date"): Unit
-    }
-    maintainSnapshot(s, root, events.where(isDelta).drop("d"), deltaId = 1L)
-    Snapshot.readSnapshot(s, root)
-      .groupBy(col("event_date"))
-      .agg(
-        sum(col("n_events")).as("n_events"),
-        count_distinct(col("user_id")).as("n_users"),
         min(col("min_event")).as("min_event"),
         max(col("max_event")).as("max_event"),
         sum(col("sum_value")).cast(DoubleType).as("total_value"))
@@ -1345,15 +1234,16 @@ object MatView {
     QueryDef("q46_rollup_retraction", q46, Some(q46Sql)),
     QueryDef("q48_sketch_distinct_rollup", q48, Some(q48Sql)),
     QueryDef("q50_growth_accounting", q50, Some(q50Sql)),
-    QueryDef("q52_maintained_rollup_serving", q52, Some(q52Sql)),
+    QueryDef("q52_maintained_rollup_serving",
+      maintainedRollupReport(_, _, "events_rollup_part"), Some(q52Sql)),
     QueryDef("q56_sketch_retraction", q56, Some(q56Sql)),
     // oracle = q44's SQL VERBATIM: the feed-driven merge must reproduce
     // the full-corpus daily report exactly — that hash match IS the
     // "change feed ≡ the delta" proof
     QueryDef("q57_snapshot_change_feed", q57, Some(q44Sql), headline = true),
-    // oracle = q52's SQL VERBATIM: the manifest-committed maintenance
-    // must reproduce the raw full-corpus daily report exactly
-    QueryDef("q59_snapshot_maintained_rollup", q59, Some(q52Sql)),
+    // q52's pipeline and oracle on a second artifact family
+    QueryDef("q59_snapshot_maintained_rollup",
+      maintainedRollupReport(_, _, "events_rollup_snap"), Some(q52Sql)),
     // oracle = q44's SQL VERBATIM: the consumer-maintained downstream
     // must reproduce the full-corpus daily report exactly — bootstrap,
     // two deltas, and the rewrite-crossing re-sync all hash-graded

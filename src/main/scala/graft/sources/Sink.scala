@@ -213,88 +213,6 @@ object Sink {
   def overwritePartitioned(df: DataFrame, path: String, partitionCol: String): Unit =
     df.write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(path)
 
-  /** Surgical partition refresh (dynamic partition overwrite): replaces
-    * ONLY the partitions present in `df`, leaving every other
-    * partition's files physically untouched — the 100 TB daily-refresh
-    * idiom for a date-partitioned table, where rewriting the whole
-    * layout to land one day (static Overwrite's behavior) would cost a
-    * full-table write per day. SourcesSpec proves untouched partitions
-    * keep their exact files. */
-  def refreshPartitions(df: DataFrame, path: String, partitionCol: String): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol).parquet(path)
-
-  /** Freeze a RETIRED streaming file-sink output into a plain Hive
-    * layout by removing the sink's `_spark_metadata` transaction log.
-    * While the log exists it is the authoritative file listing — root
-    * reads consult it instead of the directory, so
-    * [[compactPartitions]]' renames would dangle (the log still names
-    * the replaced files) and externally-landed files are invisible.
-    * Once removed, the directory is exactly an [[overwritePartitioned]]
-    * layout: partition-pruned reads, [[refreshPartitions]] and
-    * [[compactPartitions]] all apply. One-way door — the retired
-    * stream's checkpoint can no longer append here; resuming ingest
-    * means a fresh sink dir. A table format (Delta/Iceberg) subsumes
-    * both roles in one commit log and removes the hand-off entirely. */
-  def freezeFileSinkOutput(spark: SparkSession, path: String): Unit = {
-    val meta = new org.apache.hadoop.fs.Path(path, "_spark_metadata")
-    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(meta, true): Unit
-  }
-
-  /** Small-file compaction for a Hive-partitioned layout — the
-    * maintenance half of the partitioned-serving story: incremental /
-    * streaming ingest ([[refreshPartitions]], `writeStream`) lands each
-    * micro-batch as its own files, and at 100 TB a hot partition
-    * accumulates thousands of KB-scale files whose open/footer/seek
-    * overhead dominates scans and whose per-file row groups defeat
-    * min/max skipping. A partition whose file count exceeds its
-    * bin-packed target ceil(bytes/targetBytes) is rewritten toward that
-    * many files — every oversplit partition in ONE distributed job,
-    * range-partitioned on (partition, `sortCols`) so compaction
-    * RESTORES the clustering contract (tight per-file min/max) instead
-    * of merely merging, then swapped in via rename (constant Spark
-    * jobs whether the sweep touches 3 partitions or 3,650). Partitions
-    * already at target are not read, not rewritten, not touched (their
-    * exact files survive — proven in SourcesSpec).
-    *
-    * Atomicity: the rewrite stages to a hidden dir (readers skip it),
-    * then partition-dir swap is two renames (old→trash, staged→live);
-    * a reader listing in that window can miss the partition briefly —
-    * the raw-Hive-layout limit. A table format (Delta/Iceberg) closes
-    * it by committing the same file swap as a metadata snapshot; the
-    * FILE mechanics modeled here are identical.
-    *
-    * Returns (partition name, files before, files after) per compacted
-    * partition. */
-  /** One RECURSIVE listing of a Hive layout's data files, grouped by
-    * top-level `partitionCol=` dir: (partition path, its data files).
-    * The maintenance probes below share it so discovery is a constant
-    * number of filesystem calls (one paged LIST) regardless of partition
-    * count — at 10 years of daily partitions the previous one-listStatus-
-    * per-partition loop was ~3,650 sequential namenode round-trips before
-    * any real work. Hidden entries (`_SUCCESS`, `.staging-*`, trash) are
-    * excluded, as are files under hidden subdirs. */
-  private def partitionDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, partitionCol: String)
-      : Seq[(org.apache.hadoop.fs.Path, Seq[org.apache.hadoop.fs.FileStatus])] = {
-    val qualified = fs.makeQualified(root)
-    val byPart = scala.collection.mutable.LinkedHashMap
-      .empty[org.apache.hadoop.fs.Path, scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.FileStatus]]
-    walkFiles(fs, qualified).foreach { f =>
-      val name = f.getPath.getName
-      val parent = f.getPath.getParent
-      if (f.isFile && !name.startsWith("_") && !name.startsWith(".") &&
-          parent != null && parent.getParent == qualified &&
-          parent.getName.startsWith(s"$partitionCol="))
-        byPart.getOrElseUpdate(parent,
-          scala.collection.mutable.ArrayBuffer.empty) += f
-    }
-    byPart.toSeq.map { case (p, fsq) => (p, fsq.toSeq) }
-      .sortBy(_._1.getName)
-  }
-
   /** Maintenance-internal read of a partitioned layout with the
     * partition column typed STRING — the raw (unescaped) dir value, no
     * partition-type inference. Inference would turn dir
@@ -310,7 +228,7 @@ object Sink {
     // a snapshot layout passes its RECORDED data schema: after schema
     // evolution a single sampled file may predate a column, and
     // inferring from it would silently drop that column from every
-    // rewritten row. A RAW-Hive layout has no recorded schema, so the
+    // rewritten row. A legacy manifest records no schema, so the
     // rewrite must UNION the planned files' schemas (mergeSchema —
     // distributed footer reads over files the rewrite reads anyway):
     // per-partition schema drift then survives the rewrite as NULLs in
@@ -441,9 +359,9 @@ object Sink {
     // column — if the two disagree (a value that does not round-trip
     // Spark's partition-type inference, e.g. dir "event_date=01"
     // inferred as int 1), routing silently misfiles the partition and
-    // the caller's staged-dir swap could destroy it. Fail the STAGING
-    // write instead, before anything destructive: a row matching no
-    // route entry aborts the job with the offending value named.
+    // the caller's commit could drop its rows. Fail the STAGING write
+    // instead, before anything is committed: a row matching no route
+    // entry aborts the job with the offending value named.
     val guardedOff = when(col("__goff").isNull,
       raise_error(concat(
         lit(s"partition value not in the rewrite plan (dir-name vs " +
@@ -465,191 +383,6 @@ object Sink {
     spark.createDataFrame(routed, schema)
       .sortWithinPartitions(keys: _*)
       .drop("__gidx")
-  }
-
-  def compactPartitions(spark: SparkSession, path: String, partitionCol: String,
-                        targetBytes: Long, sortCols: Seq[String] = Nil)
-      : Seq[(String, Int, Int)] = {
-    require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // probe = ONE recursive listing, no Spark jobs: file counts and byte
-    // sizes decide compaction without reading any data
-    val plan = partitionDataFiles(fs, root, partitionCol).flatMap {
-      case (partPath, dataFiles) =>
-        val bytes = dataFiles.map(_.getLen).sum
-        val nTarget = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-        if (dataFiles.size > nTarget)
-          Some((partPath, dataFiles.size, nTarget,
-            dataFiles.head.getPath.toString))
-        else None
-    }
-    if (plan.isEmpty) return Seq.empty
-    // ONE rewrite job for every oversplit partition, each landing at
-    // its exact bin-packed file target (packPartitioned). A nightly
-    // sweep over 3,650 oversplit dates costs the same number of Spark
-    // jobs as one over 3 (the per-partition loop form would be 3,650
-    // sequential jobs). basePath keeps the partition column resolvable;
-    // partitionBy strips it from the staged data files, as the layout
-    // requires.
-    val tag = s"$procTag-${java.util.UUID.randomUUID()}"
-    val stg = new org.apache.hadoop.fs.Path(root, s".staging-compact-$tag")
-    val rows = readForMaintenance(spark, fs.makeQualified(root).toString,
-      plan.map(_._1.toString), partitionCol)
-    val targets = plan.map { case (partPath, _, nTarget, _) =>
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(partPath.getName.stripPrefix(s"$partitionCol=")) ->
-        nTarget
-    }.toMap
-    packPartitioned(rows, partitionCol, sortCols, targets)
-      .write.partitionBy(partitionCol).parquet(stg.toString)
-    // validate the WHOLE staged set before any destructive rename: a
-    // planned partition with no staged dir means its rows landed under
-    // a different name (non-canonical escaping in an externally-written
-    // dir name) or were lost — swap nothing, fail with the table intact.
-    // (A genuinely zero-row partition also trips this; compacting
-    // empty-file debris needs manual handling, never a silent swap for
-    // an empty dir.)
-    plan.foreach { case (partPath, _, _, _) =>
-      val stgPart = new org.apache.hadoop.fs.Path(stg, partPath.getName)
-      if (!fs.exists(stgPart))
-        throw new IllegalStateException(
-          s"staged rewrite missing for $partPath (non-canonical dir " +
-          "name, or zero rows?) — aborting with the table untouched")
-    }
-    val out = plan.map { case (partPath, nOld, _, _) =>
-      val stgPart = new org.apache.hadoop.fs.Path(stg, partPath.getName)
-      val trash = new org.apache.hadoop.fs.Path(root,
-        s".trash-compact-$tag-${partPath.getName}")
-      if (!fs.rename(partPath, trash) || !fs.rename(stgPart, partPath))
-        throw new IllegalStateException(s"compaction swap failed for $partPath")
-      fs.delete(trash, true): Unit
-      val nNew = fs.listStatus(partPath).count(s => s.isFile &&
-        !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-      (partPath.getName, nOld, nNew)
-    }
-    fs.delete(stg, true): Unit
-    out
-  }
-
-  /** Storage-level row deletion for a Hive-partitioned layout — the
-    * right-to-be-forgotten path at the FILE level, completing the
-    * maintenance triad ([[refreshPartitions]] lands data,
-    * [[compactPartitions]] repacks it, deleteWhere removes it) and
-    * complementing `MatView.retract`, which repairs the AGGREGATE view
-    * over the same deletion. Parquet files are immutable, so deletion
-    * is rewrite — but only where needed:
-    *
-    * DISCOVERY is ONE distributed job over the whole layout (plus one
-    * recursive listing), not a per-partition loop: a single aggregate
-    * returns every partition's (rows matching, rows total), reading only
-    * the predicate's columns (column pruning) with footer-stat skipping
-    * on clustered layouts. The probe cost is therefore a constant number
-    * of Spark jobs regardless of partition count — at 10 years of daily
-    * partitions the previous per-partition probe was ~3,650 sequential
-    * driver-blocking jobs before any rewrite (VERDICT r14 #2); here it
-    * is one. The same pass returns both counts, so no partition ever
-    * pays a separate count + isEmpty + rewrite triple (#6).
-    *
-    * REWRITE is ONE distributed job across every partially-dirty
-    * partition (survivors range-clustered on (partition, `sortCols`),
-    * staged with `partitionBy`, swapped in by the [[compactPartitions]]
-    * rename dance — O(dirty) METADATA renames, constant Spark jobs):
-    * the case that matters is forget-user, whose rows live in every
-    * date partition — the per-partition rewrite loop would be ~3,650
-    * sequential jobs there, this is one. Clean partitions' files are
-    * physically untouched (at 100 TB most are); a partition whose every
-    * row matches is removed outright (known from the probe's keep-count,
-    * no extra action). Returns (partition, rows deleted) per touched
-    * partition.
-    *
-    * Same raw-Hive atomicity caveat as compaction (two-rename window);
-    * [[Snapshot]] commits the identical file swap as one manifest. */
-  def deleteWhere(spark: SparkSession, path: String, partitionCol: String,
-                  predicate: org.apache.spark.sql.Column,
-                  sortCols: Seq[String] = Nil): Seq[(String, Long)] = {
-    import org.apache.spark.sql.functions.{coalesce, count, lit, sum, when}
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = partitionDataFiles(fs, root, partitionCol)
-    if (parts.isEmpty) return Seq.empty
-    // Three-valued-logic guard: delete exactly where the predicate is
-    // TRUE. A bare `where(!predicate)` silently LOSES rows where the
-    // predicate evaluates to NULL (e.g. `col === x` on a null cell):
-    // NULL is neither deleted nor kept. Collapse NULL → false first so
-    // such rows are kept, matching SQL DELETE semantics.
-    val del = coalesce(predicate, lit(false))
-    // Dir-name ↔ value mapping goes through the same escaping Spark's
-    // writers use, so a partition value with reserved characters still
-    // round-trips (a date never needs it; a string key might).
-    val byValue: Map[String, (org.apache.hadoop.fs.Path, Int)] =
-      parts.map { case (p, files) =>
-        org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(p.getName.stripPrefix(s"$partitionCol=")) ->
-          (p, files.size)
-      }.toMap
-    // THE probe: one job, per-partition delete/keep counts. The
-    // maintenance read types the partition column STRING (the unescaped
-    // dir value, no inference), so the probe value, the byValue key and
-    // the staged dir name share one identity for every layout —
-    // including values inference would mangle (dir "01" → int 1).
-    val dirty = readForMaintenance(spark, fs.makeQualified(root).toString,
-        parts.map(_._1.toString), partitionCol)
-      .groupBy(col(partitionCol).as("__part"))
-      .agg(
-        sum(when(del, 1L).otherwise(0L)).as("n_del"),
-        count(lit(1)).as("n_rows"))
-      .where(col("n_del") > 0)
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-    val resolved = dirty.map { case (value, nDel, nRows) =>
-      val (partPath, nFiles) = byValue.getOrElse(value,
-        throw new IllegalStateException(
-          s"probe returned partition value '$value' with no matching " +
-          s"$partitionCol= directory under $path"))
-      (value, partPath, nFiles, nDel, nRows)
-    }
-    // ONE survivor-rewrite job for ALL partially-dirty partitions, each
-    // keeping its old file width (packPartitioned re-clusters on
-    // sortCols). basePath keeps the partition column resolvable in the
-    // predicate; partitionBy strips it from the staged data files.
-    val partial = resolved.filter { case (_, _, _, nDel, nRows) => nDel < nRows }
-    val tag = s"$procTag-${java.util.UUID.randomUUID()}"
-    val stg = new org.apache.hadoop.fs.Path(root, s".staging-delete-$tag")
-    if (partial.nonEmpty) {
-      val survivors = readForMaintenance(spark,
-        fs.makeQualified(root).toString, partial.map(_._2.toString),
-        partitionCol).where(!del)
-      packPartitioned(survivors, partitionCol, sortCols,
-        partial.map { case (value, _, nFiles, _, _) => value -> nFiles }.toMap)
-        .write.partitionBy(partitionCol).parquet(stg.toString)
-    }
-    val out = resolved.map { case (_, partPath, _, nDel, nRows) =>
-      if (nDel == nRows) {
-        // every row matches: drop the whole partition — known from the
-        // probe alone, no per-partition emptiness check
-        fs.delete(partPath, true): Unit
-      } else {
-        val stgPart = new org.apache.hadoop.fs.Path(stg, partPath.getName)
-        // verify the staged side BEFORE renaming the live partition
-        // away — a missing staged dir must abort with the table intact,
-        // not strand the partition in trash (partial partitions always
-        // have survivors, so an absent dir is a bug, never a no-op)
-        if (!fs.exists(stgPart))
-          throw new IllegalStateException(
-            s"staged survivors missing for $partPath — aborting swap " +
-            "with the live partition untouched")
-        val trash = new org.apache.hadoop.fs.Path(root,
-          s".trash-delete-$tag-${partPath.getName}")
-        if (!fs.rename(partPath, trash) || !fs.rename(stgPart, partPath))
-          throw new IllegalStateException(s"delete swap failed for $partPath")
-        fs.delete(trash, true): Unit
-      }
-      (partPath.getName, nDel)
-    }.toSeq
-    if (partial.nonEmpty) fs.delete(stg, true): Unit
-    out
   }
 
   /** Catalog-backed bucketed + sorted table: two tables bucketed the

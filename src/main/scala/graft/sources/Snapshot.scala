@@ -13,14 +13,12 @@ import org.apache.spark.sql.types.LongType
 final class SnapshotConflictException(msg: String)
   extends IllegalStateException(msg)
 
-/** Snapshot manifests for a Hive-partitioned layout — the missing
-  * reader-isolation layer VERDICT r14 named as the engine's one real
-  * architectural gap. The raw-Hive maintenance ops ([[Sink.compactPartitions]],
-  * [[Sink.deleteWhere]]) swap a partition via two renames; a reader
-  * listing the directory between them sees a gap or an error. Table
-  * formats (Delta/Iceberg) close that window by making the FILE LIST,
-  * not the directory, the source of truth; this is that mechanism at
-  * its minimum viable size:
+/** Snapshot manifests for a Hive-partitioned layout — the engine's one
+  * commit protocol for changing a partitioned layout. A reader listing
+  * a directory while a writer swaps its files sees a gap or an error;
+  * table formats (Delta/Iceberg) close that window by making the FILE
+  * LIST, not the directory, the source of truth, and this is that
+  * mechanism at its minimum viable size:
   *
   *  - `<root>/_manifests/m-<version>` is a text file naming every live
   *    data file (root-relative, one per line). Readers list from the
@@ -35,21 +33,18 @@ final class SnapshotConflictException(msg: String)
   *    older manifest keeps a consistent view — and retire later through
   *    [[expire]], the snapshot-expiry retention step.
   *
-  * This unifies the engine's four ad-hoc commit protocols (staged
-  * renames, q52's applied-delta marker, streaming v=batchId versions,
-  * the `_spark_metadata` freeze hand-off) into the one shape they were
-  * all approximating: stage files, swing a single pointer. [[append]]
-  * closes the loop on the ingest side — streaming micro-batches commit
-  * through the same manifest (run/batch identity in the header, so
-  * replays are detectable), which retires the `_spark_metadata` freeze
-  * hand-off entirely: maintenance and ingest speak one protocol, and
+  * Every change to a layout takes this one shape — stage files, swing
+  * a single pointer: maintenance ([[compact]], [[deleteWhere]],
+  * [[replacePartitions]], whose caller metadata such as an
+  * applied-delta id commits in the same rename as the data) and ingest
+  * alike. Streaming micro-batches commit through [[append]] with their
+  * run/batch identity in the header, so replays are detectable, and
   * [[changes]] gives consumers an incremental feed over the appends.
   *
   * Scale: a manifest is O(files) text — at 100 TB that is the same
   * metadata a table format keeps, and the commit cost is one rename
   * regardless of how many partitions a maintenance pass rewrote (the
-  * whole pass commits atomically, where the raw-Hive path exposed each
-  * partition swap separately). Concurrency contract: any number of
+  * whole pass commits atomically). Concurrency contract: any number of
   * readers, and OPTIMISTIC multi-writer commits — a commit is (base
   * version, removed files, added files); a writer that loses the
   * version race rebases onto the new snapshot when its change still
@@ -2709,9 +2704,9 @@ object Snapshot {
     * partitions rewrite to their bin-packed target (re-clustered on
     * `sortCols`), and the WHOLE pass lands as one atomic snapshot —
     * readers see the fully-old or fully-new file set, never a partition
-    * mid-swap (the [[Sink.compactPartitions]] two-rename window, closed).
-    * Partitions already at target keep their exact manifest entries and
-    * physical files. Returns (partition, files before, files after).
+    * mid-swap. Partitions already at target keep their exact manifest
+    * entries and physical files. Returns (partition, files before,
+    * files after).
     *
     * The rewrite is ONE distributed job over every oversplit partition
     * (range-clustered on (partition, sortCols), `partitionBy` staged,
@@ -2802,14 +2797,13 @@ object Snapshot {
     }
   }
 
-  /** Row deletion committed through the manifest. Discovery is the same
-    * single-job probe as [[Sink.deleteWhere]] (per-partition delete/keep
-    * counts from one aggregate over the SNAPSHOT's files); dirty
-    * partitions rewrite to survivors (re-clustered on `sortCols`), fully
-    * emptied partitions simply drop out of the manifest (zero data
-    * work), clean partitions keep their exact entries and files. One
-    * atomic commit for the whole delete. Returns (partition, rows
-    * deleted).
+  /** Row deletion committed through the manifest. Discovery is a
+    * single-job probe (per-partition delete/keep counts from one
+    * aggregate over the SNAPSHOT's files); dirty partitions rewrite to
+    * survivors (re-clustered on `sortCols`), fully emptied partitions
+    * simply drop out of the manifest (zero data work), clean partitions
+    * keep their exact entries and files. One atomic commit for the
+    * whole delete. Returns (partition, rows deleted).
     *
     * The rewrite is ALSO one distributed job across every partially-
     * dirty partition ([[compact]]'s staged `partitionBy` discipline) —
@@ -2828,7 +2822,9 @@ object Snapshot {
     requireNoDeletes(spark, path, v, "deleteWhere")
     requireUniformSpec(files, partitionCol, "deleteWhere")
     val byPart = files.groupBy(f => f.split("/")(0))
-    // NULL-predicate guard: same SQL DELETE semantics as Sink.deleteWhere
+    // NULL-predicate guard, SQL DELETE semantics: delete exactly where
+    // the predicate is TRUE; a row where it is NULL (`col === x` on a
+    // null cell) is kept, not lost to a bare `where(!predicate)`
     val del = coalesce(predicate, lit(false))
     // maintenance read: partition column typed STRING (raw dir value,
     // no inference) — probe value ↔ manifest dir name ↔ staged dir
@@ -3507,9 +3503,8 @@ object Snapshot {
     * to the maintenance-ledger problem: the caller's `meta` (e.g. a
     * delta id) commits in the SAME rename as the data, so "was this
     * delta applied?" is a manifest read and a crash can never separate
-    * the ledger from the rewrite (the raw-Hive marker scheme q52
-    * documents has exactly that window). Crash before the commit leaves
-    * only invisible staged files — a rerun redoes the whole pass.
+    * the ledger from the rewrite. Crash before the commit leaves only
+    * invisible staged files — a rerun redoes the whole pass.
     *
     * The caller shapes the replacement's file layout (repartition /
     * sortWithinPartitions before the call — same contract as a

@@ -213,8 +213,8 @@ object DocStreams {
     * n09 build-once artifact (paid one corpus shuffle at build time),
     * the stream pays only its own micro-batch's signatures per trigger.
     * Results publish idempotently under `outDir/v=batchId` through the
-    * staged-atomic store (the maintainRollup replay contract: a
-    * redelivered batch finds its version committed and no-ops).
+    * staged-atomic store: a redelivered batch finds its version
+    * committed and no-ops.
     * StreamingSpec proves the streamed screen's union ≡ n09's graded
     * batch output for the same docs — streamed ≡ served ≡ inline. */
   def lshScreen(docs: DataFrame, indexTable: String,

@@ -58,47 +58,22 @@ object EventStreams {
   def readJsonEventStream(spark: SparkSession, dir: String): DataFrame =
     readEventStream(spark, StreamSources.FileSource(dir, format = "json"))
 
-  /** Stream events into the date-partitioned serving layout — the
-    * STREAMING path into the same `event_date=…` pruning contract
-    * `Tables.eventsByDate` publishes in batch (q41): each micro-batch's
-    * rows land under their date dirs via the exactly-once parquet file
-    * sink, whose `_spark_metadata` transaction log commits the batch's
-    * files atomically, so at-least-once replays after a crash never
-    * double rows. `Trigger.AvailableNow` drains the source backlog and
-    * stops — the backfill / catch-up shape; a production tail run drops
-    * the trigger and keeps the same plan. Maintenance composition:
-    * micro-batches accumulate per-partition file debris — after the
-    * stream is retired, [[graft.sources.Sink.freezeFileSinkOutput]] +
-    * [[graft.sources.Sink.compactPartitions]] restore file health
-    * (StreamingSpec drives the full cycle). */
-  def ingestPartitioned(spark: SparkSession, source: StreamSources.StreamSource,
-      outDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    readEventStream(spark, source)
-      .withColumn("event_date", to_date(col("ts")))
-      .writeStream.format("parquet")
-      .partitionBy("event_date")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-
   /** Stream events into a SNAPSHOT-MANAGED layout ([[graft.sources.Snapshot]])
-    * — the successor to [[ingestPartitioned]]'s `_spark_metadata` path:
-    * each micro-batch commits through the manifest ([[Snapshot.append]]),
-    * so ingest and maintenance speak ONE protocol. Consequences the
-    * file-sink path cannot offer:
+    * — the STREAMING path into the same `event_date=…` pruning contract
+    * `Tables.eventsByDate` publishes in batch: each micro-batch commits
+    * through the manifest ([[Snapshot.append]]), so ingest and
+    * maintenance speak ONE protocol. `Trigger.AvailableNow` drains the
+    * source backlog and stops — the backfill / catch-up shape; a
+    * production tail run drops the trigger and keeps the same plan.
     *
-    *  - no freeze hand-off: [[graft.sources.Snapshot.compact]] /
-    *    [[graft.sources.Snapshot.deleteWhere]] apply between batches with
-    *    no transaction-log surgery (the `_spark_metadata` log made the
-    *    sink the directory's owner; here everyone commits manifests).
+    *  - [[graft.sources.Snapshot.compact]] /
+    *    [[graft.sources.Snapshot.deleteWhere]] apply between batches:
+    *    everyone commits manifests, so no writer owns the directory.
     *    An append racing a maintenance commit loses the manifest rename,
     *    fails loudly, and the batch replays — never a silent clobber.
-    *  - readers get snapshot isolation DURING ingest, not just after
-    *    retirement, and [[graft.sources.Snapshot.changes]] hands
-    *    downstream consumers the exact batch delta.
+    *  - readers get snapshot isolation DURING ingest, and
+    *    [[graft.sources.Snapshot.changes]] hands downstream consumers
+    *    the exact batch delta.
     *
     * Exactly-once across replays: the batch's (run, batch) identity rides
     * in the manifest header. A replayed batch finds its id already
@@ -239,67 +214,29 @@ object EventStreams {
         runId.map("run" -> _).toMap + ("batch" -> batchId.toString)): Unit
   }
 
-  /** Streaming maintenance of the MatView rollup: each micro-batch's
-    * algebraic partials merge into the maintained rollup, so dashboards
-    * read rollup-grain rows continuously instead of re-scanning the
-    * event history per refresh (the batch q43 contract, kept current by
-    * the stream).
-    *
-    * Exactly-once across replays WITHOUT a transaction log: batch k
-    * publishes `rollupDir/v=k` = merge(latest committed v<k, partials
-    * of batch k) through [[graft.sources.Sink.publishedArtifact]]. The
-    * inputs of version k are deterministic (foreachBatch redelivers the
-    * same rows under the same batchId from the checkpoint), and the
-    * publish is staged-atomic + skip-if-committed — a replayed batch
-    * either finds its version already committed (no-op) or rebuilds it
-    * from the same inputs; it can never double-merge, and it never
-    * reads versions ABOVE its own id. Readers take the max committed
-    * version ([[readRollup]]).
-    *
-    * Scale: each version rewrite is O(|rollup grain|), not O(events) —
-    * the whole point — and at 100 TB the rollup partitions by
-    * event_date so a version rewrites only the dates its batch touched
-    * (the compactPartitions surgical-refresh discipline); old versions
-    * retire on a retention window ([[pruneRollupVersions]]), exactly
-    * like table-format snapshot expiry. */
-  def maintainRollup(events: DataFrame, rollupDir: String, checkpointDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // Bind the (checkpoint, rollup) pair BEFORE the stream starts: the
-    // exactly-once scheme is only sound while batch ids and committed
-    // versions advance together, and that pairing must fail loudly, not
-    // open — see [[runToken]] / [[mergeBatchIntoRollup]] (ADVICE r14).
-    val token = runToken(events.sparkSession, checkpointDir)
-    events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        mergeBatchIntoRollup(batch, rollupDir, id, Some(token))
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("update")
-      .start()
-  }
-
-  /** Streaming rollup maintenance on the SNAPSHOT-MANAGED store — the
-    * manifest-protocol successor to [[maintainRollup]]'s `v=batchId`
-    * whole-store versions: each micro-batch's partials merge into ONLY
-    * their touched date partitions via
+  /** Streaming maintenance of the MatView rollup on a SNAPSHOT-MANAGED
+    * store: each micro-batch's algebraic partials merge into ONLY their
+    * touched date partitions via
     * [[graft.operators.MatView.maintainSnapshot]], with the (run,
     * batch) ledger entry committed IN the same manifest rename as the
-    * data. What the v=batchId scheme could not offer:
+    * data, so dashboards read rollup-grain rows continuously instead of
+    * re-scanning the event history per refresh (the batch q43 contract,
+    * kept current by the stream).
     *
-    *  - O(touched dates) per batch instead of rewriting the whole
-    *    rollup per version (the difference at 100 TB: a daily batch
-    *    touches a handful of partitions out of years);
+    *  - O(touched dates) per batch, never a whole-rollup rewrite (the
+    *    difference at 100 TB: a daily batch touches a handful of
+    *    partitions out of years);
     *  - replay detection and the run-pairing guard come from the
-    *    manifest header itself — no separate `_RUN_ID` marker, no
-    *    version-numbering convention to keep in sync;
+    *    manifest header itself: a replayed batch finds its id committed
+    *    and no-ops, it can never double-merge;
     *  - readers take [[graft.sources.Snapshot.readSnapshot]] at any
     *    instant (isolation during the merge, time travel until expiry).
     *
     * An empty store self-bootstraps off the first non-empty batch (the
     * ledger entry rides the init commit); equally valid is a batch
-    * bootstrap ([[graft.operators.MatView.bootstrapPartitioned]]-shaped
-    * write + `Snapshot.init`) before the stream starts — the catch-up
-    * deployment shape. */
+    * bootstrap (a `partitionBy("event_date")` write of
+    * [[graft.operators.MatView.eventPartials]] + `Snapshot.init`) before
+    * the stream starts — the catch-up deployment shape. */
   def maintainRollupSnapshot(events: DataFrame, rollupDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
     val token = runToken(events.sparkSession, checkpointDir)
@@ -314,14 +251,15 @@ object EventStreams {
       .start()
   }
 
-  /** The run identity that pairs a checkpoint with its rollup: a UUID
+  /** The run identity that pairs a checkpoint with its store: a UUID
     * created ONCE inside the checkpoint dir, so it lives and dies with
-    * the batch-id sequence. Rationale (ADVICE r14): batch ids restart at
-    * 0 when a checkpoint is lost or recreated; against a SURVIVING
-    * rollupDir every replayed publish would find `v=k` already committed
-    * and no-op — new events silently dropped from the rollup forever.
-    * With the token embedded in the rollup's root marker, that scenario
-    * is a token mismatch and [[mergeBatchIntoRollup]] throws instead. */
+    * the batch-id sequence. Rationale: batch ids restart at 0 when a
+    * checkpoint is lost or recreated; against a SURVIVING store every
+    * replayed batch would find its id already committed and no-op —
+    * new events silently dropped forever. With the token in every
+    * commit's manifest header, that scenario is a token mismatch and
+    * the batch throws instead ([[appendBatchToSnapshot]],
+    * [[graft.operators.MatView.maintainSnapshot]]). */
   def runToken(spark: SparkSession, checkpointDir: String): String = {
     val p = new org.apache.hadoop.fs.Path(checkpointDir, "_graft_run_id")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -335,100 +273,11 @@ object EventStreams {
         finally out.close()
       } catch { case _: java.io.IOException => /* concurrent winner */ }
     }
-    readSmallFile(fs, p)
-  }
-
-  /** Whole-file read of a tiny marker (tokens are one UUID line). */
-  private def readSmallFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String = {
     val len = fs.getFileStatus(p).getLen.toInt
     val buf = new Array[Byte](len)
     val in = fs.open(p)
     try in.readFully(0, buf) finally in.close()
     new String(buf, java.nio.charset.StandardCharsets.UTF_8).trim
-  }
-
-  /** One maintenance step — also the replay unit (deterministic in
-    * (batch contents, batchId); see [[maintainRollup]]). Public so the
-    * spec can drive a replay directly (runId = None skips the pairing
-    * guard — the caller owns the batch-id sequence in that case). */
-  def mergeBatchIntoRollup(batch: DataFrame, rollupDir: String, batchId: Long,
-      runId: Option[String] = None): Unit = {
-    val spark = batch.sparkSession
-    runId.foreach { token =>
-      // Pairing guard: the rollup remembers which run's batch-id sequence
-      // built it. A committed marker under a DIFFERENT token means the
-      // checkpoint this stream runs from is not the one the rollup was
-      // maintained against (lost/recreated checkpoint, or two streams
-      // pointed at one rollup) — its batch ids are meaningless here, and
-      // no-opping on "version already committed" would silently drop
-      // every new event. Fail loudly instead.
-      val marker = new org.apache.hadoop.fs.Path(rollupDir, "_RUN_ID")
-      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(marker)) {
-        val bound = readSmallFile(fs, marker)
-        if (bound != token)
-          throw new IllegalStateException(
-            s"rollup $rollupDir was maintained by run $bound, but this " +
-            s"stream's checkpoint carries run $token — the checkpoint/" +
-            "rollup pairing is broken (lost or recreated checkpoint?); " +
-            "refusing to no-op against a foreign version sequence")
-      } else if (committedVersions(spark, rollupDir).nonEmpty) {
-        throw new IllegalStateException(
-          s"rollup $rollupDir has committed versions but no _RUN_ID " +
-          "marker — cannot verify it belongs to this stream's checkpoint")
-      } else {
-        fs.mkdirs(new org.apache.hadoop.fs.Path(rollupDir))
-        try {
-          val out = fs.create(marker, false)
-          try out.write(token.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          finally out.close()
-        } catch { case _: java.io.IOException => /* concurrent winner; next
-          batch re-checks */ }
-      }
-    }
-    val partials = graft.operators.MatView.eventPartials(batch)
-    val merged = committedVersions(spark, rollupDir).filter(_ < batchId)
-      .sorted.lastOption match {
-      case Some(prev) =>
-        graft.operators.MatView.merge(
-          spark.read.parquet(s"$rollupDir/v=$prev"), partials)
-      case None => partials
-    }
-    graft.sources.Sink.publishedArtifact(spark, s"$rollupDir/v=$batchId")(merged): Unit
-  }
-
-  /** The rollup as of the latest committed version. */
-  def readRollup(spark: SparkSession, rollupDir: String): DataFrame = {
-    val vs = committedVersions(spark, rollupDir)
-    require(vs.nonEmpty, s"no committed rollup version under $rollupDir")
-    spark.read.parquet(s"$rollupDir/v=${vs.max}")
-  }
-
-  /** Retire all but the `keep` newest committed versions (a pinned
-    * reader may still be mid-scan on an older one — retention is an
-    * operational window, not a serve-path step). Returns deleted paths. */
-  def pruneRollupVersions(spark: SparkSession, rollupDir: String, keep: Int): Seq[String] = {
-    val stale = committedVersions(spark, rollupDir).sorted.dropRight(keep)
-    val root = new org.apache.hadoop.fs.Path(rollupDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    stale.map { v =>
-      val p = new org.apache.hadoop.fs.Path(root, s"v=$v")
-      fs.delete(p, true)
-      p.toString
-    }
-  }
-
-  private def committedVersions(spark: SparkSession, rollupDir: String): Seq[Long] = {
-    val root = new org.apache.hadoop.fs.Path(rollupDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v=")
-        // committed = carries the committer's _SUCCESS marker; a
-        // version mid-publish (or crashed) is invisible to readers
-        && fs.exists(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.stripPrefix("v=").toLong)
   }
 
   /** Stream-static join: enrich a value-threshold alert stream with a

@@ -81,48 +81,6 @@ class MatViewSpec extends AnyFunSuite {
     }
   }
 
-  test("partitioned maintenance rewrites only touched dates; read-back ≡ full rollup") {
-    val ev = Tables.load(spark, SharedSpark.sf0001, "events")
-      .withColumn("d", to_date(col("ts")))
-    // the realistic daily batch: everything after Jan 23 PLUS a few
-    // late stragglers for Jan 10 — so maintenance must both APPEND new
-    // dates and MERGE-FOLD into one existing date, while every other
-    // date partition stays physically untouched
-    val late = col("d") === "2024-01-10" && pmod(col("event_id"), lit(5)) === 0
-    val isDelta = col("d") > "2024-01-23" || late
-    val base = ev.where(!isDelta).drop("d")
-    val delta = ev.where(isDelta).drop("d")
-    val path = s"${java.nio.file.Files.createTempDirectory("graft-rollup-part")}/rollup"
-    MatView.bootstrapPartitioned(base, path)
-    def files(): Map[String, Set[(String, Long)]] =
-      new java.io.File(path).listFiles().filter(_.getName.startsWith("event_date="))
-        .map(d => d.getName -> d.listFiles().filter(_.getName.endsWith(".parquet"))
-          .map(f => (f.getName, f.lastModified())).toSet).toMap
-    val before = files()
-    MatView.maintainPartitioned(spark, path, delta)
-    val after = files()
-    // the staged merge copy (crash-retry safety, ADVICE r14) is cleaned up
-    assert(!new java.io.File(path).listFiles()
-      .exists(_.getName.startsWith(".staging-maintain")),
-      "maintenance left its staging dir behind")
-    // untouched dates keep their exact physical files — O(touched), not O(table)
-    before.keys.filterNot(k => k == "event_date=2024-01-10").foreach { k =>
-      assert(after(k) == before(k), s"$k was rewritten without cause")
-    }
-    // the straggler date was rewritten, the new dates appeared
-    assert(after("event_date=2024-01-10") != before("event_date=2024-01-10"))
-    assert(after.keySet.exists(_ > "event_date=2024-01-23"))
-    // and the maintained store reads back as the full-corpus rollup
-    val got = spark.read.parquet(path)
-      .select("event_date", "event_type", "user_id", "n_events",
-        "sum_value", "min_event", "max_event")
-    val want = MatView.eventPartials(ev.drop("d"))
-      .select("event_date", "event_type", "user_id", "n_events",
-        "sum_value", "min_event", "max_event")
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
-      "maintained partitioned rollup diverged from the full rollup")
-  }
-
   test("snapshot maintenance: atomic data+ledger commit, touched-only swaps, replay no-op, foreign run refused, time travel") {
     import graft.sources.Snapshot
     val ev = Tables.load(spark, SharedSpark.sf0001, "events")
@@ -197,10 +155,11 @@ class MatViewSpec extends AnyFunSuite {
       "growth accounting lost or invented users")
   }
 
-  test("q52 is rerun-safe: the applied-delta marker makes maintenance exactly-once") {
-    // a second invocation must find the delta applied and serve the
-    // same rows — without the marker it would re-merge the delta and
-    // double-count every touched grain
+  test("q52 is rerun-safe: the manifest ledger makes maintenance exactly-once") {
+    // a second invocation must find the delta applied (the ledger entry
+    // in the current manifest's header) and serve the same rows —
+    // without it the rerun would re-merge the delta and double-count
+    // every touched grain
     val first = SparkEntry.queries("q52_maintained_rollup_serving")(spark, SharedSpark.sf0001)
       .collect().toSeq
     val second = SparkEntry.queries("q52_maintained_rollup_serving")(spark, SharedSpark.sf0001)

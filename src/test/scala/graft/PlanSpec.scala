@@ -428,26 +428,37 @@ class PlanSpec extends AnyFunSuite {
       s"manifest skipping pruned nothing: $pruned of $total files read")
   }
 
-  test("maintainPartitioned's merge read prunes to the touched dates at PLANNING time") {
-    // VERDICT r14: the merge's read side must be O(touched dates), not a
-    // full-store scan semi-joined down at runtime. storeSlice is that
-    // read — a literal isin over the partition column — and this pins
-    // both the PartitionFilters and the pruned partition count.
+  test("maintainSnapshot's merge read prunes to the touched dates at PLANNING time") {
+    // the merge's read side must be O(touched dates), not a full-store
+    // scan semi-joined down at runtime. maintainSnapshot reads the store
+    // as readSnapshot + a literal isin over the partition column; this
+    // pins both the PartitionFilters and that the scan lists only the
+    // touched dates' files.
     import org.apache.spark.sql.execution.FileSourceScanExec
+    import graft.sources.Snapshot
     val ev = graft.sources.Tables.load(spark, SharedSpark.sf0001, "events")
     val path = s"${java.nio.file.Files.createTempDirectory("graft-slice")}/rollup"
-    graft.operators.MatView.bootstrapPartitioned(ev, path)
+    graft.operators.MatView.eventPartials(ev)
+      .write.partitionBy("event_date").parquet(path)
+    Snapshot.init(spark, path, "event_date")
     def scanOf(df: org.apache.spark.sql.DataFrame): FileSourceScanExec =
       df.queryExecution.sparkPlan.collect { case f: FileSourceScanExec => f }.head
-    val full = scanOf(spark.read.parquet(path))
+    val full = scanOf(Snapshot.readSnapshot(spark, path))
     val nFull = full.selectedPartitions.partitionCount
     assert(nFull > 2, s"store has only $nFull date partitions — test degenerate")
-    val slice = scanOf(graft.operators.MatView.storeSlice(
-      spark, path, Seq(java.sql.Date.valueOf("2024-01-10"))))
+    val dates = Seq("2024-01-10", "2024-01-11")
+    val slice = scanOf(Snapshot.readSnapshot(spark, path)
+      .where(org.apache.spark.sql.functions.col("event_date")
+        .isin(dates.map(java.sql.Date.valueOf): _*)))
     assert(slice.partitionFilters.exists(_.references.exists(_.name == "event_date")),
       s"touched-date set not a partition filter: ${slice.partitionFilters}")
-    assert(slice.selectedPartitions.partitionCount == 1,
+    assert(slice.selectedPartitions.partitionCount == dates.size,
       s"slice read ${slice.selectedPartitions.partitionCount} of $nFull partitions")
+    val touchedFiles = Snapshot.currentFiles(spark, path)._2
+      .count(f => dates.exists(d => f.startsWith(s"event_date=$d/")))
+    assert(slice.selectedPartitions.totalNumberOfFiles == touchedFiles,
+      s"slice listed ${slice.selectedPartitions.totalNumberOfFiles} files, " +
+        s"the touched dates hold $touchedFiles")
   }
 
   test("q53: the join-derived date set prunes partitions at RUNTIME (DPP)") {

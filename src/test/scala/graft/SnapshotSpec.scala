@@ -9,8 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The snapshot-manifest contract (VERDICT r14 #1): readers list from a
   * committed manifest, writers commit a whole maintenance pass with one
   * atomic rename — so a reader concurrent with compaction or deletion
-  * sees exactly the old or the new snapshot, never an error or a gap
-  * (the two-rename window of the raw-Hive ops, closed). */
+  * sees exactly the old or the new snapshot, never an error or a gap. */
 class SnapshotSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
 
@@ -135,7 +134,12 @@ class SnapshotSpec extends AnyFunSuite {
   test("delete leaves clean partitions' manifest entries and files untouched") {
     import spark.implicits._
     val path = s"${tmp("graft-snap-clean")}/layout"
-    Seq((1L, 3L, "2024-01-01"), (2L, 7L, "2024-01-01"), (3L, 7L, "2024-01-02"))
+    // event 4 has a NULL user_id: `user_id === 3` is NULL there, and
+    // three-valued logic must KEEP the row (a bare !pred filter loses it)
+    Seq((1L, java.lang.Long.valueOf(3L), "2024-01-01"),
+        (2L, java.lang.Long.valueOf(7L), "2024-01-01"),
+        (3L, java.lang.Long.valueOf(7L), "2024-01-02"),
+        (4L, null.asInstanceOf[java.lang.Long], "2024-01-01"))
       .toDF("event_id", "user_id", "event_date").coalesce(1)
       .write.partitionBy("event_date").parquet(path)
     Snapshot.init(spark, path, "event_date")
@@ -153,7 +157,11 @@ class SnapshotSpec extends AnyFunSuite {
       .filter(_.startsWith("event_date=2024-01-02"))
     assert(after == before, "clean partition's manifest entries changed")
     assert(fileStats(after) == statsBefore, "clean partition's files rewritten")
-    // NULL-predicate and idempotence contracts carry over from Sink
+    // the NULL-user row survived the rewrite of its partition
+    assert(ids(Snapshot.readSnapshot(spark, path)) == Set(2L, 3L, 4L))
+    assert(Snapshot.readSnapshot(spark, path)
+      .where(col("user_id").isNull).count() == 1)
+    // idempotent: nothing left to delete
     assert(Snapshot.deleteWhere(spark, path, "event_date",
       col("user_id") === 3L).isEmpty)
   }
@@ -343,6 +351,16 @@ class SnapshotSpec extends AnyFunSuite {
     }
     assert(delSmall == delBig,
       s"snapshot delete scales with dirty count: $delSmall vs $delBig jobs")
+    // the clustering contract is per-FILE: every survivor file of the
+    // one-job rewrite holds a sorted ts range (what footer min/max
+    // skipping needs)
+    Snapshot.currentFiles(spark, big)._2
+      .filter(_.startsWith("event_date=2024-01-02/")).foreach { f =>
+        val ts = spark.read.parquet(s"$big/$f")
+          .select("ts_ms").collect().map(_.getLong(0))
+        assert(ts.sameElements(ts.sorted),
+          s"sort clustering lost in rewrite file $f")
+      }
     // fresh layouts for the compact pin with file counts on the same
     // side of Spark's parallel-listing threshold (the snapshot read
     // lists EXACT manifest files; past 32 paths Spark adds one parallel
@@ -364,8 +382,9 @@ class SnapshotSpec extends AnyFunSuite {
         Seq("ts_ms")).size == 3)
     }
     val cmpBig = TestJobs.jobsDuring(spark) {
+      // every oversplit partition lands at its bin-packed target of one
       assert(Snapshot.compact(spark, big2, "event_date", 1L << 30,
-        Seq("ts_ms")).size == 9)
+        Seq("ts_ms")).map(_._3) == Seq.fill(9)(1))
     }
     assert(cmpSmall == cmpBig,
       s"snapshot compact scales with partition count: $cmpSmall vs $cmpBig jobs")

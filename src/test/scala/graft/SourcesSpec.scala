@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.operators.SkewJoin
-import graft.sources.{Csv, Sink, Tables}
+import graft.sources.{Csv, Sink, Snapshot, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -258,284 +258,42 @@ class SourcesSpec extends AnyFunSuite {
       Tables.load(spark, SharedSpark.sf0001, "events").count())
   }
 
-  test("refreshPartitions replaces only the targeted date; other files untouched") {
-    import spark.implicits._
-    val path = s"${tmp("graft-dyn")}/events_by_date"
-    Seq((1L, "2024-01-01"), (2L, "2024-01-02"), (3L, "2024-01-03"))
-      .toDF("event_id", "event_date").coalesce(1)
-      .write.partitionBy("event_date").parquet(path)
-    def files(date: String): Set[(String, Long)] = {
-      val d = new java.io.File(s"$path/event_date=$date")
-      d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => (f.getName, f.lastModified())).toSet
-    }
-    val before = Map("2024-01-01" -> files("2024-01-01"),
-      "2024-01-03" -> files("2024-01-03"))
-    // daily refresh: re-land ONLY 2024-01-02 with corrected rows
-    Sink.refreshPartitions(
-      Seq((20L, "2024-01-02"), (21L, "2024-01-02"))
-        .toDF("event_id", "event_date").coalesce(1),
-      path, "event_date")
-    val back = spark.read.parquet(path)
-    assert(back.count() == 4)
-    assert(back.where(col("event_date") === "2024-01-02")
-      .select("event_id").collect().map(_.getLong(0)).toSet == Set(20L, 21L))
-    // untouched partitions keep their exact physical files — this is
-    // what makes the daily refresh O(day), not O(table)
-    assert(files("2024-01-01") == before("2024-01-01"))
-    assert(files("2024-01-03") == before("2024-01-03"))
-  }
-
-  test("compactPartitions bin-packs only oversplit partitions, restores clustering") {
-    import spark.implicits._
-    val path = s"${tmp("graft-compact")}/events_by_date"
-    // day 1 lands compact (one file); day 2 arrives as 8 micro-batch
-    // files with interleaved timestamps — the streaming-ingest debris
-    // compaction exists for
-    Seq((1L, 10L, "2024-01-01"), (2L, 11L, "2024-01-01"))
-      .toDF("event_id", "ts_ms", "event_date").coalesce(1)
-      .write.partitionBy("event_date").parquet(path)
-    Sink.refreshPartitions(
-      (0 until 16).map(i => (100L + i, 50L - i, "2024-01-02"))
-        .toDF("event_id", "ts_ms", "event_date").repartition(8),
-      path, "event_date")
-    def files(date: String): Set[(String, Long)] =
-      new java.io.File(s"$path/event_date=$date")
-        .listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => (f.getName, f.lastModified())).toSet
-    val day1Before = files("2024-01-01")
-    assert(files("2024-01-02").size == 8)
-    val res = Sink.compactPartitions(spark, path, "event_date",
-      targetBytes = 1L << 30, sortCols = Seq("ts_ms"))
-    // only the oversplit day is rewritten, to its bin-packed target of 1
-    assert(res == Seq(("event_date=2024-01-02", 8, 1)))
-    assert(files("2024-01-02").size == 1)
-    // the partition already at target keeps its exact physical files
-    assert(files("2024-01-01") == day1Before)
-    // value-complete, and compaction RESTORED the ts clustering the
-    // micro-batches destroyed
-    val back = spark.read.parquet(path)
-    assert(back.count() == 18)
-    assert(back.where(col("event_date") === "2024-01-02")
-      .select("event_id").collect().map(_.getLong(0)).toSet
-      == (100L until 116L).toSet)
-    val ts = spark.read.parquet(s"$path/event_date=2024-01-02")
-      .select("ts_ms").collect().map(_.getLong(0))
-    assert(ts.sameElements(ts.sorted))
-    // idempotent: a second sweep finds nothing to do
-    assert(Sink.compactPartitions(spark, path, "event_date",
-      1L << 30, Seq("ts_ms")).isEmpty)
-  }
-
-  test("deleteWhere rewrites only dirty partitions, drops emptied ones, keeps clustering") {
-    import spark.implicits._
-    val path = s"${tmp("graft-delete")}/events_by_date"
-    // day 1: mixed users (dirty after the delete); day 2: no user 3
-    // (clean — must stay physically untouched); day 3: ONLY user 3
-    // (emptied — the whole partition dir must go)
-    // day 1 includes a NULL user_id row: `user_id === 3` is NULL there,
-    // and three-valued logic must KEEP it (a bare !pred filter loses it)
-    Seq((1L, java.lang.Long.valueOf(3L), 10L, "2024-01-01"),
-        (2L, java.lang.Long.valueOf(7L), 11L, "2024-01-01"),
-        (3L, java.lang.Long.valueOf(9L), 12L, "2024-01-01"),
-        (8L, null.asInstanceOf[java.lang.Long], 13L, "2024-01-01"))
-      .toDF("event_id", "user_id", "ts_ms", "event_date").coalesce(1)
-      .write.partitionBy("event_date").parquet(path)
-    Sink.refreshPartitions(
-      Seq((4L, 7L, 20L, "2024-01-02"), (5L, 9L, 21L, "2024-01-02"))
-        .toDF("event_id", "user_id", "ts_ms", "event_date").coalesce(1),
-      path, "event_date")
-    Sink.refreshPartitions(
-      Seq((6L, 3L, 30L, "2024-01-03"), (7L, 3L, 31L, "2024-01-03"))
-        .toDF("event_id", "user_id", "ts_ms", "event_date").coalesce(1),
-      path, "event_date")
-    def files(date: String): Set[(String, Long)] =
-      new java.io.File(s"$path/event_date=$date")
-        .listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => (f.getName, f.lastModified())).toSet
-    val day2Before = files("2024-01-02")
-    // the right-to-be-forgotten request: user 3, everywhere
-    val res = Sink.deleteWhere(spark, path, "event_date",
-      col("user_id") === 3L, sortCols = Seq("ts_ms")).toMap
-    assert(res == Map("event_date=2024-01-01" -> 1L, "event_date=2024-01-03" -> 2L))
-    // clean partition: exact physical files survive (O(dirty dates),
-    // never O(table))
-    assert(files("2024-01-02") == day2Before)
-    // emptied partition: directory gone, not an empty husk
-    assert(!new java.io.File(s"$path/event_date=2024-01-03").exists())
-    // value-exact remainder, clustering restored in the rewritten day
-    val back = spark.read.parquet(path)
-    assert(back.count() == 5)
-    assert(back.where(col("user_id") === 3L).isEmpty)
-    // the NULL-user row survived the delete (three-valued logic guard)
-    assert(back.where(col("user_id").isNull).count() == 1)
-    val ts = spark.read.parquet(s"$path/event_date=2024-01-01")
-      .select("ts_ms").collect().map(_.getLong(0))
-    assert(ts.sameElements(ts.sorted))
-    // idempotent: nothing left to delete
-    assert(Sink.deleteWhere(spark, path, "event_date",
-      col("user_id") === 3L, Seq("ts_ms")).isEmpty)
-  }
-
-  test("deleteWhere discovery costs a CONSTANT job count, independent of partition count") {
-    // VERDICT r14 #2: the dirty-partition probe must be ONE distributed
-    // job over the layout (per-partition delete/keep counts from a single
-    // aggregate), not one-plus driver-sequential jobs per partition — at
-    // 10 years of daily partitions the loop form is ~3,650 blocking jobs
-    // before any rewrite. Pin: the same delete against 3× the partitions
-    // launches exactly the same number of Spark jobs.
-    import spark.implicits._
-    def build(nParts: Int): String = {
-      val path = s"${tmp("graft-jobcount")}/layout"
-      val rows = (0 until nParts * 4).map { i =>
-        (i.toLong, if (i % (nParts * 4) == 1) 3L else 7L,
-          f"2024-01-${i % nParts + 1}%02d")
-      }
-      rows.toDF("event_id", "user_id", "event_date")
-        .repartition(2).write.partitionBy("event_date").parquet(path)
-      path
-    }
-    def jobsDuring(body: => Unit): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger()
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          n.incrementAndGet(): Unit
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        body
-        // the listener bus is async: wait until the count stabilizes
-        var prev = -1
-        var stable = 0
-        while (stable < 3) {
-          val c = n.get()
-          if (c == prev) stable += 1 else { stable = 0; prev = c }
-          Thread.sleep(100)
-        }
-        n.get()
-      } finally spark.sparkContext.removeSparkListener(l)
-    }
-    val small = build(3)
-    val big = build(9)
-    // same dirty shape both times: user 3 lives in exactly one partition
-    val jobsSmall = jobsDuring {
-      assert(Sink.deleteWhere(spark, small, "event_date",
-        col("user_id") === 3L).size == 1)
-    }
-    val jobsBig = jobsDuring {
-      assert(Sink.deleteWhere(spark, big, "event_date",
-        col("user_id") === 3L).size == 1)
-    }
-    assert(jobsSmall == jobsBig,
-      s"probe scales with partition count: $jobsSmall jobs at 3 parts, " +
-        s"$jobsBig at 9 — the per-partition loop is back")
-  }
-
-  test("deleteWhere REWRITE is one job: constant count when EVERY partition is dirty") {
-    // the forget-user shape: the deleted user's rows live in every date
-    // partition, so the rewrite side (not just the probe) must be a
-    // single distributed job — the per-partition loop form is ~3,650
-    // sequential jobs at 10 years of daily partitions
-    import spark.implicits._
-    def build(nParts: Int): String = {
-      val path = s"${tmp("graft-jobcount-rw")}/layout"
-      // every date holds users 3 and 7 (gcd(4, nParts)=1 for 3 and 9),
-      // so every partition is PARTIALLY dirty — all must rewrite
-      val rows = (0 until nParts * 8).map { i =>
-        (i.toLong, if (i % 4 == 0) 3L else 7L, i.toLong,
-          f"2024-01-${i % nParts + 1}%02d")
-      }
-      rows.toDF("event_id", "user_id", "ts_ms", "event_date")
-        .repartition(2).write.partitionBy("event_date").parquet(path)
-      path
-    }
-    val small = build(3)
-    val big = build(9)
-    val jobsSmall = TestJobs.jobsDuring(spark) {
-      assert(Sink.deleteWhere(spark, small, "event_date",
-        col("user_id") === 3L, Seq("ts_ms")).size == 3)
-    }
-    val jobsBig = TestJobs.jobsDuring(spark) {
-      assert(Sink.deleteWhere(spark, big, "event_date",
-        col("user_id") === 3L, Seq("ts_ms")).size == 9)
-    }
-    assert(jobsSmall == jobsBig,
-      s"rewrite scales with dirty-partition count: $jobsSmall jobs at 3 " +
-        s"dirty, $jobsBig at 9 — the per-partition rewrite loop is back")
-    // correctness of the one-job rewrite: user gone, survivors intact,
-    // clustering restored per partition
-    val after = spark.read.parquet(big)
-    assert(after.where(col("user_id") === 3L).count() == 0)
-    assert(after.count() == 9 * 8 * 3 / 4)
-    // the clustering contract is per-FILE: every staged file holds a
-    // sorted ts range (what footer min/max skipping needs)
-    new java.io.File(s"$big/event_date=2024-01-02").listFiles()
-      .filter(_.getName.endsWith(".parquet")).foreach { f =>
-        val ts = spark.read.parquet(f.getAbsolutePath)
-          .select("ts_ms").collect().map(_.getLong(0))
-        assert(ts.sameElements(ts.sorted),
-          s"sort clustering lost in rewrite file ${f.getName}")
-      }
-  }
-
-  test("compactPartitions is one job: constant count vs oversplit-partition count") {
-    import spark.implicits._
-    def build(nParts: Int): String = {
-      val path = s"${tmp("graft-jobcount-cp")}/layout"
-      val rows = (0 until nParts * 8).map { i =>
-        (i.toLong, i.toLong, f"2024-01-${i % nParts + 1}%02d")
-      }
-      // 4+ files per date: every partition oversplit vs a 1-file target
-      rows.toDF("event_id", "ts_ms", "event_date")
-        .repartition(4).write.partitionBy("event_date").parquet(path)
-      path
-    }
-    val small = build(3)
-    val big = build(9)
-    val jobsSmall = TestJobs.jobsDuring(spark) {
-      assert(Sink.compactPartitions(spark, small, "event_date",
-        1L << 30, Seq("ts_ms")).size == 3)
-    }
-    val jobsBig = TestJobs.jobsDuring(spark) {
-      assert(Sink.compactPartitions(spark, big, "event_date",
-        1L << 30, Seq("ts_ms")).size == 9)
-    }
-    assert(jobsSmall == jobsBig,
-      s"compaction scales with partition count: $jobsSmall jobs at 3 " +
-        s"oversplit, $jobsBig at 9 — the per-partition loop is back")
-    val after = spark.read.parquet(big)
-    assert(after.count() == 9 * 8)
-  }
-
   test("tricky partition values: round-trip-safe ones compact; a non-canonical dir aborts intact") {
     import spark.implicits._
     // "01" tempts integer inference (would become 1 and break the
     // plan-key ↔ routed-value match); Spark's round-trip-safe inference
-    // keeps it a string, and the rewrite must preserve value and rows
+    // keeps it a string, and the rewrite must preserve value and rows.
+    // "02" holds one file — already at its target, so compaction must
+    // leave its manifest entry alone
     val path = s"${tmp("graft-badpart")}/layout"
-    Seq((1L, 20L, "01")).toDF("event_id", "ts_ms", "event_date")
+    Seq((1L, 20L, "01"), (3L, 30L, "02")).toDF("event_id", "ts_ms", "event_date")
       .coalesce(1).write.partitionBy("event_date").parquet(path)
     Seq((2L, 10L, "01")).toDF("event_id", "ts_ms", "event_date")
       .coalesce(1).write.mode("append").partitionBy("event_date").parquet(path)
-    val res = Sink.compactPartitions(spark, path, "event_date",
-      1L << 30, Seq("ts_ms"))
+    Snapshot.init(spark, path, "event_date")
+    def filesOf(part: String): Seq[String] =
+      Snapshot.currentFiles(spark, path)._2.filter(_.startsWith(s"$part/"))
+    val untouched = filesOf("event_date=02")
+    val res = Snapshot.compact(spark, path, "event_date", 1L << 30, Seq("ts_ms"))
     assert(res == Seq(("event_date=01", 2, 1)))
-    val after = spark.read.parquet(path)
-    assert(after.select("event_id").collect().map(_.getLong(0)).toSet ==
-      Set(1L, 2L))
-    // storage identity preserved: the dir keeps its exact name (a
-    // serving read infers "01" as int 1 — same before and after, that
-    // is reader semantics; maintenance must not rewrite the dir to
-    // "event_date=1" or lose it)
-    assert(new java.io.File(s"$path/event_date=01").exists())
+    assert(filesOf("event_date=02") == untouched)
+    assert(Snapshot.readSnapshot(spark, path).select("event_id").collect()
+      .map(_.getLong(0)).toSet == Set(1L, 2L, 3L))
+    // storage identity preserved: the rewritten file lands under the
+    // exact dir name (a serving read infers "01" as int 1 — same before
+    // and after, that is reader semantics; maintenance must not rewrite
+    // the dir to "event_date=1" or lose it)
+    assert(filesOf("event_date=01").size == 1)
     assert(!new java.io.File(s"$path/event_date=1").exists())
+    // idempotent: a second sweep finds nothing to do
+    assert(Snapshot.compact(spark, path, "event_date", 1L << 30,
+      Seq("ts_ms")).isEmpty)
 
     // an EXTERNALLY-written dir with non-canonical escaping ("a%62"
     // unescapes to "ab", which re-escapes to "ab" — a different dir
     // name): the staged rewrite lands under the canonical name, so the
-    // pre-swap validation must abort with the table untouched instead
-    // of swapping the live partition for nothing
+    // pre-commit validation must abort with the snapshot unchanged
+    // instead of committing the partition away
     val path2 = s"${tmp("graft-badpart")}/external"
     val flat = s"${tmp("graft-badpart")}/flat"
     Seq((3L, 30L)).toDF("event_id", "ts_ms").coalesce(1).write.parquet(flat)
@@ -548,17 +306,20 @@ class SourcesSpec extends AnyFunSuite {
         java.nio.file.Files.move(f.toPath,
           new java.io.File(dir, f.getName).toPath)
       }
+    Snapshot.init(spark, path2, "event_date")
+    def state(): (Option[Long], Set[Long]) =
+      (Snapshot.currentVersion(spark, path2),
+        Snapshot.readSnapshot(spark, path2).select("event_id").collect()
+          .map(_.getLong(0)).toSet)
+    val before = state()
+    assert(before == (Some(1L), Set(3L, 4L)))
     val ex = intercept[IllegalStateException] {
-      Sink.compactPartitions(spark, path2, "event_date", 1L << 30, Seq("ts_ms"))
+      Snapshot.compact(spark, path2, "event_date", 1L << 30, Seq("ts_ms"))
     }
     assert(ex.getMessage.contains("staged rewrite missing"),
       s"wrong failure mode: ${ex.getMessage}")
-    // nothing destructive: the live dir and both files survive
-    assert(dir.exists() && dir.listFiles()
-      .count(_.getName.endsWith(".parquet")) == 2)
-    assert(spark.read.option("basePath", path2)
-      .parquet(dir.getAbsolutePath)
-      .select("event_id").collect().map(_.getLong(0)).toSet == Set(3L, 4L))
+    // nothing committed: same version, same rows
+    assert(state() == before)
   }
 
   test("fingerprint retention sweep keeps current + N, deletes older prints") {

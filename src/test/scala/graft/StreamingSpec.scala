@@ -98,45 +98,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(got == want)
   }
 
-  test("streaming ingest lands the partitioned layout; freeze+compact keep it pruned") {
-    import graft.sources.Sink
-    val outDir = Files.createTempDirectory("graft-ingest-out").toFile.getAbsolutePath
-    val ckpt = Files.createTempDirectory("graft-ingest-ckpt").toFile.getAbsolutePath
-    val q = EventStreams.ingestPartitioned(spark,
-      graft.streaming.StreamSources.FileSource(stagedDir), outDir, ckpt)
-    q.awaitTermination()
-    val batch = Tables.load(spark, SharedSpark.sf0001, "events")
-    val n = batch.count()
-    assert(spark.read.parquet(outDir).count() == n)
-    // three micro-batches left per-partition file debris
-    val dateDirs = new java.io.File(outDir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("event_date="))
-    def filesOf(d: java.io.File) =
-      d.listFiles().filter(_.getName.endsWith(".parquet"))
-    assert(dateDirs.nonEmpty && dateDirs.exists(filesOf(_).length > 1))
-    // retire the stream → freeze the sink's transaction log → compact
-    Sink.freezeFileSinkOutput(spark, outDir)
-    val res = Sink.compactPartitions(spark, outDir, "event_date",
-      targetBytes = 1L << 30, sortCols = Seq("ts"))
-    assert(res.nonEmpty)
-    val after = spark.read.parquet(outDir)
-    assert(after.count() == n)
-    assert(after.agg(sum(col("event_id"))).head().getLong(0) ==
-      batch.agg(sum(col("event_id"))).head().getLong(0))
-    // the ONE-JOB rewrite still lands each date at its exact bin-packed
-    // target (packPartitioned's exact file routing)
-    assert(dateDirs.forall(filesOf(_).length == 1))
-    // the pruning contract survives the whole cycle: a date predicate's
-    // executed plan references no other partition's files
-    val d0 = dateDirs.map(_.getName.stripPrefix("event_date=")).min
-    val pruned = after.where(col("event_date") === lit(d0))
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(dateDirs.map(_.getName).filterNot(_ == s"event_date=$d0")
-      .forall(o => !plan.contains(o)))
-    assert(pruned.count() ==
-      batch.where(to_date(col("ts")) === lit(d0)).count())
-  }
-
   test("snapshot ingest: batches commit through the manifest; replay no-ops; foreign run fails; maintenance needs no freeze") {
     import graft.sources.Snapshot
     val outDir = Files.createTempDirectory("graft-snapingest-out")
@@ -186,6 +147,9 @@ class StreamingSpec extends AnyFunSuite {
     val res = Snapshot.compact(spark, outDir, "event_date",
       targetBytes = 1L << 30, sortCols = Seq("ts"))
     assert(res.nonEmpty)
+    // the ONE-JOB rewrite lands each date at its exact bin-packed target
+    assert(Snapshot.currentFiles(spark, outDir)._2
+      .groupBy(_.split("/")(0)).values.forall(_.size == 1))
     val after = Snapshot.readSnapshot(spark, outDir)
     assert(after.count() == n)
     assert(after.agg(sum(col("event_id"))).head().getLong(0) ==
@@ -880,70 +844,31 @@ class StreamingSpec extends AnyFunSuite {
     assert(after.exceptAll(want).isEmpty && want.exceptAll(after).isEmpty)
   }
 
-  test("streaming rollup maintenance ≡ batch rollup; replay no-op; retention keeps the head") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def ev(id: Long, uid: Long, typ: String, t: String, v: Double) =
-      EventStreams.Event(id, java.sql.Timestamp.valueOf(t), uid, typ, v)
-    // three micro-batches; (2026-01-01, view, 3) spans batches 1 and 2 and
-    // (2026-01-02, click, 9) spans 2 and 3, so the maintained rollup must
-    // actually FOLD partials across versions, not just append rows
-    val b1 = Seq(ev(1, 3, "view", "2026-01-01 10:00:00", 1.5),
-                 ev(2, 3, "view", "2026-01-01 11:00:00", 2.25))
-    val b2 = Seq(ev(3, 3, "view", "2026-01-01 12:00:00", 3.0),
-                 ev(4, 9, "click", "2026-01-02 09:00:00", 4.0))
-    val b3 = Seq(ev(5, 9, "click", "2026-01-02 10:00:00", 0.5))
-    val dir = Files.createTempDirectory("graft-rollup").toString
-    val ck = Files.createTempDirectory("graft-rollup-ck").toString
-    val input = MemoryStream[EventStreams.Event]
-    val q = EventStreams.maintainRollup(input.toDS().toDF(), dir, ck)
-    try {
-      Seq(b1, b2, b3).foreach { b =>
-        input.addData(b); q.processAllAvailable()
-      }
-    } finally q.stop()
-    val expected = graft.operators.MatView
-      .eventPartials((b1 ++ b2 ++ b3).toDS().toDF())
-    def same(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
-      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
-    assert(same(EventStreams.readRollup(spark, dir), expected),
-      "stream-maintained rollup diverged from the batch rollup")
-    // replay safety: redelivering the LAST batch under its own id finds
-    // the version committed and must not double-merge
-    EventStreams.mergeBatchIntoRollup(b3.toDS().toDF(), dir, 2L)
-    assert(same(EventStreams.readRollup(spark, dir), expected),
-      "replayed batch double-merged into the rollup")
-    // retention: retiring all but the newest version never touches the
-    // serving head
-    val deleted = EventStreams.pruneRollupVersions(spark, dir, keep = 1)
-    assert(deleted.size == 2, s"expected v=0,v=1 retired, got $deleted")
-    assert(same(EventStreams.readRollup(spark, dir), expected))
-  }
-
   test("rollup maintenance fails LOUDLY when the checkpoint/rollup pairing breaks") {
-    // ADVICE r14: a lost/recreated checkpoint restarts batch ids at 0;
-    // against a surviving rollup every publish finds v=k committed and
-    // no-ops — new events silently vanish. The run-id marker must turn
-    // that silent fail-open into an explicit failure.
+    // a lost/recreated checkpoint restarts batch ids at 0; against a
+    // surviving store every batch would find its id committed and no-op
+    // — new events silently vanish. The run token in the manifest
+    // header must turn that silent fail-open into an explicit failure.
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.sources.Snapshot
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     def ev(id: Long, t: String) = EventStreams.Event(
       id, java.sql.Timestamp.valueOf(t), 1L, "view", 1.0)
-    val dir = Files.createTempDirectory("graft-rollup-guard").toString
+    val dir = Files.createTempDirectory("graft-rollup-guard").toString + "/rollup"
     val ck1 = Files.createTempDirectory("graft-rollup-guard-ck1").toString
-    // run 1 maintains the rollup and binds it to ck1's run token
+    // run 1 maintains the store and binds it to ck1's run token
     val in1 = MemoryStream[EventStreams.Event]
-    val q1 = EventStreams.maintainRollup(in1.toDS().toDF(), dir, ck1)
+    val q1 = EventStreams.maintainRollupSnapshot(in1.toDS().toDF(), dir, ck1)
     try { in1.addData(Seq(ev(1, "2026-01-01 10:00:00"))); q1.processAllAvailable() }
     finally q1.stop()
-    val head = EventStreams.readRollup(spark, dir).collect().toSeq
+    val versions = Snapshot.versions(spark, dir)
+    val head = Snapshot.readSnapshot(spark, dir).collect().toSeq
     // run 2: FRESH checkpoint (the "checkpoint dir lost and recreated"
-    // scenario), same rollup dir — its batch ids restart at 0
+    // scenario), same store — its batch ids restart at 0
     val ck2 = Files.createTempDirectory("graft-rollup-guard-ck2").toString
     val in2 = MemoryStream[EventStreams.Event]
-    val q2 = EventStreams.maintainRollup(in2.toDS().toDF(), dir, ck2)
+    val q2 = EventStreams.maintainRollupSnapshot(in2.toDS().toDF(), dir, ck2)
     val thrown = intercept[Exception] {
       try { in2.addData(Seq(ev(2, "2026-01-01 11:00:00"))); q2.processAllAvailable() }
       finally q2.stop()
@@ -952,20 +877,12 @@ class StreamingSpec extends AnyFunSuite {
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10).toSeq
     assert(causes(thrown).exists(c => c.isInstanceOf[IllegalStateException]
         && c.getMessage.contains("pairing")),
-      s"foreign-run publish did not fail on the pairing guard: $thrown")
-    // and the guarded failure left the rollup exactly as run 1 committed it
-    assert(EventStreams.readRollup(spark, dir).collect().toSeq == head,
+      s"foreign-run batch did not fail on the pairing guard: $thrown")
+    // and the guarded failure left the store exactly as run 1 committed it
+    assert(Snapshot.versions(spark, dir) == versions,
+      "failed foreign-run batch committed a version")
+    assert(Snapshot.readSnapshot(spark, dir).collect().toSeq == head,
       "failed foreign-run batch mutated the rollup")
-    // a rollup with committed versions but NO marker (pre-guard layout)
-    // is also refused — pairing cannot be verified
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(dir, "_RUN_ID"), false)
-    val bare = intercept[IllegalStateException] {
-      EventStreams.mergeBatchIntoRollup(
-        Seq(ev(3, "2026-01-01 12:00:00")).toDS().toDF(), dir, 1L, Some("tok"))
-    }
-    assert(bare.getMessage.contains("_RUN_ID"))
   }
 
   test("streaming CDC apply: micro-batches upsert in O(batch), replay no-ops, the sidecar debt self-limits") {
