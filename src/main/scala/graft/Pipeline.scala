@@ -42,7 +42,7 @@ object Pipeline {
       .distinct()
       .where(col("date_actual").isNotNull)
       .select(
-        date_format(col("date_actual"), "yyyyMMdd").cast(IntegerType).as("date_key"),
+        operators.DateKeys.dateKeyInt(col("date_actual")).as("date_key"),
         col("date_actual"),
         year(col("date_actual")).as("year"),
         month(col("date_actual")).as("month"),

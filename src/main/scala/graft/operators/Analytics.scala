@@ -3645,10 +3645,10 @@ object Analytics {
   // driven by the SQL STRINGS a dashboard user would type, against the
   // SAME oracles — one implementation, two surfaces, and a hash gate
   // that fails if the SQL route diverges from the library route by one
-  // row. DELETE plans natively (GraftTable is a DataSourceV2
-  // SupportsDelete → Snapshot.deleteWhereMoR); UPDATE and MERGE resolve
-  // through the GraftDmlRule post-hoc rule (GraftDml scaladoc) into
-  // updateWhere / mergeAnywhere. Each fixture is its own store + its
+  // row. All three resolve through the GraftDmlRule post-hoc rule
+  // (GraftDml scaladoc): DELETE and UPDATE through one row-level
+  // command into deleteWhereMoR / updateWhere, MERGE into
+  // mergeAnywhere. Each fixture is its own store + its
   // own fingerprint-scoped catalog name (Spark caches catalog plugin
   // instances per name).
   // ---------------------------------------------------------------------

@@ -128,7 +128,7 @@ object DataCoWarehouse {
       .union(raw.select(DataCo.parseDate(col("shipping_date_dateorders")).as("date_actual")))
       .where(col("date_actual").isNotNull).distinct()
       .select(
-        date_format(col("date_actual"), "yyyyMMdd").cast(IntegerType).as("date_key"),
+        DateKeys.dateKeyInt(col("date_actual")).as("date_key"),
         col("date_actual"),
         year(col("date_actual")).as("year"),
         month(col("date_actual")).as("month"),

@@ -98,7 +98,7 @@ object Parity {
       .where(col("date_actual").isNotNull)
       .select(
         col("date_actual"),
-        date_format(col("date_actual"), "yyyyMMdd").cast(IntegerType).as("date_key"),
+        DateKeys.dateKeyInt(col("date_actual")).as("date_key"),
         year(col("date_actual")).as("year"),
         month(col("date_actual")).as("month"),
         quarter(col("date_actual")).as("quarter"),

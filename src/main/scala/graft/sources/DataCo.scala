@@ -34,7 +34,7 @@ object DataCo {
 
   /** yyyyMMdd integer date key (glue_master_etl.py:192,302). */
   def dateKey(c: Column): Column =
-    date_format(parseDate(c), "yyyyMMdd").cast(IntegerType)
+    graft.operators.DateKeys.dateKeyInt(parseDate(c))
 
   private def s(n: String)  = StructField(n, StringType)
   private def i(n: String)  = StructField(n, IntegerType)

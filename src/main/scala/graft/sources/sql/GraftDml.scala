@@ -3,13 +3,14 @@ package graft.sources.sql
 import graft.sources.Snapshot
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, Cast, CommonExpressionRef, EqualTo, Expression, InheritAnalysisRules, RuntimeReplaceable, With}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, Cast, CommonExpressionRef, EqualTo, Expression, InSubquery, InheritAnalysisRules, Literal, RuntimeReplaceable, ScalarSubquery, SubqueryExpression, With}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftshim.GraftShim
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** SQL DML over the snapshot store: `DELETE FROM`
   * / `UPDATE` / `MERGE INTO` on `graft.<table>`, completing the SQL
@@ -19,33 +20,32 @@ import org.apache.spark.sql.graftshim.GraftShim
   *
   * Each verb maps onto the library primitive that already owns its
   * semantics, so SQL and library callers share ONE implementation and
-  * one set of refusals:
+  * one set of refusals. Spark has no V1-write seam for row-level DML
+  * (the `SupportsRowLevelOperations` path demands a full V2
+  * BatchWrite), so a post-hoc resolution rule ([[GraftDmlRule]],
+  * injected by [[GraftSparkSessionExtension]]) replaces each analyzed
+  * statement on a graft table with a runnable command:
   *
-  *  - `DELETE FROM graft.t WHERE …` — NATIVE DataSourceV2:
-  *    [[GraftTable]] implements `SupportsDelete`, Spark's own
-  *    `DeleteFromTableExec` hands over the translated filters, and the
-  *    delete commits as [[Snapshot.deleteWhereMoR]] — O(matched rows),
-  *    one deletion-vector sidecar, zero data files rewritten.
-  *  - `UPDATE graft.t SET … WHERE …` — Spark has no V1-write seam for
-  *    row-level updates (the `SupportsRowLevelOperations` path demands
-  *    a full V2 BatchWrite), so a post-hoc resolution rule
-  *    ([[GraftDmlRule]], injected by [[GraftSparkSessionExtension]])
-  *    replaces the analyzed `UpdateTable` with a command running
-  *    [[Snapshot.updateWhere]] — the same one-vector-plus-new-images
-  *    atomic commit q64 grades, O(matched rows) at any table size.
-  *  - `MERGE INTO graft.t USING src ON t.k = s.k WHEN MATCHED THEN
-  *    UPDATE SET * WHEN NOT MATCHED THEN INSERT *` — the upsert shape
-  *    (and ONLY it: the library's merge contract is replace-or-insert
-  *    by key; clause conditions, delete actions, or diverging
-  *    update/insert images refuse loudly). Executes as
-  *    [[Snapshot.mergeAnywhere]]: cross-partition keys located through
-  *    the secondary key index (q88's contract), O(touched partitions),
-  *    with the index maintained as a sibling layout of the table.
+  *  - `UPDATE graft.t SET … WHERE …` and `DELETE FROM graft.t WHERE …`
+  *    — with or without subqueries, any predicate — lower through ONE
+  *    split ([[rowLevelCommand]]) into ONE command
+  *    ([[GraftRowLevelCommand]]) running [[Snapshot.updateWhere]] /
+  *    [[Snapshot.deleteWhereMoR]]: one atomic commit of a deletion
+  *    vector (plus the re-imaged rows for UPDATE), O(matched rows),
+  *    zero data files rewritten by a DELETE. A `WHERE k IN (subquery)`
+  *    conjunct lowers onto the general-merge machinery instead.
+  *  - `MERGE INTO graft.t USING src ON t.k = s.k …` — the exact upsert
+  *    (`WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`)
+  *    executes as [[Snapshot.mergeAnywhere]]: cross-partition keys
+  *    located through the secondary key index (q88's contract),
+  *    O(touched partitions), with the index maintained as a sibling
+  *    layout of the table; every other clause shape lowers through
+  *    [[GraftMergeIntoCommand]] ([[mergeCommand]] scaladoc).
   *
   * Resolved-to-unresolved seam: the analyzed assignments and
   * conditions carry `AttributeReference`s bound to the DML statement's
   * own relation instance; the library primitives re-read the table
-  * themselves, so every attribute is rewritten to its bare name
+  * themselves, so every attribute is rewritten to its name
   * ([[GraftDml.unresolve]]) and re-resolves against the primitive's
   * scan — name-stable because both sides read the same recorded
   * schema. At 100 TB nothing here adds data IO: the rewrite is
@@ -55,18 +55,21 @@ object GraftDml {
   private def unsupported(what: String): Nothing =
     throw new UnsupportedOperationException(what)
 
-  /** Resolved attributes → bare names, so the expression re-resolves
-    * against the executing primitive's own scan of the table.
+  /** Resolved attributes → the names the executing primitive
+    * re-resolves against its own scan of the table: bare names for the
+    * library primitives, `_graft_t_`/`_graft_s_`-prefixed ones for the
+    * general-merge frame ([[GraftMergeIntoCommand]]).
     * Subqueries refuse LOUDLY first: their inner plans carry resolved
     * attributes of OTHER relations that the re-resolution seam cannot
     * carry across — letting one through could re-bind a name to the
     * wrong relation silently, the exact class of bug a loud boundary
-    * exists to prevent. (UPDATE/DELETE statements with subqueries
-    * never reach this seam — they route through the pre-materializing
-    * commands; this backstop fires only for MERGE expressions.) */
-  private def unresolve(e: Expression): Expression = {
+    * exists to prevent. (UPDATE and DELETE pre-materialize their
+    * subqueries before reaching this seam — [[GraftRowLevelCommand]];
+    * this backstop fires only for MERGE expressions.) */
+  private[sql] def unresolve(e: Expression,
+      name: AttributeReference => String): Column = {
     e.foreach {
-      case s: org.apache.spark.sql.catalyst.expressions.SubqueryExpression =>
+      case s: SubqueryExpression =>
         unsupported(
           s"subqueries are not supported in graft MERGE expressions " +
           s"(got '${s.sql}') — pre-compute the value into the USING " +
@@ -74,9 +77,9 @@ object GraftDml {
           "subqueries automatically)")
       case _ => ()
     }
-    inlineReplacements(e).transform {
-      case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
-    }
+    GraftShim.column(inlineReplacements(e).transform {
+      case a: AttributeReference => UnresolvedAttribute.quoted(name(a))
+    })
   }
 
   /** `InheritAnalysisRules` expressions (BETWEEN, NULLIF, …) hold their
@@ -94,39 +97,6 @@ object GraftDml {
           case ref: CommonExpressionRef if defs.contains(ref.id) => defs(ref.id)
         }
     }
-
-  private def columnOf(e: Expression): Column = GraftShim.column(unresolve(e))
-
-  /** [[unresolve]] for the general-merge seam: target attributes
-    * re-resolve as `_graft_t_<name>`, source attributes as
-    * `_graft_s_<name>` — matching the PREFIXED join frame
-    * [[GraftMergeIntoCommand]] builds, so a condition or assignment
-    * referencing `t.value` and `u.value` stays unambiguous after both
-    * sides land in one joined frame. Subqueries refuse exactly as in
-    * [[unresolve]]. */
-  private def unresolvePrefixed(e: Expression,
-      tOut: org.apache.spark.sql.catalyst.expressions.AttributeSet,
-      sOut: org.apache.spark.sql.catalyst.expressions.AttributeSet)
-      : Expression = {
-    e.foreach {
-      case s: org.apache.spark.sql.catalyst.expressions.SubqueryExpression =>
-        unsupported(
-          s"subqueries are not supported in graft MERGE expressions " +
-          s"(got '${s.sql}') — pre-compute the value into the USING " +
-          "source (UPDATE and DELETE pre-materialize scalar and IN " +
-          "subqueries automatically)")
-      case _ => ()
-    }
-    inlineReplacements(e).transform {
-      case a: AttributeReference if tOut.contains(a) =>
-        UnresolvedAttribute.quoted(GraftMergeIntoCommand.TP + a.name)
-      case a: AttributeReference if sOut.contains(a) =>
-        UnresolvedAttribute.quoted(GraftMergeIntoCommand.SP + a.name)
-      case a: AttributeReference => unsupported(
-        s"MERGE expression references '${a.name}', which is neither a " +
-        "target nor a source column")
-    }
-  }
 
   /** Alignment wrappers around an assignment side: the analyzer casts
     * value types and aliases star-expanded columns. */
@@ -155,20 +125,35 @@ object GraftDml {
     case other => Seq(other)
   }
 
-  /** Rewrite an analyzed UPDATE on a graft table; None = not ours.
+  /** The target's columns as the commands' image schema. */
+  private def tableSchema(rel: DataSourceV2Relation): StructType =
+    StructType(rel.output.map(a => StructField(a.name, a.dataType, a.nullable)))
+
+  /** Rewrite an analyzed UPDATE (`assignments = Some(…)`) or DELETE
+    * (`None`) on a graft table; None = not ours. `verb` names the
+    * statement in every refusal.
     *
-    * Subqueries PRE-MATERIALIZE instead of refusing:
-    * an UNCORRELATED scalar subquery anywhere in SET/WHERE executes
-    * once at run time and splices back as a literal, and ONE
-    * uncorrelated `IN (subquery)` as a top-level WHERE conjunct on a
-    * plain column lowers onto the general-merge machinery (the
-    * subquery's distinct result becomes the merge source, the residual
-    * predicate the clause condition) — a real distributed semi-join,
-    * never a collected value list. Correlated subqueries, EXISTS,
-    * NOT IN, and multiple IN conjuncts keep refusing loudly. */
-  private[sql] def updateCommand(u: UpdateTable): Option[LeafRunnableCommand] =
-    relationOf(u.table).map { case (t, rel) =>
-      val rawSets: Seq[(String, Expression)] = u.assignments.flatMap { a =>
+    * UPDATE's assignment pre-pass keeps top-level columns only and
+    * drops aligned identity assignments (`col = col` is not an update).
+    * Subqueries PRE-MATERIALIZE instead of refusing: an UNCORRELATED
+    * scalar subquery anywhere in SET/WHERE executes once at run time
+    * and splices back as a literal, and ONE uncorrelated
+    * `IN (subquery)` as a top-level WHERE conjunct on a plain column
+    * lowers onto the general-merge machinery (the subquery's distinct
+    * result becomes the merge source, the residual predicate the
+    * clause condition) — a real distributed semi-join, never a
+    * collected value list; the GDPR forget-me shape
+    * `DELETE … WHERE user_id IN (SELECT …)` is one such statement.
+    * Correlated subqueries, EXISTS, NOT IN, and multiple IN conjuncts
+    * refuse loudly, as does SETting the partition column (a row
+    * changing partitions is a delete plus an append). */
+  private[sql] def rowLevelCommand(verb: String, table: LogicalPlan,
+      condition: Option[Expression], assignments: Option[Seq[Assignment]])
+      : Option[GraftRowLevelCommand] =
+    relationOf(table).map { case (t, rel) =>
+      val path = t.dmlPath(verb)
+      val pcol = t.dmlPartitionCol(verb)
+      val set = assignments.map(_.flatMap { a =>
         val key = strip(a.key) match {
           case ar: AttributeReference => ar
           case other => unsupported(
@@ -180,115 +165,34 @@ object GraftDml {
           case v: AttributeReference if v.exprId == key.exprId => None
           case _ => Some(key.name -> a.value)
         }
-      }
-      val hasSub = (rawSets.map(_._2) ++ u.condition).exists(_.exists(
-        _.isInstanceOf[org.apache.spark.sql.catalyst.expressions
-          .SubqueryExpression]))
-      if (!hasSub)
-        GraftUpdateCommand(t.dmlPath("UPDATE"), t.dmlPartitionCol("UPDATE"),
-          u.condition.map(columnOf).getOrElse(lit(true)),
-          rawSets.map { case (k, v) => k -> columnOf(v) }.toMap)
-      else {
-        import org.apache.spark.sql.catalyst.expressions.{InSubquery, ScalarSubquery, SubqueryExpression}
-        val pcol = t.dmlPartitionCol("UPDATE")
-        val conj = u.condition.map(conjuncts).getOrElse(Seq.empty)
-        val (inConj, residual) = conj.partition(_.isInstanceOf[InSubquery])
-        def scalarOnly(e: Expression, where: String): Unit = e.foreach {
-          case s: ScalarSubquery =>
-            if (s.outerAttrs.nonEmpty) unsupported(
-              s"correlated subquery in UPDATE $where ('${s.sql}') — " +
-              "only uncorrelated subqueries pre-materialize")
-          case s: SubqueryExpression => unsupported(
-            s"unsupported subquery shape in UPDATE $where " +
-            s"('${s.sql}') — supported: an uncorrelated SCALAR " +
-            "subquery anywhere, and ONE uncorrelated IN-subquery as a " +
-            "top-level WHERE conjunct on a plain column (NOT IN / " +
-            "EXISTS keep refusing)")
-          case _ => ()
-        }
-        rawSets.foreach { case (k, v) => scalarOnly(v, s"SET $k") }
-        residual.foreach(scalarOnly(_, "WHERE"))
-        val keyed: Option[(String, LogicalPlan)] = inConj match {
-          case Seq() => None
-          case Seq(in: InSubquery) =>
-            val keyName = in.values match {
-              case Seq(a: AttributeReference) => a.name
-              case other => unsupported(
-                s"UPDATE ... WHERE ... IN keys on " +
-                s"'${other.map(_.sql).mkString(", ")}' — a single plain " +
-                "column is the supported shape")
-            }
-            if (in.query.outerAttrs.nonEmpty) unsupported(
-              "correlated IN-subquery in UPDATE WHERE — only " +
-              "uncorrelated subqueries pre-materialize")
-            val out = in.query.plan.output
-            if (out.size != 1) unsupported(
-              s"IN-subquery must select exactly one column, got ${out.size}")
-            Some(keyName ->
-              Distinct(Project(Seq(Alias(out.head, keyName)()), in.query.plan)))
-          case _ => unsupported(
-            "UPDATE supports at most ONE IN-subquery WHERE conjunct")
-        }
-        keyed.foreach { case (keyName, _) =>
-          rawSets.foreach { case (k, _) =>
-            if (k == pcol) unsupported(
-              s"UPDATE cannot SET partition column '$pcol' — a row " +
-              "changing partitions is a delete plus an append")
-            if (k == keyName) unsupported(
-              s"UPDATE cannot SET '$k', the IN-subquery key column — " +
-              "re-keying the matched rows is a MERGE, not an update")
-          }
-        }
-        val tSchema = org.apache.spark.sql.types.StructType(rel.output.map(
-          a => org.apache.spark.sql.types.StructField(
-            a.name, a.dataType, a.nullable)))
-        GraftUpdateSubqueryCommand(t.dmlPath("UPDATE"), pcol, tSchema,
-          keyed, residual, rawSets)
-      }
-    }
-
-  /** Rewrite an analyzed DELETE on a graft table whose condition holds
-    * SUBQUERIES; None = not ours OR no subquery (the subquery-free
-    * DELETE keeps Spark's native `SupportsDelete` path →
-    * [[Snapshot.deleteWhereMoR]], which the V2 filter translation
-    * cannot carry subqueries into). Same pre-materialization contract
-    * as [[updateCommand]]: uncorrelated scalars execute once at run
-    * time; one uncorrelated `IN (subquery)` top-level conjunct lowers
-    * onto the general-merge DELETE action (distributed semi-join,
-    * the GDPR forget-me shape `DELETE … WHERE user_id IN (SELECT …)`);
-    * correlated / EXISTS / NOT IN refuse loudly. */
-  private[sql] def deleteCommand(d: DeleteFromTable): Option[LeafRunnableCommand] = {
-    import org.apache.spark.sql.catalyst.expressions.{InSubquery, ScalarSubquery, SubqueryExpression}
-    if (!d.condition.exists(_.isInstanceOf[SubqueryExpression])) None
-    else relationOf(d.table).map { case (t, rel) =>
-      val pcol = t.dmlPartitionCol("DELETE FROM")
-      val conj = conjuncts(d.condition)
-      val (inConj, residual) = conj.partition(_.isInstanceOf[InSubquery])
-      def scalarOnly(e: Expression): Unit = e.foreach {
+      })
+      val (inConj, residual) = condition.toSeq.flatMap(conjuncts)
+        .partition(_.isInstanceOf[InSubquery])
+      def scalarOnly(e: Expression, where: String): Unit = e.foreach {
         case s: ScalarSubquery =>
           if (s.outerAttrs.nonEmpty) unsupported(
-            s"correlated subquery in DELETE WHERE ('${s.sql}') — " +
+            s"correlated subquery in $verb $where ('${s.sql}') — " +
             "only uncorrelated subqueries pre-materialize")
         case s: SubqueryExpression => unsupported(
-          s"unsupported subquery shape in DELETE WHERE ('${s.sql}') — " +
-          "supported: an uncorrelated SCALAR subquery anywhere, and " +
-          "ONE uncorrelated IN-subquery as a top-level conjunct on a " +
+          s"unsupported subquery shape in $verb $where ('${s.sql}') — " +
+          "supported: an uncorrelated SCALAR subquery anywhere, and ONE " +
+          "uncorrelated IN-subquery as a top-level WHERE conjunct on a " +
           "plain column (NOT IN / EXISTS keep refusing)")
         case _ => ()
       }
-      residual.foreach(scalarOnly)
+      residual.foreach(scalarOnly(_, "WHERE"))
       val keyed: Option[(String, LogicalPlan)] = inConj match {
         case Seq() => None
         case Seq(in: InSubquery) =>
           val keyName = in.values match {
             case Seq(a: AttributeReference) => a.name
             case other => unsupported(
-              s"DELETE ... WHERE ... IN keys on " +
+              s"$verb ... WHERE ... IN keys on " +
               s"'${other.map(_.sql).mkString(", ")}' — a single plain " +
               "column is the supported shape")
           }
           if (in.query.outerAttrs.nonEmpty) unsupported(
-            "correlated IN-subquery in DELETE WHERE — only " +
+            s"correlated IN-subquery in $verb WHERE — only " +
             "uncorrelated subqueries pre-materialize")
           val out = in.query.plan.output
           if (out.size != 1) unsupported(
@@ -296,15 +200,19 @@ object GraftDml {
           Some(keyName ->
             Distinct(Project(Seq(Alias(out.head, keyName)()), in.query.plan)))
         case _ => unsupported(
-          "DELETE supports at most ONE IN-subquery WHERE conjunct")
+          s"$verb supports at most ONE IN-subquery WHERE conjunct")
       }
-      val tSchema = org.apache.spark.sql.types.StructType(rel.output.map(
-        a => org.apache.spark.sql.types.StructField(
-          a.name, a.dataType, a.nullable)))
-      GraftDeleteSubqueryCommand(t.dmlPath("DELETE FROM"), pcol, tSchema,
-        keyed, residual)
+      set.toSeq.flatten.foreach { case (k, v) =>
+        scalarOnly(v, s"SET $k")
+        if (k == pcol) unsupported(
+          s"UPDATE cannot SET partition column '$pcol' — a row " +
+          "changing partitions is a delete plus an append")
+        if (keyed.exists(_._1 == k)) unsupported(
+          s"UPDATE cannot SET '$k', the IN-subquery key column — " +
+          "re-keying the matched rows is a MERGE, not an update")
+      }
+      GraftRowLevelCommand(path, pcol, tableSchema(rel), keyed, residual, set)
     }
-  }
 
   /** Rewrite an analyzed MERGE on a graft table; None = not ours.
     *
@@ -398,8 +306,13 @@ object GraftDml {
       fast.getOrElse {
         // ---- general lowering -----------------------------------------
         val pcol = t.dmlPartitionCol("MERGE")
-        def prefixed(e: Expression): Column =
-          GraftShim.column(unresolvePrefixed(e, tOut, sOut))
+        def prefixed(e: Expression): Column = unresolve(e, {
+          case a if tOut.contains(a) => GraftMergeIntoCommand.TP + a.name
+          case a if sOut.contains(a) => GraftMergeIntoCommand.SP + a.name
+          case a => unsupported(
+            s"MERGE expression references '${a.name}', which is neither a " +
+            "target nor a source column")
+        })
         def assignKey(a: Assignment, clause: String): String =
           strip(a.key) match {
             case ar: AttributeReference => ar.name
@@ -467,27 +380,10 @@ object GraftDml {
             s"ON key column — missing ${need.mkString(", ")} (unassigned " +
             "OTHER columns insert as NULL)")
         }
-        val tSchema = org.apache.spark.sql.types.StructType(rel.output.map(
-          a => org.apache.spark.sql.types.StructField(
-            a.name, a.dataType, a.nullable)))
         GraftMergeIntoCommand(t.dmlPath("MERGE"), pcol, m.sourceTable,
-          keyCols, tSchema, matched, notMatched)
+          keyCols, tableSchema(rel), matched, notMatched)
       }
     }
-}
-
-/** UPDATE executed through [[Snapshot.updateWhere]] — one atomic
-  * commit: a deletion vector hides the matched rows' old images, their
-  * re-imaged rows land as fresh files. An all-identity statement
-  * (`SET a = a` — every assignment filtered by the alignment check)
-  * is a legal SQL no-op: nothing to set, nothing committed. */
-case class GraftUpdateCommand(path: String, pcol: String, cond: Column,
-    set: Map[String, Column]) extends LeafRunnableCommand {
-  override def run(session: SparkSession): Seq[Row] = {
-    if (set.nonEmpty)
-      Snapshot.updateWhere(session, path, pcol, cond, set): Unit
-    Seq.empty
-  }
 }
 
 /** MERGE executed through [[Snapshot.mergeAnywhere]]: update keys
@@ -506,100 +402,60 @@ case class GraftMergeCommand(path: String, pcol: String,
   }
 }
 
-/** UPDATE whose SET/WHERE carried SUBQUERIES, executed by
-  * PRE-MATERIALIZATION at run time:
+/** UPDATE (`set = Some(image)`) or DELETE (`set = None`) on a graft
+  * table — the one command both verbs lower into ([[GraftDml]]
+  * `rowLevelCommand`), with or without subqueries:
   *
   *  - every uncorrelated SCALAR subquery runs once on the driver (its
   *    plan is already resolved — one collect of one row) and splices
   *    back as a literal;
-  *  - a `WHERE k IN (subquery)` conjunct lowers onto
-  *    [[GraftMergeIntoCommand]]: the subquery's DISTINCT result is the
-  *    merge source keyed on `k`, the residual WHERE conjuncts become
-  *    the matched clause's condition, and the SET pairs its partial
-  *    update image — a distributed semi-join through the key index,
-  *    never a collected value list (the IN set may be data-sized).
+  *  - without an IN key: [[Snapshot.updateWhere]] (one atomic vector +
+  *    re-image commit) or [[Snapshot.deleteWhereMoR]] (a vector-only
+  *    commit), both O(matched rows);
+  *  - with a `WHERE k IN (subquery)` key: [[GraftMergeIntoCommand]] —
+  *    the subquery's DISTINCT result is the merge source keyed on `k`,
+  *    the residual WHERE conjuncts become the matched clause's
+  *    condition, and the SET its partial update image (or, for DELETE,
+  *    the clause's delete action) — a distributed semi-join through the
+  *    key index, never a collected value list (the IN set may be
+  *    data-sized). Duplicate target keys are legal here (every row of a
+  *    matched key acts — IN semantics; unacted twins survive as
+  *    identity re-images), which is why the merge cardinality rule
+  *    counts SOURCE duplicates, and the source is made DISTINCT.
   *
-  * Duplicate target keys are legal here (every row of a matched key
-  * updates — IN semantics), which is why the merge cardinality rule
-  * counts SOURCE duplicates, and the source is made DISTINCT. */
-case class GraftUpdateSubqueryCommand(path: String, pcol: String,
-    tSchema: org.apache.spark.sql.types.StructType,
+  * An all-identity UPDATE (`SET a = a` — every assignment filtered by
+  * the alignment check) is a legal SQL no-op: nothing committed. */
+case class GraftRowLevelCommand(path: String, pcol: String,
+    tSchema: StructType,
     keyed: Option[(String, LogicalPlan)],
     residual: Seq[Expression],
-    sets: Seq[(String, Expression)]) extends LeafRunnableCommand {
+    set: Option[Seq[(String, Expression)]]) extends LeafRunnableCommand {
 
   override def run(session: SparkSession): Seq[Row] = {
-    if (sets.isEmpty) return Seq.empty // all-identity SET: legal no-op
+    if (set.exists(_.isEmpty)) return Seq.empty // all-identity SET: legal no-op
+    val verb = if (set.isEmpty) "DELETE" else "UPDATE"
     def mat(e: Expression): Expression = e.transform {
-      case s: org.apache.spark.sql.catalyst.expressions.ScalarSubquery =>
+      case s: ScalarSubquery =>
         val rows = GraftShim.ofRows(session, s.plan).limit(2).collect()
         if (rows.length > 1) throw new IllegalStateException(
-          s"scalar subquery in UPDATE returned more than one row: ${s.sql}")
-        org.apache.spark.sql.catalyst.expressions.Literal.create(
-          if (rows.isEmpty) null else rows.head.get(0), s.dataType)
+          s"scalar subquery in $verb returned more than one row: ${s.sql}")
+        Literal.create(if (rows.isEmpty) null else rows.head.get(0), s.dataType)
     }
-    val sets2 = sets.map { case (k, v) => k -> mat(v) }
-    val resid2 = residual.map(mat)
-    keyed match {
-      case None =>
-        def bare(e: Expression): Column = GraftShim.column(e.transform {
-          case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
-        })
-        val cond = resid2.map(bare).reduceOption(_ && _).getOrElse(lit(true))
-        Snapshot.updateWhere(session, path, pcol, cond,
-          sets2.map { case (k, v) => k -> bare(v) }.toMap): Unit
-      case Some((keyName, values)) =>
-        def pref(e: Expression): Column = GraftShim.column(e.transform {
-          case a: AttributeReference =>
-            UnresolvedAttribute.quoted(GraftMergeIntoCommand.TP + a.name)
-        })
-        val cond = resid2.map(pref).reduceOption(_ && _)
+    val name: AttributeReference => String =
+      if (keyed.isEmpty) _.name else GraftMergeIntoCommand.TP + _.name
+    def column(e: Expression): Column = GraftDml.unresolve(mat(e), name)
+    val cond = residual.map(column).reduceOption(_ && _)
+    val image = set.map(_.map { case (k, v) => k -> column(v) }.toMap)
+    (keyed, image) match {
+      case (None, Some(img)) =>
+        Snapshot.updateWhere(session, path, pcol,
+          cond.getOrElse(lit(true)), img): Unit
+      case (None, None) =>
+        Snapshot.deleteWhereMoR(session, path, pcol,
+          cond.getOrElse(lit(true))): Unit
+      case (Some((keyName, values)), _) =>
         GraftMergeIntoCommand(path, pcol, values, Seq(keyName), tSchema,
-          matched = Seq((cond,
-            Some(sets2.map { case (k, v) => k -> pref(v) }.toMap))),
-          notMatched = Nil).run(session): Unit
-    }
-    Seq.empty
-  }
-}
-
-/** DELETE whose WHERE carried SUBQUERIES — [[GraftUpdateSubqueryCommand]]'s
-  * contract without images: scalars pre-materialize, then either a
-  * plain [[Snapshot.deleteWhereMoR]] (vector-only commit, O(matched))
-  * or, with an IN-subquery, the general-merge DELETE action (the
-  * subquery's distinct result is the source, the residual the clause
-  * condition, unacted duplicate-key twins survive as identity
-  * re-images). */
-case class GraftDeleteSubqueryCommand(path: String, pcol: String,
-    tSchema: org.apache.spark.sql.types.StructType,
-    keyed: Option[(String, LogicalPlan)],
-    residual: Seq[Expression]) extends LeafRunnableCommand {
-
-  override def run(session: SparkSession): Seq[Row] = {
-    def mat(e: Expression): Expression = e.transform {
-      case s: org.apache.spark.sql.catalyst.expressions.ScalarSubquery =>
-        val rows = GraftShim.ofRows(session, s.plan).limit(2).collect()
-        if (rows.length > 1) throw new IllegalStateException(
-          s"scalar subquery in DELETE returned more than one row: ${s.sql}")
-        org.apache.spark.sql.catalyst.expressions.Literal.create(
-          if (rows.isEmpty) null else rows.head.get(0), s.dataType)
-    }
-    val resid2 = residual.map(mat)
-    keyed match {
-      case None =>
-        def bare(e: Expression): Column = GraftShim.column(e.transform {
-          case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
-        })
-        val cond = resid2.map(bare).reduceOption(_ && _).getOrElse(lit(true))
-        Snapshot.deleteWhereMoR(session, path, pcol, cond): Unit
-      case Some((keyName, values)) =>
-        def pref(e: Expression): Column = GraftShim.column(e.transform {
-          case a: AttributeReference =>
-            UnresolvedAttribute.quoted(GraftMergeIntoCommand.TP + a.name)
-        })
-        val cond = resid2.map(pref).reduceOption(_ && _)
-        GraftMergeIntoCommand(path, pcol, values, Seq(keyName), tSchema,
-          matched = Seq((cond, None)), notMatched = Nil).run(session): Unit
+          matched = Seq((cond, image)), notMatched = Nil).run(session): Unit
     }
     Seq.empty
   }
@@ -647,7 +503,7 @@ object GraftMergeIntoCommand {
   * take fresh ids at commit (NULL image), the library rule. */
 case class GraftMergeIntoCommand(path: String, pcol: String,
     source: LogicalPlan, keyCols: Seq[String],
-    tSchema: org.apache.spark.sql.types.StructType,
+    tSchema: StructType,
     matched: Seq[(Option[Column], Option[Map[String, Column]])],
     notMatched: Seq[(Option[Column], Map[String, Column])])
     extends LeafRunnableCommand {
@@ -742,7 +598,7 @@ case class GraftMergeIntoCommand(path: String, pcol: String,
       // (the action index already encodes first-match), cast to the
       // recorded type; unassigned columns — and the id — keep the
       // target's value
-      def updValue(f: org.apache.spark.sql.types.StructField): Column =
+      def updValue(f: StructField): Column =
         updIdx.foldLeft(Option.empty[Column]) { (acc, i) =>
           val value = matched(i)._2.get.getOrElse(f.name, col(TP + f.name))
           Some(acc.fold(when(col(act) === i, value))(
@@ -816,21 +672,21 @@ case class GraftMergeIntoCommand(path: String, pcol: String,
   }
 }
 
-/** The post-hoc resolution rule: analyzed UPDATE/MERGE roots over
-  * graft tables become runnable commands BEFORE the optimizer's
-  * row-level rewrite rules would refuse them (graft tables do not
-  * implement the V2-write-only `SupportsRowLevelOperations`). Non-graft
-  * targets pass through untouched. */
+/** The post-hoc resolution rule: analyzed UPDATE/DELETE/MERGE roots
+  * over graft tables become runnable commands BEFORE the optimizer's
+  * row-level rewrite rules would refuse them (graft tables implement
+  * neither the V2-write-only `SupportsRowLevelOperations` nor a
+  * filter-based delete). Non-graft targets pass through untouched. */
 object GraftDmlRule extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan match {
     case u: UpdateTable if u.resolved =>
-      GraftDml.updateCommand(u).getOrElse(u)
+      GraftDml.rowLevelCommand("UPDATE", u.table, u.condition,
+        Some(u.assignments)).getOrElse(u)
+    case d: DeleteFromTable if d.resolved =>
+      GraftDml.rowLevelCommand("DELETE", d.table, Some(d.condition),
+        None).getOrElse(d)
     case m: MergeIntoTable if m.resolved =>
       GraftDml.mergeCommand(m).getOrElse(m)
-    // only DELETEs whose condition holds a subquery reroute — the
-    // plain shape keeps Spark's native SupportsDelete path
-    case d: DeleteFromTable if d.resolved =>
-      GraftDml.deleteCommand(d).getOrElse(d)
     case _ => plan
   }
 }

@@ -248,14 +248,11 @@ object GraftSql {
 
 /** One snapshot table pinned to version `v`, exposed through the
   * connector API. `pinned` marks a time-travel load (refuses writes,
-  * including DML). `SupportsDelete` makes `DELETE FROM graft.t WHERE …`
-  * plan natively (Spark's `DeleteFromTableExec` hands over the
-  * translated filters) and commit as [[Snapshot.deleteWhereMoR]] —
-  * O(matched rows), one vector sidecar, zero data files rewritten;
-  * UPDATE/MERGE route through [[GraftDmlRule]]. */
+  * including DML). DELETE/UPDATE/MERGE route through [[GraftDmlRule]]
+  * onto the snapshot primitives; the table itself only reads (manifest
+  * planned, [[GraftScanBuilder]]) and appends (INSERT INTO). */
 class GraftTable(path: String, v: Long, tableName: String, pinned: Boolean)
-    extends Table with SupportsRead with SupportsWrite
-    with org.apache.spark.sql.connector.catalog.SupportsDelete {
+    extends Table with SupportsRead with SupportsWrite {
   private def spark: SparkSession = SparkSession.active
   private lazy val meta: Map[String, String] = Snapshot.metaOf(spark, path, v)
 
@@ -271,19 +268,8 @@ class GraftTable(path: String, v: Long, tableName: String, pinned: Boolean)
   private[sql] def dmlPartitionCol(verb: String): String =
     meta.getOrElse("pcol", throw new UnsupportedOperationException(
       s"$tableName has no recorded partition column — SQL $verb needs " +
-      "a manifest with pcol metadata (init or any post-r16 commit)"))
+      "a manifest with pcol metadata (every snapshot commit records it)"))
 
-  override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    !pinned && meta.contains("pcol") &&
-      filters.forall(f => GraftSql.toColumn(f).isDefined)
-  override def deleteWhere(filters: Array[Filter]): Unit = {
-    val p = dmlPath("DELETE FROM")
-    val pcol = dmlPartitionCol("DELETE FROM")
-    // no filters = unconditional DELETE FROM t (SQL semantics: all rows)
-    val cond = filters.toSeq.flatMap(GraftSql.toColumn)
-      .reduceOption(_ && _).getOrElse(lit(true))
-    Snapshot.deleteWhereMoR(spark, p, pcol, cond): Unit
-  }
   private lazy val tableSchema: StructType =
     Snapshot.schemaOf(spark, path, v).getOrElse(
       // legacy layout without a recorded schema: one plan-time
@@ -312,7 +298,7 @@ class GraftTable(path: String, v: Long, tableName: String, pinned: Boolean)
       "AS OF reads are immutable)")
     val pcol = meta.getOrElse("pcol", throw new UnsupportedOperationException(
       s"$tableName has no recorded partition column — SQL INSERT needs " +
-      "a manifest with pcol metadata (init or any post-r16 commit)"))
+      "a manifest with pcol metadata (every snapshot commit records it)"))
     new WriteBuilder {
       override def build(): Write = new V1Write {
         override def toInsertableRelation: InsertableRelation =

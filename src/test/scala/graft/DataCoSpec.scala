@@ -49,6 +49,29 @@ class DataCoSpec extends AnyFunSuite {
     }
   }
 
+  test("date keys: the integer formula equals the yyyyMMdd formatter form on edge dates") {
+    import spark.implicits._
+    val src = Seq[String]("1/1/2015 0:0", "12/31/2018 23:59",
+        "2/29/2016 12:30", "1/1/0001 0:0", "12/31/9999 23:59", null,
+        "not_a_date").toDF("s")
+    def formatted(d: org.apache.spark.sql.Column) =
+      date_format(d, "yyyyMMdd").cast("int")
+    val got = src.select(DataCo.dateKey(col("s")),
+        formatted(DataCo.parseDate(col("s"))))
+      .collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSeq
+    assert(got.map(_._1) == got.map(_._2), s"source-string keys: $got")
+    assert(got.map(_._1) == Seq(Some(20150101), Some(20181231),
+      Some(20160229), Some(10101), Some(99991231), None, None))
+    // the same edges as DATE values, independent of the source parse
+    val dates = Seq("0001-01-01", "2016-02-29", "2016-12-31", "9999-12-31")
+      .toDF("s").select(to_date(col("s")).as("d"))
+    val byDate = dates.select(graft.operators.DateKeys.dateKeyInt(col("d")),
+        formatted(col("d")))
+      .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
+    assert(byDate.forall { case (a, b) => a == b }, s"date keys: $byDate")
+    assert(byDate.map(_._1) == Seq(10101, 20160229, 20161231, 99991231))
+  }
+
   test("snowflake chain dept <- category <- product resolves in-engine") {
     val dept = DataCoWarehouse.dimDepartment(raw)
     val cat  = DataCoWarehouse.dimCategory(raw, dept)

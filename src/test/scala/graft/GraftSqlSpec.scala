@@ -298,11 +298,45 @@ class GraftSqlSpec extends AnyFunSuite {
     assert(spark.sql("SELECT min(id) AS m FROM gdml.t")
       .collect().head.getLong(0) == 11L)
 
+    // DELETE accepts any predicate UPDATE accepts — including ones
+    // Spark cannot translate into source filters — and stays
+    // vector-only: value * 2 > 1900 hits ids 96..100 and the re-imaged
+    // id=50 (1000.0); abs(id - 55) = 0 hits id 55 alone
+    def liveIds(): Set[Long] =
+      spark.sql("SELECT id FROM gdml.t").collect().map(_.getLong(0)).toSet
+    def files(): Set[String] = Snapshot.filesOf(spark, path,
+      Snapshot.currentVersion(spark, path).get).toSet
+    val ids0 = liveIds()
+    val files0 = files()
+    spark.sql("DELETE FROM gdml.t WHERE value * 2 > 1900")
+    spark.sql("DELETE FROM gdml.t WHERE abs(id - 55) = 0")
+    assert(liveIds() == ids0 -- Set(50L, 55L, 96L, 97L, 98L, 99L, 100L),
+      s"expression DELETEs left: ${(ids0 -- liveIds()).toSeq.sorted}")
+    assert(files0.subsetOf(files()), "expression DELETE re-filed data")
+
+    // UPDATE and DELETE, with and without a subquery, analyze to the ONE
+    // row-level command (analysis only — nothing runs, nothing commits)
+    val vAnalyze = Snapshot.currentVersion(spark, path).get
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    Seq("UPDATE gdml.t SET value = 0 WHERE id = 11",
+        "UPDATE gdml.t SET value = 0 WHERE id IN (SELECT id FROM dml_src)",
+        "UPDATE gdml.t SET value = (SELECT max(value) FROM dml_src)",
+        "DELETE FROM gdml.t WHERE value * 2 > 0",
+        "DELETE FROM gdml.t WHERE id IN (SELECT id FROM dml_src)",
+        "DELETE FROM gdml.t WHERE id > (SELECT min(id) FROM dml_src)",
+        "DELETE FROM gdml.t").foreach { sql =>
+      val analyzed = session.sessionState
+        .executePlan(session.sessionState.sqlParser.parsePlan(sql)).analyzed
+      assert(analyzed.isInstanceOf[graft.sources.sql.GraftRowLevelCommand],
+        s"$sql analyzed to ${analyzed.getClass.getName}")
+    }
+    assert(Snapshot.currentVersion(spark, path).get == vAnalyze)
+
     // refusals: the library contracts surface through SQL unchanged
     // (partition column is not updatable; non-equi ON and rekeying
     // refuse loudly — clause conditions / DELETE actions / partial
     // images are the GENERAL merge path, tested separately)
-    intercept[Exception](
+    intercept[UnsupportedOperationException](
       spark.sql("UPDATE gdml.t SET day = '2024-01-03' WHERE id = 50"))
     intercept[UnsupportedOperationException](spark.sql(
       """MERGE INTO gdml.t AS t USING dml_src AS s ON t.id < s.id
@@ -317,6 +351,12 @@ class GraftSqlSpec extends AnyFunSuite {
     intercept[UnsupportedOperationException](spark.sql(
       """UPDATE gdml.t SET value = 0
         |WHERE EXISTS (SELECT 1 FROM dml_src)""".stripMargin))
+
+    // an unconditional DELETE hides every row, still vector-only
+    val files1 = files()
+    spark.sql("DELETE FROM gdml.t")
+    assert(liveIds().isEmpty)
+    assert(files1.subsetOf(files()), "unconditional DELETE re-filed data")
     ()
   }
 
@@ -601,8 +641,8 @@ class GraftSqlSpec extends AnyFunSuite {
       "SELECT count(*) AS n FROM gdel.t WHERE id >= 40 AND day = '2024-01-01'")
       .collect().head.getLong(0) == 0L)
 
-    // scalar subquery: pre-materialized, then the native vector path —
-    // every data file survives the commit
+    // scalar subquery: pre-materialized, then the vector-only
+    // deleteWhereMoR commit — every data file survives it
     val before = Snapshot.filesOf(spark, path,
       Snapshot.currentVersion(spark, path).get).toSet
     spark.sql(
