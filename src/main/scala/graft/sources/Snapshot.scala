@@ -54,6 +54,14 @@ final class SnapshotConflictException(msg: String)
   * rewrites re-filing the same data files, whose results file-list
   * algebra cannot merge. The caller of an aborted rewrite reruns it
   * against the new snapshot — the standard table-format contract.
+  *
+  * Every public write is an argument mapping over the same private
+  * steps, each written once: [[headOf]] opens the table at its current
+  * version (one manifest read, data and delete entries split);
+  * [[stagePartitioned]] lands data files through a hidden staging dir;
+  * [[writeVectors]] packs and moves a deletion vector;
+  * [[rewriteSurvivors]] re-clusters and rewrites a maintenance read's
+  * survivors; [[commit]] swings the pointer.
   */
 object Snapshot {
 
@@ -61,7 +69,7 @@ object Snapshot {
   private val DeletesDir = "_deletes"
   private val Charset = java.nio.charset.StandardCharsets.UTF_8
 
-  /** INCREMENTAL MANIFESTS (the r15 ask): `m-<version>` is no longer a
+  /** INCREMENTAL MANIFESTS: `m-<version>` is no longer a
     * full live-file listing but a MANIFEST LIST — header metadata plus
     * `@seg-…` lines referencing immutable SEGMENT files in application
     * order. Each commit writes ONE segment naming only its change
@@ -362,7 +370,7 @@ object Snapshot {
       .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
     if (segBytes(lines) > SegCacheMaxEntryBytes) lines
     else {
-      // ADVICE r16: computeIfAbsent dedupes concurrent loads (one store,
+      // computeIfAbsent dedupes concurrent loads (one store,
       // one byte charge — two threads missing the same key no longer
       // both charge the counter for a single stored copy), and overflow
       // RECOMPUTES the counter from actual contents before deciding to
@@ -643,17 +651,40 @@ object Snapshot {
     physReadSchema(meta).map(s => org.apache.spark.sql.types.StructType(
       s.fields.filterNot(_.name == partitionCol)))
 
-  /** (current version, its file list). */
-  def currentFiles(spark: SparkSession, path: String): (Long, Seq[String]) = {
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"no committed snapshot under $path — call Snapshot.init first"))
-    (v, filesOf(spark, path, v))
+  /** A layout opened at its CURRENT version: everything one manifest
+    * read yields — root, filesystem, qualified root, version, header
+    * metadata and resolved entry lines, with data and delete entries
+    * already split — so an entry point plans, checks and commits
+    * against one consistent state. */
+  private final case class Head(root: org.apache.hadoop.fs.Path,
+      fs: org.apache.hadoop.fs.FileSystem, qualified: String, v: Long,
+      meta: Map[String, String], lines: Seq[String]) {
+    val dataLines: Seq[String] = lines.filterNot(isDeleteEntry)
+    val deleteLines: Seq[String] = lines.filter(isDeleteEntry)
+    def files: Seq[String] = dataLines.map(pathOf)
+    def deletes: Seq[String] = deleteLines.map(pathOf)
   }
 
-  private[graft] def filesOfFs(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path, v: Long): Seq[String] =
-    resolvedLinesFs(fs, root, v).filterNot(isDeleteEntry).map(pathOf)
+  /** Open `path` at its current version; the one refusal of a layout
+    * with no committed snapshot, `hint` naming the caller's next step. */
+  private def headOf(spark: SparkSession, path: String, hint: String): Head = {
+    val v = currentVersion(spark, path).getOrElse(
+      throw new IllegalStateException(s"no committed snapshot under $path" +
+        (if (hint.isEmpty) "" else s" — $hint")))
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = fsOf(spark, root)
+    val (meta, lines) = stateOf(spark, path, v)
+    Head(root, fs, fs.makeQualified(root).toString, v, meta, lines)
+  }
+
+  private def headOf(spark: SparkSession, path: String): Head =
+    headOf(spark, path, "")
+
+  /** (current version, its file list). */
+  def currentFiles(spark: SparkSession, path: String): (Long, Seq[String]) = {
+    val h = headOf(spark, path, "call Snapshot.init first")
+    (h.v, h.files)
+  }
 
   private val MaxCommitAttempts = 24
 
@@ -763,7 +794,7 @@ object Snapshot {
     }
   }
 
-  /** ADVICE r15 #1 closed: the recorded-schema merge runs INSIDE the
+  /** The recorded-schema merge runs INSIDE the
     * commit retry loop against the LATEST manifest's schema, so a
     * rebasing append widens the concurrent winner's schema instead of
     * overriding it with a stale precomputation — and two appends adding
@@ -866,14 +897,14 @@ object Snapshot {
     * `dvRefs` declares the files this commit's deletion vector marks;
     * it lands in the header as `dv_refs`, and a rebase aborts when a
     * CONCURRENT commit's `dv_refs` overlaps this commit's `dvRefs` or
-    * `removed` (ADVICE r15 #2: two vectors hiding rows of the same file
+    * `removed` (two vectors hiding rows of the same file
     * could double-apply an update or resurrect a delete; a rewrite
     * racing a fresh vector would orphan its positions).
     * `replacedParts` names partition dirs this commit claims to replace
     * WHOLLY; a rebase aborts if the latest snapshot holds a data file
     * in one of them that this commit neither removed nor added —
-    * a concurrently-appended file the replacement never read (ADVICE
-    * r15 #3, the Iceberg validateAddedDataFiles check).
+    * a concurrently-appended file the replacement never read (the
+    * Iceberg validateAddedDataFiles check).
     * `widenSchema = (batch schema, partition col)` requests the
     * recorded-schema merge, recomputed per attempt ([[widenRecordedSchema]]).
     * `evolve` requests a DECLARED schema change (rename / promotion),
@@ -1019,7 +1050,7 @@ object Snapshot {
       // transaction identity is table state: carry the inherited keys
       // forward from the latest manifest unless this commit sets them
       val carried = latestMeta.view.filterKeys(InheritedMeta).toMap
-      // ADVICE r16 #1: the stats declaration is FIXED at bootstrap — it
+      // the stats declaration is FIXED at bootstrap — it
       // keys how every existing entry's positional bounds are read, so a
       // commit re-declaring a different list would silently re-interpret
       // them (wrong file skips → wrong results). Enforced HERE, at the
@@ -1261,8 +1292,7 @@ object Snapshot {
     val qualified = fs.makeQualified(root)
     // Sink.walkFiles, not fs.listFiles: the recursive lister's
     // LocatedFileStatus resolves permissions EAGERLY, which without the
-    // native Hadoop library forks `ls -ld` once per file (r21 thread
-    // dumps: ~100 process forks per maintenance probe)
+    // native Hadoop library forks `ls -ld` once per file
     Sink.walkFiles(fs, qualified).filter { f =>
       val name = f.getPath.getName
       val parent = f.getPath.getParent
@@ -1550,8 +1580,8 @@ object Snapshot {
   // outstanding equality deletes into position vectors (one key-scan),
   // after which the DV maintenance ladder (materialize → compact)
   // applies unchanged. Partition-rewrite maintenance refuses while any
-  // equality delete is outstanding (the [[requireNoDeletes]] guard
-  // already covers them — they live under `_deletes/`).
+  // equality delete is outstanding ([[requireNoDeletes]] checks this
+  // tier first and names convertEqDeletes as the step to run).
 
   /** The EQ-DELTA branch both diff tiers share: when the equality-
     * delete set CHANGED between two snapshots, retained files'
@@ -1620,15 +1650,12 @@ object Snapshot {
   private def stageEqSidecars(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
       keys: DataFrame): Seq[String] = {
-    val stg = new org.apache.hadoop.fs.Path(root,
-      s".staging-eqdel-${Sink.procTag}-${java.util.UUID.randomUUID()}")
+    val stg = stagingDir(root, "eqdel")
     keys.distinct().write.parquet(stg.toString)
     val staged = spark.read.parquet(stg.toString)
     // ONE pass over the staged keys answers both boundary questions —
-    // which parts hold rows, and whether any key is NULL. (The NULL
-    // check ran as its own limit(1).count() job when it landed in r18,
-    // which taxed every upsert micro-batch a full extra job — q81
-    // measured +14%; same IO, one job now.)
+    // which parts hold rows, and whether any key is NULL (a separate
+    // NULL-check job would tax every upsert micro-batch a full job)
     val anyNull =
       if (staged.columns.isEmpty) lit(false)
       else staged.columns.map(c => col(c).isNull).reduce(_ || _)
@@ -1794,18 +1821,12 @@ object Snapshot {
 
   /** Manifest entries of snapshot `v`: (path, optional (min, max) bounds
     * of the FIRST declared stats column). Bounds are the column cast to
-    * LONG at file-write time. Multi-column view: [[entriesAllOf]]. */
+    * LONG at file-write time. Multi-column planning:
+    * [[filesInRanges]]. */
   def entriesOf(spark: SparkSession, path: String,
       v: Long): Seq[(String, Option[(Long, Long)])] =
     resolvedLines(spark, path, v).filterNot(isDeleteEntry)
       .map(l => (pathOf(l), statsListOf(l).headOption.flatten))
-
-  /** Manifest entries of snapshot `v` with bounds for EVERY declared
-    * stats column, in [[statsColumns]] order. */
-  def entriesAllOf(spark: SparkSession, path: String,
-      v: Long): Seq[(String, Seq[Option[(Long, Long)]])] =
-    resolvedLines(spark, path, v).filterNot(isDeleteEntry)
-      .map(l => (pathOf(l), statsListOf(l)))
 
   /** The file subset whose per-column bounds overlap EVERY queried
     * range — the conjunction planner over one (meta, resolved lines)
@@ -1873,14 +1894,12 @@ object Snapshot {
     * rows, never a subset. */
   def filesInRange(spark: SparkSession, path: String, lo: Long,
       hi: Long): Seq[String] = {
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    val (meta, lines) = stateOf(spark, path, v)
-    val first = statsColsOf(meta).headOption.getOrElse(
+    val h = headOf(spark, path)
+    val first = statsColsOf(h.meta).headOption.getOrElse(
       // no stats declared: every data file is a candidate (validity
       // contract unchanged — skipping is best-effort)
-      return lines.filterNot(isDeleteEntry).map(pathOf))
-    filesInRangesAt(meta, lines, Seq((first, lo, hi)))
+      return h.files)
+    filesInRangesAt(h.meta, h.lines, Seq((first, lo, hi)))
   }
 
   /** [[filesInRange]] generalized to a CONJUNCTION of per-column
@@ -1901,10 +1920,8 @@ object Snapshot {
       ranges: Seq[(String, Long, Long)],
       isNull: Seq[String] = Nil,
       isNotNull: Seq[String] = Nil): Seq[String] = {
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    val (meta, lines) = stateOf(spark, path, v)
-    filesInRangesAt(meta, lines, ranges, isNull, isNotNull)
+    val h = headOf(spark, path)
+    filesInRangesAt(h.meta, h.lines, ranges, isNull, isNotNull)
   }
 
   /** [[filesInRanges]] PINNED to snapshot `v` — the planner the SQL
@@ -1929,12 +1946,10 @@ object Snapshot {
     * reads. */
   def readSnapshotRange(spark: SparkSession, path: String, lo: Long,
       hi: Long): DataFrame = {
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    val (meta, lines) = stateOf(spark, path, v)
-    val first = statsColsOf(meta).headOption
-    val ranges = first.map(c => Seq((c, lo, hi))).getOrElse(Seq.empty)
-    readRangesAt(spark, path, meta, lines, ranges)
+    val h = headOf(spark, path)
+    val ranges = statsColsOf(h.meta).headOption
+      .map(c => Seq((c, lo, hi))).getOrElse(Seq.empty)
+    readRangesAt(spark, path, h.meta, h.lines, ranges)
   }
 
   /** [[readSnapshotRange]] over a multi-column range conjunction, with
@@ -1944,10 +1959,8 @@ object Snapshot {
       ranges: Seq[(String, Long, Long)],
       isNull: Seq[String] = Nil,
       isNotNull: Seq[String] = Nil): DataFrame = {
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    val (meta, lines) = stateOf(spark, path, v)
-    readRangesAt(spark, path, meta, lines, ranges, isNull, isNotNull)
+    val h = headOf(spark, path)
+    readRangesAt(spark, path, h.meta, h.lines, ranges, isNull, isNotNull)
   }
 
   private def filesInStringRangeAt(meta: Map[String, String],
@@ -1980,10 +1993,8 @@ object Snapshot {
     * tier: truncated bounds and LONG-typed entries always keep. */
   def filesInStringRange(spark: SparkSession, path: String, c: String,
       lo: String, hi: String): Seq[String] = {
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    val (meta, lines) = stateOf(spark, path, v)
-    filesInStringRangeAt(meta, lines, c, lo, hi)
+    val h = headOf(spark, path)
+    filesInStringRangeAt(h.meta, h.lines, c, lo, hi)
   }
 
   /** The current snapshot restricted to files overlapping the string
@@ -1991,11 +2002,9 @@ object Snapshot {
     * ([[readSnapshotRange]]'s contract, string-typed). */
   def readSnapshotStringRange(spark: SparkSession, path: String, c: String,
       lo: String, hi: String): DataFrame = {
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    val (meta, lines) = stateOf(spark, path, v)
-    readSubsetAt(spark, path, meta, lines,
-      filesInStringRangeAt(meta, lines, c, lo, hi))
+    val h = headOf(spark, path)
+    readSubsetAt(spark, path, h.meta, h.lines,
+      filesInStringRangeAt(h.meta, h.lines, c, lo, hi))
   }
 
   /** One consistent pruned read: files, deletion vectors, and recorded
@@ -2045,16 +2054,14 @@ object Snapshot {
     * plan fails loudly instead of reading re-filed bytes). */
   def readSnapshotFiles(spark: SparkSession, path: String,
       files: Seq[String]): DataFrame = {
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    val (meta, lines) = stateOf(spark, path, v)
-    val live = lines.filterNot(isDeleteEntry).map(pathOf).toSet
+    val h = headOf(spark, path)
+    val live = h.files.toSet
     val dead = files.filterNot(live)
     require(dead.isEmpty,
       s"readSnapshotFiles: ${dead.size} planned file(s) are not live at " +
-      s"v=$v (e.g. ${dead.headOption.getOrElse("")}) — the plan is stale; " +
-      "re-plan against the current snapshot")
-    readSubsetAt(spark, path, meta, lines, files)
+      s"v=${h.v} (e.g. ${dead.headOption.getOrElse("")}) — the plan is " +
+      "stale; re-plan against the current snapshot")
+    readSubsetAt(spark, path, h.meta, h.lines, files)
   }
 
   /** [[readSnapshotFiles]] PINNED to snapshot `v`: one consistent read
@@ -2072,6 +2079,25 @@ object Snapshot {
       s"v=$v (e.g. ${dead.headOption.getOrElse("")}) — plan and read " +
       "must pin the same version")
     readSubsetAt(spark, path, meta, lines, files)
+  }
+
+  /** A fresh hidden staging dir `.staging-<tag>-…` under the root —
+    * readers never list it, and every writer deletes its own. */
+  private def stagingDir(root: org.apache.hadoop.fs.Path,
+      tag: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(root,
+      s".staging-$tag-${Sink.procTag}-${java.util.UUID.randomUUID()}")
+
+  /** The one data-file write: `rows` (already shaped by the caller)
+    * land through a `partitionBy` write into a [[stagingDir]] and move
+    * into the live partition dirs. Returns the moved files'
+    * root-relative paths — invisible until a commit names them. */
+  private def stagePartitioned(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path, tag: String, rows: DataFrame,
+      partitionCol: String): Seq[String] = {
+    val stg = stagingDir(root, tag)
+    rows.write.partitionBy(partitionCol).parquet(stg.toString)
+    movePartitionedStaging(fs, root, stg, partitionCol)
   }
 
   /** MOVE a `partitionBy`-staged write's data files into the live
@@ -2122,12 +2148,15 @@ object Snapshot {
     * rows AND orphan the vectors' file-position references. The
     * minimum-viable contract is the loud refusal; [[materializeDeletes]]
     * first is the documented pipeline (a table format interleaves the
-    * two transparently — same ordering, hidden). */
-  private def requireNoDeletes(spark: SparkSession, path: String, v: Long,
+    * two transparently — same ordering, hidden). Equality deletes are
+    * checked first: their first step is [[convertEqDeletes]], which
+    * materializeDeletes itself requires. */
+  private def requireNoDeletes(lines: Seq[String], path: String,
       op: String): Unit = {
-    val dvs = deletesOf(spark, path, v)
-    require(dvs.isEmpty,
-      s"$op on $path with ${dvs.size} outstanding deletion vector(s) — " +
+    requireNoEqDeletes(lines, path, op)
+    val dvs = lines.count(isDeleteEntry)
+    require(dvs == 0,
+      s"$op on $path with $dvs outstanding deletion vector(s) — " +
       "run materializeDeletes first (SQL surface: CALL <catalog>." +
       "maintain(table => '<table>')): a partition rewrite would " +
       "resurrect merge-on-read deleted rows and orphan the vectors' " +
@@ -2422,18 +2451,15 @@ object Snapshot {
     * the renamed schema; re-adding a just-retired name still refuses).
     *
     * The combined `evolve-schema` commit is change-feed-CROSSABLE
-    * (listed in `RowPreservingOps` since the r19 add-column fix): it is
+    * (listed in `RowPreservingOps`): it is
     * metadata-only — zero data files, no visible row change — so a feed
     * crossing it loses nothing, exactly like the single rename/promote/
     * add-column ops committed via their own methods. */
   private[graft] def evolveSchema(spark: SparkSession, path: String,
       changes: Seq[SchemaChange]): Long = {
     require(changes.nonEmpty, "evolveSchema with no changes")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    commit(fs, root, Some(v), Set.empty, Seq.empty,
+    val h = headOf(spark, path)
+    commit(h.fs, h.root, Some(h.v), Set.empty, Seq.empty,
       Map("op" -> "evolve-schema", "changes" -> changes.size.toString),
       evolve = changes)
   }
@@ -2447,11 +2473,8 @@ object Snapshot {
     * see [[evolveRecordedMeta]]. */
   def renameColumn(spark: SparkSession, path: String, from: String,
       to: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    commit(fs, root, Some(v), Set.empty, Seq.empty,
+    val h = headOf(spark, path)
+    commit(h.fs, h.root, Some(h.v), Set.empty, Seq.empty,
       Map("op" -> "rename-column", "rename_from" -> from, "rename_to" -> to),
       evolve = Seq(RenameCol(from, to)))
   }
@@ -2464,11 +2487,8 @@ object Snapshot {
     * both sides of the lattice). Returns the committed version. */
   def promoteColumn(spark: SparkSession, path: String, name: String,
       to: org.apache.spark.sql.types.DataType): Long = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    commit(fs, root, Some(v), Set.empty, Seq.empty,
+    val h = headOf(spark, path)
+    commit(h.fs, h.root, Some(h.v), Set.empty, Seq.empty,
       Map("op" -> "promote-column", "promote_col" -> name,
         "promote_to" -> to.typeName),
       evolve = Seq(PromoteCol(name, to)))
@@ -2482,11 +2502,8 @@ object Snapshot {
     * explicit form. Retired names are refused for life. */
   def addColumn(spark: SparkSession, path: String, name: String,
       tpe: org.apache.spark.sql.types.DataType): Long = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    commit(fs, root, Some(v), Set.empty, Seq.empty,
+    val h = headOf(spark, path)
+    commit(h.fs, h.root, Some(h.v), Set.empty, Seq.empty,
       Map("op" -> "add-column", "add_col" -> name,
         "add_type" -> tpe.typeName),
       evolve = Seq(AddCol(name, tpe)))
@@ -2533,23 +2550,18 @@ object Snapshot {
     * the committed version. */
   def evolvePartitionSpec(spark: SparkSession, path: String,
       newPartitionCol: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    val (meta, lines) = stateOf(spark, path, v)
-    val cur = meta.get("pcol").getOrElse(
+    val h = headOf(spark, path)
+    val cur = h.meta.get("pcol").getOrElse(
       // pre-header layouts: the current spec is the files' dir key
-      lines.filterNot(isDeleteEntry).map(pathOf).headOption
-        .map(specKeyOf).getOrElse(
-          throw new IllegalStateException(s"empty layout under $path")))
+      h.files.headOption.map(specKeyOf).getOrElse(
+        throw new IllegalStateException(s"empty layout under $path")))
     require(newPartitionCol != cur,
       s"$path already partitions by '$newPartitionCol'")
-    require(recordedSchema(meta).nonEmpty,
+    require(recordedSchema(h.meta).nonEmpty,
       "partition-spec evolution needs a recorded schema — which columns " +
       "exist must not depend on footer sampling once two generations " +
       "coexist")
-    commit(fs, root, Some(v), Set.empty, Seq.empty,
+    commit(h.fs, h.root, Some(h.v), Set.empty, Seq.empty,
       Map("op" -> "evolve-spec", "pcol" -> newPartitionCol,
         "pcol_prev" -> cur))
   }
@@ -2566,47 +2578,38 @@ object Snapshot {
     * files; no-op when the layout is already uniform. */
   def migratePartitionSpec(spark: SparkSession, path: String,
       value: Column): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    val qualified = fs.makeQualified(root).toString
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    val (vMeta, vLines) = stateOf(spark, path, v)
-    val newPcol = vMeta.getOrElse("pcol",
+    val h = headOf(spark, path)
+    val newPcol = h.meta.getOrElse("pcol",
       throw new IllegalStateException(
         s"$path declares no partition spec — evolvePartitionSpec first"))
-    requireNoDeletes(spark, path, v, "migratePartitionSpec")
-    val files = vLines.filterNot(isDeleteEntry).map(pathOf)
-    val oldFiles = files.filterNot(f => specKeyOf(f) == newPcol)
+    requireNoDeletes(h.lines, path, "migratePartitionSpec")
+    val oldFiles = h.files.filterNot(f => specKeyOf(f) == newPcol)
     if (oldFiles.isEmpty) return Seq.empty
     val oldKeys = oldFiles.map(specKeyOf).distinct.sorted
     require(oldKeys.size == 1,
       s"migratePartitionSpec found ${oldKeys.size} legacy specs " +
       s"(${oldKeys.mkString(", ")}) — migrate one evolution at a time")
     val oldPcol = oldKeys.head
-    val recorded = recordedSchema(vMeta).getOrElse(
+    val recorded = recordedSchema(h.meta).getOrElse(
       throw new IllegalStateException(
         s"mid-evolution $path lacks a recorded schema"))
     // lineage-aware old-generation read: the old partition column comes
     // back dir-typed STRING — cast it to its RECORDED type before it
     // becomes a stored data column, so values survive byte-identically
-    val rows = readForMaintenanceLineage(spark, qualified, oldFiles,
-        oldPcol, vMeta, vLines)
+    val rows = readForMaintenanceLineage(spark, h.qualified, oldFiles,
+        oldPcol, h.meta, h.lines)
       .withColumn(oldPcol, col(oldPcol).cast(recorded(oldPcol).dataType))
       .withColumn(newPcol,
         if (recorded.fieldNames.contains(newPcol))
           value.cast(recorded(newPcol).dataType)
         else value)
-    val stg = new org.apache.hadoop.fs.Path(root,
-      s".staging-migrate-${Sink.procTag}-${java.util.UUID.randomUUID()}")
-    rows.repartition(col(newPcol))
-      .write.partitionBy(newPcol).parquet(stg.toString)
-    val moved = movePartitionedStaging(fs, root, stg, newPcol)
+    val moved = stagePartitioned(h.fs, h.root, "migrate",
+      rows.repartition(col(newPcol)), newPcol)
     // widen: evolve → migrate with NO intervening new-spec append must
     // still surface the new partition column to readers — the recorded
     // schema gains it here if the first new-spec append hasn't already
-    commit(fs, root, Some(v), oldFiles.toSet,
-      statLines(spark, fs, root, moved, vMeta),
+    commit(h.fs, h.root, Some(h.v), oldFiles.toSet,
+      statLines(spark, h.fs, h.root, moved, h.meta),
       Map("op" -> "migrate-spec"),
       widenSchema = Some((rows.schema, newPcol))): Unit
     moved
@@ -2700,6 +2703,42 @@ object Snapshot {
       .reduce(_ + _)
   }
 
+  /** The one survivor rewrite: ONE distributed job re-files `rows` (a
+    * maintenance read of the files being replaced, already filtered to
+    * its survivors) into `targets` files per partition value
+    * ([[Sink.packPartitioned]]), clustered on the explicit columns when
+    * the caller names any, else on the layout's RECORDED sort order —
+    * maintenance preserves clustering without every caller re-knowing
+    * it. A Z-order clusters on the Morton key of its columns, so every
+    * output file gets a tight bounding box in all of them and the
+    * declared stats columns record those boxes. Every dir in
+    * `mustRestage` must have restaged under its own name before the
+    * commit removes its old entries: a miss (non-canonical dir name
+    * from an external writer, zero-row debris) aborts with the snapshot
+    * untouched; the moved files are unreferenced and retire via expire.
+    * Returns the moved files. */
+  private def rewriteSurvivors(h: Head, tag: String, rows: DataFrame,
+      partitionCol: String, sortCols: Seq[String], zOrderCols: Seq[String],
+      targets: Map[String, Int], mustRestage: Iterable[String]): Seq[String] = {
+    val (lin, z) =
+      if (sortCols.nonEmpty || zOrderCols.nonEmpty) (sortCols, zOrderCols)
+      else sortOrderOf(h.meta)
+    val keyed =
+      if (z.isEmpty) rows else rows.withColumn("__z", mortonColumn(rows, z))
+    val moved = stagePartitioned(h.fs, h.root, tag,
+      Sink.packPartitioned(keyed, partitionCol,
+        if (z.isEmpty) lin else Seq("__z"), targets).drop("__z"),
+      partitionCol)
+    val movedParts = moved.map(_.split("/")(0)).toSet
+    mustRestage.find(p => !movedParts(p)).foreach { part =>
+      throw new IllegalStateException(
+        s"staged rewrite missing for partition '$part' (non-canonical " +
+        "dir name, or zero rows?) — aborting before the commit; the " +
+        "snapshot is unchanged")
+    }
+    moved
+  }
+
   /** Small-file compaction committed through the manifest: oversplit
     * partitions rewrite to their bin-packed target (re-clustered on
     * `sortCols`), and the WHOLE pass lands as one atomic snapshot —
@@ -2722,23 +2761,13 @@ object Snapshot {
     require(sortCols.isEmpty || zOrderCols.isEmpty,
       "pass sortCols (linear clustering) OR zOrderCols (Morton " +
       "clustering), not both — they contradict")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    val qualified = fs.makeQualified(root).toString
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    val (vMeta, vLines) = stateOf(spark, path, v)
-    // explicit columns win; otherwise the layout's RECORDED sort order
-    // drives the rewrite — maintenance preserves clustering without
-    // every caller re-knowing it
-    val (effSort, effZ) =
-      if (sortCols.nonEmpty || zOrderCols.nonEmpty) (sortCols, zOrderCols)
-      else sortOrderOf(vMeta)
-    val files = vLines.filterNot(isDeleteEntry).map(pathOf)
-    requireNoDeletes(spark, path, v, "compact")
+    val h = headOf(spark, path)
+    val files = h.files
+    requireNoDeletes(h.lines, path, "compact")
     requireUniformSpec(files, partitionCol, "compact")
-    val sizes: Map[String, Long] = listDataFiles(fs, root, partitionCol)
-      .map(f => f.getPath.toString.stripPrefix(qualified).stripPrefix("/") -> f.getLen)
+    val sizes: Map[String, Long] = listDataFiles(h.fs, h.root, partitionCol)
+      .map(f => f.getPath.toString.stripPrefix(h.qualified).stripPrefix("/") ->
+        f.getLen)
       .toMap
     val byPart = files.groupBy(f => f.split("/")(0)).toSeq.sortBy(_._1)
     // the compaction plan: (partition, its files, its bin-packed target)
@@ -2750,47 +2779,22 @@ object Snapshot {
     }
     if (plan.isEmpty) return Seq.empty
     val oldFiles = plan.flatMap(_._2)
+    val targets = plan.map { case (part, _, nTarget) =>
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .unescapePathName(part.stripPrefix(s"$partitionCol=")) -> nTarget
+    }.toMap
     // maintenance read: partition column typed STRING (raw dir value,
     // no inference) so the plan key ↔ routed value ↔ staged dir name
     // identity holds for values inference would mangle ("01" → int 1);
     // on a lineage-enabled layout the read also surfaces `_row_id`, so
     // the rewritten files materialize it — compaction keeps row identity
-    val rows0 = readForMaintenanceLineage(spark, qualified,
-      oldFiles, partitionCol, vMeta, vLines)
-    // Z-ORDER option: cluster the rewrite on the Morton interleave of
-    // zOrderCols instead of a linear sort, so every output file gets a
-    // tight bounding box in ALL named dimensions — the q45 layout idiom,
-    // now SURVIVING manifest-committed maintenance: the declared stats
-    // columns record those boxes and filesInRanges skips on any of them
-    val rows =
-      if (effZ.isEmpty) rows0
-      else rows0.withColumn("__z", mortonColumn(rows0, effZ))
-    val packCols = if (effZ.isEmpty) effSort else Seq("__z")
-    val stg = new org.apache.hadoop.fs.Path(root,
-      s".staging-compact-${Sink.procTag}-${java.util.UUID.randomUUID()}")
-    val targets = plan.map { case (part, _, nTarget) =>
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(part.stripPrefix(s"$partitionCol=")) -> nTarget
-    }.toMap
-    Sink.packPartitioned(rows, partitionCol, packCols, targets)
-      .drop("__z")
-      .write.partitionBy(partitionCol).parquet(stg.toString)
-    val moved = movePartitionedStaging(fs, root, stg, partitionCol)
+    val moved = rewriteSurvivors(h, "compact",
+      readForMaintenanceLineage(spark, h.qualified, oldFiles, partitionCol,
+        h.meta, h.lines),
+      partitionCol, sortCols, zOrderCols, targets, plan.map(_._1))
     val movedByPart = moved.groupBy(_.split("/")(0))
-    // every planned partition must have restaged under ITS dir name
-    // before the commit removes its old entries — a miss (non-canonical
-    // dir name from an external writer, zero-row debris) aborts with
-    // the snapshot untouched; the moved files are unreferenced and
-    // retire via expire
-    plan.foreach { case (part, _, _) =>
-      if (!movedByPart.contains(part))
-        throw new IllegalStateException(
-          s"staged rewrite missing for partition '$part' (non-canonical " +
-          "dir name, or zero rows?) — aborting before the commit; the " +
-          "snapshot is unchanged")
-    }
-    commit(fs, root, Some(v), oldFiles.toSet,
-      statLines(spark, fs, root, moved, vMeta),
+    commit(h.fs, h.root, Some(h.v), oldFiles.toSet,
+      statLines(spark, h.fs, h.root, moved, h.meta),
       Map("op" -> "compact")): Unit
     plan.map { case (part, fsOfPart, _) =>
       (part, fsOfPart.size, movedByPart(part).size)
@@ -2812,14 +2816,9 @@ object Snapshot {
     * jobs whether the delete dirties 3 partitions or 3,650. */
   def deleteWhere(spark: SparkSession, path: String, partitionCol: String,
       predicate: Column, sortCols: Seq[String] = Nil): Seq[(String, Long)] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    val qualified = fs.makeQualified(root).toString
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    val (vMeta, vLines) = stateOf(spark, path, v)
-    val files = vLines.filterNot(isDeleteEntry).map(pathOf)
-    requireNoDeletes(spark, path, v, "deleteWhere")
+    val h = headOf(spark, path)
+    val files = h.files
+    requireNoDeletes(h.lines, path, "deleteWhere")
     requireUniformSpec(files, partitionCol, "deleteWhere")
     val byPart = files.groupBy(f => f.split("/")(0))
     // NULL-predicate guard, SQL DELETE semantics: delete exactly where
@@ -2829,9 +2828,9 @@ object Snapshot {
     // maintenance read: partition column typed STRING (raw dir value,
     // no inference) — probe value ↔ manifest dir name ↔ staged dir
     // name stay one identity (see Sink.readForMaintenance)
-    val dirty = resolveRenames(Sink.readForMaintenance(spark, qualified,
-        files.map(f => s"$qualified/$f"), partitionCol,
-        maintPhysSchema(vMeta, partitionCol)), vMeta)
+    val dirty = resolveRenames(Sink.readForMaintenance(spark, h.qualified,
+        files.map(f => s"${h.qualified}/$f"), partitionCol,
+        maintPhysSchema(h.meta, partitionCol)), h.meta)
       .groupBy(col(partitionCol).as("__part"))
       .agg(
         sum(when(del, 1L).otherwise(0L)).as("n_del"),
@@ -2849,55 +2848,59 @@ object Snapshot {
       val part = partDirName(value)
       val old = byPart.getOrElse(part,
         throw new IllegalStateException(
-          s"probe returned partition '$part' not present in snapshot v=$v"))
+          s"probe returned partition '$part' not present in snapshot v=${h.v}"))
       removed ++= old
       if (nDel < nRows) partial += ((value, old))
     }
+    // ONE survivor-rewrite job for ALL partially-dirty partitions, each
+    // keeping its old file width, and each must restage (it has
+    // survivors by construction). basePath read so a predicate
+    // referencing the PARTITION column resolves exactly as in the
+    // probe; partitionBy strips it from the staged data files, as a
+    // Hive layout requires. Lineage layouts read survivors WITH their
+    // ids — the rewrite keeps them.
     val added =
       if (partial.isEmpty) Seq.empty[String]
-      else {
-        // ONE survivor-rewrite job for ALL partially-dirty partitions,
-        // each keeping its old file width (Sink.packPartitioned).
-        // basePath read so a predicate referencing the PARTITION column
-        // resolves exactly as in the probe; partitionBy strips it from
-        // the staged data files, as a Hive layout requires. Lineage
-        // layouts read survivors WITH their ids — the rewrite keeps them.
-        val oldFiles = partial.flatMap(_._2).toSeq
-        val survivors0 = readForMaintenanceLineage(spark, qualified,
-          oldFiles, partitionCol, vMeta, vLines)
-          .where(!del)
-        // explicit clustering wins; else the layout's recorded sort
-        // order drives the rewrite (compact's rule)
-        val (dLin, dZ) =
-          if (sortCols.nonEmpty) (sortCols, Nil) else sortOrderOf(vMeta)
-        val survivors =
-          if (dZ.isEmpty) survivors0
-          else survivors0.withColumn("__z", mortonColumn(survivors0, dZ))
-        val stg = new org.apache.hadoop.fs.Path(root,
-          s".staging-delete-${Sink.procTag}-${java.util.UUID.randomUUID()}")
-        Sink.packPartitioned(survivors, partitionCol,
-          if (dZ.isEmpty) dLin else Seq("__z"),
-          partial.map { case (value, old) => value -> old.size }.toMap)
-          .drop("__z")
-          .write.partitionBy(partitionCol).parquet(stg.toString)
-        val moved = movePartitionedStaging(fs, root, stg, partitionCol)
-        // every partially-dirty partition has survivors by construction
-        // — each must have restaged under its own dir name before the
-        // commit removes its old entries (same guard as compact)
-        val movedParts = moved.map(_.split("/")(0)).toSet
-        partial.foreach { case (value, _) =>
-          val part = partDirName(value)
-          if (!movedParts(part))
-            throw new IllegalStateException(
-              s"staged survivors missing for partition '$part' — " +
-              "aborting before the commit; the snapshot is unchanged")
-        }
-        moved
-      }
-    commit(fs, root, Some(v), removed.toSet,
-      statLines(spark, fs, root, added, vMeta),
+      else rewriteSurvivors(h, "delete",
+        readForMaintenanceLineage(spark, h.qualified,
+          partial.flatMap(_._2).toSeq, partitionCol, h.meta, h.lines)
+          .where(!del),
+        partitionCol, sortCols, Nil,
+        partial.map { case (value, old) => value -> old.size }.toMap,
+        partial.map { case (value, _) => partDirName(value) })
+    commit(h.fs, h.root, Some(h.v), removed.toSet,
+      statLines(spark, h.fs, h.root, added, h.meta),
       Map("op" -> "delete")): Unit
     dirty.toSeq.map { case (value, nDel, _) => (partDirName(value), nDel) }
+  }
+
+  /** The one deletion-vector write: pack `n` staged `(dv_file, dv_pos)`
+    * pairs into [[vectorFileCount]] files under `stg` — no single task
+    * funnels an unbounded match set, and a forget-user sized vector
+    * stays one sidecar — then move them under `_deletes/`. Returns the
+    * moved vectors' root-relative paths and the data files their
+    * positions are valid against (the commit's `mustBeLive` and
+    * `dvRefs`), collected from the staged `pairs` — a re-read of the
+    * moved files would pay a parquet schema-inference job. The caller
+    * owns `stg` and deletes it. */
+  private def writeVectors(h: Head, stg: org.apache.hadoop.fs.Path,
+      pairs: DataFrame, n: Long, cap: Long): (Seq[String], Set[String]) = {
+    val vecStg = new org.apache.hadoop.fs.Path(stg, "vec")
+    pairs.repartition(vectorFileCount(n, cap)).write.parquet(vecStg.toString)
+    val dvDir = new org.apache.hadoop.fs.Path(h.root, DeletesDir)
+    h.fs.mkdirs(dvDir)
+    val moved = h.fs.listStatus(vecStg).toSeq
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith("."))
+      .map { f =>
+        val dst = new org.apache.hadoop.fs.Path(dvDir, f.getPath.getName)
+        if (!h.fs.rename(f.getPath, dst))
+          throw new IllegalStateException(s"deletion-vector move failed: $dst")
+        s"$DeletesDir/${f.getPath.getName}"
+      }
+    val referenced = pairs.select(col("dv_file")).distinct().collect()
+      .map(_.getString(0)).toSet
+    (moved, referenced)
   }
 
   /** MERGE-ON-READ row deletion: where [[deleteWhere]] REWRITES every
@@ -2923,17 +2926,11 @@ object Snapshot {
       predicate: Column,
       vectorRowCap: Long = graft.Config.MaxVectorFileRows): (Long, Long) = {
     require(vectorRowCap > 0, s"vectorRowCap must be positive, got $vectorRowCap")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    val qualified = fs.makeQualified(root).toString
     // ONE manifest resolution feeds files, vectors, and schema
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    val (vMeta, vLines) = stateOf(spark, path, v)
-    val files = vLines.filterNot(isDeleteEntry).map(pathOf)
-    val dvs = vLines.filter(isDeleteEntry).map(pathOf)
-    requireNoEqDeletes(vLines, path, "deleteWhereMoR")
-    requireUniformSpec(files, partitionCol, "deleteWhereMoR")
+    val h = headOf(spark, path)
+    val qualified = h.qualified
+    requireNoEqDeletes(h.lines, path, "deleteWhereMoR")
+    requireUniformSpec(h.files, partitionCol, "deleteWhereMoR")
     val del = coalesce(predicate, lit(false))
     val keyCols = dvKeyCols(qualified)
     // recorded schema: the predicate may reference an evolved column,
@@ -2944,46 +2941,28 @@ object Snapshot {
     // (its barrier hides `_metadata` — resolveRenames scaladoc).
     val reader = spark.read.option("basePath", qualified)
     val markedAll = resolveRenames(
-        physReadSchema(vMeta).fold(reader)(reader.schema)
-          .parquet(files.map(f => s"$qualified/$f"): _*)
-          .select(col("*"), keyCols(0), keyCols(1)), vMeta)
+        physReadSchema(h.meta).fold(reader)(reader.schema)
+          .parquet(h.files.map(f => s"$qualified/$f"): _*)
+          .select(col("*"), keyCols(0), keyCols(1)), h.meta)
       .where(del)
       .select(col("dv_file"), col("dv_pos"))
     val marked =
-      if (dvs.isEmpty) markedAll
+      if (h.deletes.isEmpty) markedAll
       else markedAll.join(
-        spark.read.parquet(dvs.map(f => s"$qualified/$f"): _*),
+        spark.read.parquet(h.deletes.map(f => s"$qualified/$f"): _*),
         Seq("dv_file", "dv_pos"), "left_anti")
-    val stg = new org.apache.hadoop.fs.Path(root,
-      s".staging-mor-${Sink.procTag}-${java.util.UUID.randomUUID()}")
     // stage the matches with the SCAN's parallelism — no single task
-    // ever funnels the match set — then pack into ceil(n / cap) vector
-    // files (one for the common forget-user sized delete)
-    val rawStg = new org.apache.hadoop.fs.Path(stg, "raw")
-    marked.write.parquet(rawStg.toString)
+    // ever funnels the match set — then pack them into vector files
+    val stg = stagingDir(h.root, "mor")
+    val raw = new org.apache.hadoop.fs.Path(stg, "raw")
+    marked.write.parquet(raw.toString)
+    val staged = spark.read.parquet(raw.toString)
     // footer-only count of what actually landed
-    val n = spark.read.parquet(rawStg.toString).count()
-    if (n == 0L) { fs.delete(stg, true): Unit; return (v, 0L) }
-    val vecStg = new org.apache.hadoop.fs.Path(stg, "vec")
-    spark.read.parquet(rawStg.toString)
-      .repartition(vectorFileCount(n, vectorRowCap))
-      .write.parquet(vecStg.toString)
-    val dvDir = new org.apache.hadoop.fs.Path(root, DeletesDir)
-    fs.mkdirs(dvDir)
-    val moved = fs.listStatus(vecStg).toSeq
-      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-        !f.getPath.getName.startsWith("."))
-      .map { f =>
-        val dst = new org.apache.hadoop.fs.Path(dvDir, f.getPath.getName)
-        if (!fs.rename(f.getPath, dst))
-          throw new IllegalStateException(s"deletion-vector move failed: $dst")
-        s"$DeletesDir/${f.getPath.getName}"
-      }
-    fs.delete(stg, true): Unit
-    // the files the vector's positions are valid against — k rows
-    val referenced = spark.read.parquet(moved.map(f => s"$qualified/$f"): _*)
-      .select(col("dv_file")).distinct().collect().map(_.getString(0)).toSet
-    val nv = commit(fs, root, Some(v), Set.empty, moved,
+    val n = staged.count()
+    if (n == 0L) { h.fs.delete(stg, true): Unit; return (h.v, 0L) }
+    val (moved, referenced) = writeVectors(h, stg, staged, n, vectorRowCap)
+    h.fs.delete(stg, true): Unit
+    val nv = commit(h.fs, h.root, Some(h.v), Set.empty, moved,
       Map("op" -> "mor-delete"), mustBeLive = referenced,
       dvRefs = referenced)
     (nv, n)
@@ -3033,20 +3012,12 @@ object Snapshot {
     require(!set.contains(RowIdCol),
       s"updateWhere cannot SET '$RowIdCol' — row identity is engine-" +
       "managed (an update KEEPS the row's id; that is the point)")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    val qualified = fs.makeQualified(root).toString
     // ONE manifest resolution feeds files, vectors, schema, and stats
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    val (vMeta, lines) = stateOf(spark, path, v)
-    val files = lines.filterNot(isDeleteEntry).map(pathOf)
-    val dvs = lines.filter(isDeleteEntry).map(pathOf)
-    requireNoEqDeletes(lines, path, "updateWhere")
-    requireUniformSpec(files, partitionCol, "updateWhere")
+    val h = headOf(spark, path)
+    requireNoEqDeletes(h.lines, path, "updateWhere")
+    requireUniformSpec(h.files, partitionCol, "updateWhere")
     val pred = coalesce(predicate, lit(false))
-    val keyCols = dvKeyCols(qualified)
-    val lineage = rowIdsOn(vMeta)
+    val lineage = rowIdsOn(h.meta)
     // recorded schema: the predicate or a SET expression may reference
     // an evolved column, which must read NULL in pre-evolution files
     // exactly as it does for the snapshot reader — renamed columns fold
@@ -3054,77 +3025,45 @@ object Snapshot {
     // layouts read `_row_id` too — an UPDATE is the same row re-imaged,
     // so the new image keeps the id (what lets changeDiffLineage pair
     // pre/post).
-    val reader = spark.read.option("basePath", qualified)
-    val readSchema = physReadSchema(vMeta)
+    val reader = spark.read.option("basePath", h.qualified)
+    val readSchema = physReadSchema(h.meta)
       .map(s => if (lineage) lineageReadSchema(s) else s)
-    if (lineage) requireLineageEntries(lines, path)
+    if (lineage) requireLineageEntries(h.lines, path)
     // (file, pos) keys materialize BEFORE the rename fold (its barrier
     // hides `_metadata` — resolveRenames scaladoc)
-    val data = resolveRenames(readSchema.fold(reader)(reader.schema)
-      .parquet(files.map(f => s"$qualified/$f"): _*)
-      .withColumn("__dv_file", keyCols(0))
-      .withColumn("__dv_pos", keyCols(1)), vMeta)
+    val data = resolveRenames(withFilePos(
+      readSchema.fold(reader)(reader.schema)
+        .parquet(h.files.map(f => s"${h.qualified}/$f"): _*),
+      h.qualified), h.meta)
     set.keys.foreach(k => require(data.columns.contains(k),
       s"updateWhere SET references unknown column '$k' " +
-      s"(table has: ${data.columns.filterNot(_.startsWith("__dv_")).mkString(", ")})"))
+      s"(table has: ${data.columns.filterNot(_.startsWith("__lin_")).mkString(", ")})"))
     // match against LIVE rows only: a row an outstanding vector already
     // hides is deleted — the update must neither re-image nor resurrect it
-    val keyed0 = data
-    val keyed =
-      if (!lineage) keyed0
-      else attachRowIdsKeyed(spark, keyed0, basesOf(lines),
-        fileCol = "__dv_file", posCol = "__dv_pos")
-    val live =
-      if (dvs.isEmpty) keyed
-      else {
-        val dv = spark.read.parquet(dvs.map(f => s"$qualified/$f"): _*)
-        keyed.join(dv,
-          keyed("__dv_file") === dv("dv_file") &&
-            keyed("__dv_pos") === dv("dv_pos"), "left_anti")
-      }
-    val stg = new org.apache.hadoop.fs.Path(root,
-      s".staging-update-${Sink.procTag}-${java.util.UUID.randomUUID()}")
+    val live = applyDeletesKeyed(spark, h.qualified,
+      if (lineage) attachRowIdsKeyed(spark, data, basesOf(h.lines)) else data,
+      h.deletes)
     // ONE scan of the table stages the matches (old identity + full
     // image); vector and new images derive from the staged copy
+    val stg = stagingDir(h.root, "update")
     val matchedDir = new org.apache.hadoop.fs.Path(stg, "matched")
     live.where(pred).write.parquet(matchedDir.toString)
     val matched = spark.read.parquet(matchedDir.toString)
     val n = matched.count() // footer-only
-    if (n == 0L) { fs.delete(stg, true): Unit; return (v, 0L) }
-    // the vector hiding the old images — deleteWhereMoR's sidecar
-    // shape, packed into ceil(n / cap) files so no single task funnels
-    // an unbounded match set (one file for the common correction-sized
-    // update; a pathological predicate splits instead of bottlenecking)
-    val dvStg = new org.apache.hadoop.fs.Path(stg, "vector")
-    matched.select(col("__dv_file").as("dv_file"),
-        col("__dv_pos").as("dv_pos"))
-      .repartition(vectorFileCount(n, vectorRowCap))
-      .write.parquet(dvStg.toString)
-    val dvDir = new org.apache.hadoop.fs.Path(root, DeletesDir)
-    fs.mkdirs(dvDir)
-    val dvMoved = fs.listStatus(dvStg).toSeq
-      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-        !f.getPath.getName.startsWith("."))
-      .map { f =>
-        val dst = new org.apache.hadoop.fs.Path(dvDir, f.getPath.getName)
-        if (!fs.rename(f.getPath, dst))
-          throw new IllegalStateException(s"deletion-vector move failed: $dst")
-        s"$DeletesDir/${f.getPath.getName}"
-      }
+    if (n == 0L) { h.fs.delete(stg, true): Unit; return (h.v, 0L) }
+    // the vector hiding the old images — deleteWhereMoR's sidecar shape
+    val (dvMoved, referenced) = writeVectors(h, stg,
+      matched.select(col("__lin_file").as("dv_file"),
+        col("__lin_pos").as("dv_pos")), n, vectorRowCap)
     // the new images: SET expressions over the old image, clustered one
     // file per touched partition
-    val dataStg = new org.apache.hadoop.fs.Path(stg, "data")
-    set.foldLeft(matched) { case (df, (k, e)) => df.withColumn(k, e) }
-      .drop("__dv_file", "__dv_pos")
-      .repartition(col(partitionCol))
-      .write.partitionBy(partitionCol).parquet(dataStg.toString)
-    val moved = movePartitionedStaging(fs, root, dataStg, partitionCol)
-    // the files the vector's positions are valid against — k rows
-    val referenced = matched.select(col("__dv_file")).distinct()
-      .collect().map(_.getString(0)).toSet
-    fs.delete(stg, true): Unit
-    val nv = commit(fs, root, Some(v), Set.empty,
-      dvMoved ++ statLines(spark, fs, root, moved, vMeta),
+    val moved = stagePartitioned(h.fs, h.root, "update",
+      set.foldLeft(matched) { case (df, (k, e)) => df.withColumn(k, e) }
+        .drop("__lin_file", "__lin_pos")
+        .repartition(col(partitionCol)), partitionCol)
+    h.fs.delete(stg, true): Unit
+    val nv = commit(h.fs, h.root, Some(h.v), Set.empty,
+      dvMoved ++ statLines(spark, h.fs, h.root, moved, h.meta),
       Map("op" -> "update") ++ meta, mustBeLive = referenced,
       dvRefs = referenced)
     (nv, n)
@@ -3134,7 +3073,7 @@ object Snapshot {
     * ceil(n / cap) (cap defaults to [[graft.Config.MaxVectorFileRows]]),
     * so the common forget-user sized vector stays one sidecar file
     * while a pathological table-wide predicate splits across tasks
-    * instead of funneling through one (the r15 `repartition(1)` nit,
+    * instead of funneling through one (a `repartition(1)` write,
     * capped). */
   private[graft] def vectorFileCount(n: Long, cap: Long): Int =
     math.max(1L, (n + cap - 1) / cap).toInt
@@ -3152,23 +3091,17 @@ object Snapshot {
     * (partition dir, vector rows applied). */
   def materializeDeletes(spark: SparkSession, path: String,
       partitionCol: String, sortCols: Seq[String] = Nil): Seq[(String, Long)] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    val qualified = fs.makeQualified(root).toString
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    val (vMeta, vLines) = stateOf(spark, path, v)
-    val files = vLines.filterNot(isDeleteEntry).map(pathOf)
-    val dvs = vLines.filter(isDeleteEntry).map(pathOf)
+    val h = headOf(spark, path)
+    val dvs = h.deletes
     if (dvs.isEmpty) return Seq.empty
-    requireNoEqDeletes(vLines, path, "materializeDeletes")
-    requireUniformSpec(files, partitionCol, "materializeDeletes")
-    val dvDf = spark.read.parquet(dvs.map(f => s"$qualified/$f"): _*)
+    requireNoEqDeletes(h.lines, path, "materializeDeletes")
+    requireUniformSpec(h.files, partitionCol, "materializeDeletes")
+    val dvDf = spark.read.parquet(dvs.map(f => s"${h.qualified}/$f"): _*)
     // O(touched files) driver state — the vectors' reference set
     val perFile = dvDf.groupBy(col("dv_file")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
     val affected = perFile.map(_._1)
-    val live = files.toSet
+    val live = h.files.toSet
     affected.foreach(f => require(live(f),
       s"deletion vector references non-live file $f — corrupted manifest?"))
     def partValue(f: String): String =
@@ -3180,8 +3113,8 @@ object Snapshot {
       // the (file, pos) keys it materializes double as the DV-subtract
       // join key (one derivation, shared — _metadata would no longer
       // resolve after the id-attach join)
-      val keyed = readForMaintenanceLineageKeyed(spark, qualified,
-        affected.toSeq, partitionCol, vMeta, vLines)
+      val keyed = readForMaintenanceLineageKeyed(spark, h.qualified,
+        affected.toSeq, partitionCol, h.meta, h.lines)
       keyed.join(dvDf,
           keyed("__lin_file") === dvDf("dv_file") &&
             keyed("__lin_pos") === dvDf("dv_pos"),
@@ -3194,31 +3127,14 @@ object Snapshot {
     val survCounts = survivorsOf().groupBy(col(partitionCol))
       .agg(count(lit(1)).as("n")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val stg = new org.apache.hadoop.fs.Path(root,
-      s".staging-materialize-${Sink.procTag}-${java.util.UUID.randomUUID()}")
-    // explicit clustering wins; else the layout's recorded sort order
-    // drives the rewrite (compact's rule)
-    val (mLin, mZ) =
-      if (sortCols.nonEmpty) (sortCols, Nil) else sortOrderOf(vMeta)
-    val packed0 = survivorsOf()
-    val packed =
-      if (mZ.isEmpty) packed0
-      else packed0.withColumn("__z", mortonColumn(packed0, mZ))
-    Sink.packPartitioned(packed, partitionCol,
-        if (mZ.isEmpty) mLin else Seq("__z"), targets)
-      .drop("__z")
-      .write.partitionBy(partitionCol).parquet(stg.toString)
-    val moved = movePartitionedStaging(fs, root, stg, partitionCol)
-    val movedParts = moved.map(_.split("/")(0)).toSet
-    targets.keys.foreach { value =>
-      val part = s"$partitionCol=${org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(value)}"
-      if (survCounts.getOrElse(value, 0L) > 0L && !movedParts(part))
-        throw new IllegalStateException(
-          s"staged survivors missing for partition '$part' — aborting " +
-          "before the commit; the snapshot is unchanged")
-    }
-    commit(fs, root, Some(v), affected.toSet ++ dvs.toSet,
-      statLines(spark, fs, root, moved, vMeta),
+    // only partitions that kept survivors must restage
+    val moved = rewriteSurvivors(h, "materialize", survivorsOf(),
+      partitionCol, sortCols, Nil, targets,
+      targets.keys.filter(value => survCounts.getOrElse(value, 0L) > 0L)
+        .map(value => s"$partitionCol=" + org.apache.spark.sql.catalyst
+          .catalog.ExternalCatalogUtils.escapePathName(value)))
+    commit(h.fs, h.root, Some(h.v), affected.toSet ++ dvs.toSet,
+      statLines(spark, h.fs, h.root, moved, h.meta),
       Map("op" -> "materialize")): Unit
     perFile.groupBy { case (f, _) => f.split("/")(0) }.view
       .mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
@@ -3267,10 +3183,7 @@ object Snapshot {
       s"append with partition column '$partitionCol' but the table's " +
       s"active spec is '$p' — after evolvePartitionSpec, writers use " +
       "the new spec"))
-    val stg = new org.apache.hadoop.fs.Path(root,
-      s".staging-append-${Sink.procTag}-${java.util.UUID.randomUUID()}")
-    rows.write.partitionBy(partitionCol).parquet(stg.toString)
-    val moved = movePartitionedStaging(fs, root, stg, partitionCol)
+    val moved = stagePartitioned(fs, root, "append", rows, partitionCol)
     val tableMeta = Seq("stats", "rowids", "nullstats")
       .flatMap(k => prevMeta.get(k).orElse(meta.get(k)).map(k -> _)).toMap
     val lines = statLines(spark, fs, root, moved, tableMeta)
@@ -3317,11 +3230,8 @@ object Snapshot {
     * [[createBranch]] refuses on eqdel layouts. */
   def deleteByKeys(spark: SparkSession, path: String, keys: DataFrame,
       meta: Map[String, String] = Map.empty): Long = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    val vMeta = metaOf(spark, path, v)
+    val h = headOf(spark, path)
+    val vMeta = h.meta
     require(vMeta.get("eqdel").contains("on"),
       s"$path is not equality-delete enabled — declare eqDeletes at init " +
       "or bootstrap (entry version stamps must exist from table birth)")
@@ -3334,10 +3244,10 @@ object Snapshot {
       keyCols.foreach(c => require(rec.fieldNames.contains(c),
         s"equality-delete key column '$c' is not in the table schema"))
     }
-    val moved = stageEqSidecars(spark, fs, root, keys)
-    if (moved.isEmpty) return v // empty key set: nothing to delete
+    val moved = stageEqSidecars(spark, h.fs, h.root, keys)
+    if (moved.isEmpty) return h.v // empty key set: nothing to delete
     val lines = moved.map(f => s"$f\tk:${keyCols.mkString(",")}")
-    commit(fs, root, Some(v), Set.empty, lines,
+    commit(h.fs, h.root, Some(h.v), Set.empty, lines,
       Map("op" -> "eq-delete", "eqkeys" -> keyCols.mkString(",")) ++ meta)
   }
 
@@ -3375,10 +3285,7 @@ object Snapshot {
       s"upsert with partition column '$partitionCol' but the table's " +
       s"active spec is '$p'"))
     // stage the data like an append
-    val stg = new org.apache.hadoop.fs.Path(root,
-      s".staging-upsert-${Sink.procTag}-${java.util.UUID.randomUUID()}")
-    batch.write.partitionBy(partitionCol).parquet(stg.toString)
-    val movedData = movePartitionedStaging(fs, root, stg, partitionCol)
+    val movedData = stagePartitioned(fs, root, "upsert", batch, partitionCol)
     val tableMeta = Seq("stats", "rowids", "nullstats")
       .flatMap(k => prevMeta.get(k).orElse(meta.get(k)).map(k -> _)).toMap
     val dataLines = statLines(spark, fs, root, movedData, tableMeta)
@@ -3409,27 +3316,20 @@ object Snapshot {
   def convertEqDeletes(spark: SparkSession, path: String,
       vectorRowCap: Long = graft.Config.MaxVectorFileRows): (Long, Long) = {
     require(vectorRowCap > 0, s"vectorRowCap must be positive, got $vectorRowCap")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    val qualified = fs.makeQualified(root).toString
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    val (vMeta, vLines) = stateOf(spark, path, v)
-    val deleteLines = vLines.filter(isDeleteEntry)
-    val eqs = eqDeletesOf(deleteLines)
-    if (eqs.isEmpty) return (v, 0L)
-    val dvs = deleteLines.map(pathOf).filterNot(isEqFile)
+    val h = headOf(spark, path)
+    val qualified = h.qualified
+    val eqs = eqDeletesOf(h.deleteLines)
+    if (eqs.isEmpty) return (h.v, 0L)
     val maxD = eqs.map(_.d).max
     // candidate files: only those some delete can reach
-    val candLines = vLines.filterNot(isDeleteEntry)
-      .filter(l => addVersionOf(l) < maxD)
+    val candLines = h.dataLines.filter(l => addVersionOf(l) < maxD)
     if (candLines.isEmpty) {
       // nothing reachable — the sidecars are dead weight; retire them
-      val nv = commit(fs, root, Some(v), eqs.map(_.file).toSet, Nil,
+      val nv = commit(h.fs, h.root, Some(h.v), eqs.map(_.file).toSet, Nil,
         Map("op" -> "eq-convert"))
       return (nv, 0L)
     }
-    val recorded = recordedSchema(vMeta)
+    val recorded = recordedSchema(h.meta)
     val reader = spark.read.option("basePath", qualified)
     // no rename fold needed: this scan feeds ONLY the equality keys and
     // row positions, and equality-delete key columns can never be
@@ -3442,7 +3342,7 @@ object Snapshot {
       .map { case (_, fsOfSpec) => withFilePos(scan(fsOfSpec), qualified) }
       .reduce(_.unionByName(_))
     // rows already position-hidden need no second position
-    val visible = applyDeletesKeyed(spark, qualified, keyed, dvs)
+    val visible = applyDeletesKeyed(spark, qualified, keyed, h.deletes)
     val eqk = eqKeyFrame(spark, qualified, eqs)
     val keyCols = eqKeyColsOf(eqs)
     val addv = org.apache.spark.sql.functions.broadcast {
@@ -3458,38 +3358,16 @@ object Snapshot {
           eqk("__eq_d") > withV("__eq_v"),
         "left_semi")
       .select(col("__lin_file").as("dv_file"), col("__lin_pos").as("dv_pos"))
-    val stg = new org.apache.hadoop.fs.Path(root,
-      s".staging-eqconv-${Sink.procTag}-${java.util.UUID.randomUUID()}")
-    val rawStg = new org.apache.hadoop.fs.Path(stg, "raw")
-    marked.write.parquet(rawStg.toString)
-    val n = spark.read.parquet(rawStg.toString).count()
-    val moved: Seq[String] =
-      if (n == 0L) Nil
-      else {
-        val vecStg = new org.apache.hadoop.fs.Path(stg, "vec")
-        spark.read.parquet(rawStg.toString)
-          .repartition(vectorFileCount(n, vectorRowCap))
-          .write.parquet(vecStg.toString)
-        val dvDir = new org.apache.hadoop.fs.Path(root, DeletesDir)
-        fs.mkdirs(dvDir)
-        fs.listStatus(vecStg).toSeq
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith("."))
-          .map { f =>
-            val dst = new org.apache.hadoop.fs.Path(dvDir, f.getPath.getName)
-            if (!fs.rename(f.getPath, dst))
-              throw new IllegalStateException(
-                s"deletion-vector move failed: $dst")
-            s"$DeletesDir/${f.getPath.getName}"
-          }
-      }
-    fs.delete(stg, true): Unit
-    val referenced =
-      if (moved.isEmpty) Set.empty[String]
-      else spark.read.parquet(moved.map(f => s"$qualified/$f"): _*)
-        .select(col("dv_file")).distinct().collect()
-        .map(_.getString(0)).toSet
-    val nv = commit(fs, root, Some(v), eqs.map(_.file).toSet, moved,
+    val stg = stagingDir(h.root, "eqconv")
+    val raw = new org.apache.hadoop.fs.Path(stg, "raw")
+    marked.write.parquet(raw.toString)
+    val staged = spark.read.parquet(raw.toString)
+    val n = staged.count()
+    val (moved, referenced) =
+      if (n == 0L) (Nil, Set.empty[String])
+      else writeVectors(h, stg, staged, n, vectorRowCap)
+    h.fs.delete(stg, true): Unit
+    val nv = commit(h.fs, h.root, Some(h.v), eqs.map(_.file).toSet, moved,
       Map("op" -> "eq-convert"), mustBeLive = referenced,
       dvRefs = referenced)
     (nv, n)
@@ -3526,12 +3404,10 @@ object Snapshot {
     // into `replaced` (partition touched) and silently delete rows the
     // replacement never saw
     val (v, files) = base.getOrElse(currentFiles(spark, path))
-    requireNoDeletes(spark, path, v, "replacePartitions")
+    val (vMeta, vLines) = stateOf(spark, path, v)
+    requireNoDeletes(vLines, path, "replacePartitions")
     requireUniformSpec(files, partitionCol, "replacePartitions")
-    val stg = new org.apache.hadoop.fs.Path(root,
-      s".staging-replace-${Sink.procTag}-${java.util.UUID.randomUUID()}")
-    replacement.write.partitionBy(partitionCol).parquet(stg.toString)
-    val moved = movePartitionedStaging(fs, root, stg, partitionCol)
+    val moved = stagePartitioned(fs, root, "replace", replacement, partitionCol)
     // `alsoReplaceParts` (dir names, `pcol=value`): partitions the
     // caller replaces that the replacement happens to hold NO rows for
     // — a cross-partition merge that drains a partition must still
@@ -3540,7 +3416,7 @@ object Snapshot {
       s"alsoReplaceParts entry '$d' is not a '$partitionCol=' dir name"))
     val touched = moved.map(_.split("/")(0)).toSet ++ alsoReplaceParts
     val replaced = files.filter(f => touched(f.split("/")(0))).toSet
-    val lines = statLines(spark, fs, root, moved, metaOf(spark, path, v))
+    val lines = statLines(spark, fs, root, moved, vMeta)
     // `replacedParts`: a rebase aborts if a CONCURRENT commit landed a
     // file into a partition this commit replaces wholesale — that file
     // was never read into the replacement, so rebasing would silently
@@ -3578,43 +3454,53 @@ object Snapshot {
     val touched = updates.select(col(partitionCol)).distinct()
       .collect().map(_.get(0))
     require(touched.nonEmpty, "merge with an empty updates batch")
-    // ONE resolved (version, file list) is both what the survivors read
-    // AND the commit base [[replacePartitions]] validates against — a
-    // concurrent append between this read and the commit can no longer
-    // slip a file into a replaced partition unseen (it aborts on
-    // rebase) or be silently deleted
-    val mergeBase = currentFiles(spark, path)
+    val h = headOf(spark, path)
     // fail BEFORE the survivor scan and staged write — the commit-side
     // [[replacePartitions]] would refuse outstanding deletes anyway
-    requireNoDeletes(spark, path, mergeBase._1, "merge")
-    val lineage = rowIdsOn(metaOf(spark, path, mergeBase._1))
-    // lineage layouts read survivors WITH their ids (the rewrite keeps
-    // them); the update rows are NEW images under merge's replace-or-
-    // insert contract — they get FRESH ids (NULL here; the commit's
-    // stat job allocates file bases and the reader base-fills them)
-    val cur = (if (lineage) readVersionLineage(spark, path, mergeBase._1)
-               else readVersion(spark, path, mergeBase._1))
-      .where(col(partitionCol).isin(touched.toIndexedSeq: _*))
-    val survivors = cur.join(
-      updates.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti")
-    val updates2 =
-      if (!lineage) updates
+    requireNoDeletes(h.lines, path, "merge")
+    // the update rows are NEW images under merge's replace-or-insert
+    // contract: without `_row_id` they get FRESH ids
+    mergeTouched(spark, path, partitionCol, h, touched.toIndexedSeq,
+      updates.select(keyCols.map(col): _*).distinct(), keyCols,
+      updates.drop(RowIdCol), sortCols, meta, Set.empty)
+  }
+
+  /** The shared tail of [[merge]] and [[mergeAnywhere]]: read the
+    * `touched` partitions at `h` (with their ids on a lineage layout —
+    * the rewrite keeps them), drop every row whose key is in `keys`,
+    * union the `updates` images (a batch without `_row_id` gets fresh
+    * ids: NULL here, allocated by the commit's stat job), cluster one
+    * file per touched partition — a merge batch's rewrite should repair
+    * file shape, not degrade it — and commit through
+    * [[replacePartitions]]. `h` is both what the survivors read AND the
+    * commit base, so a concurrent append between this read and the
+    * commit can never slip a file into a replaced partition unseen (it
+    * aborts on rebase) or be silently deleted. */
+  private def mergeTouched(spark: SparkSession, path: String,
+      partitionCol: String, h: Head, touched: Seq[Any], keys: DataFrame,
+      keyCols: Seq[String], updates: DataFrame, sortCols: Seq[String],
+      meta: Map[String, String], alsoReplaceParts: Set[String]): Long = {
+    val lineage = rowIdsOn(h.meta)
+    val cur = (if (lineage) readVersionLineage(spark, path, h.v)
+               else readVersion(spark, path, h.v))
+      .where(col(partitionCol).isin(touched: _*))
+    val survivors = cur.join(keys, keyCols, "left_anti")
+    val images =
+      if (!lineage || updates.columns.contains(RowIdCol)) updates
       else updates.withColumn(RowIdCol, lit(null).cast(LongType))
-    // one clustered file per touched partition — a merge batch's
-    // rewrite should repair file shape, not degrade it
     val replacement = survivors
-      .unionByName(updates2.select(cur.columns.map(col): _*))
+      .unionByName(images.select(cur.columns.map(col): _*))
       .repartition(col(partitionCol))
       .sortWithinPartitions((partitionCol +: sortCols).map(col): _*)
     replacePartitions(spark, path, partitionCol, replacement,
       Map("merge_keys" -> keyCols.mkString(",")) ++ meta,
-      base = Some(mergeBase))
+      base = Some((h.v, h.files)), alsoReplaceParts = alsoReplaceParts)
   }
 
   /** MERGE with CROSS-PARTITION keys — the contract [[merge]] refuses
     * ("a key that moved partitions would need a cross-partition
     * search, which is O(table)") closed by COMPOSING the secondary key
-    * index (r17 ask #4): [[KeyIndex.filesForKeys]] locates every
+    * index: [[KeyIndex.filesForKeys]] locates every
     * update key's CURRENT partitions from one bucket-pruned index
     * probe, so the op stays O(touched partitions) — old locations ∪
     * new locations — never a table scan. A key that moved is expressed
@@ -3657,17 +3543,17 @@ object Snapshot {
       require(dk.columns.contains(c),
         s"mergeAnywhere deleteKeys lack key column '$c'")))
     KeyIndex.refresh(spark, path, keyCols, idxPath, indexBuckets): Unit
-    val mergeBase = currentFiles(spark, path)
-    requireNoDeletes(spark, path, mergeBase._1, "mergeAnywhere")
+    val h = headOf(spark, path)
+    requireNoDeletes(h.lines, path, "mergeAnywhere")
     val keyFrame = deleteKeys.map(_.select(keyCols.map(col): _*))
       .foldLeft(updates.select(keyCols.map(col): _*))(_ unionByName _)
       .distinct()
     val oldFiles = KeyIndex.filesForKeys(spark, idxPath, keyFrame)
     val oldParts = oldFiles.map(_.split("/")(0)).toSet
-    val oldPartFiles = mergeBase._2.filter(f => oldParts(f.split("/")(0)))
+    val oldPartFiles = h.files.filter(f => oldParts(f.split("/")(0)))
     val oldVals: Seq[Any] =
       if (oldPartFiles.isEmpty) Seq.empty
-      else readVersionFiles(spark, path, mergeBase._1, oldPartFiles)
+      else readVersionFiles(spark, path, h.v, oldPartFiles)
         .select(col(partitionCol)).distinct()
         .collect().map(_.get(0)).toIndexedSeq
     val newVals: Seq[Any] = updates.select(col(partitionCol)).distinct()
@@ -3676,27 +3562,12 @@ object Snapshot {
     require(touched.nonEmpty,
       "mergeAnywhere touches nothing: no update rows and no delete key " +
       "present in the table")
-    val lineage = rowIdsOn(metaOf(spark, path, mergeBase._1))
-    val cur = (if (lineage) readVersionLineage(spark, path, mergeBase._1)
-               else readVersion(spark, path, mergeBase._1))
-      .where(col(partitionCol).isin(touched: _*))
-    val survivors = cur.join(keyFrame, keyCols, "left_anti")
     // lineage: a batch that DECLARES row ids (the SQL general-merge
     // seam — matched updates keep their identity, inserts carry NULL
     // for fresh mint) passes them through; a plain batch takes fresh
     // ids, the replace-or-insert contract
-    val updates2 =
-      if (!lineage) updates
-      else if (updates.columns.contains(RowIdCol)) updates
-      else updates.withColumn(RowIdCol, lit(null).cast(LongType))
-    val replacement = survivors
-      .unionByName(updates2.select(cur.columns.map(col): _*))
-      .repartition(col(partitionCol))
-      .sortWithinPartitions((partitionCol +: sortCols).map(col): _*)
-    replacePartitions(spark, path, partitionCol, replacement,
-      Map("merge_keys" -> keyCols.mkString(",")) ++ meta,
-      base = Some(mergeBase),
-      alsoReplaceParts = oldParts)
+    mergeTouched(spark, path, partitionCol, h, touched, keyFrame, keyCols,
+      updates, sortCols, meta, oldParts)
   }
 
   /** Commits a change feed may cross WITHOUT losing attribution: they
@@ -3720,7 +3591,7 @@ object Snapshot {
   // files, no visible row changes — existing rows read NULL in an
   // added column exactly as they do across a schema-WIDENING append,
   // which the feed already crosses (gap adds read under toV's recorded
-  // schema). The r19 review flagged the original asymmetry.
+  // schema).
   private val RowPreservingOps =
     Set("compact", "materialize", "evolve-spec", "eq-convert",
       "rename-column", "promote-column", "add-column", "evolve-schema")
@@ -4417,11 +4288,8 @@ object Snapshot {
       resync: DataFrame => Unit): ConsumeResult = {
     require(group.nonEmpty && !group.contains("/"),
       s"consumer group must be a plain name, got '$group'")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    val cur = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"no committed snapshot under $path — nothing to consume"))
+    val h = headOf(spark, path, "nothing to consume")
+    val (root, fs, cur) = (h.root, h.fs, h.v)
     val position = lastPosition(fs, root, group)
     val nextSeq = position.map(_._1 + 1).getOrElse(1L)
     position.map(_._2) match {
@@ -4483,11 +4351,8 @@ object Snapshot {
       reset: DataFrame => Unit): ConsumeResult = {
     require(group.nonEmpty && !group.contains("/"),
       s"consumer group must be a plain name, got '$group'")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    val cur = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"no committed snapshot under $path — nothing to consume"))
+    val h = headOf(spark, path, "nothing to consume")
+    val (root, fs, cur) = (h.root, h.fs, h.v)
     val position = lastPosition(fs, root, group)
     val nextSeq = position.map(_._1 + 1).getOrElse(1L)
     // LINEAGE upgrade: on a rowids=on table every frame carries _row_id
@@ -4495,8 +4360,8 @@ object Snapshot {
     // update_postimage pairs sharing the id, via [[changeDiffLineage]])
     // instead of unmatched delete+insert — a keyed downstream applies an
     // update in place; an additive one applies (post − pre). Id-less
-    // tables keep the r16 insert|delete contract unchanged.
-    val lineage = rowIdsOn(metaOf(spark, path, cur))
+    // tables keep the insert|delete contract unchanged.
+    val lineage = rowIdsOn(h.meta)
     def asInserts(df: DataFrame): DataFrame =
       df.withColumn("_change_type", lit("insert"))
     def full(): DataFrame = asInserts(
@@ -4562,10 +4427,8 @@ object Snapshot {
     * Metadata-only: O(groups) position reads + O(gap) header reads,
     * all segment-cached — never a data file. */
   def consumerLag(spark: SparkSession, path: String): Seq[ConsumerLag] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    val cur = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
+    val h = headOf(spark, path)
+    val (root, fs, cur) = (h.root, h.fs, h.v)
     val dir = new org.apache.hadoop.fs.Path(root, ConsumersDir)
     val groups =
       if (!fs.exists(dir)) Seq.empty[String]
@@ -4580,8 +4443,7 @@ object Snapshot {
         else deltaAddsInGap(spark, path, p, cur) match {
           case Right(adds) =>
             val addSet = adds.toSet
-            val counts = resolvedLines(spark, path, cur)
-              .filter(l => addSet(pathOf(l))).map(rowCountOf)
+            val counts = h.lines.filter(l => addSet(pathOf(l))).map(rowCountOf)
             val rows =
               if (counts.nonEmpty && counts.forall(_.nonEmpty))
                 Some(counts.flatten.sum)
@@ -4629,23 +4491,19 @@ object Snapshot {
   }
 
   def dvAudit(spark: SparkSession, path: String): DvAudit = {
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    val (_, lines) = stateOf(spark, path, v)
+    val h = headOf(spark, path)
     // POSITION vectors only: equality sidecars carry key columns, not
     // (dv_file, dv_pos) — their debt is audited by their count (each is
     // one reader anti-join) and folded by convertEqDeletes
-    val dvs = lines.filter(isDeleteEntry).map(pathOf).filterNot(isEqFile)
-    val nLive = lines.count(l => !isDeleteEntry(l))
-    if (dvs.isEmpty) DvAudit(v, 0L, 0L, 0L, nLive.toLong)
+    val dvs = h.deletes.filterNot(isEqFile)
+    val nLive = h.dataLines.size.toLong
+    if (dvs.isEmpty) DvAudit(h.v, 0L, 0L, 0L, nLive)
     else {
-      val root = new org.apache.hadoop.fs.Path(path)
-      val qualified = fsOf(spark, root).makeQualified(root).toString
-      val dv = spark.read.parquet(dvs.map(f => s"$qualified/$f"): _*)
+      val dv = spark.read.parquet(dvs.map(f => s"${h.qualified}/$f"): _*)
       // one tiny aggregate over the O(hidden rows) sidecars
       val r = dv.agg(count(lit(1)).as("n"),
         count_distinct(col("dv_file")).as("nf")).collect()(0)
-      DvAudit(v, dvs.size.toLong, r.getLong(0), r.getLong(1), nLive.toLong)
+      DvAudit(h.v, dvs.size.toLong, r.getLong(0), r.getLong(1), nLive)
     }
   }
 
@@ -4679,9 +4537,7 @@ object Snapshot {
     * the equality tier self-limiting. */
   def maintainEqDeletes(spark: SparkSession, path: String,
       maxSidecars: Long = 8L): (Long, Option[Long]) = {
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    val n = stateOf(spark, path, v)._2.count(isEqDeleteEntry).toLong
+    val n = headOf(spark, path).lines.count(isEqDeleteEntry).toLong
     if (n > maxSidecars) (n, Some(convertEqDeletes(spark, path)._2))
     else (n, None)
   }
@@ -4704,7 +4560,7 @@ object Snapshot {
   final case class MaintainAction(step: Int, signal: String,
       fired: Boolean, rowsAffected: Long)
 
-  /** UNIFIED MAINTENANCE POLICY DRIVER (the r17 ask #6): one entry
+  /** UNIFIED MAINTENANCE POLICY: one entry
     * point that reads the store's debt signals from METADATA ONLY —
     * outstanding equality sidecars, the deletion-vector audit
     * ([[dvAudit]]), per-partition file counts from the manifest,
@@ -4730,14 +4586,11 @@ object Snapshot {
     * one metadata read — safe to run at any cadence. */
   def maintain(spark: SparkSession, path: String, partitionCol: String,
       policy: MaintainPolicy = MaintainPolicy()): Seq[MaintainAction] = {
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    val lines = stateOf(spark, path, v)._2
-    val filesPerPart = lines.filterNot(isDeleteEntry).map(pathOf)
-      .groupBy(_.split("/")(0)).view.mapValues(_.size)
+    val h = headOf(spark, path)
+    val filesPerPart = h.files.groupBy(_.split("/")(0)).view.mapValues(_.size)
     val needCompact = filesPerPart.exists(_._2 > policy.maxFilesPerPartition)
     // 1. equality tier — threshold, or prerequisite of a pending compact
-    val eqN = lines.count(isEqDeleteEntry).toLong
+    val eqN = h.lines.count(isEqDeleteEntry).toLong
     val eqFired = eqN > policy.maxEqSidecars || (eqN > 0 && needCompact)
     val eqRows = if (eqFired) convertEqDeletes(spark, path)._2 else 0L
     // 2. vector tier — audited AFTER the conversion so its vectors count
@@ -4750,9 +4603,7 @@ object Snapshot {
     if (needCompact)
       compact(spark, path, partitionCol, policy.compactTargetBytes): Unit
     // 4. retention
-    val nVersions = committedVersions(
-      fsOf(spark, new org.apache.hadoop.fs.Path(path)),
-      new org.apache.hadoop.fs.Path(path)).size
+    val nVersions = committedVersions(h.fs, h.root).size
     val exFired = policy.keepVersions < nVersions
     if (exFired)
       expire(spark, path, partitionCol, keep = policy.keepVersions): Unit
@@ -4927,8 +4778,7 @@ object Snapshot {
 
   /** [[partitionStatsAt]] of the current snapshot. */
   def partitionStats(spark: SparkSession, path: String): DataFrame =
-    partitionStatsAt(spark, path, currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path")))
+    partitionStatsAt(spark, path, headOf(spark, path).v)
 
   /** What a [[countRange]] cost: how many files were answered from the
     * manifest alone vs actually scanned. */
@@ -4953,19 +4803,14 @@ object Snapshot {
   def countRange(spark: SparkSession, path: String, c: String,
       lo: Long, hi: Long): CountRangeResult = {
     require(lo <= hi, s"countRange needs lo <= hi, got [$lo, $hi]")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    val qualified = fs.makeQualified(root).toString
-    val v = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    val (meta, lines) = stateOf(spark, path, v)
+    val h = headOf(spark, path)
+    val (qualified, meta, lines) = (h.qualified, h.meta, h.lines)
     val cols = statsColsOf(meta)
     val idx = cols.indexOf(c)
     require(idx >= 0, s"no manifest statistics declared for column '$c' " +
       s"(declared: ${if (cols.isEmpty) "none" else cols.mkString(",")})")
-    val deleteLines = lines.filter(isDeleteEntry)
-    val dvs = deleteLines.map(pathOf).filterNot(isEqFile)
-    val eqMaxD = eqDeletesOf(deleteLines).map(_.d).maxOption
+    val dvs = h.deletes.filterNot(isEqFile)
+    val eqMaxD = eqDeletesOf(h.deleteLines).map(_.d).maxOption
       .getOrElse(Long.MinValue)
     val dvTouched: Set[String] =
       if (dvs.isEmpty) Set.empty
@@ -4975,7 +4820,7 @@ object Snapshot {
     var interior = 0L
     var metaFiles = 0L
     val scanFiles = scala.collection.mutable.ArrayBuffer.empty[String]
-    lines.filterNot(isDeleteEntry).foreach { l =>
+    h.dataLines.foreach { l =>
       val p = pathOf(l)
       val hidden = dvTouched(p) || addVersionOf(l) < eqMaxD
       (statsListOf(l).lift(idx).flatten, rowCountOf(l),
@@ -5027,20 +4872,13 @@ object Snapshot {
       rows: DataFrame, meta: Map[String, String] = Map.empty): String = {
     require(rows.columns.contains(partitionCol),
       s"staged rows lack partition column '$partitionCol'")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    val cur = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"no committed snapshot under $path — bootstrap with init/append"))
-    val curMeta = metaOf(spark, path, cur)
+    val h = headOf(spark, path, "bootstrap with init/append")
+    val (root, fs, cur, curMeta) = (h.root, h.fs, h.v, h.meta)
     curMeta.get("pcol").foreach(p => require(p == partitionCol,
       s"stageAppend with partition column '$partitionCol' but the " +
       s"table's active spec is '$p'"))
-    val stg = new org.apache.hadoop.fs.Path(root,
-      s".staging-wap-${Sink.procTag}-${java.util.UUID.randomUUID()}")
-    rows.write.partitionBy(partitionCol).parquet(stg.toString)
-    val moved = movePartitionedStaging(fs, root, stg, partitionCol)
-    // ADVICE r16: an empty batch would stage a header-only pointer that
+    val moved = stagePartitioned(fs, root, "wap", rows, partitionCol)
+    // an empty batch would stage a header-only pointer that
     // readStaged/publishStaged then feed to an empty-path parquet read
     // (unhelpful AnalysisException). There is nothing to audit in an
     // empty batch — refuse at stage time, loudly.
@@ -5182,12 +5020,9 @@ object Snapshot {
     * which would alias the equality-delete version stamps (`v:`) on
     * fast-forward — delete-by-key and branches don't compose yet. */
   def createBranch(spark: SparkSession, path: String, name: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    val base = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"no committed snapshot under $path — nothing to branch from"))
-    require(!metaOf(spark, path, base).get("eqdel").contains("on"),
+    val h = headOf(spark, path, "nothing to branch from")
+    val (root, fs, base) = (h.root, h.fs, h.v)
+    require(!h.meta.get("eqdel").contains("on"),
       s"$path is equality-delete enabled — branches would alias the " +
       "entry version stamps on fast-forward; the two don't compose yet")
     val dir = branchDir(root, name)
@@ -5235,10 +5070,7 @@ object Snapshot {
     baseMeta.get("pcol").foreach(p => require(p == partitionCol,
       s"appendToBranch with partition column '$partitionCol' but the " +
       s"branch base's active spec is '$p'"))
-    val stg = new org.apache.hadoop.fs.Path(root,
-      s".staging-branch-${Sink.procTag}-${java.util.UUID.randomUUID()}")
-    rows.write.partitionBy(partitionCol).parquet(stg.toString)
-    val moved = movePartitionedStaging(fs, root, stg, partitionCol)
+    val moved = stagePartitioned(fs, root, "branch", rows, partitionCol)
     require(moved.nonEmpty,
       s"appendToBranch on $path@$name with an EMPTY batch — nothing to " +
       "stage or audit")

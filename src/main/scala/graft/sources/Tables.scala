@@ -7,18 +7,13 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 /** Parquet star-schema loader for the driver-generated testdata
   * (TESTDATA.md). Mirrors the reference's catalog-scan entry points
   * (ref: etl_jobs/glue_master_etl.py:100-103, 204-207) — but Spark-native:
-  * `spark.read.parquet` with schema from the footer, registered as temp
-  * views so both the DataFrame and SQL surfaces see the same tables.
+  * `spark.read.parquet` with schema from the footer.
   *
   * Scale note: parquet scans are splittable; at 100 TB the same call
   * parallelizes across executors with partition pruning + column pruning
   * for free. Never infer CSV schemas at scale — parquet footers carry them.
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Session configs every graft entry point must set at build time
     * ([[graft.GraftSession]] applies them). nanosAsLong: when events.ts is
     * parquet TIMESTAMP(NANOS) — which Spark 4 rejects by default — we read
@@ -174,10 +169,6 @@ object Tables {
       }
     } else spark.read.option("mergeSchema", mergeSchema.toString)
       .parquet(s"$dir/$name.parquet")
-
-  /** Register every table as a temp view named after itself. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 
   // (path, length, mtime) → row-group count; corpora are immutable
   // within a process, so footers are read once per file, not per query

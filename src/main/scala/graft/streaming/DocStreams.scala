@@ -45,11 +45,6 @@ object DocStreams {
       source: StreamSources.StreamSource): DataFrame =
     StreamSources.read(spark, docSchema, source)
 
-  /** JSON-lines document stream (splittable; schema explicit — a
-    * streaming source can't infer one). */
-  def readJsonDocStream(spark: SparkSession, dir: String): DataFrame =
-    readDocStream(spark, StreamSources.FileSource(dir, format = "json"))
-
   /** Parquet document stream for replayable staging dirs. */
   def readDocStream(spark: SparkSession, dir: String): DataFrame =
     readDocStream(spark, StreamSources.FileSource(dir))

@@ -120,6 +120,18 @@ class EqualityDeleteSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       Snapshot.deleteWhereMoR(spark, path, "event_date",
         col("event_id") === 1L))
+    // partition rewrites name the equality tier's own first step, not
+    // materializeDeletes (which itself refuses until the conversion)
+    Seq(
+      () => Snapshot.compact(spark, path, "event_date", 64L << 20),
+      () => Snapshot.merge(spark, path, "event_date",
+        Seq(row(1, 11, "2024-01-01")).toDF("event_id", "value", "event_date"),
+        Seq("event_id"))
+    ).foreach { op =>
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("convertEqDeletes"),
+        s"refusal names the wrong first step: ${e.getMessage}")
+    }
     // fold: keys -> positions, visible rows identical
     val (_, n) = Snapshot.convertEqDeletes(spark, path)
     assert(n == 3L, s"expected 3 hidden rows (old 3, old 4, key 7), got $n")

@@ -388,6 +388,46 @@ class SnapshotSpec extends AnyFunSuite {
     }
     assert(cmpSmall == cmpBig,
       s"snapshot compact scales with partition count: $cmpSmall vs $cmpBig jobs")
+    // the vector write and the survivor rewrite the delete/compact pins
+    // share: a merge-on-read delete, an update, and the materialization
+    // of their vectors also run a constant number of jobs (build2's
+    // file counts: both layouts stay under the listing threshold)
+    def build3(nParts: Int): String = {
+      val path = s"${tmp("graft-snapjobs")}/layout3"
+      val rows = (0 until nParts * 8).map { i =>
+        (i.toLong, if (i % 4 == 0) 3L else 7L, i.toLong,
+          f"2024-01-${i % nParts + 1}%02d")
+      }
+      rows.toDF("event_id", "user_id", "ts_ms", "event_date")
+        .repartition(2).write.partitionBy("event_date").parquet(path)
+      Snapshot.init(spark, path, "event_date")
+      path
+    }
+    val small3 = build3(3)
+    val big3 = build3(9)
+    Seq[(String, String => Unit)](
+      "deleteWhereMoR" -> { p =>
+        assert(Snapshot.deleteWhereMoR(spark, p, "event_date",
+          col("user_id") === 3L)._2 > 0) },
+      "updateWhere" -> { p =>
+        assert(Snapshot.updateWhere(spark, p, "event_date",
+          col("user_id") === 7L, Map("ts_ms" -> (col("ts_ms") + 1L)))._2 > 0) },
+      "materializeDeletes" -> { p =>
+        assert(Snapshot.materializeDeletes(spark, p, "event_date",
+          Seq("ts_ms")).nonEmpty) }
+    ).foreach { case (name, op) =>
+      val s = TestJobs.jobsDuring(spark)(op(small3))
+      val b = TestJobs.jobsDuring(spark)(op(big3))
+      assert(s == b,
+        s"snapshot $name scales with dirty-partition count: $s vs $b jobs")
+    }
+    val snap3 = Snapshot.readSnapshot(spark, big3)
+    assert(Snapshot.deletesOf(spark, big3,
+      Snapshot.currentVersion(spark, big3).get).isEmpty)
+    assert(snap3.where(col("user_id") === 3L).count() == 0)
+    assert(snap3.count() == 9 * 8 * 3 / 4)
+    assert(snap3.where(col("ts_ms") === col("event_id") + 1L).count() ==
+      9 * 8 * 3 / 4)
     // the one-job passes still produced the right tables
     val snap = Snapshot.readSnapshot(spark, big)
     assert(snap.where(col("user_id") === 3L).count() == 0)
