@@ -607,7 +607,7 @@ object CurationPipeline {
   // total tiebreak.
   //
   // Scale shape: the global dense position uses SurrogateKeys.dense
-  // (range-partitioned sort + zipWithIndex) — a row_number() window
+  // (one range split, per-partition offsets) — a row_number() window
   // here would funnel the whole corpus through one task, the exact
   // single-partition collapse the warehouse keys already eliminated.
   // ---------------------------------------------------------------------

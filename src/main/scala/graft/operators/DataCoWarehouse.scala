@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -11,9 +10,10 @@ import graft.sources.{DataCo, GeoJson}
   * 59-column DataCo CSV — re-expressed as closed-form Spark plans
   * (entry points at glue_master_etl.py:100-362). This is the same
   * architecture as `Warehouse`/`Pipeline` (row_number surrogate keys
-  * in-engine instead of sink IDENTITY + JDBC read-back) applied to the
-  * reference's real columns, so a user can point the engine at actual
-  * DataCo exports unchanged.
+  * in-engine instead of sink IDENTITY) applied to the reference's real
+  * columns, so a user can point the engine at actual DataCo exports
+  * unchanged. Each dim function takes its parent dims as arguments:
+  * `DataCoPipeline` passes them as written and read back.
   *
   * Scale shape: every dim is orders of magnitude smaller than the fact.
   * Bounded-cardinality dims (status combos, geography triples, dept,
@@ -42,17 +42,24 @@ object DataCoWarehouse {
     * key never fans out and row_number surrogate keys stay
     * deterministic (the reference deduped every lookup map for the same
     * reason, glue_master_etl.py:112,122,134,147,217,227,250-290).
-    * Scale: one shuffle on the natural key — dim-sized, distributed. */
+    * Scale: one aggregate on the natural key — its partial half dedups
+    * each input partition before the dim-sized shuffle, so exact
+    * duplicate source rows need no separate `distinct()`. The keeper
+    * is the least (attrs, then every other column) struct: struct `min`
+    * orders ASC NULLS FIRST field by field, as an ascending window
+    * sort over the same columns would. */
   private def keepOnePerKey(df: DataFrame, key: Seq[String], attrs: Seq[String]): DataFrame = {
-    val w = Window.partitionBy(key.map(col): _*).orderBy(attrs.map(col): _*)
-    df.withColumn("__rn", row_number().over(w)).where(col("__rn") === 1).drop("__rn")
+    val rest = df.columns.filterNot(c => key.contains(c) || attrs.contains(c))
+    df.groupBy(key.map(col): _*)
+      .agg(min(struct((attrs ++ rest).map(col): _*)).as("__keep"))
+      .select(df.columns.map(c => if (key.contains(c)) col(c) else col(s"__keep.$c").as(c)): _*)
   }
 
   /** dept ← category snowflake parent (glue_master_etl.py:108-116). */
   def dimDepartment(raw: DataFrame): DataFrame = {
     val rows = raw.select(col("department_id").as("dept_id"),
         col("department_name").as("dept_name"))
-      .where(col("dept_id").isNotNull).distinct()
+      .where(col("dept_id").isNotNull)
     sk(keepOnePerKey(rows, Seq("dept_id"), Seq("dept_name")),
       "dept_key", Seq("dept_id"))
   }
@@ -62,7 +69,7 @@ object DataCoWarehouse {
     val rows = raw.select(col("category_id").as("cat_id"),
         col("category_name").as("cat_name"),
         col("department_id").as("dept_id"))
-      .where(col("cat_id").isNotNull).distinct()
+      .where(col("cat_id").isNotNull)
     sk(keepOnePerKey(rows, Seq("cat_id"), Seq("cat_name", "dept_id"))
         .join(broadcast(dept.select("dept_key", "dept_id")), Seq("dept_id"), "left")
         .select(col("cat_id"), col("cat_name"), col("dept_key")),
@@ -76,7 +83,7 @@ object DataCoWarehouse {
     val rows = raw.select(col("product_card_id"), col("product_name"),
         col("order_item_product_price").as("product_price"),
         col("category_id").as("cat_id"))
-      .where(col("product_card_id").isNotNull).distinct()
+      .where(col("product_card_id").isNotNull)
     sk(keepOnePerKey(rows, Seq("product_card_id"),
           Seq("product_name", "product_price", "cat_id"))
         .join(broadcast(cat.select("cat_key", "cat_id")), Seq("cat_id"), "left")
@@ -107,7 +114,7 @@ object DataCoWarehouse {
     val rows = raw.select(norm("order_city").as("city"), norm("order_state").as("state"),
         norm("order_country").as("country"),
         col("order_region").as("region"), col("market"))
-      .where(col("city").isNotNull).distinct()
+      .where(col("city").isNotNull)
     sk(keepOnePerKey(rows, Seq("country", "state", "city"), Seq("region", "market")),
       "geo_key", Seq("country", "state", "city"))
   }
@@ -146,9 +153,9 @@ object DataCoWarehouse {
       "route_shape_key", Seq("route_key_composite"))
 
   /** star fact at order-item grain (etl:291-348), building its dims
-    * internally. Callers that already built dims (the pipeline mains,
-    * the b01-b04 measures) use [[factWith]] so each dim-build subtree
-    * appears once in the plan, not twice. */
+    * internally. Callers that already hold dims (the pipeline mains,
+    * with the dims read back from where they wrote them; the b01-b04
+    * measures) use [[factWith]] so no dim-build subtree runs twice. */
   def fact(raw: DataFrame, routes: Option[DataFrame] = None): DataFrame =
     factWith(raw,
       dimProduct(raw, dimCategory(raw, dimDepartment(raw))),
@@ -217,6 +224,9 @@ object DataCoWarehouse {
   // (the q06 lesson: shrink the fact to |dim| rows first, broadcast the
   // dim, never shuffle fact rows through a dim join), so each measure
   // is one fact-side partial aggregate + a broadcast join at 100 TB.
+  // Each result is O(groups) rows, so it is sorted in one partition
+  // (`repartition(1)` before the `orderBy`): a range-partitioned sort
+  // would first run a job to sample its few rows.
   // ---------------------------------------------------------------------
 
   /** B1 — profit by department/category hierarchy (report p.16). */
@@ -230,6 +240,7 @@ object DataCoWarehouse {
       .groupBy("dept_name", "cat_name")
       .agg(sum(col("p")).cast(DecimalType(18, 2)).as("total_profit"),
         sum(col("n")).as("n_items"))
+      .repartition(1)
       .orderBy("dept_name", "cat_name")
 
   /** B2 — sales by year/month of the order date (report p.17). The dim
@@ -251,6 +262,7 @@ object DataCoWarehouse {
       .groupBy("year", "month")
       .agg(sum(col("s")).cast(DecimalType(18, 2)).as("total_sales"),
         sum(col("n")).as("n_items"))
+      .repartition(1)
       .orderBy(col("year").asc_nulls_last, col("month").asc_nulls_last)
 
   /** B3 — schedule adherence (days_real <= days_scheduled) per shipping
@@ -265,6 +277,7 @@ object DataCoWarehouse {
       .groupBy("shipping_mode")
       .agg(sum(col("n")).as("n_items"), sum(col("ok")).as("n_on_schedule"))
       .withColumn("adherence_ppm", expr("n_on_schedule * 1000000 div n_items"))
+      .repartition(1)
       .orderBy("shipping_mode")
 
   /** B4 — late-delivery risk by order country (report p.18). */
@@ -275,5 +288,6 @@ object DataCoWarehouse {
         col("country"))), Seq("order_geo_key"))
       .groupBy("country")
       .agg(sum(col("l")).as("n_late"), sum(col("n")).as("n_items"))
+      .repartition(1)
       .orderBy("country")
 }

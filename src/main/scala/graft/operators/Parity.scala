@@ -128,7 +128,7 @@ object Parity {
   // 123,135) with row_number surrogate keys replacing Redshift
   // IDENTITY(1,1) (§2.10; ddl_snowflake_schema.sql:28) — this deletes the
   // reference's write→read-back→join dance (§3.1).
-  // Keys come from SurrogateKeys.dense (distributed sort + zipWithIndex)
+  // Keys come from SurrogateKeys.dense (one distributed range split)
   // — identical assignment to row_number() OVER (ORDER BY c_custkey)
   // but with no single-partition window, so the same plan survives a
   // fact-sized input. Nation/region are broadcast (tiny).

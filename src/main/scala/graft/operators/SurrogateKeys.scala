@@ -3,46 +3,39 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Dense 1..n surrogate keys WITHOUT a single-partition window.
   *
   * `row_number().over(Window.orderBy(...))` funnels the whole input
   * through one task — fine at dim scale, a straggler at 10⁷-10⁸ rows.
-  * This is the scale path the Warehouse scaladoc promised: a global
-  * sort (range partitioning + per-partition sort, fully distributed),
-  * then each row's key = rows-before-it-globally + 1, assembled from
-  * per-partition row counts:
+  * This is the scale path the Warehouse scaladoc promised: one range
+  * split of the input (fully distributed), then each row's key =
+  * rows-before-its-split-partition + its position inside it:
   *
-  *   - within its (range) partition a row's 0-based index is
-  *     `monotonically_increasing_id() - (partition_id << 33)` — the id
-  *     is partitionMask + row position, so the subtraction recovers the
-  *     position without leaving Tungsten;
-  *   - the rows BEFORE its partition are a running sum of per-partition
-  *     counts — an O(#partitions)-row aggregate, windowed in one task
-  *     over partition ids (never data), broadcast back.
+  *   - position and partition size are windows over the split
+  *     partition's id — one hash shuffle that keeps each range
+  *     partition together;
+  *   - the first row of each partition also sends the partition's size
+  *     to every LATER partition (O(#partitions²) tiny rows), so after a
+  *     second shuffle on the receiving partition a window sum over what
+  *     arrived is the rows before it.
   *
-  * The r21 rewrite: the original implementation dropped to
-  * `sorted.rdd.zipWithIndex()` + `createDataFrame`, which (a)
-  * deserializes and re-encodes every row crossing the RDD boundary,
-  * (b) runs an EAGER per-partition count job at construction time, and
-  * (c) erases statistics and partitioning — the resulting
-  * `Scan ExistingRDD` has unknown size, so every fact⋈dim join planned
-  * as a SortMergeJoin that hash-shuffled the whole fact on the dim key
-  * (q20 shuffled its full wide fact on o_custkey before the final
-  * range sort re-shuffled it again). The DataFrame form keeps size
-  * estimates (dims broadcast again), stays whole-stage-codegen'd, and
-  * shares the sort exchange between the counts branch and the data
-  * branch instead of recomputing the scan.
+  * The split is read ONCE, by one chain of operators, so the counts and
+  * the rows they number come from the same partitions: two reads of one
+  * split each sample their own range bounds and are coalesced by AQE
+  * on their own, so their partition ids need not agree. No job runs at
+  * construction and the plan keeps its size estimates, so small dims
+  * still broadcast into fact joins.
   *
   * Determinism: when `order` is a total order (a unique natural key —
   * what every call site has after natural-key dedup), the assignment
-  * equals `row_number() OVER (ORDER BY order)` exactly, independent of
-  * the input's partitioning AND of where the range sampler happens to
-  * place partition boundaries — the key is "rows before this row in
-  * the global sort order + 1", which no boundary placement can change
-  * (asserted in SurrogateKeysSpec against the window form and under
-  * adversarial repartitioning). The key column is prepended to the
-  * schema.
+  * equals `row_number() OVER (ORDER BY order)` exactly: the key is
+  * "rows before this row in the global sort order + 1", a function of
+  * the data alone, whatever the input's partitioning, the sampled range
+  * bounds or AQE's coalescing (asserted in SurrogateKeysSpec against
+  * the window form, under adversarial repartitioning and persisted).
+  * The key column is prepended to the schema.
   *
   * Replaces the reference's sink-side IDENTITY keys
   * (ddl_snowflake_schema.sql:3-82) like the window form did, but
@@ -52,24 +45,27 @@ object SurrogateKeys {
 
   def dense(df: DataFrame, keyName: String, order: Seq[Column]): DataFrame = {
     val pidCol = s"__${keyName}_pid"
-    val monoCol = s"__${keyName}_mono"
+    val posCol = s"__${keyName}_pos"
     val cntCol = s"__${keyName}_cnt"
-    val offCol = s"__${keyName}_off"
-    val sorted = df.sort(order: _*)
-      .withColumn(pidCol, spark_partition_id().cast("long"))
-      .withColumn(monoCol, monotonically_increasing_id())
-    // rows before each partition: counts are O(#partitions) rows, so the
-    // single-task running-sum window holds partition IDs, never data
-    val w = Window.orderBy(col(pidCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = sorted.groupBy(col(pidCol))
-      .agg(count(lit(1)).as(cntCol))
-      .select(col(pidCol),
-        coalesce(sum(col(cntCol)).over(w), lit(0L)).as(offCol))
-    sorted
-      .join(broadcast(offsets), Seq(pidCol))
+    val sendCol = s"__${keyName}_send"
+    // a split into at most `parts` partitions, so ids stay below `parts`
+    val parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val inPart = Window.partitionBy(col(pidCol))
+    val later = when(col(posCol) === 1, sequence(col(pidCol) + 1, lit(parts)))
+      .otherwise(typedLit(Seq.empty[Int]))
+    // (receiving partition, rows sent): each row to its own partition
+    // with 0, the partition's size to every later one
+    val sends = concat(
+      array(struct(col(pidCol).as("to"), lit(0L).as("n"))),
+      transform(later, p => struct(p.as("to"), col(cntCol).as("n"))))
+    df.repartitionByRange(parts, order: _*)
+      .withColumn(pidCol, spark_partition_id())
+      .withColumn(posCol, row_number().over(inPart.orderBy(order: _*)).cast(LongType))
+      .withColumn(cntCol, count(lit(1)).over(inPart))
+      .withColumn(sendCol, explode(sends))
       .withColumn(keyName,
-        col(offCol) + (col(monoCol) - shiftleft(col(pidCol), 33)) + lit(1L))
+        sum(col(s"$sendCol.n")).over(Window.partitionBy(col(s"$sendCol.to"))) + col(posCol))
+      .where(col(s"$sendCol.n") === 0L)
       .select(col(keyName) +: df.columns.map(col): _*)
   }
 }

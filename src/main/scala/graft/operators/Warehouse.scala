@@ -19,10 +19,10 @@ import org.apache.spark.sql.types._
   * row_number() makes each dim one closed-form plan and deletes the
   * write→read-back→join dance entirely.
   *
-  * Scale notes: surrogate keys come from [[SurrogateKeys.dense]]
-  * (distributed sort + per-partition offsets) — same assignment as a
-  * row_number window, no single-partition ceiling, so even a 10^8-row
-  * dimension ranks in parallel. Fact-side joins broadcast every dim;
+  * Scale notes: surrogate keys come from [[SurrogateKeys.dense]] (one
+  * range split + per-partition counts sent forward) — same assignment
+  * as a row_number window, no single-partition ceiling, so even a
+  * 10^8-row dimension ranks in parallel. Fact-side joins broadcast every dim;
   * the fact itself only shuffles on its own join keys.
   */
 object Warehouse {

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -75,19 +76,53 @@ class DataCoPipelineSpec extends AnyFunSuite {
     }
   }
 
+  private val tableNames = Seq("dim_department", "dim_category", "dim_product",
+    "dim_customer", "dim_geography", "dim_execution_status", "dim_date",
+    "dim_route_shapes", "fact_order_items")
+
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
+    a.count() == b.count() && a.except(b).isEmpty && b.except(a).isEmpty
+
   test("runJdbc lands the DataCo warehouse in the serving database, idempotently") {
     val dbDir = Files.createTempDirectory("graft-dataco-derby").toFile
     dbDir.deleteOnExit()
     val url = s"jdbc:derby:${dbDir.getAbsolutePath}/wh;create=true"
     DataCoPipeline.runJdbc(spark, csvPath, url, Some(routesPath), factPartitions = 2)
-    val want = DataCoPipeline.tables(
-      graft.sources.DataCo.read(spark, csvPath),
-      Some(graft.sources.GeoJson.routes(spark, routesPath)))
-    want.foreach { case (name, df) =>
-      assert(graft.sources.Sink.jdbcRead(spark, url, name).count() == df.count(), name)
+    // the serving tables hold exactly the parquet warehouse's rows
+    tableNames.foreach { name =>
+      val want = tbl(name)
+      val got = graft.sources.Sink.jdbcRead(spark, url, name)
+        .select(want.schema.map(f => col(f.name).cast(f.dataType)): _*)
+      assert(sameRows(got, want), name)
     }
     // refresh truncates, not doubles
     DataCoPipeline.runJdbc(spark, csvPath, url, Some(routesPath), factPartitions = 2)
     assert(graft.sources.Sink.jdbcRead(spark, url, "fact_order_items").count() == 6)
+  }
+
+  test("two runs into two directories write identical tables") {
+    val again = Files.createTempDirectory("graft-dataco-wh2").toFile
+    again.deleteOnExit()
+    DataCoPipeline.run(spark, csvPath, again.getAbsolutePath, Some(routesPath))
+    tableNames.foreach { name =>
+      assert(sameRows(spark.read.parquet(s"${again.getAbsolutePath}/$name"), tbl(name)), name)
+    }
+  }
+
+  test("every job of a run carries its table's DataCoPipeline.run description") {
+    val dir = Files.createTempDirectory("graft-dataco-wh3").toFile
+    dir.deleteOnExit()
+    val group = s"DataCoPipelineSpec-${System.nanoTime()}"
+    val sc = spark.sparkContext
+    val jobs = TestJobs.jobPropertiesDuring(spark) {
+      sc.setJobGroup(group, null)
+      try DataCoPipeline.run(spark, csvPath, dir.getAbsolutePath, Some(routesPath))
+      finally sc.clearJobGroup()
+    }.filter(p => p.getProperty("spark.jobGroup.id") == group)
+    val descriptions = jobs.map(p => Option(p.getProperty("spark.job.description")))
+    assert(jobs.nonEmpty)
+    assert(descriptions.forall(_.exists(_.startsWith("DataCoPipeline.run/"))), descriptions)
+    assert(descriptions.flatten.map(_.stripPrefix("DataCoPipeline.run/")).toSet ==
+      tableNames.toSet)
   }
 }

@@ -54,27 +54,19 @@ class PlanSpec extends AnyFunSuite {
   // sort-merge beyond it, instead of OOMing at 100 TB. These counts pin
   // that policy per fact build.
   test("fact builds: broadcast hints only on bounded-cardinality dims") {
-    // Two kinds of hints are allowed: (a) dim-level hints on
-    // enumeration-bounded dims (the policy above), and (b) the
-    // SurrogateKeys.dense offset tables — O(#partitions) rows by
-    // construction (one row per shuffle partition of the sorted dim),
-    // recognizable by their generated `__<key>_off` column. Anything
-    // else (customer/part/supplier…) must stay unhinted so AQE can
-    // fall back to sort-merge beyond the broadcast threshold.
-    def hints(name: String): (Int, Int) = {
+    // Every hint in a fact build must be a dim-level hint on an
+    // enumeration-bounded dim (the policy above); SurrogateKeys.dense
+    // adds none. Anything else (customer/part/supplier…) must stay
+    // unhinted so AQE can fall back to sort-merge beyond the broadcast
+    // threshold.
+    def hints(name: String): Int = {
       val df = SparkEntry.queries(name)(spark, SharedSpark.sf0001)
-      val all = df.queryExecution.analyzed.collect {
+      df.queryExecution.analyzed.collect {
         case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
-      }
-      val (offsets, dims) = all.partition(_.output.exists(a =>
-        a.name.startsWith("__") && a.name.endsWith("_off")))
-      (dims.size, offsets.size)
+      }.size
     }
-    val (q20Dims, q20Offs) = hints("q20_fact_star")
-    assert(q20Dims == 1, "q20: junk dim only")     // not customer
-    assert(q20Offs == 2, "q20: one offsets hint per dense() dim build")
-    val (q05Dims, _) = hints("q05_fact_assembly")
-    assert(q05Dims == 0, "q05: AQE decides all") // not part/supplier/customer
+    assert(hints("q20_fact_star") == 1, "q20: junk dim only") // not customer
+    assert(hints("q05_fact_assembly") == 0, "q05: AQE decides all") // not part/supplier/customer
   }
 
   test("q10: bucket predicate is scan-level — no hash shuffle") {

@@ -71,6 +71,23 @@ class SurrogateKeysSpec extends AnyFunSuite {
     }
   }
 
+  test("a persisted result keeps the window form's dense 1..n keys") {
+    // a cached plan is optimized apart from its readers, and AQE may
+    // split its shuffles differently from an uncached run
+    val df = spark.range(200).select((col("id") % 11).as("k"), col("id"))
+      .groupBy("k").agg(max("id").as("m"))
+    val windowed = df
+      .select(row_number().over(Window.orderBy(col("k"))).cast(LongType).as("sk"), col("k"))
+      .collect().map(r => r.getLong(1) -> r.getLong(0)).toMap
+    val cached = SurrogateKeys.dense(df, "sk", Seq(col("k"))).persist()
+    try {
+      assert(cached.count() == 11)
+      val dense = cached.collect().map(r => r.getAs[Long]("k") -> r.getAs[Long]("sk")).toMap
+      assert(dense == windowed)
+      assert(dense.values.toSeq.sorted == (1L to 11L))
+    } finally cached.unpersist()
+  }
+
   test("multi-column order and descending order are honored") {
     import spark.implicits._
     val df = Seq(("b", 2, "x"), ("a", 9, "y"), ("a", 1, "z"), ("c", 0, "w"))

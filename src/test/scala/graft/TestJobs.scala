@@ -7,12 +7,17 @@ import org.apache.spark.sql.SparkSession
   * (or dirty partitions) the layout has — the scaling property that
   * separates "one distributed pass" from "a driver loop of jobs". */
 object TestJobs {
-  def jobsDuring(spark: SparkSession)(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger()
+  def jobsDuring(spark: SparkSession)(body: => Unit): Int =
+    jobPropertiesDuring(spark)(body).size
+
+  /** The local properties (description, group, …) of every job started
+    * while `body` ran, in start order. */
+  def jobPropertiesDuring(spark: SparkSession)(body: => Unit): Seq[java.util.Properties] = {
+    val props = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet(): Unit
+        props.add(Option(j.properties).getOrElse(new java.util.Properties)): Unit
     }
     spark.sparkContext.addSparkListener(l)
     try {
@@ -21,11 +26,11 @@ object TestJobs {
       var prev = -1
       var stable = 0
       while (stable < 3) {
-        val c = n.get()
+        val c = props.size
         if (c == prev) stable += 1 else { stable = 0; prev = c }
         Thread.sleep(100)
       }
-      n.get()
+      props.toArray(Array.empty[java.util.Properties]).toSeq
     } finally spark.sparkContext.removeSparkListener(l)
   }
 }
