@@ -45,8 +45,6 @@ object Parity {
     * aggregate totals (~9·10^11 at scale 4). */
   private def dsumProd(a: Column, b: Column): Column =
     sum(dec(a) * dec(b)).cast(DecimalType(28, 4)).cast(DoubleType)
-  private def dsumProdSql(a: String, b: String): String =
-    s"CAST(CAST(SUM(CAST($a AS DECIMAL(18,4)) * CAST($b AS DECIMAL(18,4))) AS DECIMAL(28,4)) AS DOUBLE)"
 
   private def t(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.load(s, dir, n)

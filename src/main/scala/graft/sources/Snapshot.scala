@@ -62,6 +62,12 @@ final class SnapshotConflictException(msg: String)
   * [[writeVectors]] packs and moves a deletion vector;
   * [[rewriteSurvivors]] re-clusters and rewrites a maintenance read's
   * survivors; [[commit]] swings the pointer.
+  *
+  * Every read is likewise built from three private steps:
+  * [[vectorsOf]] reads a version's position vectors under the declared
+  * pair schema ([[PairSchema]]); [[keyedScan]] scans a file list per
+  * partition spec with its (file, pos) keys, and row ids on lineage;
+  * [[diffSides]] builds both change diffs' plus and minus candidates.
   */
 object Snapshot {
 
@@ -632,20 +638,13 @@ object Snapshot {
     }
   }
 
-  /** The recorded schema shaped for [[Sink.readForMaintenance]]: data
-    * columns only (the maintenance read adds the partition column back
-    * as a raw STRING dir value). */
-  private def maintSchema(meta: Map[String, String], partitionCol: String)
-      : Option[org.apache.spark.sql.types.StructType] =
-    recordedSchema(meta).map(s => org.apache.spark.sql.types.StructType(
-      s.fields.filterNot(_.name == partitionCol)))
-
-  /** [[maintSchema]] widened to the PHYSICAL name set ([[physReadSchema]]
-    * minus the partition column) — a maintenance rewrite over
-    * pre-rename files must read their retired columns to fold them, so
-    * the rewritten files carry the CURRENT names (rename converges
-    * physically through normal compaction, never via a table-width
-    * rewrite job). */
+  /** The schema shaped for [[Sink.readForMaintenance]]: the PHYSICAL
+    * name set ([[physReadSchema]]) minus the partition column, which
+    * the maintenance read adds back as a raw STRING dir value. Physical,
+    * not recorded: a maintenance rewrite over pre-rename files must read
+    * their retired columns to fold them, so the rewritten files carry
+    * the CURRENT names (rename converges physically through normal
+    * compaction, never via a table-width rewrite job). */
   private def maintPhysSchema(meta: Map[String, String], partitionCol: String)
       : Option[org.apache.spark.sql.types.StructType] =
     physReadSchema(meta).map(s => org.apache.spark.sql.types.StructType(
@@ -1318,14 +1317,10 @@ object Snapshot {
   private def specKeyOf(f: String): String = f.split("/")(0).split("=")(0)
 
   /** Read a consistent file set under `meta`'s recorded schema with the
-    * version's deletion vectors subtracted — grouping the files BY
-    * PARTITION SPEC first: a single-spec layout takes the untouched
-    * one-scan plan; a mid-evolution layout scans each generation
-    * separately (Spark refuses mixed partition keys in one scan, and
-    * per-generation scans keep each one's directory pruning) and unions
-    * them, every generation under the SAME recorded schema so the other
-    * generation's partition column reads NULL exactly like any
-    * evolved-in column. */
+    * version's deletes subtracted. A single-spec file set with no
+    * deletes takes the untouched one-scan plan; anything else reads
+    * through [[keyedScan]] (per-generation scans, (file, pos) keys) and
+    * subtracts position vectors and equality deletes on those keys. */
   private def readDataAt(spark: SparkSession, qualified: String,
       meta: Map[String, String], fileLines: Seq[String],
       deleteLines: Seq[String]): DataFrame = {
@@ -1334,36 +1329,16 @@ object Snapshot {
     // everything (a contradictory predicate): the declared schema with
     // zero rows, never a zero-path parquet read
     if (files.isEmpty) return emptyTyped(spark, qualified, meta)
-    val dvs = deleteLines.map(pathOf)
-    val eqs = eqDeletesOf(deleteLines)
-    val reader = spark.read.option("basePath", qualified)
-    // PHYSICAL schema: recorded plus retired names, so pre-rename files
-    // surface their old column; the final [[resolveRenames]] folds them
-    // (identity on a never-renamed table)
-    def scan(fs: Seq[String]): DataFrame =
-      physReadSchema(meta).fold(reader)(reader.schema)
-        .parquet(fs.map(f => s"$qualified/$f"): _*)
-    val bySpec = files.groupBy(specKeyOf)
-    if (bySpec.size <= 1 && eqs.isEmpty)
-      resolveRenames(applyDeletes(spark, qualified, scan(files), dvs), meta)
-    else {
-      if (bySpec.size > 1) require(recordedSchema(meta).nonEmpty,
-        "a mid-evolution layout needs a recorded schema — the partition " +
-        "columns of BOTH generations must be declared, not inferred")
-      // (file, pos) keys materialize on each scan BEFORE the union —
-      // the DV subtract cannot derive _metadata through a union, and
-      // the equality-delete subtract needs the file key for its
-      // add-version lookup
-      val data = bySpec.toSeq.sortBy(_._1)
-        .map { case (_, fsOfSpec) => withFilePos(scan(fsOfSpec), qualified) }
-        .reduce(_.unionByName(_))
-      resolveRenames(
-        applyEqKeyed(spark, qualified,
-            applyDeletesKeyed(spark, qualified, data, dvs),
-            fileLines, eqs, "__lin_file")
-          .drop("__lin_file", "__lin_pos"),
+    if (deleteLines.isEmpty && files.map(specKeyOf).distinct.size == 1)
+      resolveRenames(scanFiles(spark, qualified, physReadSchema(meta), files),
         meta)
-    }
+    else
+      applyEqKeyed(spark, qualified,
+          applyDeletesKeyed(spark, qualified,
+            keyedScan(spark, qualified, meta, files, None),
+            deleteLines.map(pathOf)),
+          fileLines, eqDeletesOf(deleteLines))
+        .drop("__dv_file", "__dv_pos")
   }
 
   /** A PINNED snapshot version — the time-travel read; valid until
@@ -1435,29 +1410,28 @@ object Snapshot {
       col("_metadata.file_path"), lit(s"$qualified/"), lit("")).as("dv_file"),
     col("_metadata.row_index").as("dv_pos"))
 
-  /** Subtract outstanding deletion vectors from a data read — the
-    * merge-on-read half of [[deleteWhereMoR]]'s contract. No vectors →
-    * the untouched fast path (zero plan change for the common case).
-    * With vectors: one anti-join on (file, position); the DV side is
-    * O(deleted rows) — forget-user sized, not table sized — and carries
-    * no join hint, so AQE broadcasts it while it fits and degrades to
-    * shuffle instead of OOMing when someone deletes half the corpus. */
-  private def applyDeletes(spark: SparkSession, qualified: String,
-      data: DataFrame, dvsIn: Seq[String]): DataFrame = {
-    val dvs = dvsIn.filterNot(isEqFile) // position vectors only
-    if (dvs.isEmpty) data
-    else {
-      val dv = spark.read.parquet(dvs.map(f => s"$qualified/$f"): _*)
-        .select(col("dv_file"), col("dv_pos"))
-      val keyCols = dvKeyCols(qualified)
-      val keyed = data.withColumn("__dv_file", keyCols(0))
-        .withColumn("__dv_pos", keyCols(1))
-      keyed.join(dv,
-          keyed("__dv_file") === dv("dv_file") &&
-            keyed("__dv_pos") === dv("dv_pos"),
-          "left_anti")
-        .drop("__dv_file", "__dv_pos")
-    }
+  /** The declared schema of every (data-file, row-position) pair file:
+    * deletion vectors and the match sets writers stage before packing
+    * them. Reads name it, because footer inference costs one Spark job
+    * per read for a schema that never varies. */
+  private val PairSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("dv_file",
+      org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("dv_pos", LongType)))
+
+  private def readPairFiles(spark: SparkSession,
+      paths: Seq[String]): DataFrame =
+    spark.read.schema(PairSchema).parquet(paths: _*)
+
+  /** The one vector reader: the POSITION vectors among `deletes` (root-
+    * relative delete entries; `eq-` sidecars carry key columns and are
+    * skipped) as one (dv_file, dv_pos) frame, or None when there are
+    * none. */
+  private def vectorsOf(spark: SparkSession, qualified: String,
+      deletes: Seq[String]): Option[DataFrame] = {
+    val dvs = deletes.filterNot(isEqFile)
+    if (dvs.isEmpty) None
+    else Some(readPairFiles(spark, dvs.map(f => s"$qualified/$f")))
   }
 
   // ----- ROW LINEAGE ---------------------------------------------------
@@ -1506,60 +1480,80 @@ object Snapshot {
     * re-deriving them after a join has hidden the scan. */
   private def withFilePos(df: DataFrame, qualified: String): DataFrame = {
     val k = dvKeyCols(qualified)
-    df.withColumn("__lin_file", k(0)).withColumn("__lin_pos", k(1))
+    df.withColumn("__dv_file", k(0)).withColumn("__dv_pos", k(1))
+  }
+
+  /** `files` read with the layout root as basePath, under `schema` when
+    * the layout records one. */
+  private def scanFiles(spark: SparkSession, qualified: String,
+      schema: Option[org.apache.spark.sql.types.StructType],
+      files: Seq[String]): DataFrame = {
+    val reader = spark.read.option("basePath", qualified)
+    schema.fold(reader)(reader.schema)
+      .parquet(files.map(f => s"$qualified/$f"): _*)
   }
 
   /** Fill `_row_id` on a keyed scan: physical ids win; a NULL physical
     * id takes the file's allocated base + row position (unique because
     * the base range covers the file's full row count). */
   private def attachRowIdsKeyed(spark: SparkSession, keyed: DataFrame,
-      bases: Map[String, Long], fileCol: String = "__lin_file",
-      posCol: String = "__lin_pos"): DataFrame =
+      bases: Map[String, Long]): DataFrame =
     if (bases.isEmpty) keyed
     else {
       import spark.implicits._
       val baseDf = org.apache.spark.sql.functions.broadcast(
         bases.toSeq.toDF("__lin_bfile", "__lin_base"))
-      keyed.join(baseDf, col(fileCol) === col("__lin_bfile"), "left")
+      keyed.join(baseDf, col("__dv_file") === col("__lin_bfile"), "left")
         .withColumn(RowIdCol,
-          coalesce(col(RowIdCol), col("__lin_base") + col(posCol)))
+          coalesce(col(RowIdCol), col("__lin_base") + col("__dv_pos")))
         .drop("__lin_bfile", "__lin_base")
     }
 
-  /** The lineage scan of `files`: recorded schema + the id column,
-    * (file, pos) keys materialized, generations scanned separately and
-    * unioned on a mid-evolution layout ([[readDataAt]]'s rule), retired
-    * names folded into the columns they now serve
-    * ([[resolveRenames]]). */
-  private def lineageKeyedScan(spark: SparkSession, qualified: String,
-      meta: Map[String, String], files: Seq[String]): DataFrame = {
-    val phys = physReadSchema(meta).getOrElse(
-      throw new IllegalStateException(
-        s"lineage scan under $qualified needs a recorded schema"))
-    resolveRenames(
-      files.groupBy(specKeyOf).toSeq.sortBy(_._1).map { case (_, fs) =>
-        withFilePos(spark.read.option("basePath", qualified)
-          .schema(lineageReadSchema(phys))
-          .parquet(fs.map(f => s"$qualified/$f"): _*), qualified)
-      }.reduce(_.unionByName(_)), meta)
+  /** The one KEYED scan of `files` at `meta`. Files group BY PARTITION
+    * SPEC: a mid-evolution layout scans each generation separately
+    * (Spark refuses mixed partition keys in one scan, and per-generation
+    * scans keep each one's directory pruning), every generation under
+    * the same PHYSICAL schema — recorded plus retired names, plus
+    * [[RowIdCol]] when `bases` asks for lineage — so the other
+    * generation's partition column reads NULL like any evolved-in
+    * column. The (file, pos) keys materialize on each scan BEFORE the
+    * union (no join can derive `_metadata` through it), the generations
+    * union, retired names fold ([[resolveRenames]]), and on lineage each
+    * row's id fills from the caller's `bases`. */
+  private def keyedScan(spark: SparkSession, qualified: String,
+      meta: Map[String, String], files: Seq[String],
+      bases: Option[Map[String, Long]]): DataFrame = {
+    val bySpec = files.groupBy(specKeyOf).toSeq.sortBy(_._1)
+    val schema = bases match {
+      case Some(_) => Some(lineageReadSchema(physReadSchema(meta).getOrElse(
+        throw new IllegalStateException(
+          s"lineage scan under $qualified needs a recorded schema"))))
+      case None =>
+        require(bySpec.size <= 1 || recordedSchema(meta).nonEmpty,
+          "a read across a partition-spec evolution needs a recorded " +
+          "schema — the partition columns of BOTH generations must be " +
+          "declared, not inferred")
+        physReadSchema(meta)
+    }
+    val keyed = resolveRenames(bySpec.map { case (_, fs) =>
+      withFilePos(scanFiles(spark, qualified, schema, fs), qualified)
+    }.reduce(_.unionByName(_)), meta)
+    bases.fold(keyed)(attachRowIdsKeyed(spark, keyed, _))
   }
 
-  /** [[applyDeletes]] for a scan that already carries the (file, pos)
-    * key columns ([[withFilePos]]) — the keys survive the id-attach
-    * join, where `_metadata` would not. */
+  /** Subtract the position vectors among `deletes` from a keyed scan —
+    * the merge-on-read half of [[deleteWhereMoR]]'s contract: one
+    * anti-join on (file, position). The vector side is O(deleted rows)
+    * and carries no join hint, so AQE broadcasts it while it fits and
+    * degrades to shuffle instead of OOMing when someone deletes half the
+    * corpus. No vectors → the scan unchanged. */
   private def applyDeletesKeyed(spark: SparkSession, qualified: String,
-      keyed: DataFrame, dvsIn: Seq[String]): DataFrame = {
-    val dvs = dvsIn.filterNot(isEqFile) // position vectors only
-    if (dvs.isEmpty) keyed
-    else {
-      val dv = spark.read.parquet(dvs.map(f => s"$qualified/$f"): _*)
-        .select(col("dv_file"), col("dv_pos"))
+      keyed: DataFrame, deletes: Seq[String]): DataFrame =
+    vectorsOf(spark, qualified, deletes).fold(keyed)(dv =>
       keyed.join(dv,
-          keyed("__lin_file") === dv("dv_file") &&
-            keyed("__lin_pos") === dv("dv_pos"),
-          "left_anti")
-    }
-  }
+        keyed("__dv_file") === dv("dv_file") &&
+          keyed("__dv_pos") === dv("dv_pos"),
+        "left_anti"))
 
   // ----- EQUALITY DELETES ----------------------------------------------
   // The O(keys) delete tier (Iceberg v2 equality deletes): where a
@@ -1591,30 +1585,23 @@ object Snapshot {
     * those below the newest delta'd eq version (an entry present at
     * both endpoints hits identically; its rows cancel unread). Returns
     * (un-hidden candidates, newly-hidden candidates) in the caller's
-    * finished shape. Parameterized on the tier's own scan/apply/finish
-    * closures so the reach rule lives ONCE. */
-  private def eqDeltaRetained(
+    * finished shape ([[diffSides]]' `readKeyed`/`finish`/`empty`). */
+  private def eqDeltaRetained(spark: SparkSession, qualified: String,
       readKeyed: Seq[String] => DataFrame,
-      applyDv: (DataFrame, Seq[String]) => DataFrame,
-      applyEq: (DataFrame, Seq[EqDelete]) => DataFrame,
-      readPairs: Set[String] => DataFrame,
       finish: DataFrame => DataFrame,
       empty: => DataFrame,
       retained: Set[String], allLines: Seq[String],
-      dvFrom: Set[String], dvTo: Set[String],
+      delFrom: Set[String], delTo: Set[String],
       eqFrom: Seq[EqDelete], eqTo: Seq[EqDelete])
       : (DataFrame, DataFrame) = {
     val eqToFiles = eqTo.map(_.file).toSet
     val eqFromFiles = eqFrom.map(_.file).toSet
     val maxDeltaD = (eqTo.filterNot(e => eqFromFiles(e.file)) ++
       eqFrom.filterNot(e => eqToFiles(e.file))).map(_.d).max
-    val dvNew = dvTo -- dvFrom
-    val dvGone = dvFrom -- dvTo
-    val dvRefFiles = (dvNew ++ dvGone).toSeq.sorted match {
-      case Nil => Set.empty[String]
-      case fs => readPairs(fs.toSet).select(col("dv_file")).distinct()
-        .collect().map(_.getString(0)).toSet
-    }
+    val dvRefFiles = vectorsOf(spark, qualified,
+        ((delTo -- delFrom) ++ (delFrom -- delTo)).toSeq.sorted)
+      .fold(Set.empty[String])(_.select(col("dv_file")).distinct()
+        .collect().map(_.getString(0)).toSet)
     val addVOf = allLines.filterNot(isDeleteEntry)
       .map(l => pathOf(l) -> addVersionOf(l)).toMap
     val cand = retained.filter(f =>
@@ -1623,19 +1610,21 @@ object Snapshot {
     if (cand.isEmpty) (empty, empty)
     else {
       val scan = readKeyed(cand)
-      def visible(dvs: Set[String], eqs: Seq[EqDelete]): DataFrame =
-        applyEq(applyDv(scan, dvs.toSeq.sorted), eqs)
-      val visF = visible(dvFrom, eqFrom)
-      val visT = visible(dvTo, eqTo)
+      def visible(dels: Set[String], eqs: Seq[EqDelete]): DataFrame =
+        applyEqKeyed(spark, qualified,
+          applyDeletesKeyed(spark, qualified, scan, dels.toSeq.sorted),
+          allLines, eqs)
+      val visF = visible(delFrom, eqFrom)
+      val visT = visible(delTo, eqTo)
       def keysOf(df: DataFrame): DataFrame =
-        df.select(col("__lin_file").as("dv_file"),
-          col("__lin_pos").as("dv_pos"))
+        df.select(col("__dv_file").as("dv_file"),
+          col("__dv_pos").as("dv_pos"))
       val un = finish(visT.join(keysOf(visF),
-        visT("__lin_file") === col("dv_file") &&
-          visT("__lin_pos") === col("dv_pos"), "left_anti"))
+        visT("__dv_file") === col("dv_file") &&
+          visT("__dv_pos") === col("dv_pos"), "left_anti"))
       val newly = finish(visF.join(keysOf(visT),
-        visF("__lin_file") === col("dv_file") &&
-          visF("__lin_pos") === col("dv_pos"), "left_anti"))
+        visF("__dv_file") === col("dv_file") &&
+          visF("__dv_pos") === col("dv_pos"), "left_anti"))
       (un, newly)
     }
   }
@@ -1651,8 +1640,9 @@ object Snapshot {
       fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
       keys: DataFrame): Seq[String] = {
     val stg = stagingDir(root, "eqdel")
-    keys.distinct().write.parquet(stg.toString)
-    val staged = spark.read.parquet(stg.toString)
+    val distinctKeys = keys.distinct()
+    distinctKeys.write.parquet(stg.toString)
+    val staged = spark.read.schema(distinctKeys.schema).parquet(stg.toString)
     // ONE pass over the staged keys answers both boundary questions —
     // which parts hold rows, and whether any key is NULL (a separate
     // NULL-check job would tax every upsert micro-batch a full job)
@@ -1721,16 +1711,16 @@ object Snapshot {
       .agg(fmax(col("__eq_sd")).as("__eq_d"))
   }
 
-  /** Subtract equality deletes from a scan carrying a root-relative
-    * file column (`fileCol`): a row drops iff a delete with version
-    * STRICTLY above its file's add-version names its key. NULL key
+  /** Subtract equality deletes from a keyed scan ([[keyedScan]]): a
+    * row drops iff a delete with version STRICTLY above its file's
+    * add-version names its key. NULL key
     * values never match (SQL equality — a NULL-keyed row is
     * undeletable by key, exactly like `DELETE WHERE k = …`). The
     * delete side is O(keys) and unhinted — AQE broadcasts while it
     * fits and degrades to shuffle instead of OOMing. */
   private def applyEqKeyed(spark: SparkSession, qualified: String,
-      data: DataFrame, dataLines: Seq[String], eqs: Seq[EqDelete],
-      fileCol: String): DataFrame =
+      data: DataFrame, dataLines: Seq[String],
+      eqs: Seq[EqDelete]): DataFrame =
     if (eqs.isEmpty) data
     else {
       import spark.implicits._
@@ -1741,7 +1731,8 @@ object Snapshot {
         dataLines.filterNot(isDeleteEntry)
           .map(l => (pathOf(l), addVersionOf(l)))
           .toDF("__eq_file", "__eq_addv"))
-      val withV = data.join(addv, data(fileCol) === addv("__eq_file"), "left")
+      val withV = data
+        .join(addv, data("__dv_file") === addv("__eq_file"), "left")
         .withColumn("__eq_v", coalesce(col("__eq_addv"), lit(0L)))
         .drop("__eq_file", "__eq_addv")
       val eqk = eqKeyFrame(spark, qualified, eqs)
@@ -1791,20 +1782,15 @@ object Snapshot {
       return spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](),
         lineageReadSchema(recorded))
-    val withIds = attachRowIdsKeyed(spark,
-      lineageKeyedScan(spark, qualified, meta, fileLines.map(pathOf)),
-      basesOf(lines))
+    val deleteLines = lines.filter(isDeleteEntry)
     applyEqKeyed(spark, qualified,
-        applyDeletesKeyed(spark, qualified, withIds,
-          lines.filter(isDeleteEntry).map(pathOf)),
-        fileLines, eqDeletesOf(lines.filter(isDeleteEntry)), "__lin_file")
-      .drop("__lin_file", "__lin_pos")
+        applyDeletesKeyed(spark, qualified,
+          keyedScan(spark, qualified, meta, fileLines.map(pathOf),
+            Some(basesOf(lines))),
+          deleteLines.map(pathOf)),
+        fileLines, eqDeletesOf(deleteLines))
+      .drop("__dv_file", "__dv_pos")
   }
-
-  /** The CURRENT snapshot with row lineage — [[readVersionLineage]] at
-    * the current version. */
-  def readSnapshotLineage(spark: SparkSession, path: String): DataFrame =
-    readVersionLineage(spark, path, currentFiles(spark, path)._1)
 
   /** The layout's declared stats columns in declaration order — the
     * `stats` inherited-meta key holds a comma-separated LIST
@@ -2162,12 +2148,6 @@ object Snapshot {
       "resurrect merge-on-read deleted rows and orphan the vectors' " +
       "positions")
   }
-
-  /** The layout's FIRST declared file-statistics column, if any — an
-    * [[InheritedMeta]] key, so ONE current-manifest read answers it at
-    * any history depth. Full list: [[statsColumns]]. */
-  def statsColumn(spark: SparkSession, path: String): Option[String] =
-    statsColumns(spark, path).headOption
 
   /** Turn freshly written data files into manifest entry LINES, attaching
     * per-file `min\tmax` bounds for EACH declared stats column (comma-
@@ -2651,7 +2631,7 @@ object Snapshot {
       qualified: String, relFiles: Seq[String], partitionCol: String,
       vMeta: Map[String, String], vLines: Seq[String]): DataFrame =
     readForMaintenanceLineageKeyed(spark, qualified, relFiles, partitionCol,
-      vMeta, vLines).drop("__lin_file", "__lin_pos")
+      vMeta, vLines).drop("__dv_file", "__dv_pos")
 
   /** The MORTON (Z-order) clustering key over `zCols`: each column
     * min-max-scales to `bits` bits against the rewrite set's own range
@@ -2906,7 +2886,7 @@ object Snapshot {
   /** MERGE-ON-READ row deletion: where [[deleteWhere]] REWRITES every
     * dirty partition (copy-on-write), this commits a DELETION VECTOR —
     * the matched rows' (file, position) pairs as a parquet sidecar under
-    * `_deletes/` — and readers subtract it ([[applyDeletes]]). Write
+    * `_deletes/` — and readers subtract it ([[applyDeletesKeyed]]). Write
     * cost is O(matched rows), not O(dirty partitions): at 100 TB a
     * forget-user request whose rows touch every date partition commits
     * in one small write instead of rewriting the table's width, which
@@ -2932,31 +2912,22 @@ object Snapshot {
     requireNoEqDeletes(h.lines, path, "deleteWhereMoR")
     requireUniformSpec(h.files, partitionCol, "deleteWhereMoR")
     val del = coalesce(predicate, lit(false))
-    val keyCols = dvKeyCols(qualified)
     // recorded schema: the predicate may reference an evolved column,
     // which must read NULL in pre-evolution files exactly as it does
     // for the snapshot reader — and a RENAMED column must fold from its
     // retired physical name, or the predicate would silently miss every
-    // pre-rename row. The (file, pos) keys materialize BEFORE the fold
-    // (its barrier hides `_metadata` — resolveRenames scaladoc).
-    val reader = spark.read.option("basePath", qualified)
-    val markedAll = resolveRenames(
-        physReadSchema(h.meta).fold(reader)(reader.schema)
-          .parquet(h.files.map(f => s"$qualified/$f"): _*)
-          .select(col("*"), keyCols(0), keyCols(1)), h.meta)
+    // pre-rename row (the keyed scan does both)
+    val markedAll = keyedScan(spark, qualified, h.meta, h.files, None)
       .where(del)
-      .select(col("dv_file"), col("dv_pos"))
-    val marked =
-      if (h.deletes.isEmpty) markedAll
-      else markedAll.join(
-        spark.read.parquet(h.deletes.map(f => s"$qualified/$f"): _*),
-        Seq("dv_file", "dv_pos"), "left_anti")
+      .select(col("__dv_file").as("dv_file"), col("__dv_pos").as("dv_pos"))
+    val marked = vectorsOf(spark, qualified, h.deletes).fold(markedAll)(dv =>
+      markedAll.join(dv, Seq("dv_file", "dv_pos"), "left_anti"))
     // stage the matches with the SCAN's parallelism — no single task
     // ever funnels the match set — then pack them into vector files
     val stg = stagingDir(h.root, "mor")
     val raw = new org.apache.hadoop.fs.Path(stg, "raw")
     marked.write.parquet(raw.toString)
-    val staged = spark.read.parquet(raw.toString)
+    val staged = readPairFiles(spark, Seq(raw.toString))
     // footer-only count of what actually landed
     val n = staged.count()
     if (n == 0L) { h.fs.delete(stg, true): Unit; return (h.v, 0L) }
@@ -3025,41 +2996,33 @@ object Snapshot {
     // layouts read `_row_id` too — an UPDATE is the same row re-imaged,
     // so the new image keeps the id (what lets changeDiffLineage pair
     // pre/post).
-    val reader = spark.read.option("basePath", h.qualified)
-    val readSchema = physReadSchema(h.meta)
-      .map(s => if (lineage) lineageReadSchema(s) else s)
     if (lineage) requireLineageEntries(h.lines, path)
-    // (file, pos) keys materialize BEFORE the rename fold (its barrier
-    // hides `_metadata` — resolveRenames scaladoc)
-    val data = resolveRenames(withFilePos(
-      readSchema.fold(reader)(reader.schema)
-        .parquet(h.files.map(f => s"${h.qualified}/$f"): _*),
-      h.qualified), h.meta)
+    val data = keyedScan(spark, h.qualified, h.meta, h.files,
+      if (lineage) Some(basesOf(h.lines)) else None)
     set.keys.foreach(k => require(data.columns.contains(k),
       s"updateWhere SET references unknown column '$k' " +
-      s"(table has: ${data.columns.filterNot(_.startsWith("__lin_")).mkString(", ")})"))
+      s"(table has: ${data.columns.filterNot(_.startsWith("__dv_")).mkString(", ")})"))
     // match against LIVE rows only: a row an outstanding vector already
     // hides is deleted — the update must neither re-image nor resurrect it
-    val live = applyDeletesKeyed(spark, h.qualified,
-      if (lineage) attachRowIdsKeyed(spark, data, basesOf(h.lines)) else data,
-      h.deletes)
+    val hits = applyDeletesKeyed(spark, h.qualified, data, h.deletes)
+      .where(pred)
     // ONE scan of the table stages the matches (old identity + full
     // image); vector and new images derive from the staged copy
     val stg = stagingDir(h.root, "update")
     val matchedDir = new org.apache.hadoop.fs.Path(stg, "matched")
-    live.where(pred).write.parquet(matchedDir.toString)
-    val matched = spark.read.parquet(matchedDir.toString)
+    hits.write.parquet(matchedDir.toString)
+    val matched = spark.read.schema(hits.schema).parquet(matchedDir.toString)
     val n = matched.count() // footer-only
     if (n == 0L) { h.fs.delete(stg, true): Unit; return (h.v, 0L) }
     // the vector hiding the old images — deleteWhereMoR's sidecar shape
     val (dvMoved, referenced) = writeVectors(h, stg,
-      matched.select(col("__lin_file").as("dv_file"),
-        col("__lin_pos").as("dv_pos")), n, vectorRowCap)
+      matched.select(col("__dv_file").as("dv_file"),
+        col("__dv_pos").as("dv_pos")), n, vectorRowCap)
     // the new images: SET expressions over the old image, clustered one
     // file per touched partition
     val moved = stagePartitioned(h.fs, h.root, "update",
       set.foldLeft(matched) { case (df, (k, e)) => df.withColumn(k, e) }
-        .drop("__lin_file", "__lin_pos")
+        .drop("__dv_file", "__dv_pos")
         .repartition(col(partitionCol)), partitionCol)
     h.fs.delete(stg, true): Unit
     val nv = commit(h.fs, h.root, Some(h.v), Set.empty,
@@ -3096,7 +3059,8 @@ object Snapshot {
     if (dvs.isEmpty) return Seq.empty
     requireNoEqDeletes(h.lines, path, "materializeDeletes")
     requireUniformSpec(h.files, partitionCol, "materializeDeletes")
-    val dvDf = spark.read.parquet(dvs.map(f => s"${h.qualified}/$f"): _*)
+    // every delete entry is a position vector here (no equality tier)
+    val dvDf = vectorsOf(spark, h.qualified, dvs).get
     // O(touched files) driver state — the vectors' reference set
     val perFile = dvDf.groupBy(col("dv_file")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
@@ -3116,10 +3080,10 @@ object Snapshot {
       val keyed = readForMaintenanceLineageKeyed(spark, h.qualified,
         affected.toSeq, partitionCol, h.meta, h.lines)
       keyed.join(dvDf,
-          keyed("__lin_file") === dvDf("dv_file") &&
-            keyed("__lin_pos") === dvDf("dv_pos"),
+          keyed("__dv_file") === dvDf("dv_file") &&
+            keyed("__dv_pos") === dvDf("dv_pos"),
           "left_anti")
-        .drop("__lin_file", "__lin_pos")
+        .drop("__dv_file", "__dv_pos")
     }
     // probe: survivor counts per partition — distinguishes "this
     // partition's touched files emptied out" (legitimate) from "the
@@ -3329,20 +3293,10 @@ object Snapshot {
         Map("op" -> "eq-convert"))
       return (nv, 0L)
     }
-    val recorded = recordedSchema(h.meta)
-    val reader = spark.read.option("basePath", qualified)
-    // no rename fold needed: this scan feeds ONLY the equality keys and
-    // row positions, and equality-delete key columns can never be
-    // renamed ([[evolveRecordedMeta]] refuses — sidecars carry them
-    // physically under the declared names)
-    def scan(fsOfSpec: Seq[String]): DataFrame =
-      recorded.fold(reader)(reader.schema)
-        .parquet(fsOfSpec.map(f => s"$qualified/$f"): _*)
-    val keyed = candLines.map(pathOf).groupBy(specKeyOf).toSeq.sortBy(_._1)
-      .map { case (_, fsOfSpec) => withFilePos(scan(fsOfSpec), qualified) }
-      .reduce(_.unionByName(_))
     // rows already position-hidden need no second position
-    val visible = applyDeletesKeyed(spark, qualified, keyed, h.deletes)
+    val visible = applyDeletesKeyed(spark, qualified,
+      keyedScan(spark, qualified, h.meta, candLines.map(pathOf), None),
+      h.deletes)
     val eqk = eqKeyFrame(spark, qualified, eqs)
     val keyCols = eqKeyColsOf(eqs)
     val addv = org.apache.spark.sql.functions.broadcast {
@@ -3351,17 +3305,17 @@ object Snapshot {
         .toDF("__eq_file", "__eq_addv")
     }
     val withV = visible
-      .join(addv, visible("__lin_file") === addv("__eq_file"), "left")
+      .join(addv, visible("__dv_file") === addv("__eq_file"), "left")
       .withColumn("__eq_v", coalesce(col("__eq_addv"), lit(0L)))
     val marked = withV.join(eqk,
         keyCols.map(c => withV(c) === eqk(c)).reduce(_ && _) &&
           eqk("__eq_d") > withV("__eq_v"),
         "left_semi")
-      .select(col("__lin_file").as("dv_file"), col("__lin_pos").as("dv_pos"))
+      .select(col("__dv_file").as("dv_file"), col("__dv_pos").as("dv_pos"))
     val stg = stagingDir(h.root, "eqconv")
     val raw = new org.apache.hadoop.fs.Path(stg, "raw")
     marked.write.parquet(raw.toString)
-    val staged = spark.read.parquet(raw.toString)
+    val staged = readPairFiles(spark, Seq(raw.toString))
     val n = staged.count()
     val (moved, referenced) =
       if (n == 0L) (Nil, Set.empty[String])
@@ -3729,10 +3683,8 @@ object Snapshot {
       val addedSet = added.toSet
       val subsetLines = linesTo.filter(l => addedSet(pathOf(l)))
       requireLineageEntries(subsetLines, path)
-      attachRowIdsKeyed(spark,
-        lineageKeyedScan(spark, qualified, metaTo, added),
-        basesOf(subsetLines))
-        .drop("__lin_file", "__lin_pos")
+      keyedScan(spark, qualified, metaTo, added, Some(basesOf(subsetLines)))
+        .drop("__dv_file", "__dv_pos")
     }
 
   /** The read half of [[changes]], for callers that already resolved
@@ -3786,124 +3738,23 @@ object Snapshot {
     val qualified = fsOf(spark, root).makeQualified(root).toString
     val (metaTo, linesTo) = stateOf(spark, path, toV)
     val (_, linesFrom) = stateOf(spark, path, fromV)
-    val filesTo = linesTo.filterNot(isDeleteEntry).map(pathOf).toSet
-    val filesFrom = linesFrom.filterNot(isDeleteEntry).map(pathOf).toSet
-    val dvTo = linesTo.filter(isDeleteEntry).map(pathOf)
-      .filterNot(isEqFile).toSet
-    val dvFrom = linesFrom.filter(isDeleteEntry).map(pathOf)
-      .filterNot(isEqFile).toSet
-    val eqTo = eqDeletesOf(linesTo.filter(isDeleteEntry))
-    val eqFrom = eqDeletesOf(linesFrom.filter(isDeleteEntry))
-    // an eq-delete DELTA (a key sidecar landed or retired in the gap)
-    // changes retained files' visibility by KEY, which no pair set
-    // names — that branch trades the O(changed rows) pair fetch for a
-    // scan of the files the delta can reach (see below)
-    val eqDelta = eqTo.map(_.file).toSet != eqFrom.map(_.file).toSet
-    val retained = filesFrom & filesTo
-    // KEYED scans, grouped per partition spec ([[readDataAt]]'s rule):
-    // a diff spanning a spec evolution reads each generation separately
-    // — one mixed basePath scan would throw — and the (file, pos) keys
-    // materialize on the scan so the DV subtract / pair fetch joins
-    // never need `_metadata` after a union
-    def readKeyed(files: Seq[String]): DataFrame = {
-      val bySpec = files.groupBy(specKeyOf)
-      require(bySpec.size <= 1 || recordedSchema(metaTo).nonEmpty,
-        "a diff across a partition-spec evolution needs a recorded schema")
-      val reader = spark.read.option("basePath", qualified)
-      // endpoint schema = TO's (a diff across a rename serves the new
-      // names; removed pre-rename files fold like any other read)
-      resolveRenames(bySpec.toSeq.sortBy(_._1).map { case (_, fs) =>
-        withFilePos(physReadSchema(metaTo).fold(reader)(reader.schema)
-          .parquet(fs.map(f => s"$qualified/$f"): _*), qualified)
-      }.reduce(_.unionByName(_)), metaTo)
-    }
-    // entry lines are immutable once committed, so either endpoint's
-    // line serves the add-version lookup — union covers removed files
-    val allLines = (linesFrom ++ linesTo).distinct
-    def applyEq(df: DataFrame, eqs: Seq[EqDelete]): DataFrame =
-      applyEqKeyed(spark, qualified, df, allLines, eqs, "__lin_file")
-    def finish(df: DataFrame): DataFrame =
-      df.drop("__lin_file", "__lin_pos")
-    def readPairs(dvFiles: Set[String]): DataFrame =
-      spark.read.parquet(dvFiles.toSeq.sorted.map(f => s"$qualified/$f"): _*)
-        .select(col("dv_file"), col("dv_pos"))
+    def finish(df: DataFrame): DataFrame = df.drop("__dv_file", "__dv_pos")
     // schema anchor: toV's files, or fromV's when the gap deleted the
-    // table down to zero entries (the diff is then all deletes). LAZY:
-    // built only when a candidate set is actually empty — never pay an
-    // all-files relation for a placeholder nobody reads.
-    val anchorFiles = if (filesTo.nonEmpty) filesTo else filesFrom
+    // table down to zero entries (the diff is then all deletes); scanned
+    // only if some candidate set is empty
+    val anchorFiles = Seq(linesTo, linesFrom)
+      .map(_.filterNot(isDeleteEntry).map(pathOf)).find(_.nonEmpty)
     require(anchorFiles.nonEmpty,
       s"change diff $fromV -> $toV between two empty snapshots of $path")
-    lazy val empty = finish(readKeyed(anchorFiles.toSeq.sorted)).limit(0)
-    // the rows a pair set names, fetched from RETAINED files only (a
-    // pair on an added/removed file is already covered by the file
-    // diff); O(referenced files) driver list, O(pair rows) join. Rows
-    // the (static) equality tier hides were visible at NEITHER
-    // endpoint — hiding or un-hiding them positionally is not a change.
-    def fetchPairRows(pairs: DataFrame): DataFrame = {
-      val refs = pairs.select(col("dv_file")).distinct().collect()
-        .map(_.getString(0)).filter(retained).toSeq.sorted
-      if (refs.isEmpty) empty
-      else {
-        val keyed = readKeyed(refs)
-        finish(applyEq(keyed.join(pairs,
-          keyed("__lin_file") === pairs("dv_file") &&
-            keyed("__lin_pos") === pairs("dv_pos"), "left_semi"), eqTo))
-      }
-    }
-    val addedFiles = (filesTo -- filesFrom).toSeq.sorted
-    val removedFiles = (filesFrom -- filesTo).toSeq.sorted
-    val dvNew = dvTo -- dvFrom
-    val dvGone = dvFrom -- dvTo
-    val plusNew =
-      if (addedFiles.isEmpty) empty
-      else finish(applyEq(applyDeletesKeyed(spark, qualified,
-        readKeyed(addedFiles), dvTo.toSeq.sorted), eqTo))
-    val minusOld =
-      if (removedFiles.isEmpty) empty
-      else finish(applyEq(applyDeletesKeyed(spark, qualified,
-        readKeyed(removedFiles), dvFrom.toSeq.sorted), eqFrom))
-    val (unHidden, newlyHidden) =
-      if (!eqDelta) {
-        val un =
-          if (dvGone.isEmpty) empty
-          else {
-            val pairs = readPairs(dvGone)
-            // a pair re-covered by a toV vector is still hidden, not a
-            // change
-            fetchPairRows(
-              if (dvTo.isEmpty) pairs
-              else pairs.join(readPairs(dvTo), Seq("dv_file", "dv_pos"),
-                "left_anti"))
-          }
-        val newly =
-          if (dvNew.isEmpty) empty
-          else {
-            val pairs = readPairs(dvNew)
-            // a pair a fromV vector ALREADY covered was not visible at
-            // fromV, so hiding it again is not a change — the symmetric
-            // twin of the unHidden anti-join (a restore dropping vector
-            // A followed by a re-delete writing vector B with the same
-            // pairs must diff to NOTHING, not to spurious deletes)
-            fetchPairRows(
-              if (dvFrom.isEmpty) pairs
-              else pairs.join(readPairs(dvFrom), Seq("dv_file", "dv_pos"),
-                "left_anti"))
-          }
-        (un, newly)
-      } else
-        // retained visibility changed by KEY — the shared eq-delta
-        // recompute, O(reachable files); the tier is transient
-        // (convertEqDeletes) so the reach shrinks to zero after
-        // maintenance
-        eqDeltaRetained(readKeyed,
-          applyDeletesKeyed(spark, qualified, _, _), applyEq, readPairs,
-          finish, empty, retained, allLines, dvFrom, dvTo, eqFrom, eqTo)
-    val dataCols = plusNew.columns.toSeq
-    val weighted = plusNew.unionByName(unHidden)
-      .withColumn("__w", lit(1L))
-      .unionByName(minusOld.unionByName(newlyHidden)
-        .withColumn("__w", lit(-1L)))
+    // endpoint schema = TO's (a diff across a rename serves the new
+    // names; removed pre-rename files fold like any other read)
+    val (plus, minus) = diffSides(spark, qualified, linesFrom, linesTo,
+      keyedScan(spark, qualified, metaTo, _, None), finish,
+      finish(keyedScan(spark, qualified, metaTo, anchorFiles.get.sorted, None))
+        .limit(0))
+    val dataCols = plus.columns.toSeq
+    val weighted = plus.withColumn("__w", lit(1L))
+      .unionByName(minus.withColumn("__w", lit(-1L)))
     import org.apache.spark.sql.functions.{abs, array_repeat, explode}
     weighted.groupBy(dataCols.map(col): _*)
       .agg(sum(col("__w")).as("__net"))
@@ -3913,6 +3764,81 @@ object Snapshot {
       .withColumn("__rep",
         explode(array_repeat(lit(1), abs(col("__net")).cast("int"))))
       .drop("__net", "__rep")
+  }
+
+  /** The one change-diff sides builder both diff tiers share. Between
+    * two versions' entry lines it returns the PLUS side — rows of files
+    * added in the gap, visible at `toV`, and retained rows a vector
+    * delta un-hid — and the MINUS side — rows of removed files, visible
+    * at `fromV`, and retained rows newly hidden. These are candidates:
+    * the caller cancels re-filed rows (bag count, id join). It touches
+    * only
+    *  - files ADDED or REMOVED between the versions,
+    *  - deletion-vector DELTAS on files retained in both (the pairs a
+    *    vector delta names fetch from retained files only; a pair on an
+    *    added/removed file is already covered by the file diff),
+    *  - on an equality-delete delta, the retained files a changed hider
+    *    can reach ([[eqDeltaRetained]]).
+    * Rows the (static) equality tier hides were visible at NEITHER
+    * endpoint, so hiding or un-hiding them positionally is no change.
+    * `readKeyed` is the caller's [[keyedScan]], `finish` shapes each
+    * candidate frame, and `empty` (built at most once) types an empty
+    * candidate set. */
+  private def diffSides(spark: SparkSession, qualified: String,
+      linesFrom: Seq[String], linesTo: Seq[String],
+      readKeyed: Seq[String] => DataFrame, finish: DataFrame => DataFrame,
+      empty: => DataFrame): (DataFrame, DataFrame) = {
+    lazy val none = empty
+    val filesTo = linesTo.filterNot(isDeleteEntry).map(pathOf).toSet
+    val filesFrom = linesFrom.filterNot(isDeleteEntry).map(pathOf).toSet
+    val delTo = linesTo.filter(isDeleteEntry).map(pathOf).toSet
+    val delFrom = linesFrom.filter(isDeleteEntry).map(pathOf).toSet
+    val eqTo = eqDeletesOf(linesTo.filter(isDeleteEntry))
+    val eqFrom = eqDeletesOf(linesFrom.filter(isDeleteEntry))
+    val retained = filesFrom & filesTo
+    // entry lines are immutable once committed, so either endpoint's
+    // line serves the add-version lookup — union covers removed files
+    val allLines = (linesFrom ++ linesTo).distinct
+    def visible(files: Set[String], dels: Set[String],
+        eqs: Seq[EqDelete]): DataFrame =
+      if (files.isEmpty) none
+      else finish(applyEqKeyed(spark, qualified,
+        applyDeletesKeyed(spark, qualified, readKeyed(files.toSeq.sorted),
+          dels.toSeq.sorted), allLines, eqs))
+    // the rows the `changed` vectors name that the `cover` vectors (the
+    // other endpoint's) do not: a pair covered at both ends stayed
+    // hidden, so it is no change — a restore dropping vector A then a
+    // re-delete writing vector B with the same pairs diffs to NOTHING
+    def fetchPairRows(changed: Set[String],
+        cover: Set[String]): DataFrame =
+      vectorsOf(spark, qualified, changed.toSeq.sorted).fold(none) { dv =>
+        val pairs = vectorsOf(spark, qualified, cover.toSeq.sorted)
+          .fold(dv)(c => dv.join(c, Seq("dv_file", "dv_pos"), "left_anti"))
+        val refs = pairs.select(col("dv_file")).distinct().collect()
+          .map(_.getString(0)).filter(retained).toSeq.sorted
+        if (refs.isEmpty) none
+        else {
+          val keyed = readKeyed(refs)
+          finish(applyEqKeyed(spark, qualified, keyed.join(pairs,
+            keyed("__dv_file") === pairs("dv_file") &&
+              keyed("__dv_pos") === pairs("dv_pos"), "left_semi"),
+            allLines, eqTo))
+        }
+      }
+    val (unHidden, newlyHidden) =
+      if (eqTo.map(_.file).toSet == eqFrom.map(_.file).toSet)
+        (fetchPairRows(delFrom -- delTo, delTo),
+          fetchPairRows(delTo -- delFrom, delFrom))
+      else
+        // an eq-delete DELTA (a key sidecar landed or retired in the
+        // gap) changes retained files' visibility by KEY, which no pair
+        // set names: recompute it over the files the delta can reach.
+        // The tier is transient (convertEqDeletes), so the reach shrinks
+        // to zero after maintenance
+        eqDeltaRetained(spark, qualified, readKeyed, finish, none, retained,
+          allLines, delFrom, delTo, eqFrom, eqTo)
+    (visible(filesTo -- filesFrom, delTo, eqTo).unionByName(unHidden),
+      visible(filesFrom -- filesTo, delFrom, eqFrom).unionByName(newlyHidden))
   }
 
   // ----- LINEAGE CHANGE DATA FEED --------------------------------------
@@ -3959,105 +3885,27 @@ object Snapshot {
         s"lineage-enabled $path lacks a recorded schema"))
     requireLineageEntries(linesFrom, path)
     requireLineageEntries(linesTo, path)
-    val filesTo = linesTo.filterNot(isDeleteEntry).map(pathOf).toSet
-    val filesFrom = linesFrom.filterNot(isDeleteEntry).map(pathOf).toSet
-    val dvTo = linesTo.filter(isDeleteEntry).map(pathOf)
-      .filterNot(isEqFile).toSet
-    val dvFrom = linesFrom.filter(isDeleteEntry).map(pathOf)
-      .filterNot(isEqFile).toSet
-    val eqTo = eqDeletesOf(linesTo.filter(isDeleteEntry))
-    val eqFrom = eqDeletesOf(linesFrom.filter(isDeleteEntry))
-    val eqDelta = eqTo.map(_.file).toSet != eqFrom.map(_.file).toSet
-    val retained = filesFrom & filesTo
+    require((linesFrom ++ linesTo).exists(l => !isDeleteEntry(l)),
+      s"lineage diff $fromV -> $toV between two empty snapshots of $path")
     // a file's entry (and so its id base) is immutable once committed —
     // the union map serves both sides
-    val allLines = (linesFrom ++ linesTo).distinct
-    val bases = basesOf(allLines)
+    val bases = basesOf((linesFrom ++ linesTo).distinct)
     val dataCols = recorded.fieldNames.toSeq
-    // KEYED lineage scan: ids attached, (file, pos) keys kept for the
-    // DV subtract / pair fetch joins (_metadata would not survive the
-    // id-attach join)
-    def readKeyed(files: Seq[String]): DataFrame =
-      attachRowIdsKeyed(spark,
-        lineageKeyedScan(spark, qualified, readMeta, files), bases)
-    def applyEq(df: DataFrame, eqs: Seq[EqDelete]): DataFrame =
-      applyEqKeyed(spark, qualified, df, allLines, eqs, "__lin_file")
-    def readPairs(dvFiles: Set[String]): DataFrame =
-      spark.read.parquet(dvFiles.toSeq.sorted.map(f => s"$qualified/$f"): _*)
-        .select(col("dv_file"), col("dv_pos"))
-    val anchorFiles = if (filesTo.nonEmpty) filesTo else filesFrom
-    require(anchorFiles.nonEmpty,
-      s"lineage diff $fromV -> $toV between two empty snapshots of $path")
-    def finish(df: DataFrame): DataFrame =
-      df.select((dataCols :+ RowIdCol).map(col): _*)
     // schema-only placeholder, no relation resolution: a per-step diff
     // usually leaves several candidate sets empty, and an anchor-wide
     // scan just to type an empty frame is O(all files) driver work
-    lazy val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(
-        lineageReadSchema(recorded).fields
-          .filter(f => dataCols.contains(f.name) || f.name == RowIdCol)))
-    // rows a pair set names, fetched from RETAINED files only (pairs on
-    // added/removed files are covered by the file diff); rows the
-    // static equality tier hides were visible at neither endpoint
-    def fetchPairRows(pairs: DataFrame): DataFrame = {
-      val refs = pairs.select(col("dv_file")).distinct().collect()
-        .map(_.getString(0)).filter(retained).toSeq.sorted
-      if (refs.isEmpty) empty
-      else {
-        val keyed = readKeyed(refs)
-        finish(applyEq(keyed.join(pairs,
-          keyed("__lin_file") === pairs("dv_file") &&
-            keyed("__lin_pos") === pairs("dv_pos"), "left_semi"), eqTo))
-      }
-    }
-    val addedFiles = (filesTo -- filesFrom).toSeq.sorted
-    val removedFiles = (filesFrom -- filesTo).toSeq.sorted
-    val dvNew = dvTo -- dvFrom
-    val dvGone = dvFrom -- dvTo
-    val plusNew =
-      if (addedFiles.isEmpty) empty
-      else finish(applyEq(applyDeletesKeyed(spark, qualified,
-        readKeyed(addedFiles), dvTo.toSeq.sorted), eqTo))
-    val minusOld =
-      if (removedFiles.isEmpty) empty
-      else finish(applyEq(applyDeletesKeyed(spark, qualified,
-        readKeyed(removedFiles), dvFrom.toSeq.sorted), eqFrom))
-    val (unHidden, newlyHidden) =
-      if (!eqDelta) {
-        val un =
-          if (dvGone.isEmpty) empty
-          else {
-            val pairs = readPairs(dvGone)
-            fetchPairRows(
-              if (dvTo.isEmpty) pairs
-              else pairs.join(readPairs(dvTo), Seq("dv_file", "dv_pos"),
-                "left_anti"))
-          }
-        val newly =
-          if (dvNew.isEmpty) empty
-          else {
-            val pairs = readPairs(dvNew)
-            fetchPairRows(
-              if (dvFrom.isEmpty) pairs
-              else pairs.join(readPairs(dvFrom), Seq("dv_file", "dv_pos"),
-                "left_anti"))
-          }
-        (un, newly)
-      } else
-        // [[changeDiff]]'s eq-delta rule with IMAGES — the shared
-        // recompute; `finish` here keeps `_row_id`, so the un/newly
-        // frames slot straight into the id pairing below
-        eqDeltaRetained(readKeyed,
-          applyDeletesKeyed(spark, qualified, _, _), applyEq, readPairs,
-          finish, empty, retained, allLines, dvFrom, dvTo, eqFrom, eqTo)
+    val (plus, minus) = diffSides(spark, qualified, linesFrom, linesTo,
+      keyedScan(spark, qualified, readMeta, _, Some(bases)),
+      _.select((dataCols :+ RowIdCol).map(col): _*),
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        org.apache.spark.sql.types.StructType(
+          lineageReadSchema(recorded).fields
+            .filter(f => dataCols.contains(f.name) || f.name == RowIdCol))))
     val imgStruct = org.apache.spark.sql.functions.struct(
       dataCols.map(col): _*)
-    val f = minusOld.unionByName(newlyHidden)
-      .select(col(RowIdCol), imgStruct.as("__f"))
-    val t = plusNew.unionByName(unHidden)
-      .select(col(RowIdCol), imgStruct.as("__t"))
+    val f = minus.select(col(RowIdCol), imgStruct.as("__f"))
+    val t = plus.select(col(RowIdCol), imgStruct.as("__t"))
     // pre-join structs: an unmatched side surfaces as ONE null column,
     // which is what the classifier keys absence on
     f.join(t, Seq(RowIdCol), "full_outer")
@@ -4492,19 +4340,20 @@ object Snapshot {
 
   def dvAudit(spark: SparkSession, path: String): DvAudit = {
     val h = headOf(spark, path)
+    val nLive = h.dataLines.size.toLong
     // POSITION vectors only: equality sidecars carry key columns, not
     // (dv_file, dv_pos) — their debt is audited by their count (each is
     // one reader anti-join) and folded by convertEqDeletes
-    val dvs = h.deletes.filterNot(isEqFile)
-    val nLive = h.dataLines.size.toLong
-    if (dvs.isEmpty) DvAudit(h.v, 0L, 0L, 0L, nLive)
-    else {
-      val dv = spark.read.parquet(dvs.map(f => s"${h.qualified}/$f"): _*)
-      // one tiny aggregate over the O(hidden rows) sidecars
-      val r = dv.agg(count(lit(1)).as("n"),
-        count_distinct(col("dv_file")).as("nf")).collect()(0)
-      DvAudit(h.v, dvs.size.toLong, r.getLong(0), r.getLong(1), nLive)
-    }
+    vectorsOf(spark, h.qualified, h.deletes)
+      .fold(DvAudit(h.v, 0L, 0L, 0L, nLive)) { dv =>
+        // one tiny aggregate over the O(hidden rows) sidecars, in one
+        // task: a single input partition needs no exchange, so the audit
+        // is one Spark job where a shuffled aggregate would be three
+        val r = dv.coalesce(1).agg(count(lit(1)).as("n"),
+          count_distinct(col("dv_file")).as("nf")).collect()(0)
+        DvAudit(h.v, h.deletes.count(f => !isEqFile(f)).toLong,
+          r.getLong(0), r.getLong(1), nLive)
+      }
   }
 
   /** THRESHOLD-DRIVEN FOLD: audit the vector debt and call
@@ -4707,7 +4556,6 @@ object Snapshot {
     val qualified = fs.makeQualified(root).toString
     val (meta, lines) = stateOf(spark, path, v)
     val cols = statsColsOf(meta)
-    val dvs = lines.filter(isDeleteEntry).map(pathOf).filterNot(isEqFile)
     // outstanding EQUALITY deletes hide an unknowable number of rows
     // from every file below their version — files they can reach
     // degrade to NULL like DV-touched ones, counts included (a key
@@ -4717,10 +4565,10 @@ object Snapshot {
     // DV-hidden rows per data file: the one non-manifest input, and it
     // reads ONLY the vector sidecars (O(deleted rows))
     val hiddenByFile: Map[String, Long] =
-      if (dvs.isEmpty) Map.empty
-      else spark.read.parquet(dvs.map(f => s"$qualified/$f"): _*)
-        .groupBy(col("dv_file")).agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      vectorsOf(spark, qualified, lines.filter(isDeleteEntry).map(pathOf))
+        .fold(Map.empty[String, Long])(_.groupBy(col("dv_file"))
+          .agg(count(lit(1)).as("n"))
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
     final case class E(file: String, n: Option[Long],
         bounds: Seq[Option[(Long, Long)]], nulls: Seq[Option[Long]],
         eqTouched: Boolean)
@@ -4776,10 +4624,6 @@ object Snapshot {
     spark.createDataFrame(out.asJava, schema)
   }
 
-  /** [[partitionStatsAt]] of the current snapshot. */
-  def partitionStats(spark: SparkSession, path: String): DataFrame =
-    partitionStatsAt(spark, path, headOf(spark, path).v)
-
   /** What a [[countRange]] cost: how many files were answered from the
     * manifest alone vs actually scanned. */
   final case class CountRangeResult(count: Long, metadataFiles: Long,
@@ -4809,14 +4653,12 @@ object Snapshot {
     val idx = cols.indexOf(c)
     require(idx >= 0, s"no manifest statistics declared for column '$c' " +
       s"(declared: ${if (cols.isEmpty) "none" else cols.mkString(",")})")
-    val dvs = h.deletes.filterNot(isEqFile)
     val eqMaxD = eqDeletesOf(h.deleteLines).map(_.d).maxOption
       .getOrElse(Long.MinValue)
     val dvTouched: Set[String] =
-      if (dvs.isEmpty) Set.empty
-      else spark.read.parquet(dvs.map(f => s"$qualified/$f"): _*)
-        .select(col("dv_file")).distinct()
-        .collect().map(_.getString(0)).toSet
+      vectorsOf(spark, qualified, h.deletes).fold(Set.empty[String])(
+        _.select(col("dv_file")).distinct()
+          .collect().map(_.getString(0)).toSet)
     var interior = 0L
     var metaFiles = 0L
     val scanFiles = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -5113,16 +4955,10 @@ object Snapshot {
     val qualified = fs.makeQualified(root).toString
     val (base, commits) = branchState(fs, root, name)
     val baseDf = readVersion(spark, path, base)
-    val branchFiles = commits.flatMap(_._3).map(pathOf)
-    if (branchFiles.isEmpty) baseDf
-    else {
-      val bMeta = metaOf(spark, path, base)
-      val reader = spark.read.option("basePath", qualified)
-      val branchDf = resolveRenames(
-        physReadSchema(bMeta).fold(reader)(reader.schema)
-          .parquet(branchFiles.map(f => s"$qualified/$f"): _*), bMeta)
-      baseDf.unionByName(branchDf)
-    }
+    val branchLines = commits.flatMap(_._3)
+    if (branchLines.isEmpty) baseDf
+    else baseDf.unionByName(readDataAt(spark, qualified,
+      metaOf(spark, path, base), branchLines, Nil))
   }
 
   /** Branch names on the layout, with (base version, commit count).

@@ -225,7 +225,8 @@ class EqualityDeleteSpec extends AnyFunSuite {
       meta = Map("rowids" -> "on"))
     val v1 = Snapshot.currentVersion(spark, path).get
     def idsOf(): Map[Long, Long] =
-      Snapshot.readSnapshotLineage(spark, path).collect()
+      Snapshot.readVersionLineage(spark, path,
+        Snapshot.currentVersion(spark, path).get).collect()
         .map(r => r.getAs[Long]("event_id") -> r.getAs[Long]("_row_id"))
         .toMap
     val ids1 = idsOf()
@@ -248,6 +249,11 @@ class EqualityDeleteSpec extends AnyFunSuite {
     assert(d == Set(
       (2L, 20L, ids1(2L), "delete"), (2L, 200L, ids2(2L), "insert"),
       (3L, 30L, ids1(3L), "delete"), (3L, 300L, ids2(3L), "insert")))
+    // the bag feed takes the same eq-delta branch to the same rows
+    val (bag, typedBag) = ChangeFeeds.bags(
+      Snapshot.changeDiff(spark, path, v1, v2),
+      Snapshot.changeDiffLineage(spark, path, v1, v2))
+    assert(bag == typedBag, s"bag feed $bag vs typed feed $typedBag")
     // conversion is invisible to the typed feed, and ids survive the
     // whole maintenance ladder
     Snapshot.convertEqDeletes(spark, path)
@@ -268,12 +274,14 @@ class EqualityDeleteSpec extends AnyFunSuite {
         .toDF("event_id", "value", "event_date"), Seq("event_id"),
       meta = Map("stats" -> "value", "nullstats" -> "on"))
     Snapshot.deleteByKeys(spark, path, Seq(1L).toDF("event_id"))
-    val degraded = Snapshot.partitionStats(spark, path).collect()
+    val degraded = Snapshot.partitionStatsAt(spark, path,
+      Snapshot.currentVersion(spark, path).get).collect()
       .map(r => r.getString(0) -> r).toMap
     assert(degraded.values.forall(r => r.isNullAt(r.fieldIndex("n_live"))),
       "eq-reachable files must degrade n_live to NULL, never guess")
     Snapshot.convertEqDeletes(spark, path)
-    val exact = Snapshot.partitionStats(spark, path).collect()
+    val exact = Snapshot.partitionStatsAt(spark, path,
+      Snapshot.currentVersion(spark, path).get).collect()
       .map(r => r.getString(0) -> r).toMap
     assert(exact("event_date=2024-01-01").getAs[Long]("n_live") == 0L)
     assert(exact("event_date=2024-01-02").getAs[Long]("n_live") == 1L)

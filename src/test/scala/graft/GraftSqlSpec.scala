@@ -407,13 +407,15 @@ class GraftSqlSpec extends AnyFunSuite {
     Snapshot.append(spark, pathL, "day", rows(1L to 20L),
       meta = Map("rowids" -> "on"))
     registerCatalog("gsublin", whL)
-    val idsBefore = Snapshot.readSnapshotLineage(spark, pathL)
+    val idsBefore = Snapshot.readVersionLineage(spark, pathL,
+      Snapshot.currentVersion(spark, pathL).get)
       .select(col("id"), col("_row_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     spark.sql(
       """UPDATE gsublin.t SET value = value + 1
         |WHERE id IN (SELECT id FROM gsublin.t WHERE id <= 5)""".stripMargin)
-    val after = Snapshot.readSnapshotLineage(spark, pathL)
+    val after = Snapshot.readVersionLineage(spark, pathL,
+      Snapshot.currentVersion(spark, pathL).get)
       .select(col("id"), col("_row_id"), col("value")).collect()
       .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2)))).toMap
     (1L to 5L).foreach { i =>
@@ -577,7 +579,8 @@ class GraftSqlSpec extends AnyFunSuite {
     rows(1L to 20L).createOrReplaceTempView("lin_src")
     spark.sql("INSERT INTO glin.t SELECT * FROM lin_src")
     // the SQL-created, SQL-filled table serves durable row ids
-    val withIds = Snapshot.readSnapshotLineage(spark, path)
+    val withIds = Snapshot.readVersionLineage(spark, path,
+      Snapshot.currentVersion(spark, path).get)
     assert(withIds.columns.contains("_row_id") &&
       withIds.select("_row_id").distinct().count() == 20L)
     val idOf7 = withIds.where(col("id") === 7)

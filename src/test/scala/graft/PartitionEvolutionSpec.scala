@@ -198,7 +198,8 @@ class PartitionEvolutionSpec extends AnyFunSuite {
 
   test("row ids survive the spec migration (lineage read spans generations)") {
     val path = build("graft-pe-lineage", rowIds = true)
-    def idMap = Snapshot.readSnapshotLineage(spark, path)
+    def idMap = Snapshot.readVersionLineage(spark, path,
+      Snapshot.currentVersion(spark, path).get)
       .select("event_id", Snapshot.RowIdCol).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val born = idMap

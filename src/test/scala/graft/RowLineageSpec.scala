@@ -74,7 +74,8 @@ class RowLineageSpec extends AnyFunSuite {
 
   test("ids are born unique, non-null, and row-count dense") {
     val path = buildLineage(6, "graft-lin-birth")
-    val rows = Snapshot.readSnapshotLineage(spark, path)
+    val rows = Snapshot.readVersionLineage(spark, path,
+      Snapshot.currentVersion(spark, path).get)
       .select("event_id", Snapshot.RowIdCol).collect()
     assert(rows.length == 6)
     assert(rows.forall(!_.isNullAt(1)), "every row must have an id")
@@ -88,12 +89,14 @@ class RowLineageSpec extends AnyFunSuite {
 
   test("the (event_id -> _row_id) map is IDENTICAL across compact, update, materialize, CoW delete, restore") {
     val path = buildLineage(9, "graft-lin-stable")
-    val born = idMap(Snapshot.readSnapshotLineage(spark, path))
+    val born = idMap(Snapshot.readVersionLineage(spark, path,
+      Snapshot.currentVersion(spark, path).get))
     // v2 compact: every partition packs its 3 files into 1
     val compacted = Snapshot.compact(spark, path, "event_date", 1L << 30,
       Seq("ts_ms"))
     assert(compacted.nonEmpty, "fixture must actually compact")
-    val afterCompact = idMap(Snapshot.readSnapshotLineage(spark, path))
+    val afterCompact = idMap(Snapshot.readVersionLineage(spark, path,
+      Snapshot.currentVersion(spark, path).get))
     assert(afterCompact == born, "compaction must not move a single id")
     // rewritten files materialize ids physically
     assert(entryLinesOf(path).exists(_.contains("\tr:p")),
@@ -101,35 +104,42 @@ class RowLineageSpec extends AnyFunSuite {
     // v3 MoR update keeps the id on the NEW image
     Snapshot.updateWhere(spark, path, "event_date",
       col("event_id") === 4L, Map("user_id" -> lit(99L)))
-    val afterUpdate = idMap(Snapshot.readSnapshotLineage(spark, path))
+    val afterUpdate = idMap(Snapshot.readVersionLineage(spark, path,
+      Snapshot.currentVersion(spark, path).get))
     assert(afterUpdate == born, "an update must keep the row's id")
-    assert(Snapshot.readSnapshotLineage(spark, path)
+    assert(Snapshot.readVersionLineage(spark, path,
+      Snapshot.currentVersion(spark, path).get)
       .where(col("event_id") === 4L).select("user_id")
       .collect().head.getLong(0) == 99L)
     // v4 materialize, v5 CoW delete of one row
     Snapshot.materializeDeletes(spark, path, "event_date", Seq("ts_ms"))
-    assert(idMap(Snapshot.readSnapshotLineage(spark, path)) == born)
+    assert(idMap(Snapshot.readVersionLineage(spark, path,
+      Snapshot.currentVersion(spark, path).get)) == born)
     Snapshot.deleteWhere(spark, path, "event_date",
       col("event_id") === 7L, Seq("ts_ms"))
-    val afterDelete = idMap(Snapshot.readSnapshotLineage(spark, path))
+    val afterDelete = idMap(Snapshot.readVersionLineage(spark, path,
+      Snapshot.currentVersion(spark, path).get))
     assert(afterDelete == born - 7L, "CoW survivors must keep their ids")
     // restore to the post-update version resurrects row 7 WITH its id
     val vAfterMat = 4L
     Snapshot.restore(spark, path, vAfterMat)
-    assert(idMap(Snapshot.readSnapshotLineage(spark, path)) == born,
+    assert(idMap(Snapshot.readVersionLineage(spark, path,
+      Snapshot.currentVersion(spark, path).get)) == born,
       "restore must bring back the exact ids (file algebra carries tags)")
   }
 
   test("merge: survivors keep ids, updated keys get fresh ids, inserts get fresh unique ids") {
     import spark.implicits._
     val path = buildLineage(6, "graft-lin-merge")
-    val born = idMap(Snapshot.readSnapshotLineage(spark, path))
+    val born = idMap(Snapshot.readVersionLineage(spark, path,
+      Snapshot.currentVersion(spark, path).get))
     val updates = Seq(
       (2L, 42L, 222L, "2024-01-03"), // key 2 lives in partition 03 (2 % 3 + 1)
       (100L, 43L, 1000L, "2024-01-03")) // new key
       .toDF("event_id", "user_id", "ts_ms", "event_date")
     Snapshot.merge(spark, path, "event_date", updates, Seq("event_id"))
-    val after = idMap(Snapshot.readSnapshotLineage(spark, path))
+    val after = idMap(Snapshot.readVersionLineage(spark, path,
+      Snapshot.currentVersion(spark, path).get))
     assert(after.size == 7)
     // untouched rows keep their ids (including rows in the rewritten
     // partition that were not keyed by the update)
@@ -173,6 +183,10 @@ class RowLineageSpec extends AnyFunSuite {
       .select("_change_type", "ts_ms").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(tsByType("update_postimage") == tsByType("update_preimage") * 10)
+    // the bag feed over the same gap is the typed feed in bag form
+    val (bag, typedBag) = ChangeFeeds.bags(
+      Snapshot.changeDiff(spark, path, v1, cur), diff)
+    assert(bag == typedBag, s"bag feed $bag vs typed feed $typedBag")
   }
 
   test("composed endpoints: insert-then-delete nets NOTHING, a reverted update nets NOTHING, chained updates collapse") {
@@ -242,7 +256,8 @@ class RowLineageSpec extends AnyFunSuite {
       col("event_id") === 1L, Map("ts_ms" -> (col("ts_ms") + 500L)))
     assert(Snapshot.consumeChanges(spark, path, "g")(applyTyped)(applyTyped)
       .mode == "diff")
-    val expected = Snapshot.readSnapshotLineage(spark, path)
+    val expected = Snapshot.readVersionLineage(spark, path,
+      Snapshot.currentVersion(spark, path).get)
       .select(Snapshot.RowIdCol, "ts_ms").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(state == expected,
@@ -267,7 +282,8 @@ class RowLineageSpec extends AnyFunSuite {
     start.countDown()
     futures.foreach(_.get())
     pool.shutdown()
-    val rows = Snapshot.readSnapshotLineage(spark, path)
+    val rows = Snapshot.readVersionLineage(spark, path,
+      Snapshot.currentVersion(spark, path).get)
       .select(Snapshot.RowIdCol).collect().map(_.getLong(0))
     assert(rows.distinct.length == rows.length,
       s"racing appends produced duplicate ids: ${rows.sorted.toSeq}")
@@ -281,7 +297,8 @@ class RowLineageSpec extends AnyFunSuite {
       .write.partitionBy("event_date").parquet(path)
     Snapshot.init(spark, path, "event_date") // NOT lineage-enabled
     val ex = intercept[IllegalArgumentException](
-      Snapshot.readSnapshotLineage(spark, path))
+      Snapshot.readVersionLineage(spark, path,
+        Snapshot.currentVersion(spark, path).get))
     assert(ex.getMessage.contains("not lineage-enabled"))
   }
 }

@@ -69,7 +69,8 @@ class SnapshotSpec extends AnyFunSuite {
     val lpath = s"${tmp("graft-create")}/lt"
     Snapshot.create(spark, lpath, schema, "day",
       meta = Map("rowids" -> "on")): Unit
-    val lempty = Snapshot.readSnapshotLineage(spark, lpath)
+    val lempty = Snapshot.readVersionLineage(spark, lpath,
+      Snapshot.currentVersion(spark, lpath).get)
     assert(lempty.columns.contains("_row_id") && lempty.count() == 0L)
     // refusals: duplicate create; partition column outside the schema
     intercept[IllegalArgumentException](
@@ -591,6 +592,28 @@ class SnapshotSpec extends AnyFunSuite {
       "expire left unreferenced deletion vectors behind")
   }
 
+  test("vectors read under their declared schema: planning a read over them runs no job; dvAudit runs one") {
+    val path = buildLayout()
+    Snapshot.init(spark, path, "event_date")                       // v1
+    val before = ids(Snapshot.readSnapshot(spark, path))
+    Snapshot.deleteWhereMoR(spark, path, "event_date", col("user_id") === 3L)
+    // building the frame only plans it: the data scan takes the recorded
+    // schema, so any job here is parquet footer inference on the vectors
+    var snap: org.apache.spark.sql.DataFrame = null
+    val planJobs = TestJobs.jobsDuring(spark) {
+      snap = Snapshot.readSnapshot(spark, path)
+    }
+    assert(planJobs == 0, s"planning the read ran $planJobs job(s)")
+    assert(ids(snap) == before.filterNot(id => (id / 10) % 10 == 3))
+    var audit: Snapshot.DvAudit = null
+    val auditJobs = TestJobs.jobsDuring(spark) {
+      audit = Snapshot.dvAudit(spark, path)
+    }
+    assert(audit.vectors == 1L && audit.hiddenRows == 12L &&
+      audit.referencedFiles > 0L, s"audit: $audit")
+    assert(auditJobs == 1, s"dvAudit ran $auditJobs job(s)")
+  }
+
   test("merge-on-read update: ONE commit hides old images and lands new ones; no doubling, no gap") {
     val path = buildLayout()
     Snapshot.init(spark, path, "event_date")                       // v1
@@ -769,7 +792,7 @@ class SnapshotSpec extends AnyFunSuite {
       .write.partitionBy("event_type").parquet(path)
     assert(Snapshot.init(spark, path, "event_type",
       statsCols = Seq("ts_ms")) == 1L)
-    assert(Snapshot.statsColumn(spark, path).contains("ts_ms"))
+    assert(Snapshot.statsColumns(spark, path).headOption.contains("ts_ms"))
     assert(Snapshot.entriesOf(spark, path, 1L).forall(_._2.isDefined),
       "bootstrap left entries without bounds")
     val all = Snapshot.currentFiles(spark, path)._2
@@ -805,7 +828,7 @@ class SnapshotSpec extends AnyFunSuite {
     // a layout that never declared stats keeps every file — conservative
     val plain = buildLayout()
     Snapshot.init(spark, plain, "event_date")
-    assert(Snapshot.statsColumn(spark, plain).isEmpty)
+    assert(Snapshot.statsColumns(spark, plain).headOption.isEmpty)
     assert(Snapshot.filesInRange(spark, plain, 0L, 0L).size ==
       Snapshot.currentFiles(spark, plain)._2.size)
   }

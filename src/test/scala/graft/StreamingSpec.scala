@@ -121,7 +121,7 @@ class StreamingSpec extends AnyFunSuite {
     // the bootstrap batch DECLARED the stats column; every streamed
     // batch's files carry ts bounds in the manifest — a streamed layout
     // skips files exactly like a batch-built one (q60's tier)
-    assert(Snapshot.statsColumn(spark, outDir).contains("ts"))
+    assert(Snapshot.statsColumns(spark, outDir).headOption.contains("ts"))
     assert(Snapshot.entriesOf(spark, outDir, vs.last)
       .forall(_._2.isDefined), "streamed files missing manifest bounds")
     val staged = batch.withColumn("event_date", to_date(col("ts")))
@@ -1215,7 +1215,8 @@ class StreamingSpec extends AnyFunSuite {
       s"batches, expected $expected")
     // split-bootstrap ≡ one-shot: same rows, same ids, DV-subtracted
     val streamed = batches.flatten.toSet
-    val oneShot = Snapshot.readSnapshotLineage(spark, path)
+    val oneShot = Snapshot.readVersionLineage(spark, path,
+      Snapshot.currentVersion(spark, path).get)
       .select(col("id"), col("_row_id"), col("value"), col("day"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
