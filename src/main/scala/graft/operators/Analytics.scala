@@ -3647,8 +3647,9 @@ object Analytics {
   // that fails if the SQL route diverges from the library route by one
   // row. All three resolve through the GraftDmlRule post-hoc rule
   // (GraftDml scaladoc): DELETE and UPDATE through one row-level
-  // command into deleteWhereMoR / updateWhere, MERGE into
-  // mergeAnywhere. Each fixture is its own store + its
+  // command into deleteWhereMoR / updateWhere, MERGE through one
+  // merge command into a file-grain rewrite of the key-index-located
+  // files. Each fixture is its own store + its
   // own fingerprint-scoped catalog name (Spark caches catalog plugin
   // instances per name).
   // ---------------------------------------------------------------------
@@ -3740,9 +3741,9 @@ object Analytics {
   // q93 — `MERGE INTO … WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED
   // THEN INSERT *` through the post-hoc DML rule: q88's cross-partition
   // key move issued as SQL (the earliest day's 1-in-50 cohort re-dated
-  // +1 with a bumped value), executing as mergeAnywhere — keys located
-  // through the secondary index, O(touched partitions), pinned in-query
-  // by the same file-identity rule as q88.
+  // +1 with a bumped value), executing as a file-grain rewrite — keys
+  // located through the secondary index, O(candidate files), pinned
+  // in-query by the same file-identity rule as q88.
   private def q93(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.Snapshot
     val (path, table) = sqlDmlFixture(s, dir, "sqlmrg")
@@ -3891,8 +3892,9 @@ object Analytics {
   // statement, committing as ONE atomic version (pinned in-query).
   // Lowered by GraftMergeIntoCommand: matched pairs read ONLY the
   // key-index-located candidate files, the clause chain evaluates
-  // first-match per pair, and images + deleted keys commit together
-  // through mergeAnywhere's delete-key seam — O(touched partitions).
+  // first-match per pair, and the candidate files' new contents plus
+  // the inserts commit together as one file-grain rewrite —
+  // O(candidate files).
   // The oracle simulates the same MERGE in plain SQL (left joins +
   // first-match CASE), so one misplaced clause, a wrong NULL fill, or
   // a lost unassigned column cannot hash-match.

@@ -61,7 +61,10 @@ final class SnapshotConflictException(msg: String)
   * [[stagePartitioned]] lands data files through a hidden staging dir;
   * [[writeVectors]] packs and moves a deletion vector;
   * [[rewriteSurvivors]] re-clusters and rewrites a maintenance read's
-  * survivors; [[commit]] swings the pointer.
+  * survivors and [[statLines]] turns new files into manifest entries;
+  * [[commit]] swings the pointer. SQL MERGE composes them in
+  * [[rewriteKeyed]]: a key-index probe, one [[keyedScan]] of the
+  * located files, one staged write of their new contents, one commit.
   *
   * Every read is likewise built from three private steps:
   * [[vectorsOf]] reads a version's position vectors under the declared
@@ -899,11 +902,13 @@ object Snapshot {
     * `removed` (two vectors hiding rows of the same file
     * could double-apply an update or resurrect a delete; a rewrite
     * racing a fresh vector would orphan its positions).
-    * `replacedParts` names partition dirs this commit claims to replace
-    * WHOLLY; a rebase aborts if the latest snapshot holds a data file
-    * in one of them that this commit neither removed nor added —
-    * a concurrently-appended file the replacement never read (the
-    * Iceberg validateAddedDataFiles check).
+    * `replacedParts` names partition dirs whose rows this commit
+    * rewrote from its base; a rebase aborts if the latest snapshot
+    * holds a data file in one of them that was not live at the base
+    * and that this commit did not add — a concurrently-added file the
+    * rewrite never read (the Iceberg validateAddedDataFiles check).
+    * A whole-partition replace and a file-grain rewrite of some of a
+    * partition's files get the same verdict.
     * `widenSchema = (batch schema, partition col)` requests the
     * recorded-schema merge, recomputed per attempt ([[widenRecordedSchema]]).
     * `evolve` requests a DECLARED schema change (rename / promotion),
@@ -1032,10 +1037,13 @@ object Snapshot {
               s"v=${baseV.getOrElse(0L)}, latest v=${latest.getOrElse(0L)}): " +
               gone.toSeq.sorted.take(3).mkString(", "))
           if (replacedParts.nonEmpty) {
+            val baseLive = baseV.map(b =>
+              resolveBodyFs(fs, root, parseLines(manifestTextFs(fs, root, b)))
+                .map(pathOf).toSet).getOrElse(Set.empty[String])
             val intruders = latestResolved.map(pathOf).filter(p =>
               !p.startsWith(DeletesDir + "/") &&
                 replacedParts(p.split("/")(0)) &&
-                !removed(p) && !addedPaths(p))
+                !baseLive(p) && !addedPaths(p))
             if (intruders.nonEmpty)
               throw new SnapshotConflictException(
                 s"concurrent commit added ${intruders.size} file(s) into " +
@@ -1208,11 +1216,11 @@ object Snapshot {
          else if (zOrderSortCols.nonEmpty)
           Map("sort" -> ("z:" + zOrderSortCols.mkString(",")))
          else Map.empty)
-      val lines = statLines(spark, fs, root, rel, statsMeta)
       // record the table schema (partition column included, as the
       // basePath read infers it) — the anchor later appends widen
       val schema = spark.read.option("basePath", qualified)
         .parquet(rel.map(f => s"$qualified/$f"): _*).schema
+      val lines = statLines(spark, fs, root, rel, statsMeta, schema)
       require(!rowIds || !schema.fieldNames.contains(RowIdCol),
         s"'$RowIdCol' is the reserved lineage column — the bootstrap " +
         "files must not already carry it")
@@ -1695,15 +1703,19 @@ object Snapshot {
   /** The union key set of `eqs` as one frame: the key columns plus
     * `__eq_d` — the NEWEST delete version naming each key. One scan of
     * all sidecars (`max d > addV ⟺ ∃ d > addV`, addV fixed per file,
-    * so keeping only the max loses nothing). */
+    * so keeping only the max loses nothing), read under the key
+    * columns' types in `table` (the data frame the keys apply to):
+    * footer inference would cost one Spark job per read. */
   private def eqKeyFrame(spark: SparkSession, qualified: String,
-      eqs: Seq[EqDelete]): DataFrame = {
+      eqs: Seq[EqDelete],
+      table: org.apache.spark.sql.types.StructType): DataFrame = {
     import spark.implicits._
     val keyCols = eqKeyColsOf(eqs)
     def relKey(p: String): String = p.split("/").takeRight(2).mkString("/")
     val dMap = org.apache.spark.sql.functions.broadcast(
       eqs.map(e => relKey(e.file) -> e.d).toDF("__eq_sfile", "__eq_sd"))
-    spark.read.parquet(eqs.map(e => s"$qualified/${e.file}"): _*)
+    spark.read.schema(org.apache.spark.sql.types.StructType(keyCols.map(table(_))))
+      .parquet(eqs.map(e => s"$qualified/${e.file}"): _*)
       .withColumn("__eq_sfile",
         concat_ws("/", slice(split(input_file_name(), "/"), -2, 2)))
       .join(dMap, "__eq_sfile")
@@ -1735,7 +1747,7 @@ object Snapshot {
         .join(addv, data("__dv_file") === addv("__eq_file"), "left")
         .withColumn("__eq_v", coalesce(col("__eq_addv"), lit(0L)))
         .drop("__eq_file", "__eq_addv")
-      val eqk = eqKeyFrame(spark, qualified, eqs)
+      val eqk = eqKeyFrame(spark, qualified, eqs, data.schema)
       withV.join(eqk,
           keyCols.map(c => withV(c) === eqk(c)).reduce(_ && _) &&
             eqk("__eq_d") > withV("__eq_v"),
@@ -2161,10 +2173,13 @@ object Snapshot {
     * overlap test conservative: a file is skipped only if its floored
     * bounds provably exclude the floored query range. A column that is
     * all-NULL in a file — or absent from the batch entirely (schema
-    * drift) — encodes `-\t-` and never prunes that file. */
+    * drift) — encodes `-\t-` and never prunes that file. The files are
+    * read under `written`, the schema of the frame their writer staged,
+    * because footer inference costs one Spark job per commit. */
   private def statLines(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
-      moved: Seq[String], tableMeta: Map[String, String]): Seq[String] = {
+      moved: Seq[String], tableMeta: Map[String, String],
+      written: org.apache.spark.sql.types.StructType): Seq[String] = {
     val qualified = fs.makeQualified(root).toString
     val cols = statsColsOf(tableMeta)
     val lineage = tableMeta.get("rowids").contains("on")
@@ -2180,7 +2195,7 @@ object Snapshot {
       def relKey(p: String): String = p.split("/").takeRight(2).mkString("/")
       require(moved.map(relKey).distinct.size == moved.size,
         s"duplicate partdir/basename entries in one commit: $moved")
-      val df = spark.read.option("basePath", qualified)
+      val df = spark.read.option("basePath", qualified).schema(written)
         .parquet(moved.map(f => s"$qualified/$f"): _*)
       val present = df.columns.toSet
       // a rewrite's files carry the materialized row-id column; an
@@ -2589,7 +2604,7 @@ object Snapshot {
     // still surface the new partition column to readers — the recorded
     // schema gains it here if the first new-spec append hasn't already
     commit(h.fs, h.root, Some(h.v), oldFiles.toSet,
-      statLines(spark, h.fs, h.root, moved, h.meta),
+      statLines(spark, h.fs, h.root, moved, h.meta, rows.schema),
       Map("op" -> "migrate-spec"),
       widenSchema = Some((rows.schema, newPcol))): Unit
     moved
@@ -2691,15 +2706,17 @@ object Snapshot {
     * maintenance preserves clustering without every caller re-knowing
     * it. A Z-order clusters on the Morton key of its columns, so every
     * output file gets a tight bounding box in all of them and the
-    * declared stats columns record those boxes. Every dir in
-    * `mustRestage` must have restaged under its own name before the
-    * commit removes its old entries: a miss (non-canonical dir name
-    * from an external writer, zero-row debris) aborts with the snapshot
-    * untouched; the moved files are unreferenced and retire via expire.
-    * Returns the moved files. */
+    * declared stats columns record those boxes. Every dir in `touched`
+    * must restage under its own name before the commit removes its old
+    * entries, unless `rows` holds none of its rows (its files emptied
+    * out — legal, and checked only for dirs that did not restage): a
+    * miss with survivors (non-canonical dir name from an external
+    * writer) aborts with the snapshot untouched; the moved files are
+    * unreferenced and retire via expire. Returns the moved files'
+    * manifest entry lines ([[statLines]]). */
   private def rewriteSurvivors(h: Head, tag: String, rows: DataFrame,
       partitionCol: String, sortCols: Seq[String], zOrderCols: Seq[String],
-      targets: Map[String, Int], mustRestage: Iterable[String]): Seq[String] = {
+      targets: Map[String, Int], touched: Iterable[String]): Seq[String] = {
     val (lin, z) =
       if (sortCols.nonEmpty || zOrderCols.nonEmpty) (sortCols, zOrderCols)
       else sortOrderOf(h.meta)
@@ -2710,13 +2727,20 @@ object Snapshot {
         if (z.isEmpty) lin else Seq("__z"), targets).drop("__z"),
       partitionCol)
     val movedParts = moved.map(_.split("/")(0)).toSet
-    mustRestage.find(p => !movedParts(p)).foreach { part =>
-      throw new IllegalStateException(
-        s"staged rewrite missing for partition '$part' (non-canonical " +
-        "dir name, or zero rows?) — aborting before the commit; the " +
-        "snapshot is unchanged")
+    val unstaged = touched.toSeq.distinct.filterNot(movedParts)
+    if (unstaged.nonEmpty) {
+      val values = unstaged.map(d => org.apache.spark.sql.catalyst.catalog
+        .ExternalCatalogUtils.unescapePathName(d.stripPrefix(s"$partitionCol=")))
+      val kept = rows.where(col(partitionCol).isin(values: _*))
+        .select(col(partitionCol)).distinct().collect().map(_.getString(0)).toSet
+      unstaged.zip(values).find { case (_, value) => kept(value) }.foreach {
+        case (part, _) => throw new IllegalStateException(
+          s"staged rewrite missing for partition '$part' (non-canonical " +
+          "dir name?) — aborting before the commit; the snapshot is " +
+          "unchanged")
+      }
     }
-    moved
+    statLines(rows.sparkSession, h.fs, h.root, moved, h.meta, rows.schema)
   }
 
   /** Small-file compaction committed through the manifest: oversplit
@@ -2768,16 +2792,15 @@ object Snapshot {
     // identity holds for values inference would mangle ("01" → int 1);
     // on a lineage-enabled layout the read also surfaces `_row_id`, so
     // the rewritten files materialize it — compaction keeps row identity
-    val moved = rewriteSurvivors(h, "compact",
+    val lines = rewriteSurvivors(h, "compact",
       readForMaintenanceLineage(spark, h.qualified, oldFiles, partitionCol,
         h.meta, h.lines),
       partitionCol, sortCols, zOrderCols, targets, plan.map(_._1))
-    val movedByPart = moved.groupBy(_.split("/")(0))
-    commit(h.fs, h.root, Some(h.v), oldFiles.toSet,
-      statLines(spark, h.fs, h.root, moved, h.meta),
+    val movedByPart = lines.map(pathOf).groupBy(_.split("/")(0))
+    commit(h.fs, h.root, Some(h.v), oldFiles.toSet, lines,
       Map("op" -> "compact")): Unit
     plan.map { case (part, fsOfPart, _) =>
-      (part, fsOfPart.size, movedByPart(part).size)
+      (part, fsOfPart.size, movedByPart.get(part).fold(0)(_.size))
     }
   }
 
@@ -2848,8 +2871,7 @@ object Snapshot {
         partitionCol, sortCols, Nil,
         partial.map { case (value, old) => value -> old.size }.toMap,
         partial.map { case (value, _) => partDirName(value) })
-    commit(h.fs, h.root, Some(h.v), removed.toSet,
-      statLines(spark, h.fs, h.root, added, h.meta),
+    commit(h.fs, h.root, Some(h.v), removed.toSet, added,
       Map("op" -> "delete")): Unit
     dirty.toSeq.map { case (value, nDel, _) => (partDirName(value), nDel) }
   }
@@ -3020,13 +3042,13 @@ object Snapshot {
         col("__dv_pos").as("dv_pos")), n, vectorRowCap)
     // the new images: SET expressions over the old image, clustered one
     // file per touched partition
+    val images = set.foldLeft(matched) { case (df, (k, e)) => df.withColumn(k, e) }
+      .drop("__dv_file", "__dv_pos")
     val moved = stagePartitioned(h.fs, h.root, "update",
-      set.foldLeft(matched) { case (df, (k, e)) => df.withColumn(k, e) }
-        .drop("__dv_file", "__dv_pos")
-        .repartition(col(partitionCol)), partitionCol)
+      images.repartition(col(partitionCol)), partitionCol)
     h.fs.delete(stg, true): Unit
     val nv = commit(h.fs, h.root, Some(h.v), Set.empty,
-      dvMoved ++ statLines(spark, h.fs, h.root, moved, h.meta),
+      dvMoved ++ statLines(spark, h.fs, h.root, moved, h.meta, images.schema),
       Map("op" -> "update") ++ meta, mustBeLive = referenced,
       dvRefs = referenced)
     (nv, n)
@@ -3072,33 +3094,22 @@ object Snapshot {
       org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
         .unescapePathName(f.split("/")(0).stripPrefix(s"$partitionCol="))
     val targets = affected.groupBy(partValue).view.mapValues(_.size).toMap
-    def survivorsOf(): DataFrame = {
-      // lineage-aware read surfaces `_row_id` so the rewrite carries it;
-      // the (file, pos) keys it materializes double as the DV-subtract
-      // join key (one derivation, shared — _metadata would no longer
-      // resolve after the id-attach join)
-      val keyed = readForMaintenanceLineageKeyed(spark, h.qualified,
-        affected.toSeq, partitionCol, h.meta, h.lines)
-      keyed.join(dvDf,
-          keyed("__dv_file") === dvDf("dv_file") &&
-            keyed("__dv_pos") === dvDf("dv_pos"),
-          "left_anti")
-        .drop("__dv_file", "__dv_pos")
-    }
-    // probe: survivor counts per partition — distinguishes "this
-    // partition's touched files emptied out" (legitimate) from "the
-    // staged write lost a partition" (abort) before anything destructive
-    val survCounts = survivorsOf().groupBy(col(partitionCol))
-      .agg(count(lit(1)).as("n")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    // only partitions that kept survivors must restage
-    val moved = rewriteSurvivors(h, "materialize", survivorsOf(),
-      partitionCol, sortCols, Nil, targets,
-      targets.keys.filter(value => survCounts.getOrElse(value, 0L) > 0L)
-        .map(value => s"$partitionCol=" + org.apache.spark.sql.catalyst
-          .catalog.ExternalCatalogUtils.escapePathName(value)))
-    commit(h.fs, h.root, Some(h.v), affected.toSet ++ dvs.toSet,
-      statLines(spark, h.fs, h.root, moved, h.meta),
+    // lineage-aware read surfaces `_row_id` so the rewrite carries it;
+    // the (file, pos) keys it materializes double as the DV-subtract
+    // join key (one derivation, shared — _metadata would no longer
+    // resolve after the id-attach join)
+    val keyed = readForMaintenanceLineageKeyed(spark, h.qualified,
+      affected.toSeq, partitionCol, h.meta, h.lines)
+    val survivors = keyed.join(dvDf,
+        keyed("__dv_file") === dvDf("dv_file") &&
+          keyed("__dv_pos") === dvDf("dv_pos"),
+        "left_anti")
+      .drop("__dv_file", "__dv_pos")
+    // a partition whose touched files emptied out does not restage —
+    // legal; one that kept survivors must
+    val lines = rewriteSurvivors(h, "materialize", survivors,
+      partitionCol, sortCols, Nil, targets, affected.map(_.split("/")(0)))
+    commit(h.fs, h.root, Some(h.v), affected.toSet ++ dvs.toSet, lines,
       Map("op" -> "materialize")): Unit
     perFile.groupBy { case (f, _) => f.split("/")(0) }.view
       .mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
@@ -3150,7 +3161,7 @@ object Snapshot {
     val moved = stagePartitioned(fs, root, "append", rows, partitionCol)
     val tableMeta = Seq("stats", "rowids", "nullstats")
       .flatMap(k => prevMeta.get(k).orElse(meta.get(k)).map(k -> _)).toMap
-    val lines = statLines(spark, fs, root, moved, tableMeta)
+    val lines = statLines(spark, fs, root, moved, tableMeta, rows.schema)
     // SCHEMA EVOLUTION: a batch may carry columns the table has never
     // seen — the recorded-schema widen happens INSIDE commit's retry
     // loop against the LATEST manifest ([[widenRecordedSchema]]), so a
@@ -3204,11 +3215,14 @@ object Snapshot {
     vMeta.get("eqkeys").foreach(k => require(k == keyCols.mkString(","),
       s"layout's equality deletes are keyed on [$k]; this delete uses " +
       s"[${keyCols.mkString(",")}] — the key list is fixed at first use"))
-    recordedSchema(vMeta).foreach { rec =>
+    // sidecars store the keys at the recorded types, the types every
+    // reader declares for them ([[eqKeyFrame]])
+    val typed = recordedSchema(vMeta).fold(keys) { rec =>
       keyCols.foreach(c => require(rec.fieldNames.contains(c),
         s"equality-delete key column '$c' is not in the table schema"))
+      keys.select(keyCols.map(c => col(c).cast(rec(c).dataType).as(c)): _*)
     }
-    val moved = stageEqSidecars(spark, h.fs, h.root, keys)
+    val moved = stageEqSidecars(spark, h.fs, h.root, typed)
     if (moved.isEmpty) return h.v // empty key set: nothing to delete
     val lines = moved.map(f => s"$f\tk:${keyCols.mkString(",")}")
     commit(h.fs, h.root, Some(h.v), Set.empty, lines,
@@ -3252,7 +3266,7 @@ object Snapshot {
     val movedData = stagePartitioned(fs, root, "upsert", batch, partitionCol)
     val tableMeta = Seq("stats", "rowids", "nullstats")
       .flatMap(k => prevMeta.get(k).orElse(meta.get(k)).map(k -> _)).toMap
-    val dataLines = statLines(spark, fs, root, movedData, tableMeta)
+    val dataLines = statLines(spark, fs, root, movedData, tableMeta, batch.schema)
     // stage the key sidecar — a fresh upserted table (no previous rows)
     // still writes it: replayed or out-of-order batches must hide older
     // images exactly like steady-state ones
@@ -3297,7 +3311,7 @@ object Snapshot {
     val visible = applyDeletesKeyed(spark, qualified,
       keyedScan(spark, qualified, h.meta, candLines.map(pathOf), None),
       h.deletes)
-    val eqk = eqKeyFrame(spark, qualified, eqs)
+    val eqk = eqKeyFrame(spark, qualified, eqs, visible.schema)
     val keyCols = eqKeyColsOf(eqs)
     val addv = org.apache.spark.sql.functions.broadcast {
       import spark.implicits._
@@ -3370,7 +3384,7 @@ object Snapshot {
       s"alsoReplaceParts entry '$d' is not a '$partitionCol=' dir name"))
     val touched = moved.map(_.split("/")(0)).toSet ++ alsoReplaceParts
     val replaced = files.filter(f => touched(f.split("/")(0))).toSet
-    val lines = statLines(spark, fs, root, moved, vMeta)
+    val lines = statLines(spark, fs, root, moved, vMeta, replacement.schema)
     // `replacedParts`: a rebase aborts if a CONCURRENT commit landed a
     // file into a partition this commit replaces wholesale — that file
     // was never read into the replacement, so rebasing would silently
@@ -3473,35 +3487,21 @@ object Snapshot {
     * key's old image can never hide in an unindexed file. Typed
     * partition values for the old locations are read from the touched
     * partitions themselves — no string-to-type dir rendering, and the
-    * isin restriction stays a planning-time partition filter.
-    *
-    * `deleteKeys` (the general-MERGE seam): keys whose CURRENT rows
-    * are removed in the SAME atomic commit — located through the same
-    * index probe, dropped by the same survivor anti-join, with nothing
-    * re-added. What `MERGE … WHEN MATCHED THEN DELETE` lowers onto;
-    * the cost shape is unchanged (a deleted key touches exactly the
-    * partitions that held it). A delete-only call (empty `updates`) is
-    * legal as long as some delete key exists in the table. */
+    * isin restriction stays a planning-time partition filter. */
   def mergeAnywhere(spark: SparkSession, path: String, partitionCol: String,
       updates: DataFrame, keyCols: Seq[String], idxPath: String,
       sortCols: Seq[String] = Nil,
       meta: Map[String, String] = Map.empty,
-      indexBuckets: Int = 32,
-      deleteKeys: Option[DataFrame] = None): Long = {
+      indexBuckets: Int = 32): Long = {
     require(keyCols.nonEmpty, "mergeAnywhere needs at least one key column")
     require(updates.columns.contains(partitionCol),
       s"mergeAnywhere updates lack partition column '$partitionCol'")
     keyCols.foreach(c => require(updates.columns.contains(c),
       s"mergeAnywhere updates lack key column '$c'"))
-    deleteKeys.foreach(dk => keyCols.foreach(c =>
-      require(dk.columns.contains(c),
-        s"mergeAnywhere deleteKeys lack key column '$c'")))
     KeyIndex.refresh(spark, path, keyCols, idxPath, indexBuckets): Unit
     val h = headOf(spark, path)
     requireNoDeletes(h.lines, path, "mergeAnywhere")
-    val keyFrame = deleteKeys.map(_.select(keyCols.map(col): _*))
-      .foldLeft(updates.select(keyCols.map(col): _*))(_ unionByName _)
-      .distinct()
+    val keyFrame = updates.select(keyCols.map(col): _*).distinct()
     val oldFiles = KeyIndex.filesForKeys(spark, idxPath, keyFrame)
     val oldParts = oldFiles.map(_.split("/")(0)).toSet
     val oldPartFiles = h.files.filter(f => oldParts(f.split("/")(0)))
@@ -3513,15 +3513,69 @@ object Snapshot {
     val newVals: Seq[Any] = updates.select(col(partitionCol)).distinct()
       .collect().map(_.get(0)).toIndexedSeq
     val touched = (oldVals ++ newVals).distinct
-    require(touched.nonEmpty,
-      "mergeAnywhere touches nothing: no update rows and no delete key " +
-      "present in the table")
-    // lineage: a batch that DECLARES row ids (the SQL general-merge
-    // seam — matched updates keep their identity, inserts carry NULL
-    // for fresh mint) passes them through; a plain batch takes fresh
-    // ids, the replace-or-insert contract
+    require(touched.nonEmpty, "mergeAnywhere with an empty updates batch")
+    // lineage: a batch that declares row ids passes them through; a
+    // plain batch takes fresh ids, the replace-or-insert contract
     mergeTouched(spark, path, partitionCol, h, touched, keyFrame, keyCols,
       updates, sortCols, meta, oldParts)
+  }
+
+  /** The FILE-GRAIN keyed rewrite under SQL MERGE
+    * ([[graft.sources.sql.GraftMergeIntoCommand]]): the files that can
+    * hold a key of `keys` (columns = the key columns) are located
+    * through the key index at `idxPath` — refreshed first, probed once
+    * — and read at the head as ONE [[keyedScan]]: every candidate row
+    * carries its `(__dv_file, __dv_pos)` identity, plus its
+    * `_row_id` on a lineage layout. `rewrite` maps that candidate
+    * frame to (the candidate files' new contents, rows to add), each
+    * carrying the table's columns (plus `_row_id` on lineage — NULL
+    * mints a fresh id); (None, None) commits nothing. The new rows
+    * stage in one write, one file per partition they land in, and
+    * commit against the head the candidates were read at: the
+    * candidate files are removed iff the first side is Some, and every
+    * other file — other files of the same partitions included — keeps
+    * its entry and bytes. A concurrent commit that re-files a candidate
+    * or adds a file to a partition this one rewrote or wrote into
+    * aborts it ([[commit]]'s `replacedParts`); commits elsewhere
+    * rebase. Copy-on-write: outstanding deletion vectors refuse first.
+    * Returns the committed version, if any. */
+  private[graft] def rewriteKeyed(spark: SparkSession, path: String,
+      partitionCol: String, keys: DataFrame, idxPath: String)(
+      rewrite: DataFrame => (Option[DataFrame], Option[DataFrame]))
+      : Option[Long] = {
+    val keyCols = keys.columns.toSeq
+    KeyIndex.refresh(spark, path, keyCols, idxPath, 32): Unit
+    val h = headOf(spark, path)
+    requireNoDeletes(h.lines, path, "MERGE")
+    // a located file no longer live at the head lost its rows to a
+    // delete (a re-file would have added files the probe refuses)
+    val located = KeyIndex.filesForKeys(spark, idxPath, keys).toSet
+    val candLines = h.dataLines.filter(l => located(pathOf(l)))
+    val cand = candLines.map(pathOf)
+    val lineage = rowIdsOn(h.meta)
+    if (lineage) requireLineageEntries(candLines, path)
+    val candidates =
+      if (cand.nonEmpty)
+        keyedScan(spark, h.qualified, h.meta, cand,
+          if (lineage) Some(basesOf(candLines)) else None)
+      else {
+        val empty = emptyTyped(spark, h.qualified, h.meta)
+          .withColumn("__dv_file", lit(null).cast("string"))
+          .withColumn("__dv_pos", lit(null).cast(LongType))
+        if (lineage) empty.withColumn(RowIdCol, lit(null).cast(LongType))
+        else empty
+      }
+    val (rewritten, added) = rewrite(candidates)
+    val rows = (rewritten.toSeq ++ added).reduceOption(_ unionByName _)
+    rows.map { r =>
+      val moved = stagePartitioned(h.fs, h.root, "merge",
+        r.repartition(col(partitionCol)), partitionCol)
+      val removed = if (rewritten.isEmpty) Set.empty[String] else cand.toSet
+      commit(h.fs, h.root, Some(h.v), removed,
+        statLines(spark, h.fs, h.root, moved, h.meta, r.schema),
+        Map("op" -> "replace", "merge_keys" -> keyCols.mkString(",")),
+        replacedParts = (removed.toSeq ++ moved).map(_.split("/")(0)).toSet)
+    }
   }
 
   /** Commits a change feed may cross WITHOUT losing attribution: they
@@ -4727,7 +4781,7 @@ object Snapshot {
     require(moved.nonEmpty,
       s"stageAppend on $path with an EMPTY batch — nothing to stage or " +
       "audit (an empty micro-batch advancing a marker is append's job)")
-    val lines = statLines(spark, fs, root, moved, curMeta)
+    val lines = statLines(spark, fs, root, moved, curMeta, rows.schema)
     val id = java.util.UUID.randomUUID().toString
     // pcol rides the pointer so publish never has to GUESS the
     // partition column from schema inference
@@ -4918,7 +4972,7 @@ object Snapshot {
       "stage or audit")
     // table-state keys (stats / rowids / nullstats) from the branch
     // BASE: the declarations are fixed at bootstrap, so base == current
-    val lines = statLines(spark, fs, root, moved, baseMeta)
+    val lines = statLines(spark, fs, root, moved, baseMeta, rows.schema)
     val header = (Map("op" -> "branch-append") ++ meta)
       .toSeq.sortBy(_._1).map { case (k, v) => s"#$k=$v" }
     val dir = branchDir(root, name)

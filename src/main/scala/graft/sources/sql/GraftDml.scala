@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftshim.GraftShim
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** SQL DML over the snapshot store: `DELETE FROM`
   * / `UPDATE` / `MERGE INTO` on `graft.<table>`, completing the SQL
@@ -34,13 +34,13 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *    vector (plus the re-imaged rows for UPDATE), O(matched rows),
   *    zero data files rewritten by a DELETE. A `WHERE k IN (subquery)`
   *    conjunct lowers onto the general-merge machinery instead.
-  *  - `MERGE INTO graft.t USING src ON t.k = s.k …` — the exact upsert
-  *    (`WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`)
-  *    executes as [[Snapshot.mergeAnywhere]]: cross-partition keys
-  *    located through the secondary key index (q88's contract),
-  *    O(touched partitions), with the index maintained as a sibling
-  *    layout of the table; every other clause shape lowers through
-  *    [[GraftMergeIntoCommand]] ([[mergeCommand]] scaladoc).
+  *  - `MERGE INTO graft.t USING src ON t.k = s.k …` — every clause
+  *    shape, the exact upsert included — lowers through ONE command
+  *    ([[GraftMergeIntoCommand]], [[mergeCommand]] scaladoc): the
+  *    files that can hold a source key are located through the
+  *    secondary key index (kept as a sibling layout of the table) and
+  *    rewritten file by file in one copy-on-write commit
+  *    ([[Snapshot.rewriteKeyed]]), O(candidate files).
   *
   * Resolved-to-unresolved seam: the analyzed assignments and
   * conditions carry `AttributeReference`s bound to the DML statement's
@@ -216,28 +216,21 @@ object GraftDml {
 
   /** Rewrite an analyzed MERGE on a graft table; None = not ours.
     *
-    * Two lowerings, picked by shape:
-    *
-    *  - the EXACT UPSERT (`WHEN MATCHED THEN UPDATE SET * WHEN NOT
-    *    MATCHED THEN INSERT *`, no clause conditions, identical
-    *    complete images of plain source columns) keeps its blind
-    *    replace-or-insert path ([[GraftMergeCommand]]) — it never
-    *    reads the matched rows' images, the cheapest possible shape;
-    *  - everything else (clause conditions, `WHEN MATCHED THEN
-    *    DELETE`, partial/expression images, diverging update vs
-    *    insert images, insert-only merges) lowers through
-    *    [[GraftMergeIntoCommand]], which reads ONLY the index-located
-    *    candidate rows, evaluates the clause chain per matched pair
-    *    (first matching clause wins, SQL MERGE semantics), and commits
-    *    the new images + deleted keys ATOMICALLY via
-    *    [[Snapshot.mergeAnywhere]]'s update/delete-key seam.
+    * Every clause shape — the exact upsert (`WHEN MATCHED THEN UPDATE
+    * SET * WHEN NOT MATCHED THEN INSERT *`), clause conditions, `WHEN
+    * MATCHED THEN DELETE`, partial/expression images, diverging update
+    * vs insert images, insert-only merges — lowers into ONE command,
+    * [[GraftMergeIntoCommand]], so one statement has one semantics:
+    * first matching clause wins per matched pair (SQL MERGE order),
+    * the cardinality rule holds at row grain, and a matched row keeps
+    * its durable id on a lineage table.
     *
     * Still refused, loudly: `WHEN NOT MATCHED BY SOURCE` (conditions
     * on ABSENCE from the source — needs a full table scan, O(table)),
     * rekeying an ON column inside UPDATE (a rekey is a delete plus an
     * insert), inserts that leave the partition column or an ON key
     * unassigned, and subqueries in any merge expression. */
-  private[sql] def mergeCommand(m: MergeIntoTable): Option[LeafRunnableCommand] =
+  private[sql] def mergeCommand(m: MergeIntoTable): Option[GraftMergeIntoCommand] =
     relationOf(m.targetTable).map { case (t, rel) =>
       if (m.notMatchedBySourceActions.nonEmpty) unsupported(
         "MERGE on graft tables does not support WHEN NOT MATCHED BY " +
@@ -261,145 +254,78 @@ object GraftDml {
       }
       val tCols = rel.output.map(_.name)
       val sNames = m.sourceTable.output.map(_.name).toSet
-      def starMissing(clause: String): Unit = {
+      val pcol = t.dmlPartitionCol("MERGE")
+      def prefixed(e: Expression): Column = unresolve(e, {
+        case a if tOut.contains(a) => GraftMergeIntoCommand.TP + a.name
+        case a if sOut.contains(a) => GraftMergeIntoCommand.SP + a.name
+        case a => unsupported(
+          s"MERGE expression references '${a.name}', which is neither a " +
+          "target nor a source column")
+      })
+      def assignKey(a: Assignment, clause: String): String =
+        strip(a.key) match {
+          case ar: AttributeReference => ar.name
+          case other => unsupported(
+            s"MERGE $clause assigns top-level columns only, got " +
+            s"'${other.sql}'")
+        }
+      def updateSet(assigns: Seq[Assignment]): Map[String, Column] =
+        assigns.flatMap { a =>
+          val k = assignKey(a, "UPDATE")
+          strip(a.value) match {
+            // aligned identity (t.k = t.k) — not an update
+            case v: AttributeReference
+                if tOut.contains(v) && v.name == k => None
+            case v =>
+              if (keyCols.contains(k)) v match {
+                // t.k = s.k is identity under the ON equality
+                case ar: AttributeReference if ar.name == k => ()
+                case other => unsupported(
+                  s"MERGE UPDATE rekeys ON column '$k' (= " +
+                  s"'${other.sql}') — a rekey is a DELETE plus an " +
+                  "INSERT, not an update in place")
+              }
+              Some(k -> prefixed(a.value))
+          }
+        }.toMap
+      def insertSet(assigns: Seq[Assignment]): Map[String, Column] =
+        assigns.map(a => assignKey(a, "INSERT") -> prefixed(a.value)).toMap
+      // `SET *` / `INSERT *`: every table column from the same-named
+      // source column
+      def star(clause: String): Map[String, Column] = {
         val missing = tCols.filterNot(sNames)
         if (missing.nonEmpty) unsupported(
           s"MERGE $clause * needs the source to carry every table " +
           s"column — missing ${missing.mkString(", ")}")
+        tCols.map(c => c -> GraftShim.column(UnresolvedAttribute.quoted(
+          GraftMergeIntoCommand.SP + c))).toMap
       }
-
-      // ---- fast path: the exact upsert (None = shape doesn't fit) --
-      def plainImage(assigns: Seq[Assignment]): Option[Map[String, String]] = {
-        val pairs = assigns.map { a =>
-          (strip(a.key), strip(a.value)) match {
-            case (k: AttributeReference, v: AttributeReference)
-                if sOut.contains(v) => Some(k.name -> v.name)
-            case _ => None
-          }
+      val matched: Seq[(Option[Column], Option[Map[String, Column]])] =
+        m.matchedActions.map {
+          case UpdateAction(c, assigns, _) =>
+            (c.map(prefixed), Some(updateSet(assigns)))
+          case UpdateStarAction(c) => (c.map(prefixed), Some(star("UPDATE SET")))
+          case DeleteAction(c) => (c.map(prefixed), None)
+          case other => unsupported(
+            s"unsupported MERGE matched action '$other'")
         }
-        if (pairs.forall(_.isDefined)) Some(pairs.flatten.toMap) else None
+      val notMatched: Seq[(Option[Column], Map[String, Column])] =
+        m.notMatchedActions.map {
+          case InsertAction(c, assigns) => (c.map(prefixed), insertSet(assigns))
+          case InsertStarAction(c) => (c.map(prefixed), star("INSERT"))
+          case other => unsupported(
+            s"unsupported MERGE not-matched action '$other'")
+        }
+      notMatched.foreach { case (_, set) =>
+        val need = (pcol +: keyCols).distinct.filterNot(set.contains)
+        if (need.nonEmpty) unsupported(
+          s"MERGE INSERT must assign the partition column and every " +
+          s"ON key column — missing ${need.mkString(", ")} (unassigned " +
+          "OTHER columns insert as NULL)")
       }
-      def starImage: Option[Map[String, String]] = {
-        starMissing("SET/INSERT"); Some(tCols.map(c => c -> c).toMap)
-      }
-      val fast: Option[GraftMergeCommand] =
-        (m.matchedActions, m.notMatchedActions) match {
-          case (Seq(mu), Seq(ni)) =>
-            val updImg = mu match {
-              case UpdateAction(None, assigns, _) => plainImage(assigns)
-              case UpdateStarAction(None) => starImage
-              case _ => None
-            }
-            val insImg = ni match {
-              case InsertAction(None, assigns) => plainImage(assigns)
-              case InsertStarAction(None) => starImage
-              case _ => None
-            }
-            for {
-              u <- updImg; i <- insImg
-              if u == i && tCols.forall(u.contains)
-            } yield GraftMergeCommand(t.dmlPath("MERGE"),
-              t.dmlPartitionCol("MERGE"), m.sourceTable, u, keyCols)
-          case _ => None
-        }
-
-      fast.getOrElse {
-        // ---- general lowering -----------------------------------------
-        val pcol = t.dmlPartitionCol("MERGE")
-        def prefixed(e: Expression): Column = unresolve(e, {
-          case a if tOut.contains(a) => GraftMergeIntoCommand.TP + a.name
-          case a if sOut.contains(a) => GraftMergeIntoCommand.SP + a.name
-          case a => unsupported(
-            s"MERGE expression references '${a.name}', which is neither a " +
-            "target nor a source column")
-        })
-        def assignKey(a: Assignment, clause: String): String =
-          strip(a.key) match {
-            case ar: AttributeReference => ar.name
-            case other => unsupported(
-              s"MERGE $clause assigns top-level columns only, got " +
-              s"'${other.sql}'")
-          }
-        def updateSet(assigns: Seq[Assignment]): Map[String, Column] =
-          assigns.flatMap { a =>
-            val k = assignKey(a, "UPDATE")
-            strip(a.value) match {
-              // aligned identity (t.k = t.k) — not an update
-              case v: AttributeReference
-                  if tOut.contains(v) && v.name == k => None
-              case v =>
-                if (keyCols.contains(k)) v match {
-                  // t.k = s.k is identity under the ON equality
-                  case ar: AttributeReference if ar.name == k => ()
-                  case other => unsupported(
-                    s"MERGE UPDATE rekeys ON column '$k' (= " +
-                    s"'${other.sql}') — a rekey is a DELETE plus an " +
-                    "INSERT, not an update in place")
-                }
-                Some(k -> prefixed(a.value))
-            }
-          }.toMap
-        def starUpdateSet: Map[String, Column] = {
-          starMissing("UPDATE SET")
-          tCols.map(c => c ->
-            GraftShim.column(UnresolvedAttribute.quoted(
-              GraftMergeIntoCommand.SP + c))).toMap
-        }
-        def insertSet(assigns: Seq[Assignment]): Map[String, Column] =
-          assigns.map { a =>
-            val k = assignKey(a, "INSERT")
-            k -> prefixed(a.value)
-          }.toMap
-        def starInsertSet: Map[String, Column] = {
-          starMissing("INSERT")
-          tCols.map(c => c ->
-            GraftShim.column(UnresolvedAttribute.quoted(
-              GraftMergeIntoCommand.SP + c))).toMap
-        }
-        val matched: Seq[(Option[Column], Option[Map[String, Column]])] =
-          m.matchedActions.map {
-            case UpdateAction(c, assigns, _) =>
-              (c.map(prefixed), Some(updateSet(assigns)))
-            case UpdateStarAction(c) => (c.map(prefixed), Some(starUpdateSet))
-            case DeleteAction(c) => (c.map(prefixed), None)
-            case other => unsupported(
-              s"unsupported MERGE matched action '$other'")
-          }
-        val notMatched: Seq[(Option[Column], Map[String, Column])] =
-          m.notMatchedActions.map {
-            case InsertAction(c, assigns) =>
-              (c.map(prefixed), insertSet(assigns))
-            case InsertStarAction(c) => (c.map(prefixed), starInsertSet)
-            case other => unsupported(
-              s"unsupported MERGE not-matched action '$other'")
-          }
-        notMatched.foreach { case (_, set) =>
-          val need = (pcol +: keyCols).distinct.filterNot(set.contains)
-          if (need.nonEmpty) unsupported(
-            s"MERGE INSERT must assign the partition column and every " +
-            s"ON key column — missing ${need.mkString(", ")} (unassigned " +
-            "OTHER columns insert as NULL)")
-        }
-        GraftMergeIntoCommand(t.dmlPath("MERGE"), pcol, m.sourceTable,
-          keyCols, tableSchema(rel), matched, notMatched)
-      }
+      GraftMergeIntoCommand(t.dmlPath("MERGE"), pcol, m.sourceTable,
+        keyCols, tableSchema(rel), matched, notMatched)
     }
-}
-
-/** MERGE executed through [[Snapshot.mergeAnywhere]]: update keys
-  * located via the secondary key index (kept as a sibling layout of
-  * the table, refreshed inside the merge), O(touched partitions). */
-case class GraftMergeCommand(path: String, pcol: String,
-    source: LogicalPlan, image: Map[String, String], keyCols: Seq[String])
-    extends LeafRunnableCommand {
-  override def run(session: SparkSession): Seq[Row] = {
-    val img = GraftShim.ofRows(session, source)
-      .select(image.toSeq.sortBy(_._1)
-        .map { case (tc, sc) => col(sc).as(tc) }: _*)
-    Snapshot.mergeAnywhere(session, path, pcol, img, keyCols,
-      idxPath = s"${path}_dml_idx_${keyCols.mkString("_")}"): Unit
-    Seq.empty
-  }
 }
 
 /** UPDATE (`set = Some(image)`) or DELETE (`set = None`) on a graft
@@ -419,9 +345,9 @@ case class GraftMergeCommand(path: String, pcol: String,
   *    the clause's delete action) — a distributed semi-join through the
   *    key index, never a collected value list (the IN set may be
   *    data-sized). Duplicate target keys are legal here (every row of a
-  *    matched key acts — IN semantics; unacted twins survive as
-  *    identity re-images), which is why the merge cardinality rule
-  *    counts SOURCE duplicates, and the source is made DISTINCT.
+  *    matched key acts — IN semantics; an unacted twin is written back
+  *    unchanged), which is why the merge cardinality rule counts SOURCE
+  *    rows per target row, and the source is made DISTINCT.
   *
   * An all-identity UPDATE (`SET a = a` — every assignment filtered by
   * the alignment check) is a legal SQL no-op: nothing committed. */
@@ -469,35 +395,39 @@ object GraftMergeIntoCommand {
   private[sql] val SP = "_graft_s_"
 }
 
-/** GENERAL MERGE (clause conditions, WHEN MATCHED DELETE, partial or
-  * expression images, insert-only) lowered onto the snapshot store's
-  * one cross-partition merge primitive:
+/** SQL MERGE on a graft table — every clause shape ([[GraftDml]]
+  * `mergeCommand`) and the `WHERE k IN (subquery)` UPDATE/DELETE
+  * ([[GraftRowLevelCommand]]) — as ONE file-grain copy-on-write commit
+  * ([[Snapshot.rewriteKeyed]]):
   *
   *  1. candidate target rows = the files that can hold a source key,
-  *     located through the secondary key index (never a table scan);
+  *     located once through the secondary key index (kept as a sibling
+  *     layout of the table) and read as one keyed scan — never a table
+  *     scan; each row carries its `(__dv_file, __dv_pos)` identity;
   *  2. matched pairs = candidates ⋈ source on the ON keys, both sides
   *     PREFIXED (`_graft_t_*` / `_graft_s_*`) so same-named columns
   *     stay addressable from clause conditions and assignment values;
-  *  3. per pair, the FIRST matched clause whose condition holds wins
-  *     (SQL MERGE clause order); its UPDATE builds a full-row image —
-  *     unassigned columns keep the target's value — or its DELETE
-  *     contributes the pair's key; pairs matching no clause stay
-  *     untouched. More than one source row acting on one target row
-  *     refuses (the Delta cardinality rule) before anything commits;
-  *  4. unmatched source rows walk the NOT MATCHED chain the same way;
-  *     an insert image fills unassigned columns with NULL;
-  *  5. images + deleted keys commit as ONE atomic
-  *     [[Snapshot.mergeAnywhere]] (its `deleteKeys` seam) —
-  *     O(touched partitions), same as the upsert fast path.
+  *  3. per pair, the FIRST matched clause whose condition holds acts
+  *     (SQL MERGE clause order). More than one source row acting on one
+  *     target row refuses (the Delta cardinality rule, at ROW grain)
+  *     before anything commits; a duplicated source key whose other
+  *     rows act on nothing is legal, and so is a duplicated TARGET key —
+  *     every row of it is its own target row;
+  *  4. each candidate row is rewritten as its acting pair's UPDATE
+  *     image (unassigned columns keep the target's value), dropped by a
+  *     DELETE, or written back unchanged; unmatched source rows walk the
+  *     NOT MATCHED chain the same way (unassigned columns insert NULL);
+  *  5. the candidate files' new contents plus the inserts commit as one
+  *     version replacing exactly the candidate files. A merge where no
+  *     pair acts leaves the candidates alone (inserts only), and one
+  *     that also inserts nothing commits nothing.
   *
-  * At 100 TB: the source is read twice (matched join + unmatched
-  * anti-join) and the table contributes only index-located candidate
-  * files; the matched-pair frame persists across the clause
-  * evaluations so the join runs once.
+  * At 100 TB: the source is read for the index probe, the matched join
+  * and the not-matched anti-join (persisted once), and the table
+  * contributes only index-located candidate files.
   *
-  * LINEAGE tables (`rowids=on`): matched update images and identity
-  * re-images CARRY the target row's `_row_id` (read via the lineage
-  * file-subset scan), so a SQL UPDATE/MERGE-update keeps the row's
+  * LINEAGE tables (`rowids=on`): update images and unchanged rows CARRY
+  * the target row's `_row_id`, so a SQL UPDATE/MERGE keeps the row's
   * durable identity exactly like [[Snapshot.updateWhere]] — typed
   * change-feed consumers keep pairing pre/post by id. Inserted rows
   * take fresh ids at commit (NULL image), the library rule. */
@@ -510,165 +440,99 @@ case class GraftMergeIntoCommand(path: String, pcol: String,
   import GraftMergeIntoCommand.{SP, TP}
 
   override def run(session: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions.{first, max, monotonically_increasing_id, when}
-    val idxPath = s"${path}_dml_idx_${keyCols.mkString("_")}"
-    val v = graft.sources.Snapshot.currentVersion(session, path).getOrElse(
-      throw new IllegalStateException(s"no committed snapshot under $path"))
-    // The source plan is consumed up to four times (key-distinct for
-    // the index probe, the matched join, the not-matched anti-join, the
-    // empty-updates guard) — persist it once so an expensive MERGE
-    // source (itself a query) executes once, not per consumer.
-    // Unpersisted in the finally below.
-    val src = GraftShim.ofRows(session, source)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    import org.apache.spark.sql.functions.{coalesce, when}
+    val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // the source feeds the index probe, the matched join and the
+    // not-matched anti-join: an expensive source (itself a query)
+    // executes once
+    val src = GraftShim.ofRows(session, source).persist(disk)
+    var pairs: Option[DataFrame] = None
     try {
-    if (src.isEmpty) return Seq.empty // a legal no-op
-    val sPref = src.columns.toSeq.foldLeft(src)((d, c) =>
-      d.withColumnRenamed(c, SP + c))
-
-    val lineage = Snapshot.metaOf(session, path, v)
-      .get("rowids").contains("on")
-    val RowId = "_row_id"
-    // image columns = recorded schema (+ the id on lineage tables, so
-    // updated rows KEEP their identity through the key-grain replace)
-    val outSchema =
-      if (lineage) tSchema.add(RowId,
-        org.apache.spark.sql.types.LongType, nullable = true)
-      else tSchema
-    val readCols = outSchema.fieldNames.toSeq
-
-    // candidate target rows: only files that can hold a source key
-    graft.sources.KeyIndex.refresh(session, path, keyCols, idxPath, 32): Unit
-    val candFiles = graft.sources.KeyIndex.filesForKeys(session, idxPath,
-      src.select(keyCols.map(col): _*).distinct())
-    val target =
-      if (candFiles.isEmpty)
-        session.createDataFrame(
-          session.sparkContext.emptyRDD[Row], outSchema)
-      else (if (lineage)
-        Snapshot.readVersionLineage(session, path, v, Some(candFiles))
-      else Snapshot.readVersionFiles(session, path, v, candFiles))
-        .select(readCols.map(col): _*)
-    // a synthetic per-target-row id: cardinality and identity-re-image
-    // decisions are per ROW (SQL MERGE semantics), and neither the key
-    // (may be duplicated) nor the column tuple (rows may be identical
-    // twins) identifies one.
-    // tid determinism: monotonically_increasing_id is
-    // positional per scan partition, and the candidate-file scan's
-    // partitioning and row order are deterministic (explicit file list,
-    // fixed split packing), so a cache-evicted recompute of pairsAll
-    // reassigns the SAME tids. This holds exactly as long as the
-    // withColumn stays directly above the scan — moving it above a
-    // shuffle would make tids depend on reduce-side fetch order.
-    val tid = "_graft_tid"
-    val tPref = target.select(readCols.map(c => col(c).as(TP + c)): _*)
-      .withColumn(tid, monotonically_increasing_id())
-    val joinCond = keyCols.map(k => col(TP + k) === col(SP + k))
-      .reduce(_ && _)
-
-    val act = "_graft_action"
-    def chain(conds: Seq[Option[Column]]): Column =
-      conds.zipWithIndex.foldLeft(Option.empty[Column]) {
-        case (acc, (cond, i)) =>
-          val c = cond.getOrElse(lit(true))
-          Some(acc.fold(when(c, lit(i)))(_.when(c, lit(i))))
-      }.map(_.otherwise(lit(-1))).getOrElse(lit(-1))
-
-    val pairsAll = tPref.join(sPref, joinCond, "inner")
-      .withColumn(act, chain(matched.map(_._1)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pairs = pairsAll.where(col(act) >= 0)
-    try {
-      if (matched.nonEmpty) {
-        // the Delta cardinality rule, at ROW grain: >1 source rows
-        // ACTING on the same target row is ambiguous — a duplicated
-        // source key whose other rows act on nothing is legal (the CDC
-        // is_latest shape), as is a duplicated TARGET key (every row
-        // of the key acts once, the q97 IN-update shape)
-        val dup = pairs.groupBy(col(tid)).count()
-          .where(col("count") > 1).limit(1).count()
-        if (dup > 0) throw new UnsupportedOperationException(
-          "MERGE cardinality violation: more than one source row " +
-          "matched and acted on the same target row — dedup the source " +
-          "on the ON keys first")
-      }
-      val updIdx = matched.zipWithIndex.collect { case ((_, Some(_)), i) => i }
-      val delIdx = matched.zipWithIndex.collect { case ((_, None), i) => i }
-      // update-image value for column f: the acting clause's expression
-      // (the action index already encodes first-match), cast to the
-      // recorded type; unassigned columns — and the id — keep the
-      // target's value
-      def updValue(f: StructField): Column =
-        updIdx.foldLeft(Option.empty[Column]) { (acc, i) =>
-          val value = matched(i)._2.get.getOrElse(f.name, col(TP + f.name))
+      if (src.isEmpty) return Seq.empty // a legal no-op
+      val sPref = src.select(src.columns.toSeq.map(c => col(c).as(SP + c)): _*)
+      val Id = Seq("__dv_file", "__dv_pos")
+      val act = "_graft_action"
+      def chain(conds: Seq[Option[Column]]): Column =
+        conds.zipWithIndex.foldLeft(Option.empty[Column]) {
+          case (acc, (cond, i)) =>
+            val c = cond.getOrElse(lit(true))
+            Some(acc.fold(when(c, lit(i)))(_.when(c, lit(i))))
+        }.map(_.otherwise(lit(-1))).getOrElse(lit(-1))
+      // the image column for `f`: the value of the clause whose index
+      // `act` holds, cast to the recorded type
+      def image(f: StructField, clauses: Seq[(Int, Column)]): Column =
+        clauses.foldLeft(Option.empty[Column]) { case (acc, (i, value)) =>
           Some(acc.fold(when(col(act) === i, value))(
             _.when(col(act) === i, value)))
         }.get.cast(f.dataType).as(f.name)
-      val updRows: Option[DataFrame] =
-        if (updIdx.isEmpty) None
-        else Some(pairs.where(col(act).isin(updIdx: _*))
-          .select(outSchema.fields.toSeq.map { f =>
-            if (f.name == RowId && lineage)
-              col(TP + RowId).cast(f.dataType).as(f.name)
-            else updValue(f)
-          }: _*))
-      val delKeys: Option[DataFrame] =
-        if (delIdx.isEmpty) None
-        else Some(pairs.where(col(act).isin(delIdx: _*))
-          .select(keyCols.map(k => col(TP + k).as(k)): _*))
 
-      // DUPLICATE TARGET KEYS: the commit replaces rows at KEY grain
-      // (anti-join + re-add), so a row with NO acting pair that shares
-      // a key with an acting pair would silently vanish. Those rows
-      // re-image as IDENTITY — one image per row, via the per-row
-      // max(action) over the synthetic tid (a row acted on by one pair
-      // and missed by another is NOT an identity row).
-      val identityExtras: Option[DataFrame] =
-        if (matched.isEmpty) None
-        else {
-          val actedKeys = pairs
-            .select(keyCols.map(k => col(TP + k).as(k)): _*).distinct()
-          val perRow = pairsAll.groupBy(col(tid)).agg(
-            max(col(act)).as("_graft_maxact"),
-            readCols.map(c => first(col(TP + c)).as(TP + c)): _*)
-          Some(perRow.where(col("_graft_maxact") === -1)
-            .join(actedKeys,
-              keyCols.map(k => col(TP + k) === col(k)).reduce(_ && _),
-              "left_semi")
-            .select(outSchema.fields.toSeq.map(f =>
-              col(TP + f.name).cast(f.dataType).as(f.name)): _*))
+      Snapshot.rewriteKeyed(session, path, pcol,
+          src.select(keyCols.map(col): _*).distinct(),
+          s"${path}_dml_idx_${keyCols.mkString("_")}") { cand =>
+        val lineage = cand.columns.contains(Snapshot.RowIdCol)
+        val out =
+          if (lineage) tSchema.add(Snapshot.RowIdCol, LongType) else tSchema
+        val tPref = cand.select(
+          out.fieldNames.toSeq.map(c => col(c).as(TP + c)) ++ Id.map(col): _*)
+        // every matched pair with its acting clause (-1: none), O(matched
+        // source rows) — read by the rule check, the rewrite and the
+        // not-matched anti-join
+        val matchedPairs = tPref.join(sPref,
+            keyCols.map(k => col(TP + k) === col(SP + k)).reduce(_ && _))
+          .withColumn(act, chain(matched.map(_._1)))
+          .persist(disk)
+        pairs = Some(matchedPairs)
+        val acting = matchedPairs.where(col(act) >= 0)
+        // the cardinality rule: one acting source row per target row.
+        // Its identities collect like the index probe's source keys.
+        val acted =
+          if (matched.isEmpty) Array.empty[Row]
+          else acting.select(Id.map(col): _*).collect()
+        if (acted.distinct.length < acted.length)
+          throw new UnsupportedOperationException(
+            "MERGE cardinality violation: more than one source row " +
+            "matched and acted on the same target row — dedup the " +
+            "source on the ON keys first")
+        val updates = matched.zipWithIndex.collect {
+          case ((_, Some(set)), i) => (i, set)
         }
-
-      val insRows: Option[DataFrame] =
-        if (notMatched.isEmpty) None
-        else Some(sPref
-          .join(tPref.select(keyCols.map(k => col(TP + k)): _*),
-            joinCond, "left_anti")
+        // each candidate row: its acting UPDATE's image, dropped by a
+        // DELETE, or (act -1) written back unchanged
+        val rewritten =
+          if (acted.isEmpty) None
+          else Some(tPref
+            .join(acting.select((Id ++ sPref.columns :+ act).map(col): _*),
+              Id, "left")
+            .withColumn(act, coalesce(col(act), lit(-1)))
+            .where(col(act).isin(-1 +: updates.map(_._1): _*))
+            .select(out.fields.toSeq.map { f =>
+              if (f.name == Snapshot.RowIdCol) col(TP + f.name).as(f.name)
+              else image(f, (-1 -> col(TP + f.name)) +: updates.map {
+                case (i, set) => i -> set.getOrElse(f.name, col(TP + f.name))
+              })
+            }: _*))
+        val matchedKeys = matchedPairs
+          .select(keyCols.map(k => col(SP + k).as(s"_graft_m_$k")): _*)
+        val inserts = Some(notMatched).filter(_.nonEmpty).map(_ => sPref
+          .join(matchedKeys,
+            keyCols.map(k => col(SP + k) === col(s"_graft_m_$k")).reduce(_ && _),
+            "left_anti")
           .withColumn(act, chain(notMatched.map(_._1)))
           .where(col(act) >= 0)
-          .select(outSchema.fields.toSeq.map { f =>
-            if (f.name == RowId && lineage)
-              // inserted rows take FRESH ids at commit (the library rule)
-              lit(null).cast(f.dataType).as(f.name)
-            else notMatched.indices.foldLeft(Option.empty[Column]) { (acc, i) =>
-              val value = notMatched(i)._2.getOrElse(f.name, lit(null))
-              Some(acc.fold(when(col(act) === i, value))(
-                _.when(col(act) === i, value)))
-            }.get.cast(f.dataType).as(f.name)
+          .select(out.fields.toSeq.map { f =>
+            // inserted rows take FRESH ids at commit (the library rule)
+            if (f.name == Snapshot.RowIdCol) lit(null).cast(LongType).as(f.name)
+            else image(f, notMatched.indices.map(i =>
+              i -> notMatched(i)._2.getOrElse(f.name, lit(null))))
           }: _*))
-
-      val updates = Seq(updRows, identityExtras, insRows).flatten
-        .reduceOption(_ unionByName _)
-        .getOrElse(session.createDataFrame(
-          session.sparkContext.emptyRDD[Row], outSchema))
-      val del = delKeys.filterNot(_.isEmpty)
-      // matched nothing, inserted nothing, deleted nothing: legal no-op
-      if (del.nonEmpty || !updates.isEmpty)
-        Snapshot.mergeAnywhere(session, path, pcol, updates, keyCols,
-          idxPath, deleteKeys = del): Unit
+        // nothing acted: only a non-empty insert set commits
+        (rewritten, if (rewritten.isEmpty) inserts.filterNot(_.isEmpty) else inserts)
+      }: Unit
       Seq.empty
-    } finally pairsAll.unpersist()
-    } finally src.unpersist()
+    } finally {
+      pairs.foreach(_.unpersist())
+      src.unpersist()
+    }
   }
 }
 

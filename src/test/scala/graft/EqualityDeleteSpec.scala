@@ -83,6 +83,25 @@ class EqualityDeleteSpec extends AnyFunSuite {
     assert(state(path).size == 6)
   }
 
+  test("equality sidecars read under the key columns' recorded types: planning a read over them runs no job") {
+    import spark.implicits._
+    val path = build("graft-eq-plan",
+      (1L to 6L).map(i => row(i, 10 * i, if (i <= 3) "2024-01-01" else "2024-01-02")))
+    Snapshot.upsertByKeys(spark, path, "event_date",
+      Seq(row(2, 200, "2024-01-01")).toDF("event_id", "value", "event_date"),
+      Seq("event_id"))
+    // INT keys against the LONG key column: stored at the recorded type
+    Snapshot.deleteByKeys(spark, path, Seq(5).toDF("event_id"))
+    var snap: org.apache.spark.sql.DataFrame = null
+    val planJobs = TestJobs.jobsDuring(spark) {
+      snap = Snapshot.readSnapshot(spark, path)
+    }
+    assert(planJobs == 0, s"planning the read ran $planJobs job(s)")
+    assert(snap.collect()
+      .map(r => r.getAs[Long]("event_id") -> r.getAs[Long]("value")).toMap ==
+      Map(1L -> 10L, 2L -> 200L, 3L -> 30L, 4L -> 40L, 6L -> 60L))
+  }
+
   test("deleteByKeys commits with ZERO table reads — every data file destroyed first") {
     import spark.implicits._
     val path = build("graft-eq-zeroio",

@@ -273,6 +273,49 @@ class GraftSqlSpec extends AnyFunSuite {
     assert(spark.sql("SELECT count(*) AS n FROM gdml.t")
       .collect().head.getLong(0) == 101L)
 
+    // the exact upsert has the general MERGE's semantics: adding a
+    // clause condition that always holds changes nothing
+    val upsert = """MERGE INTO %s AS t USING %s AS s ON t.id = s.id
+      |WHEN MATCHED THEN UPDATE SET *
+      |WHEN NOT MATCHED THEN INSERT *""".stripMargin
+    //  - on a lineage table the matched row keeps its durable id
+    val whR = tmp("graft-dmlridwh")
+    Snapshot.append(spark, s"$whR/t", "day", rows(1L to 4L),
+      meta = Map("rowids" -> "on"))
+    registerCatalog("gdmlrid", whR)
+    def rowIds(): Map[Long, Long] = Snapshot.readVersionLineage(spark,
+        s"$whR/t", Snapshot.currentVersion(spark, s"$whR/t").get)
+      .select(col("id"), col("_row_id")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val ridBefore = rowIds()
+    Seq((1L, 11.0, "2024-01-01"), (9L, 90.0, "2024-01-01"))
+      .toDF("id", "value", "day").createOrReplaceTempView("rid_src")
+    spark.sql(upsert.format("gdmlrid.t", "rid_src"))
+    val ridAfter = rowIds()
+    assert(ridAfter.size == 5 && (1L to 4L).forall(i => ridAfter(i) == ridBefore(i)),
+      s"the upsert re-minted matched ids: $ridBefore -> $ridAfter")
+    assert(!ridBefore.values.toSet.contains(ridAfter(9L)))
+    //  - both rows of a duplicated target key are re-imaged
+    val whD = tmp("graft-dmldupwh")
+    Snapshot.append(spark, s"$whD/t", "day",
+      Seq((1L, 1.0, "2024-01-01"), (1L, 2.0, "2024-01-01"),
+        (2L, 3.0, "2024-01-02")).toDF("id", "value", "day"))
+    registerCatalog("gdmldup", whD)
+    Seq((1L, 7.0, "2024-01-01")).toDF("id", "value", "day")
+      .createOrReplaceTempView("dup_src")
+    spark.sql(upsert.format("gdmldup.t", "dup_src"))
+    assert(spark.sql("SELECT id, value FROM gdmldup.t ORDER BY id, value")
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
+      Seq((1L, 7.0), (1L, 7.0), (2L, 3.0)))
+    //  - two source rows acting on one target row refuse, commit nothing
+    Seq((2L, 5.0, "2024-01-02"), (2L, 6.0, "2024-01-02"))
+      .toDF("id", "value", "day").createOrReplaceTempView("dup_keys_src")
+    val vDupSrc = Snapshot.currentVersion(spark, s"$whD/t")
+    val exDup = intercept[UnsupportedOperationException](
+      spark.sql(upsert.format("gdmldup.t", "dup_keys_src")))
+    assert(exDup.getMessage.contains("cardinality"))
+    assert(Snapshot.currentVersion(spark, s"$whD/t") == vDupSrc)
+
     // UPDATE: one atomic vector + re-image commit, expression evaluated
     // against the current row
     spark.sql("UPDATE gdml.t SET value = value * 2 WHERE id = 50")
@@ -315,21 +358,25 @@ class GraftSqlSpec extends AnyFunSuite {
     assert(files0.subsetOf(files()), "expression DELETE re-filed data")
 
     // UPDATE and DELETE, with and without a subquery, analyze to the ONE
-    // row-level command (analysis only — nothing runs, nothing commits)
+    // row-level command, and every MERGE — the exact upsert included —
+    // to the ONE merge command (analysis only — nothing runs, nothing
+    // commits)
     val vAnalyze = Snapshot.currentVersion(spark, path).get
     val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    Seq("UPDATE gdml.t SET value = 0 WHERE id = 11",
+    (Seq("UPDATE gdml.t SET value = 0 WHERE id = 11",
         "UPDATE gdml.t SET value = 0 WHERE id IN (SELECT id FROM dml_src)",
         "UPDATE gdml.t SET value = (SELECT max(value) FROM dml_src)",
         "DELETE FROM gdml.t WHERE value * 2 > 0",
         "DELETE FROM gdml.t WHERE id IN (SELECT id FROM dml_src)",
         "DELETE FROM gdml.t WHERE id > (SELECT min(id) FROM dml_src)",
-        "DELETE FROM gdml.t").foreach { sql =>
-      val analyzed = session.sessionState
-        .executePlan(session.sessionState.sqlParser.parsePlan(sql)).analyzed
-      assert(analyzed.isInstanceOf[graft.sources.sql.GraftRowLevelCommand],
-        s"$sql analyzed to ${analyzed.getClass.getName}")
-    }
+        "DELETE FROM gdml.t").map(_ -> "GraftRowLevelCommand") :+
+      (upsert.format("gdml.t", "dml_src") -> "GraftMergeIntoCommand"))
+      .foreach { case (sql, command) =>
+        val analyzed = session.sessionState
+          .executePlan(session.sessionState.sqlParser.parsePlan(sql)).analyzed
+        assert(analyzed.getClass.getName == s"graft.sources.sql.$command",
+          s"$sql analyzed to ${analyzed.getClass.getName}")
+      }
     assert(Snapshot.currentVersion(spark, path).get == vAnalyze)
 
     // refusals: the library contracts surface through SQL unchanged

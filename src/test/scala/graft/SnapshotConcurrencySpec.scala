@@ -52,17 +52,20 @@ class SnapshotConcurrencySpec extends AnyFunSuite {
     * starve the competing commit it is supposed to race (three blocked
     * tasks leave a slot free for the single-task competing write). */
   private def buildLayout(filesPerDate: Int = 4): String = {
-    import spark.implicits._
     val path = s"${tmp("graft-snapcc")}/events_by_date"
+    buildRows().repartition(filesPerDate)
+      .write.partitionBy("event_date").parquet(path)
+    path
+  }
+
+  private def buildRows(): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
     val rows = for {
       d <- 1 to 3
       u <- Seq(3L, 5L, 7L)
       i <- 0 until 4
     } yield (d * 100L + u * 10 + i, u, (d * 100 + i).toLong, f"2024-01-0$d%d")
     rows.toDF("event_id", "user_id", "ts_ms", "event_date")
-      .repartition(filesPerDate)
-      .write.partitionBy("event_date").parquet(path)
-    path
   }
 
   private def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
@@ -313,6 +316,78 @@ class SnapshotConcurrencySpec extends AnyFunSuite {
     val want = (before2.filterNot(id => id >= 300 && id < 400) + 9402L)
       .filterNot(id => id >= 130 && id < 140)
     assert(ids(Snapshot.readSnapshot(spark, path2)) == want)
+  }
+
+  /** A SQL MERGE of one row (event 130, on 2024-01-01) into a two-file-
+    * per-date catalog table, gated inside its clause condition — after
+    * it read its candidate file at its base version, before it commits
+    * — while the test thread lands an append of event 9501 into
+    * `appendDate`. Returns the MERGE's outcome. */
+  private def mergeRacingAppend(appendDate: String)
+      : (String, Either[Throwable, org.apache.spark.sql.DataFrame]) = {
+    import spark.implicits._
+    val wh = tmp("graft-snapccmerge")
+    val path = s"$wh/t"
+    Snapshot.append(spark, path, "event_date",
+      buildRows().repartition(2))
+    val cat = s"gcc${java.util.UUID.randomUUID().toString.take(8)}"
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.sources.sql.GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    spark.udf.register("graft_hold", SnapshotConcurrencySpec.hold _)
+    Seq((130L, 3L, 7L, "2024-01-01"))
+      .toDF("event_id", "user_id", "ts_ms", "event_date")
+      .createOrReplaceTempView("race_src")
+    assert(Snapshot.filesOf(spark, path, 1L)
+      .count(_.startsWith("event_date=2024-01-01/")) == 2)
+    SnapshotConcurrencySpec.started = new CountDownLatch(1)
+    SnapshotConcurrencySpec.gate = new CountDownLatch(1)
+    val (t, result) = try {
+      val pair = inThread(spark.sql(
+        s"""MERGE INTO $cat.t AS t USING race_src AS s
+           |ON t.event_id = s.event_id
+           |WHEN MATCHED AND graft_hold(s.ts_ms) >= 0 THEN UPDATE SET *
+           |WHEN NOT MATCHED THEN INSERT *""".stripMargin))
+      assert(SnapshotConcurrencySpec.started.await(60, TimeUnit.SECONDS))
+      Snapshot.append(spark, path, "event_date",
+        Seq((9501L, 9L, 1L, appendDate))
+          .toDF("event_id", "user_id", "ts_ms", "event_date").coalesce(1))
+      assert(Snapshot.currentVersion(spark, path).contains(2L))
+      pair
+    } finally {
+      SnapshotConcurrencySpec.gate.countDown()
+    }
+    t.join(120000)
+    SnapshotConcurrencySpec.started = null
+    SnapshotConcurrencySpec.gate = null
+    (path, result())
+  }
+
+  test("MERGE racing an append into a partition it rewrites aborts; one elsewhere rebases") {
+    // the append lands a file in 2024-01-01, where the MERGE rewrites
+    // one of two files: a file the MERGE never read — true conflict
+    val (path, clash) = mergeRacingAppend("2024-01-01")
+    clash match {
+      case Left(_: SnapshotConflictException) => // the contract
+      case other => fail(s"expected SnapshotConflictException, got $other")
+    }
+    assert(Snapshot.currentVersion(spark, path).contains(2L))
+    val ts130 = Snapshot.readSnapshot(spark, path)
+      .where(col("event_id") === 130L).select("ts_ms").collect()
+    assert(ts130.map(_.getLong(0)).toSeq == Seq(100L),
+      "the aborted MERGE left a trace")
+
+    // the append lands in 2024-01-03, which the MERGE neither read nor
+    // wrote: it rebases — the untouched file of 2024-01-01 stays live
+    // at the base and is no intruder
+    val (path2, rebased) = mergeRacingAppend("2024-01-03")
+    assert(rebased.isRight, s"disjoint MERGE should rebase, got $rebased")
+    assert(Snapshot.currentVersion(spark, path2).contains(3L))
+    val snap = Snapshot.readSnapshot(spark, path2)
+    assert(ids(snap) == buildRows().select("event_id").collect()
+      .map(_.getLong(0)).toSet + 9501L)
+    assert(snap.where(col("event_id") === 130L).select("ts_ms").collect()
+      .map(_.getLong(0)).toSeq == Seq(7L))
   }
 
   test("rebase dedups a file the winner already listed: no double-counted rows") {

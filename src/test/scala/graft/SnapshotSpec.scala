@@ -592,6 +592,50 @@ class SnapshotSpec extends AnyFunSuite {
       "expire left unreferenced deletion vectors behind")
   }
 
+  test("materialize: a partition whose touched files empty out drops; one that kept rows but did not restage aborts") {
+    val path = buildLayout()
+    Snapshot.init(spark, path, "event_date")
+    val before = ids(Snapshot.readSnapshot(spark, path))
+    // every row of 2024-01-02 hidden, and user 3's rows elsewhere
+    Snapshot.deleteWhereMoR(spark, path, "event_date",
+      col("event_date") === "2024-01-02" || col("user_id") === 3L)
+    val applied = Snapshot.materializeDeletes(spark, path, "event_date")
+    assert(applied.map(_._1).toSet ==
+      Set("event_date=2024-01-01", "event_date=2024-01-02", "event_date=2024-01-03"))
+    val (v, files) = Snapshot.currentFiles(spark, path)
+    assert(Snapshot.deletesOf(spark, path, v).isEmpty)
+    assert(!files.exists(_.startsWith("event_date=2024-01-02/")),
+      s"the emptied partition kept files: $files")
+    assert(ids(Snapshot.readSnapshot(spark, path)) == before.filterNot(id =>
+      id / 100 == 2 || (id / 10) % 10 == 3))
+
+    // an externally-written dir with non-canonical escaping ("a'b",
+    // which a partitioned write escapes as "a%27b"): its survivor
+    // restages under the escaped name, not its own — abort before the
+    // commit, snapshot unchanged
+    import spark.implicits._
+    val path2 = s"${tmp("graft-snap-matext")}/external"
+    val flat = s"${tmp("graft-snap-matext")}/flat"
+    Seq((3L, 30L), (4L, 40L)).toDF("event_id", "ts_ms").coalesce(1)
+      .write.parquet(flat)
+    val dir = new java.io.File(s"$path2/event_date=a'b")
+    assert(dir.mkdirs())
+    new java.io.File(flat).listFiles()
+      .filter(_.getName.endsWith(".parquet")).foreach { f =>
+        java.nio.file.Files.move(f.toPath, new java.io.File(dir, f.getName).toPath)
+      }
+    Snapshot.init(spark, path2, "event_date")
+    Snapshot.deleteWhereMoR(spark, path2, "event_date", col("event_id") === 3L)
+    val v2 = Snapshot.currentVersion(spark, path2)
+    val ex = intercept[IllegalStateException] {
+      Snapshot.materializeDeletes(spark, path2, "event_date")
+    }
+    assert(ex.getMessage.contains("staged rewrite missing"),
+      s"wrong failure mode: ${ex.getMessage}")
+    assert(Snapshot.currentVersion(spark, path2) == v2)
+    assert(ids(Snapshot.readSnapshot(spark, path2)) == Set(4L))
+  }
+
   test("vectors read under their declared schema: planning a read over them runs no job; dvAudit runs one") {
     val path = buildLayout()
     Snapshot.init(spark, path, "event_date")                       // v1
