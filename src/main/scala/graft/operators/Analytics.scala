@@ -3741,9 +3741,10 @@ object Analytics {
   // q93 — `MERGE INTO … WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED
   // THEN INSERT *` through the post-hoc DML rule: q88's cross-partition
   // key move issued as SQL (the earliest day's 1-in-50 cohort re-dated
-  // +1 with a bumped value), executing as a file-grain rewrite — keys
-  // located through the secondary index, O(candidate files), pinned
-  // in-query by the same file-identity rule as q88.
+  // +1 with a bumped value), executing as a file-grain rewrite of the
+  // files holding a matched row — candidates planned from the
+  // manifest's key bounds, O(candidate files), pinned in-query by the
+  // same file-identity rule as q88.
   private def q93(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.Snapshot
     val (path, table) = sqlDmlFixture(s, dir, "sqlmrg")
@@ -3891,10 +3892,10 @@ object Analytics {
   // INSERT (cols…)`, unassigned columns landing NULL) — in ONE
   // statement, committing as ONE atomic version (pinned in-query).
   // Lowered by GraftMergeIntoCommand: matched pairs read ONLY the
-  // key-index-located candidate files, the clause chain evaluates
-  // first-match per pair, and the candidate files' new contents plus
-  // the inserts commit together as one file-grain rewrite —
-  // O(candidate files).
+  // candidate files the manifest's key bounds cannot rule out, the
+  // clause chain evaluates first-match per pair, and the new contents
+  // of the files holding an acting row plus the inserts commit
+  // together as one file-grain rewrite — O(candidate files).
   // The oracle simulates the same MERGE in plain SQL (left joins +
   // first-match CASE), so one misplaced clause, a wrong NULL fill, or
   // a lost unassigned column cannot hash-match.
@@ -3984,8 +3985,8 @@ object Analytics {
   // at run time, spliced back as a literal) and an IN-subquery in
   // WHERE (lowered onto the general-merge semi-join: the subquery's
   // DISTINCT user cohort becomes the merge source keyed on user_id —
-  // a DISTRIBUTED join through the key index, never a collected value
-  // list, so a 100 TB cohort costs what a merge costs). Both
+  // a DISTRIBUTED join over the candidate files, never an IN list, so
+  // a 100 TB cohort costs what a merge costs). Both
   // subqueries read the graft table itself, which also pins
   // pre-update consistency: they evaluate against the version the
   // update replaces. Committed atomically (pinned in-query). The

@@ -170,9 +170,13 @@ object KeyIndex {
     val reader = spark.read.option("basePath", qualified)
     val cur = Snapshot.currentVersion(spark, tablePath).get
     val vMeta = Snapshot.metaOf(spark, tablePath, cur)
+    // the file key materializes on the scan: `_metadata` does not
+    // resolve above the rename fold
     val df = Snapshot.resolveRenames(
       Snapshot.physReadSchema(vMeta).fold(reader)(reader.schema)
-        .parquet(files.map(f => s"$qualified/$f"): _*), vMeta)
+        .parquet(files.map(f => s"$qualified/$f"): _*)
+        .withColumn("__idx_file",
+          Snapshot.relFileOf(qualified, col("_metadata.file_path"))), vMeta)
     val canon = keyCols.map { c =>
       require(df.columns.contains(c),
         s"key column '$c' is not in the table schema")
@@ -180,18 +184,11 @@ object KeyIndex {
     }
     val pairs = df
       .where(keyCols.map(col(_).isNotNull).reduce(_ && _))
-      .select(kExpr(canon).as("k"),
-        udfFreeRel(input_file_name()).as("file"))
+      .select(kExpr(canon).as("k"), col("__idx_file").as("file"))
       .distinct()
       .withColumn("b", bExpr(buckets))
     (pairs, StructType(canon.map { case (c, dt) => StructField(c, dt) }))
   }
-
-  /** Root-relative file path from `input_file_name()`'s URI — the last
-    * two path segments, exactly the manifest entry shape (same rule
-    * the stat job uses). Codegen'd builtins, no UDF. */
-  private def udfFreeRel(c: Column) =
-    concat_ws("/", slice(split(c, "/"), -2, 2))
 
   /** Build or refresh the index of key tuple `keyCols` over `tablePath`
     * at `idxPath`. Append-only gaps scan ONLY the appended files;

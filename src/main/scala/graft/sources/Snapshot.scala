@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, concat_ws, count, count_distinct, input_file_name, lit, slice, split, sum, when, max => fmax, min => fmin}
+import org.apache.spark.sql.functions.{coalesce, col, concat_ws, count, count_distinct, input_file_name, lit, replace, slice, split, sum, url_decode, when, max => fmax, min => fmin}
 import org.apache.spark.sql.types.LongType
 
 /** A snapshot commit lost its optimistic race in a way rebase cannot
@@ -63,8 +63,9 @@ final class SnapshotConflictException(msg: String)
   * [[rewriteSurvivors]] re-clusters and rewrites a maintenance read's
   * survivors and [[statLines]] turns new files into manifest entries;
   * [[commit]] swings the pointer. SQL MERGE composes them in
-  * [[rewriteKeyed]]: a key-index probe, one [[keyedScan]] of the
-  * located files, one staged write of their new contents, one commit.
+  * [[rewriteKeyed]]: candidate files from the manifest's key bounds,
+  * one [[keyedScan]] of them, one staged write of the new contents of
+  * the files holding an acting row, one commit replacing those files.
   *
   * Every read is likewise built from three private steps:
   * [[vectorsOf]] reads a version's position vectors under the declared
@@ -1411,12 +1412,20 @@ object Snapshot {
     * column, so the identity costs no stored bytes and survives nothing
     * short of rewriting the file (exactly when [[materializeDeletes]]
     * retires the vector). Both the DV writer and every DV-applying
-    * reader derive the relative path the same way, so scheme-rendering
-    * differences can never split the join key. */
+    * reader derive the relative path through [[relFileOf]], so it is
+    * always the file's manifest path. */
   private def dvKeyCols(qualified: String): Seq[Column] = Seq(
-    org.apache.spark.sql.functions.replace(
-      col("_metadata.file_path"), lit(s"$qualified/"), lit("")).as("dv_file"),
+    relFileOf(qualified, col("_metadata.file_path")).as("dv_file"),
     col("_metadata.row_index").as("dv_pos"))
+
+  /** A data file's root-relative manifest path from `uri`, a file scan's
+    * `_metadata.file_path` under the layout at `qualified`. The scan
+    * names files by URI, so a dir named `event_date=a%62` reads as
+    * `a%2562`: the path is URI-decoded first (`+` is literal in a URI
+    * path, so it is escaped before `url_decode`, which form-decodes it
+    * to a space), then the root prefix is stripped. Builtins only. */
+  private[sources] def relFileOf(qualified: String, uri: Column): Column =
+    replace(url_decode(replace(uri, lit("+"), lit("%2B"))), lit(s"$qualified/"), lit(""))
 
   /** The declared schema of every (data-file, row-position) pair file:
     * deletion vectors and the match sets writers stage before packing
@@ -2175,7 +2184,8 @@ object Snapshot {
     * all-NULL in a file — or absent from the batch entirely (schema
     * drift) — encodes `-\t-` and never prunes that file. The files are
     * read under `written`, the schema of the frame their writer staged,
-    * because footer inference costs one Spark job per commit. */
+    * because footer inference costs one Spark job per commit, and each
+    * row keys back to its entry through [[relFileOf]]. */
   private def statLines(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
       moved: Seq[String], tableMeta: Map[String, String],
@@ -2186,15 +2196,6 @@ object Snapshot {
     val nullStats = tableMeta.get("nullstats").contains("on")
     if (moved.isEmpty || (cols.isEmpty && !lineage && !nullStats)) moved
     else {
-      // join key back from input_file_name()'s URI form (whose
-      // scheme/authority rendering differs from makeQualified's): the
-      // last two path segments = `partdir/basename`, exactly the
-      // root-relative entry shape. Basenames alone are NOT unique — a
-      // partitionBy write reuses one job UUID across every partition
-      // dir it touches.
-      def relKey(p: String): String = p.split("/").takeRight(2).mkString("/")
-      require(moved.map(relKey).distinct.size == moved.size,
-        s"duplicate partdir/basename entries in one commit: $moved")
       val df = spark.read.option("basePath", qualified).schema(written)
         .parquet(moved.map(f => s"$qualified/$f"): _*)
       val present = df.columns.toSet
@@ -2226,8 +2227,10 @@ object Snapshot {
         else Nil)
       // ONE job over the new files only, all columns + counts together
       val aggs = boundAggs ++ nullAggs ++ countAggs
-      val byFile = df.groupBy(input_file_name().as("__file"))
+      // grouped by the raw URI, so each file's path decodes once
+      val byFile = df.groupBy(col("_metadata.file_path").as("__uri"))
         .agg(aggs.head, aggs.tail: _*)
+        .withColumn("__file", relFileOf(qualified, col("__uri")))
         .collect()
         .map { r =>
           val bounds = cols.indices.map { i =>
@@ -2259,7 +2262,7 @@ object Snapshot {
             if (physIds) r.getLong(r.fieldIndex("__miss"))
             else if (lineage) n.get // no physical column: all rows need ids
             else 0L
-          relKey(r.getString(r.fieldIndex("__file"))) ->
+          r.getString(r.fieldIndex("__file")) ->
             ((bounds, nulls, n, missing))
         }.toMap
       // id-base allocation: ONE claimed range covers every file that
@@ -2269,16 +2272,16 @@ object Snapshot {
       // `base + position` stays unique even for rows whose physical id
       // is non-null (their slots simply go unused)
       val needIds = moved.sorted.filter(f =>
-        lineage && byFile.get(relKey(f)).exists(_._4 > 0))
+        lineage && byFile.get(f).exists(_._4 > 0))
       val baseOf: Map[String, Long] =
         if (needIds.isEmpty) Map.empty
         else {
-          val counts = needIds.map(f => f -> byFile(relKey(f))._3.get)
+          val counts = needIds.map(f => f -> byFile(f)._3.get)
           var acc = allocateRowIds(fs, root, counts.map(_._2).sum)
           counts.map { case (f, c) => val b = acc; acc += c; f -> b }.toMap
         }
       moved.map { f =>
-        byFile.get(relKey(f)) match {
+        byFile.get(f) match {
           case None if lineage || nullStats =>
             // a zero-row file never reaches the aggregate — record it
             // explicitly (no rows → no ids to assign, zero nulls)
@@ -3521,42 +3524,41 @@ object Snapshot {
   }
 
   /** The FILE-GRAIN keyed rewrite under SQL MERGE
-    * ([[graft.sources.sql.GraftMergeIntoCommand]]): the files that can
-    * hold a key of `keys` (columns = the key columns) are located
-    * through the key index at `idxPath` — refreshed first, probed once
-    * — and read at the head as ONE [[keyedScan]]: every candidate row
-    * carries its `(__dv_file, __dv_pos)` identity, plus its
-    * `_row_id` on a lineage layout. `rewrite` maps that candidate
-    * frame to (the candidate files' new contents, rows to add), each
-    * carrying the table's columns (plus `_row_id` on lineage — NULL
-    * mints a fresh id); (None, None) commits nothing. The new rows
-    * stage in one write, one file per partition they land in, and
-    * commit against the head the candidates were read at: the
-    * candidate files are removed iff the first side is Some, and every
-    * other file — other files of the same partitions included — keeps
-    * its entry and bytes. A concurrent commit that re-files a candidate
-    * or adds a file to a partition this one rewrote or wrote into
-    * aborts it ([[commit]]'s `replacedParts`); commits elsewhere
-    * rebase. Copy-on-write: outstanding deletion vectors refuse first.
-    * Returns the committed version, if any. */
+    * ([[graft.sources.sql.GraftMergeIntoCommand]]). `keys` (columns =
+    * the key columns) is a point-lookup set: it collects once, and no
+    * rows means a no-op (None, nothing read). The candidates are the
+    * live data files whose manifest bounds can hold a key
+    * ([[keyCandidates]]); `rewrite` gets them as ONE [[keyedScan]] at
+    * the head — every row carries its `(__dv_file, __dv_pos)`
+    * identity, plus its `_row_id` on a lineage layout — and the same
+    * scan over any subset of them. It returns the candidate files it
+    * replaces and the new rows (those files' new contents plus the rows
+    * to add, each carrying the table's columns, plus `_row_id` on
+    * lineage — NULL mints a fresh id); no rows commits nothing. The
+    * rows stage in one write, one file per partition they land in, and
+    * commit against the head the candidates were read at, removing
+    * exactly the returned files: every other file keeps its entry and
+    * bytes. A concurrent commit that re-files a removed file or adds a
+    * file to a partition this one rewrote or wrote into aborts it
+    * ([[commit]]'s `replacedParts`); commits elsewhere rebase.
+    * Copy-on-write: outstanding deletion vectors refuse first. Returns
+    * the committed version, if any. */
   private[graft] def rewriteKeyed(spark: SparkSession, path: String,
-      partitionCol: String, keys: DataFrame, idxPath: String)(
-      rewrite: DataFrame => (Option[DataFrame], Option[DataFrame]))
+      partitionCol: String, keys: DataFrame)(
+      rewrite: (DataFrame, Seq[String] => DataFrame) =>
+        (Set[String], Option[DataFrame]))
       : Option[Long] = {
-    val keyCols = keys.columns.toSeq
-    KeyIndex.refresh(spark, path, keyCols, idxPath, 32): Unit
+    val probe = keys.collect()
+    if (probe.isEmpty) return None
     val h = headOf(spark, path)
     requireNoDeletes(h.lines, path, "MERGE")
-    // a located file no longer live at the head lost its rows to a
-    // delete (a re-file would have added files the probe refuses)
-    val located = KeyIndex.filesForKeys(spark, idxPath, keys).toSet
-    val candLines = h.dataLines.filter(l => located(pathOf(l)))
+    val candLines = keyCandidates(h, keys.schema, probe)
     val cand = candLines.map(pathOf)
     val lineage = rowIdsOn(h.meta)
     if (lineage) requireLineageEntries(candLines, path)
-    val candidates =
-      if (cand.nonEmpty)
-        keyedScan(spark, h.qualified, h.meta, cand,
+    def scan(files: Seq[String]): DataFrame =
+      if (files.nonEmpty)
+        keyedScan(spark, h.qualified, h.meta, files,
           if (lineage) Some(basesOf(candLines)) else None)
       else {
         val empty = emptyTyped(spark, h.qualified, h.meta)
@@ -3565,16 +3567,51 @@ object Snapshot {
         if (lineage) empty.withColumn(RowIdCol, lit(null).cast(LongType))
         else empty
       }
-    val (rewritten, added) = rewrite(candidates)
-    val rows = (rewritten.toSeq ++ added).reduceOption(_ unionByName _)
+    val (removed, rows) = rewrite(scan(cand), scan)
+    require(removed.subsetOf(cand.toSet),
+      s"keyed rewrite of $path replaces non-candidate files ${removed -- cand}")
     rows.map { r =>
       val moved = stagePartitioned(h.fs, h.root, "merge",
         r.repartition(col(partitionCol)), partitionCol)
-      val removed = if (rewritten.isEmpty) Set.empty[String] else cand.toSet
       commit(h.fs, h.root, Some(h.v), removed,
         statLines(spark, h.fs, h.root, moved, h.meta, r.schema),
-        Map("op" -> "replace", "merge_keys" -> keyCols.mkString(",")),
+        Map("op" -> "replace", "merge_keys" -> keys.columns.mkString(",")),
         replacedParts = (removed.toSeq ++ moved).map(_.split("/")(0)).toSet)
+    }
+  }
+
+  /** The live data entries of `h` that can hold a row keyed by one of
+    * `probe` (rows under `schema`, the key columns). An entry drops
+    * only when its recorded bounds for some key column contain none of
+    * that column's values — a binary search over the sorted values, not
+    * one `[min, max]` hull: new keys lie above every file, so a hull
+    * would keep nearly all of them. Only integral key columns with
+    * declared stats prune, and only against integral values, which
+    * widen exactly to LONG (the bounds' domain) as the ON equality
+    * widens both sides. Entries without bounds, and layouts without
+    * stats on a key column, keep every file. */
+  private def keyCandidates(h: Head,
+      schema: org.apache.spark.sql.types.StructType,
+      probe: Array[org.apache.spark.sql.Row]): Seq[String] = {
+    import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, ShortType}
+    val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
+    val stats = statsColsOf(h.meta)
+    val recorded = recordedSchema(h.meta).map(_.fields.toSeq).getOrElse(Nil)
+    val sortedKeys: Seq[(Int, IndexedSeq[Long])] =
+      schema.fields.toSeq.zipWithIndex.collect {
+        case (f, j) if integral(f.dataType) && stats.contains(f.name) &&
+            recorded.exists(t => t.name == f.name && integral(t.dataType)) =>
+          stats.indexOf(f.name) -> probe.filterNot(_.isNullAt(j))
+            .map(_.get(j).asInstanceOf[Number].longValue).distinct.sorted.toIndexedSeq
+      }
+    h.dataLines.filter { l =>
+      sortedKeys.forall { case (i, vs) =>
+        statsListOf(l).lift(i).flatten.forall { case (mn, mx) =>
+          // the first value >= mn, by binary search
+          val next = vs.search(mn).insertionPoint
+          next < vs.length && vs(next) <= mx
+        }
+      }
     }
   }
 

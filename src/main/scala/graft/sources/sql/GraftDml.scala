@@ -37,9 +37,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *  - `MERGE INTO graft.t USING src ON t.k = s.k …` — every clause
   *    shape, the exact upsert included — lowers through ONE command
   *    ([[GraftMergeIntoCommand]], [[mergeCommand]] scaladoc): the
-  *    files that can hold a source key are located through the
-  *    secondary key index (kept as a sibling layout of the table) and
-  *    rewritten file by file in one copy-on-write commit
+  *    files that can hold a source key are found from the manifest's
+  *    per-file key bounds, and the ones holding a row some clause acts
+  *    on are rewritten in one copy-on-write commit
   *    ([[Snapshot.rewriteKeyed]]), O(candidate files).
   *
   * Resolved-to-unresolved seam: the analyzed assignments and
@@ -342,12 +342,13 @@ object GraftDml {
   *    the subquery's DISTINCT result is the merge source keyed on `k`,
   *    the residual WHERE conjuncts become the matched clause's
   *    condition, and the SET its partial update image (or, for DELETE,
-  *    the clause's delete action) — a distributed semi-join through the
-  *    key index, never a collected value list (the IN set may be
-  *    data-sized). Duplicate target keys are legal here (every row of a
-  *    matched key acts — IN semantics; an unacted twin is written back
-  *    unchanged), which is why the merge cardinality rule counts SOURCE
-  *    rows per target row, and the source is made DISTINCT.
+  *    the clause's delete action). Its values collect once to plan the
+  *    candidate files (the point-lookup contract); the match itself is
+  *    a distributed join, never an IN list built from them. Duplicate
+  *    target keys are legal here (every row of a matched key acts — IN
+  *    semantics; an unacted twin is written back unchanged), which is
+  *    why the merge cardinality rule counts SOURCE rows per target row,
+  *    and the source is made DISTINCT.
   *
   * An all-identity UPDATE (`SET a = a` — every assignment filtered by
   * the alignment check) is a legal SQL no-op: nothing committed. */
@@ -400,10 +401,12 @@ object GraftMergeIntoCommand {
   * ([[GraftRowLevelCommand]]) — as ONE file-grain copy-on-write commit
   * ([[Snapshot.rewriteKeyed]]):
   *
-  *  1. candidate target rows = the files that can hold a source key,
-  *     located once through the secondary key index (kept as a sibling
-  *     layout of the table) and read as one keyed scan — never a table
-  *     scan; each row carries its `(__dv_file, __dv_pos)` identity;
+  *  1. candidate target rows = the files that can hold a source key:
+  *     the source's ON-key values collect once (none: a no-op), and a
+  *     file drops when its manifest bounds on an integral ON key hold
+  *     none of them (a table without stats on the key keeps every
+  *     file); the candidates read as one keyed scan, each row carrying
+  *     its `(__dv_file, __dv_pos)` identity;
   *  2. matched pairs = candidates ⋈ source on the ON keys, both sides
   *     PREFIXED (`_graft_t_*` / `_graft_s_*`) so same-named columns
   *     stay addressable from clause conditions and assignment values;
@@ -413,18 +416,23 @@ object GraftMergeIntoCommand {
   *     before anything commits; a duplicated source key whose other
   *     rows act on nothing is legal, and so is a duplicated TARGET key —
   *     every row of it is its own target row;
-  *  4. each candidate row is rewritten as its acting pair's UPDATE
-  *     image (unassigned columns keep the target's value), dropped by a
-  *     DELETE, or written back unchanged; unmatched source rows walk the
-  *     NOT MATCHED chain the same way (unassigned columns insert NULL);
-  *  5. the candidate files' new contents plus the inserts commit as one
-  *     version replacing exactly the candidate files. A merge where no
-  *     pair acts leaves the candidates alone (inserts only), and one
-  *     that also inserts nothing commits nothing.
+  *  4. the touched files are those holding an acting row (the files of
+  *     the identities the rule check collects); each of their rows is
+  *     rewritten as its acting pair's UPDATE image (unassigned columns
+  *     keep the target's value), dropped by a DELETE, or written back
+  *     unchanged. Unmatched source rows — matched against EVERY
+  *     candidate, so a key in an untouched file is never inserted
+  *     twice — walk the NOT MATCHED chain the same way (unassigned
+  *     columns insert NULL);
+  *  5. the touched files' new contents plus the inserts commit as one
+  *     version replacing exactly the touched files; every other file
+  *     keeps its entry. A merge where no pair acts touches no file
+  *     (inserts only), and one that also inserts nothing commits
+  *     nothing.
   *
-  * At 100 TB: the source is read for the index probe, the matched join
+  * At 100 TB: the source is read for the key collect, the matched join
   * and the not-matched anti-join (persisted once), and the table
-  * contributes only index-located candidate files.
+  * contributes only the candidate files its bounds cannot rule out.
   *
   * LINEAGE tables (`rowids=on`): update images and unchanged rows CARRY
   * the target row's `_row_id`, so a SQL UPDATE/MERGE keeps the row's
@@ -442,13 +450,12 @@ case class GraftMergeIntoCommand(path: String, pcol: String,
   override def run(session: SparkSession): Seq[Row] = {
     import org.apache.spark.sql.functions.{coalesce, when}
     val disk = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // the source feeds the index probe, the matched join and the
+    // the source feeds the key collect, the matched join and the
     // not-matched anti-join: an expensive source (itself a query)
     // executes once
     val src = GraftShim.ofRows(session, source).persist(disk)
     var pairs: Option[DataFrame] = None
     try {
-      if (src.isEmpty) return Seq.empty // a legal no-op
       val sPref = src.select(src.columns.toSeq.map(c => col(c).as(SP + c)): _*)
       val Id = Seq("__dv_file", "__dv_pos")
       val act = "_graft_action"
@@ -466,25 +473,26 @@ case class GraftMergeIntoCommand(path: String, pcol: String,
             _.when(col(act) === i, value)))
         }.get.cast(f.dataType).as(f.name)
 
+      // no source rows: a legal no-op
       Snapshot.rewriteKeyed(session, path, pcol,
-          src.select(keyCols.map(col): _*).distinct(),
-          s"${path}_dml_idx_${keyCols.mkString("_")}") { cand =>
+          src.select(keyCols.map(col): _*)) { (cand, scan) =>
         val lineage = cand.columns.contains(Snapshot.RowIdCol)
         val out =
           if (lineage) tSchema.add(Snapshot.RowIdCol, LongType) else tSchema
-        val tPref = cand.select(
+        def prefixed(scanned: DataFrame): DataFrame = scanned.select(
           out.fieldNames.toSeq.map(c => col(c).as(TP + c)) ++ Id.map(col): _*)
         // every matched pair with its acting clause (-1: none), O(matched
         // source rows) — read by the rule check, the rewrite and the
         // not-matched anti-join
-        val matchedPairs = tPref.join(sPref,
+        val matchedPairs = prefixed(cand).join(sPref,
             keyCols.map(k => col(TP + k) === col(SP + k)).reduce(_ && _))
           .withColumn(act, chain(matched.map(_._1)))
           .persist(disk)
         pairs = Some(matchedPairs)
         val acting = matchedPairs.where(col(act) >= 0)
         // the cardinality rule: one acting source row per target row.
-        // Its identities collect like the index probe's source keys.
+        // Its identities collect like the source keys; their files are
+        // the ones the commit replaces.
         val acted =
           if (matched.isEmpty) Array.empty[Row]
           else acting.select(Id.map(col): _*).collect()
@@ -493,14 +501,15 @@ case class GraftMergeIntoCommand(path: String, pcol: String,
             "MERGE cardinality violation: more than one source row " +
             "matched and acted on the same target row — dedup the " +
             "source on the ON keys first")
+        val touched = acted.map(_.getString(0)).toSet
         val updates = matched.zipWithIndex.collect {
           case ((_, Some(set)), i) => (i, set)
         }
-        // each candidate row: its acting UPDATE's image, dropped by a
-        // DELETE, or (act -1) written back unchanged
+        // each row of a touched file: its acting UPDATE's image, dropped
+        // by a DELETE, or (act -1) written back unchanged
         val rewritten =
-          if (acted.isEmpty) None
-          else Some(tPref
+          if (touched.isEmpty) None
+          else Some(prefixed(scan(touched.toSeq.sorted))
             .join(acting.select((Id ++ sPref.columns :+ act).map(col): _*),
               Id, "left")
             .withColumn(act, coalesce(col(act), lit(-1)))
@@ -511,6 +520,8 @@ case class GraftMergeIntoCommand(path: String, pcol: String,
                 case (i, set) => i -> set.getOrElse(f.name, col(TP + f.name))
               })
             }: _*))
+        // matched over every candidate, acting or not: a key held by an
+        // untouched file is never inserted again
         val matchedKeys = matchedPairs
           .select(keyCols.map(k => col(SP + k).as(s"_graft_m_$k")): _*)
         val inserts = Some(notMatched).filter(_.nonEmpty).map(_ => sPref
@@ -526,7 +537,8 @@ case class GraftMergeIntoCommand(path: String, pcol: String,
               i -> notMatched(i)._2.getOrElse(f.name, lit(null))))
           }: _*))
         // nothing acted: only a non-empty insert set commits
-        (rewritten, if (rewritten.isEmpty) inserts.filterNot(_.isEmpty) else inserts)
+        val added = if (rewritten.isEmpty) inserts.filterNot(_.isEmpty) else inserts
+        (touched, (rewritten ++ added).reduceOption(_ unionByName _))
       }: Unit
       Seq.empty
     } finally {

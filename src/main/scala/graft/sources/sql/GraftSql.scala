@@ -485,13 +485,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     parts.foreach(p => require(
       !p.contains("/") && p != ".." && !p.startsWith("."),
       s"illegal table identifier part '$p'"))
-    // '_dml_idx_' is the reserved sibling-layout infix for secondary key
-    // indexes: a real table named 't_dml_idx_x' would be silently
-    // trashed by retireSiblingIndexes when 't' is dropped or renamed
-    // (ADVICE r20) — refuse the collision at the door instead
-    parts.foreach(p => require(!p.contains("_dml_idx_"),
-      s"identifier part '$p' uses the reserved key-index infix " +
-      "'_dml_idx_'"))
     (warehouse +: parts).mkString("/")
   }
 
@@ -681,33 +674,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     * identifier parts are refused everywhere, so trash is unreachable
     * through the catalog. Also what Spark's non-staging CREATE OR
     * REPLACE lowers onto (drop + create). */
-  /** Move the table's sibling `<name>_dml_idx_*` key-index layouts to
-    * trash BEFORE the table itself moves: a stale index left at the
-    * old path would ALIAS a recreated table's version numbers (the
-    * refresh delta path keys on `idx_of` + file-set monotonicity, both
-    * satisfiable by coincidence on a fresh table) and serve pointers
-    * into the dropped table's files — silent MERGE corruption. Index
-    * state is derived, so trashing it costs one rebuild; ordering
-    * (indexes first) means a crash mid-DDL leaves the SAFE state: a
-    * live table with no indexes, not a dead table with live indexes. */
-  private def retireSiblingIndexes(
-      fs: org.apache.hadoop.fs.FileSystem,
-      tableDir: org.apache.hadoop.fs.Path, stamp: String): Unit = {
-    val parent = tableDir.getParent
-    val prefix = tableDir.getName + "_dml_idx_"
-    if (parent != null && fs.exists(parent))
-      fs.listStatus(parent).foreach { s =>
-        if (s.isDirectory && s.getPath.getName.startsWith(prefix)) {
-          val idxTrash = new org.apache.hadoop.fs.Path(warehouse,
-            s".dropped/${s.getPath.getName}-$stamp")
-          fs.mkdirs(idxTrash.getParent)
-          if (!fs.rename(s.getPath, idxTrash))
-            throw new IllegalStateException(
-              s"could not retire index ${s.getPath} — concurrent DDL?")
-        }
-      }
-  }
-
   override def dropTable(ident: Identifier): Boolean = {
     val p = new org.apache.hadoop.fs.Path(pathOf(ident))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -715,7 +681,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     else {
       val stamp = s"${System.currentTimeMillis()}-" +
         java.util.UUID.randomUUID().toString.take(8)
-      retireSiblingIndexes(fs, p, stamp)
       val trash = new org.apache.hadoop.fs.Path(warehouse,
         s".dropped/${(ident.namespace() :+ ident.name()).mkString("_")}" +
         s"-$stamp")
@@ -726,11 +691,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     }
   }
   /** RENAME TABLE as one atomic directory rename — the same pointer
-    * mechanics as [[dropTable]], but to a live name instead of trash.
-    * The table's secondary DML key indexes move to TRASH first (see
-    * [[retireSiblingIndexes]] — leaving them under the old name would
-    * hand a table recreated there stale pointers); the renamed table
-    * lazily rebuilds its indexes at the next MERGE. */
+    * mechanics as [[dropTable]], but to a live name instead of trash. */
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit = {
     val from = new org.apache.hadoop.fs.Path(pathOf(oldIdent))
     val to = new org.apache.hadoop.fs.Path(pathOf(newIdent))
@@ -740,8 +701,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (fs.exists(to))
       throw new org.apache.spark.sql.catalyst.analysis
         .TableAlreadyExistsException(newIdent.toString)
-    retireSiblingIndexes(fs, from, s"${System.currentTimeMillis()}-" +
-      java.util.UUID.randomUUID().toString.take(8))
     fs.mkdirs(to.getParent)
     if (!fs.rename(from, to)) throw new IllegalStateException(
       s"could not rename $from to $to — concurrent DDL?")

@@ -610,6 +610,126 @@ class GraftSqlSpec extends AnyFunSuite {
     ()
   }
 
+  test("SQL MERGE plans its files from manifest key bounds: no layout beside the table, only files with an acting row rewrite, a stats-less table agrees") {
+    import spark.implicits._
+    val wh = tmp("graft-mstatswh")
+    // 8 id ranges x 2 days = 16 files, each with tight id bounds; `s`
+    // records them, `p` records none
+    val seed = rows(1L to 400L).repartitionByRange(8, col("id"))
+    Snapshot.append(spark, s"$wh/s", "day", seed, meta = Map("stats" -> "id"))
+    Snapshot.append(spark, s"$wh/p", "day", seed)
+    registerCatalog("gmstats", wh)
+    def live(t: String): Set[String] =
+      Snapshot.currentFiles(spark, s"$wh/$t")._2.toSet
+    def fileOf(t: String, id: Long): String = {
+      val hits = live(t).filter(f =>
+        spark.read.parquet(s"$wh/$t/$f").where(col("id") === id).count() > 0)
+      assert(hits.size == 1, s"id $id in files $hits")
+      hits.head
+    }
+    // id 5 acts; id 60 matches but acts on no clause; 1001 inserts
+    Seq((5L, 55.0, "2024-01-01"), (60L, -1.0, "2024-01-02"),
+        (1001L, 1.0, "2024-01-01"))
+      .toDF("id", "value", "day").createOrReplaceTempView("ms_src")
+    val merge = """MERGE INTO gmstats.%s AS t USING ms_src AS s ON t.id = s.id
+      |WHEN MATCHED AND s.value > 0 THEN UPDATE SET *
+      |WHEN NOT MATCHED THEN INSERT *""".stripMargin
+    val read = Seq("s", "p").map { t =>
+      val before = live(t)
+      val f5 = fileOf(t, 5L)
+      val f60 = fileOf(t, 60L)
+      val n = TestJobs.recordsReadDuring(spark)(spark.sql(merge.format(t)): Unit)
+      val after = live(t)
+      assert(before -- after == Set(f5),
+        s"$t: the MERGE replaced ${before -- after}, not the acting row's $f5")
+      assert(after(f60), s"$t: the unacted matched row's file lost its entry")
+      n
+    }
+    // the bounds rule out every file but the two pairs holding 5 and 60
+    assert(read(0) < read(1) / 2, s"records read with / without stats: $read")
+    def all(t: String) = spark.sql(s"SELECT id, value, day FROM gmstats.$t")
+      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(2)))
+      .sortBy(_._1).toSeq
+    assert(all("s") == all("p"))
+    assert(all("s").size == 401 &&
+      all("s").filter(r => Set(5L, 60L, 1001L)(r._1)) ==
+        Seq((5L, 55.0, "2024-01-01"), (60L, 600.0, "2024-01-02"),
+          (1001L, 1.0, "2024-01-01")))
+    // nothing is kept beside the tables
+    assert(new java.io.File(wh).list().toSet == Set("s", "p"))
+    // two source rows acting on one target row still refuse, commit nothing
+    Seq((7L, 1.0, "2024-01-01"), (7L, 2.0, "2024-01-01"))
+      .toDF("id", "value", "day").createOrReplaceTempView("ms_dup")
+    val v = Snapshot.currentVersion(spark, s"$wh/s")
+    val ex = intercept[UnsupportedOperationException](spark.sql(
+      """MERGE INTO gmstats.s AS t USING ms_dup AS s ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET *""".stripMargin))
+    assert(ex.getMessage.contains("cardinality"))
+    assert(Snapshot.currentVersion(spark, s"$wh/s") == v)
+  }
+
+  test("SQL MERGE over externally escaped dirs: an a%62 row updates in place, an a+b row round-trips") {
+    import spark.implicits._
+    val wh = tmp("graft-muriwh")
+    val path = s"$wh/t"
+    Seq("a%62" -> Seq((3L, 30.0), (4L, 40.0)), "a+b" -> Seq((5L, 50.0)))
+      .foreach { case (d, rs) =>
+        val flat = s"${tmp("graft-muri")}/flat"
+        rs.toDF("id", "value").coalesce(1).write.parquet(flat)
+        val dir = new java.io.File(s"$path/day=$d")
+        assert(dir.mkdirs())
+        new java.io.File(flat).listFiles()
+          .filter(_.getName.endsWith(".parquet")).foreach { f =>
+            java.nio.file.Files.move(f.toPath, new java.io.File(dir, f.getName).toPath)
+          }
+      }
+    Snapshot.init(spark, path, "day")
+    registerCatalog("gmuri", wh)
+    Seq((3L, 33.0, "ab"), (5L, 55.0, "a+b"), (9L, 90.0, "ab"))
+      .toDF("id", "value", "day").createOrReplaceTempView("muri_src")
+    spark.sql(
+      """MERGE INTO gmuri.t AS t USING muri_src AS s ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET *
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    val got = spark.sql("SELECT id, value, day FROM gmuri.t")
+      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(2)))
+      .sortBy(_._1).toSeq
+    assert(got == Seq((3L, 33.0, "ab"), (4L, 40.0, "ab"), (5L, 55.0, "a+b"),
+      (9L, 90.0, "ab")), s"MERGE over escaped dirs: $got")
+  }
+
+  test("SQL MERGE runs a constant number of jobs: 3 vs 9 touched partitions") {
+    import spark.implicits._
+    // every day holds 8 rows in 2 files (both layouts stay under Spark's
+    // 32-path parallel-listing threshold); the source updates one row
+    // and inserts one per day
+    def build(catalog: String, days: Int): Unit = {
+      val wh = tmp("graft-mjobswh")
+      Snapshot.append(spark, s"$wh/t", "day",
+        (0 until days * 8).map(i => (i.toLong, i * 1.0, f"2024-01-${i % days + 1}%02d"))
+          .toDF("id", "value", "day").repartition(2),
+        meta = Map("stats" -> "id"))
+      registerCatalog(catalog, wh)
+      (0 until days).flatMap(d => Seq((d.toLong, -1.0, f"2024-01-${d + 1}%02d"),
+          (1000L + d, 1.0, f"2024-01-${d + 1}%02d")))
+        .toDF("id", "value", "day").createOrReplaceTempView(s"${catalog}_src")
+    }
+    def merge(catalog: String): Int = TestJobs.jobsDuring(spark) {
+      spark.sql(
+        s"""MERGE INTO $catalog.t AS t USING ${catalog}_src AS s ON t.id = s.id
+          |WHEN MATCHED THEN UPDATE SET *
+          |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    }
+    build("gmjobs3", 3)
+    build("gmjobs9", 9)
+    val small = merge("gmjobs3")
+    val big = merge("gmjobs9")
+    assert(small == big, s"SQL MERGE scales with touched partitions: $small vs $big jobs")
+    assert(spark.sql("SELECT count(*) FROM gmjobs9.t").collect().head.getLong(0) == 81L)
+    assert(spark.sql("SELECT count(*) FROM gmjobs9.t WHERE value = -1.0")
+      .collect().head.getLong(0) == 9L)
+  }
+
   test("TBLPROPERTIES: CREATE(rowids=on, stats) makes lineage SQL-reachable — INSERT, UPDATE, then graft-cdf crosses the update as typed pairs") {
     val wh = tmp("graft-linwh")
     val path = s"$wh/t"
@@ -805,10 +925,10 @@ class GraftSqlSpec extends AnyFunSuite {
       replaced.count() == 0L,
       "CREATE OR REPLACE must serve the NEW schema with zero rows")
 
-    // DROP retires the table's DML key indexes too: recreating the
-    // name and merging again must NOT serve the old index's pointers
-    // (version numbers alias across incarnations — a stale index would
-    // treat existing keys as unmatched and duplicate them)
+    // recreating a dropped name and merging again matches against the
+    // new incarnation only (version numbers alias across incarnations —
+    // state kept beside the table would treat existing keys as
+    // unmatched and duplicate them)
     import spark.implicits._
     Seq((5L, 555.0, "2024-01-01"), (3001L, 1.0, "2024-01-01"))
       .toDF("id", "value", "day").createOrReplaceTempView("drop_m1")
@@ -817,15 +937,11 @@ class GraftSqlSpec extends AnyFunSuite {
         |USING graft PARTITIONED BY (day)""".stripMargin)
     rows(1L to 10L).createOrReplaceTempView("drop_src10")
     spark.sql("INSERT INTO gdrop.m SELECT * FROM drop_src10")
-    spark.sql( // builds <wh>/m_dml_idx_id
+    spark.sql(
       """MERGE INTO gdrop.m AS t USING drop_m1 AS s ON t.id = s.id
         |WHEN MATCHED THEN UPDATE SET *
         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$wh/m_dml_idx_id")),
-      "the MERGE must have built the sibling key index")
     spark.sql("DROP TABLE gdrop.m")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$wh/m_dml_idx_id")),
-      "DROP must retire the sibling key index with the table")
     spark.sql(
       """CREATE TABLE gdrop.m (id BIGINT, value DOUBLE, day STRING)
         |USING graft PARTITIONED BY (day)""".stripMargin)
@@ -840,7 +956,7 @@ class GraftSqlSpec extends AnyFunSuite {
     assert(merged == Seq((5L, 555.0), (3001L, 1.0)) &&
       spark.sql("SELECT count(*) AS n FROM gdrop.m")
         .collect().head.getLong(0) == 11L,
-      s"post-recreate MERGE must match on the REBUILT index: $merged")
+      s"post-recreate MERGE must match the new incarnation's rows: $merged")
 
     // trash is unreachable through the catalog (dot-part refusal)
     intercept[Exception](

@@ -636,6 +636,49 @@ class SnapshotSpec extends AnyFunSuite {
     assert(ids(Snapshot.readSnapshot(spark, path2)) == Set(4L))
   }
 
+  test("row file identities are manifest paths under escaped dir names: an a%62 dir materializes, a+b round-trips") {
+    import spark.implicits._
+    // a layout over externally written dirs, one file each
+    def external(dirs: (String, Seq[(Long, Long)])*): String = {
+      val path = s"${tmp("graft-snap-uri")}/external"
+      dirs.foreach { case (d, rows) =>
+        val flat = s"${tmp("graft-snap-uri")}/flat"
+        rows.toDF("event_id", "ts_ms").coalesce(1).write.parquet(flat)
+        val dir = new java.io.File(s"$path/event_date=$d")
+        assert(dir.mkdirs())
+        new java.io.File(flat).listFiles()
+          .filter(_.getName.endsWith(".parquet")).foreach { f =>
+            java.nio.file.Files.move(f.toPath, new java.io.File(dir, f.getName).toPath)
+          }
+      }
+      Snapshot.init(spark, path, "event_date")
+      path
+    }
+    // `a%62` holds partition value "ab", and its file URI spells the
+    // dir `a%2562`: the vector must name the manifest path. Its rows
+    // all go, so it drops; the other partition restages its survivor.
+    val p1 = external("a%62" -> Seq((3L, 30L), (4L, 40L)),
+      "2024-01-01" -> Seq((5L, 50L), (6L, 60L)))
+    Snapshot.deleteWhereMoR(spark, p1, "event_date", col("event_id") =!= 6L)
+    assert(Snapshot.materializeDeletes(spark, p1, "event_date").map(_._1).toSet ==
+      Set("event_date=a%62", "event_date=2024-01-01"))
+    val (v1, files1) = Snapshot.currentFiles(spark, p1)
+    assert(Snapshot.deletesOf(spark, p1, v1).isEmpty)
+    assert(files1.forall(_.startsWith("event_date=2024-01-01/")), s"$files1")
+    assert(ids(Snapshot.readSnapshot(spark, p1)) == Set(6L))
+    // `+` is literal in a URI path: it must not decode to a space
+    val p2 = external("a+b" -> Seq((3L, 30L), (4L, 40L)))
+    Snapshot.deleteWhereMoR(spark, p2, "event_date", col("event_id") === 3L)
+    assert(Snapshot.materializeDeletes(spark, p2, "event_date") ==
+      Seq("event_date=a+b" -> 1L))
+    val (v2, files2) = Snapshot.currentFiles(spark, p2)
+    assert(Snapshot.deletesOf(spark, p2, v2).isEmpty)
+    assert(files2.forall(_.startsWith("event_date=a+b/")), s"$files2")
+    assert(Snapshot.readSnapshot(spark, p2).select("event_id", "event_date")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq ==
+      Seq((4L, "a+b")))
+  }
+
   test("vectors read under their declared schema: planning a read over them runs no job; dvAudit runs one") {
     val path = buildLayout()
     Snapshot.init(spark, path, "event_date")                       // v1
