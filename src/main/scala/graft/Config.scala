@@ -88,9 +88,9 @@ object Config {
   /** Snapshot store: rows per deletion-vector FILE. A merge-on-read
     * delete/update stages its matched (file, position) pairs with the
     * scan's parallelism, then packs them into ceil(n / this) vector
-    * files — so no single task ever funnels an unbounded match set (a
-    * repartition(1) write, capped), while the common forget-user
-    * sized delete still lands as one sidecar file. */
+    * files — so no single task ever funnels an unbounded match set,
+    * while the common forget-user sized delete still lands as one
+    * sidecar file, written by one task without a shuffle. */
   val MaxVectorFileRows: Long =
     longFrom(sys.env, "GRAFT_DV_FILE_ROWS", 16L * 1024 * 1024)
 }

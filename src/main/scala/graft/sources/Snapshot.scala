@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, concat_ws, count, count_distinct, input_file_name, lit, replace, slice, split, sum, url_decode, when, max => fmax, min => fmin}
+import org.apache.spark.sql.functions.{coalesce, col, collect_set, concat_ws, count, input_file_name, lit, replace, slice, split, sum, url_decode, when, max => fmax, min => fmin}
 import org.apache.spark.sql.types.LongType
 
 /** A snapshot commit lost its optimistic race in a way rebase cannot
@@ -59,10 +59,15 @@ final class SnapshotConflictException(msg: String)
   * steps, each written once: [[headOf]] opens the table at its current
   * version (one manifest read, data and delete entries split);
   * [[stagePartitioned]] lands data files through a hidden staging dir;
+  * [[stageMatches]] stages a row-level write's matches and reports
+  * their count and referenced files from the same job;
   * [[writeVectors]] packs and moves a deletion vector;
   * [[rewriteSurvivors]] re-clusters and rewrites a maintenance read's
-  * survivors and [[statLines]] turns new files into manifest entries;
-  * [[commit]] swings the pointer. SQL MERGE composes them in
+  * survivors and [[statLines]] turns new files into manifest entries
+  * from their parquet footers; [[commit]] swings the pointer. A commit
+  * runs only its data writes: every count, file set and statistic it
+  * records comes from the write that produced it, not from a job of
+  * its own. SQL MERGE composes them in
   * [[rewriteKeyed]]: candidate files from the manifest's key bounds,
   * one [[keyedScan]] of them, one staged write of the new contents of
   * the files holding an acting row, one commit replacing those files.
@@ -1178,10 +1183,10 @@ object Snapshot {
     * later columns prune when their values correlate with file
     * boundaries (time-ordered ids, sessionized users) — stats on a
     * fully-unclustered column are valid but prune nothing, since every
-    * file spans the whole value range. The bootstrap pays ONE job over
-    * the existing files to backfill their bounds (the one-off
-    * table-format migration cost); each later commit stats only its new
-    * files, all columns in the same single job. */
+    * file spans the whole value range. The bootstrap reads the existing
+    * files' footers to backfill their bounds ([[statLines]]; a file
+    * whose footer cannot say costs one aggregate job for all such
+    * files); each later commit stats only its new files the same way. */
   def init(spark: SparkSession, path: String, partitionCol: String,
       meta: Map[String, String] = Map.empty,
       statsCols: Seq[String] = Nil,
@@ -2107,6 +2112,12 @@ object Snapshot {
     movePartitionedStaging(fs, root, stg, partitionCol)
   }
 
+  /** The partition value a root-relative entry path or dir name
+    * (`<partitionCol>=<escaped value>[/<file>]`) names. */
+  private def partValueOf(f: String, partitionCol: String): String =
+    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+      .unescapePathName(f.split("/")(0).stripPrefix(s"$partitionCol="))
+
   /** MOVE a `partitionBy`-staged write's data files into the live
     * `partitionCol=` dirs (unique task-UUID names — nothing collides,
     * and nothing references them until the manifest commit). Deletes
@@ -2119,15 +2130,12 @@ object Snapshot {
       .flatMap { d =>
         val partDir = new org.apache.hadoop.fs.Path(root, d.getPath.getName)
         fs.mkdirs(partDir)
-        fs.listStatus(d.getPath).toSeq
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith("."))
-          .map { f =>
-            val dst = new org.apache.hadoop.fs.Path(partDir, f.getPath.getName)
-            if (!fs.rename(f.getPath, dst))
-              throw new IllegalStateException(s"staging move failed: $dst")
-            s"${partDir.getName}/${f.getPath.getName}"
-          }
+        partFiles(fs, d.getPath).map { f =>
+          val dst = new org.apache.hadoop.fs.Path(partDir, f.getPath.getName)
+          if (!fs.rename(f.getPath, dst))
+            throw new IllegalStateException(s"staging move failed: $dst")
+          s"${partDir.getName}/${f.getPath.getName}"
+        }
       }
     fs.delete(stg, true): Unit
     moved
@@ -2176,28 +2184,289 @@ object Snapshot {
     * discipline: the bounds live in table METADATA, so a reader plans
     * its file set without opening a single parquet footer (at 100 TB,
     * the difference between one manifest read and 100k footer GETs).
-    * ONE distributed job over the new files only (never the table),
-    * regardless of how many columns are declared; bounds are the column
-    * cast to LONG (timestamps floor to epoch seconds), which keeps the
-    * overlap test conservative: a file is skipped only if its floored
-    * bounds provably exclude the floored query range. A column that is
+    * The writer opens the footers instead, once, on the driver: each
+    * new file's bounds, null counts and row count come from the
+    * statistics its parquet writer recorded ([[footerStats]]), so a
+    * commit runs no Spark job for them — Iceberg's metrics-from-footer
+    * discipline. A file whose footer lacks one (an oversized string,
+    * an INT96 or otherwise unmapped type, the partition column) falls
+    * back to ONE aggregate over those files only ([[aggregateStats]]),
+    * which derives the same line. Bounds are the column cast to LONG
+    * (timestamps floor to epoch seconds), which keeps the overlap test
+    * conservative: a file is skipped only if its floored bounds
+    * provably exclude the floored query range. A column that is
     * all-NULL in a file — or absent from the batch entirely (schema
-    * drift) — encodes `-\t-` and never prunes that file. The files are
-    * read under `written`, the schema of the frame their writer staged,
-    * because footer inference costs one Spark job per commit, and each
-    * row keys back to its entry through [[relFileOf]]. */
+    * drift) — encodes `-\t-` and never prunes that file. `written` is
+    * the schema of the frame the writer staged. */
   private def statLines(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
       moved: Seq[String], tableMeta: Map[String, String],
       written: org.apache.spark.sql.types.StructType): Seq[String] = {
-    val qualified = fs.makeQualified(root).toString
     val cols = statsColsOf(tableMeta)
-    val lineage = tableMeta.get("rowids").contains("on")
+    val lineage = rowIdsOn(tableMeta)
     val nullStats = tableMeta.get("nullstats").contains("on")
     if (moved.isEmpty || (cols.isEmpty && !lineage && !nullStats)) moved
     else {
+      val qualified = fs.makeQualified(root).toString
+      val fromFooters = footerFileStats(spark, qualified, moved, tableMeta, written)
+      // a zero-row file never reaches the aggregate, and is left out
+      // here the same way: its line is written below
+      val byFile: Map[String, FileStats] =
+        fromFooters.collect { case (f, Some((rows, st))) if rows > 0 => f -> st }.toMap ++
+          aggregateStats(spark, qualified, fromFooters.collect { case (f, None) => f },
+            tableMeta, written)
+      // id-base allocation: ONE claimed range covers every file that
+      // needs fresh ids this commit (a file with fully-materialized ids
+      // needs none → `r:p`); per-file bases are assigned in sorted-file
+      // order inside the range, each sized by the file's ROW COUNT so
+      // `base + position` stays unique even for rows whose physical id
+      // is non-null (their slots simply go unused)
+      val needIds = moved.sorted.filter(f =>
+        lineage && byFile.get(f).exists(_.missing > 0))
+      val baseOf: Map[String, Long] =
+        if (needIds.isEmpty) Map.empty
+        else {
+          val counts = needIds.map(f => f -> byFile(f).n.get)
+          var acc = allocateRowIds(fs, root, counts.map(_._2).sum)
+          counts.map { case (f, c) => val b = acc; acc += c; f -> b }.toMap
+        }
+      moved.map { f =>
+        byFile.get(f) match {
+          case None if lineage || nullStats =>
+            // a zero-row file: no rows → no ids to assign, zero nulls
+            val extras = (if (lineage) Seq("r:p") else Nil) ++ Seq("n:0") ++
+              (if (nullStats) Seq("z:" + cols.map(_ => "0").mkString(","))
+               else Nil)
+            (Seq(f) ++ cols.map(_ => "-\t-") ++ extras).mkString("\t")
+          case None => f
+          case Some(st) =>
+            val extras =
+              (if (!lineage) Nil
+               else Seq("r:" + baseOf.get(f).map(_.toString).getOrElse("p"))) ++
+              st.n.map(v => s"n:$v").toSeq ++
+              st.nulls.map(z => s"z:$z").toSeq
+            (Seq(f) ++ st.bounds ++ extras).mkString("\t")
+        }
+      }
+    }
+  }
+
+  /** What a manifest entry records about one data file beyond its path:
+    * the bound field of each stats column ([[boundField]]), the `z:`
+    * null counts (null-count layouts), the `n:` row count (lineage or
+    * null-count layouts), and how many of its rows still need a fresh
+    * row id (lineage layouts). */
+  private[graft] final case class FileStats(bounds: Seq[String],
+      nulls: Option[String], n: Option[Long], missing: Long)
+
+  /** One stats column's manifest bound field from a file's minimum and
+    * maximum (`null` when it holds no value): `min\tmax`, strings
+    * through [[strLowerBound]]/[[strUpperBound]] — `-\t-` when the
+    * file holds no value, or a string has no finite upper bound. */
+  private def boundField(mn: Any, mx: Any): String = (mn, mx) match {
+    case (null, _) | (_, null) => "-\t-"
+    case (lo: String, hi: String) =>
+      strUpperBound(hi).fold("-\t-")(up =>
+        s"${encStrBound(strLowerBound(lo))}\t${encStrBound(up)}")
+    case (lo, hi) => s"$lo\t$hi"
+  }
+
+  /** How many driver threads read one commit's footers. */
+  private val FooterThreads = 8
+
+  /** Driver-side threads for a commit's side work: footer reads, and
+    * an UPDATE's vector write running beside its image write. */
+  private lazy val sidePool = java.util.concurrent.Executors.newCachedThreadPool {
+    (r: Runnable) =>
+      val t = new Thread(r, "graft-snapshot-side")
+      t.setDaemon(true)
+      t
+  }
+
+  /** The result of a task on [[sidePool]], its own failure rethrown. */
+  private def await[T](f: java.util.concurrent.Future[T]): T =
+    try f.get()
+    catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+
+  /** Run `a` on a [[sidePool]] thread — the caller's session and job
+    * properties captured, so its jobs attribute like the caller's —
+    * while `b` runs on this one: two independent writes submit their
+    * jobs at once. Both finish before this returns; a failure of
+    * either is rethrown after both have. */
+  private def concurrently[A, B](spark: SparkSession)(a: => A)(b: => B): (A, B) = {
+    val fa = org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], sidePool)(a)
+    val rb = scala.util.Try(b)
+    val ra = scala.util.Try(await(fa))
+    (ra.get, rb.get)
+  }
+
+  /** The parquet footers of `files` (qualified paths), in order, read on
+    * the driver by at most [[FooterThreads]] threads — the shape of
+    * Spark's own parallel footer reader. */
+  private def footersOf(spark: SparkSession, files: Seq[String])
+      : Seq[org.apache.parquet.hadoop.metadata.ParquetMetadata] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def read(f: String) = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f), conf))
+      try r.getFooter finally r.close()
+    }
+    if (files.size <= 1) files.map(read)
+    else {
+      val per = (files.size + FooterThreads - 1) / FooterThreads
+      files.grouped(per).toSeq
+        .map(g => sidePool.submit(new java.util.concurrent.Callable[
+          Seq[org.apache.parquet.hadoop.metadata.ParquetMetadata]] {
+          def call() = g.map(read)
+        }))
+        .flatMap(await)
+    }
+  }
+
+  /** A parquet footer's row count. */
+  private def rowsOf(footer: org.apache.parquet.hadoop.metadata.ParquetMetadata): Long = {
+    import scala.jdk.CollectionConverters._
+    footer.getBlocks.asScala.map(_.getRowCount).sum
+  }
+
+  /** Each of `files` (root-relative, under `qualified`) with its (row
+    * count, [[FileStats]]) from its parquet footer ([[footerStats]]),
+    * None where the footer cannot say, for a layout declaring
+    * `tableMeta`'s stats, lineage and null counts. */
+  private[graft] def footerFileStats(spark: SparkSession, qualified: String,
+      files: Seq[String], tableMeta: Map[String, String],
+      written: org.apache.spark.sql.types.StructType)
+      : Seq[(String, Option[(Long, FileStats)])] = {
+    val cols = statsColsOf(tableMeta)
+    val lineage = rowIdsOn(tableMeta)
+    val nullStats = tableMeta.get("nullstats").contains("on")
+    files.zip(footersOf(spark, files.map(f => s"$qualified/$f"))).map {
+      case (f, footer) => f -> footerStats(footer, specKeyOf(f), cols,
+        written, lineage, nullStats)
+    }
+  }
+
+  /** A data file's (row count, [[FileStats]]) from its parquet footer,
+    * derived as [[aggregateStats]] derives them from its rows: integral
+    * bounds as LONG, timestamp bounds floor-divided to epoch seconds,
+    * string bounds from the UTF-8 byte-order minimum and maximum (the
+    * order parquet and Spark both sort strings in), null counts and
+    * the rows missing a physical row id from the column null counts.
+    * None when the footer cannot say: a row group without a column's
+    * statistics (parquet drops them for oversized values), a type or
+    * encoding whose LONG cast has no footer form (INT96, dates,
+    * floats, decimals), or a stats column read from the partition dir
+    * (`pcolOfFile`) rather than the file. */
+  private def footerStats(footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
+      pcolOfFile: String, cols: Seq[String],
+      written: org.apache.spark.sql.types.StructType, lineage: Boolean,
+      nullStats: Boolean): Option[(Long, FileStats)] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{IntLogicalTypeAnnotation, StringLogicalTypeAnnotation, TimeUnit, TimestampLogicalTypeAnnotation}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64}
+    import org.apache.spark.sql.types.{ByteType, IntegerType, ShortType, StringType, TimestampType}
+    val blocks = footer.getBlocks.asScala.toSeq
+    val rows = rowsOf(footer)
+    val schema = footer.getFileMetaData.getSchema
+    val present = written.fieldNames.toSet
+    // (min, max, nulls) of a file column, min/max null when every value
+    // is NULL, values through `conv`; None when the footer cannot say
+    def colStats(c: String, conv: Option[Any => Any])
+        : Option[(Any, Any, Long)] = {
+      val path = org.apache.parquet.hadoop.metadata.ColumnPath.get(c)
+      val chunks = blocks.map(_.getColumns.asScala.find(_.getPath == path))
+      if (chunks.exists(_.isEmpty)) None
+      else {
+        val stats = chunks.flatten.map(ch => (ch.getStatistics, ch.getValueCount))
+        if (stats.exists { case (s, nv) =>
+            s == null || s.isEmpty || !s.isNumNullsSet ||
+              (conv.nonEmpty && !s.hasNonNullValue && s.getNumNulls < nv) })
+          None
+        else {
+          val vals = stats.collect { case (s, _) if conv.nonEmpty && s.hasNonNullValue =>
+            (conv.get(s.genericGetMin), conv.get(s.genericGetMax))
+          }
+          val nulls = stats.map(_._1.getNumNulls).sum
+          if (vals.isEmpty) Some((null, null, nulls))
+          else vals.head._1 match {
+            case _: Array[Byte] =>
+              val bs = vals.map { case (a, b) =>
+                (a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]]) }
+              Some((new String(bs.map(_._1).reduce((a, b) => if (cmpBytes(a, b) <= 0) a else b), Charset),
+                new String(bs.map(_._2).reduce((a, b) => if (cmpBytes(a, b) >= 0) a else b), Charset),
+                nulls))
+            case _ =>
+              Some((vals.map(_._1.asInstanceOf[Long]).min,
+                vals.map(_._2.asInstanceOf[Long]).max, nulls))
+          }
+        }
+      }
+    }
+    // the footer form of `cast(c AS LONG)` (or the string itself)
+    def convOf(c: String): Option[Any => Any] = {
+      val t = schema.getType(schema.getFieldIndex(c))
+      if (!t.isPrimitive) None
+      else {
+        val p = t.asPrimitiveType
+        (written(c).dataType, p.getPrimitiveTypeName, p.getLogicalTypeAnnotation) match {
+          case (StringType, BINARY, _: StringLogicalTypeAnnotation) =>
+            Some((v: Any) => v.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes)
+          case (ByteType | ShortType | IntegerType | LongType, INT32 | INT64, a)
+              if a == null || a.isInstanceOf[IntLogicalTypeAnnotation] &&
+                a.asInstanceOf[IntLogicalTypeAnnotation].isSigned =>
+            Some((v: Any) => v.asInstanceOf[Number].longValue)
+          case (TimestampType, INT64, a: TimestampLogicalTypeAnnotation)
+              if a.isAdjustedToUTC =>
+            val perSecond = a.getUnit match {
+              case TimeUnit.MILLIS => 1000L
+              case TimeUnit.MICROS => 1000000L
+              case TimeUnit.NANOS => 1000000000L
+            }
+            Some((v: Any) => Math.floorDiv(v.asInstanceOf[Number].longValue, perSecond))
+          case _ => None
+        }
+      }
+    }
+    // per stats column: (bound field, null count), None when unknown
+    val perCol: Seq[Option[(String, Long)]] = cols.map { c =>
+      if (!present(c)) Some(("-\t-", rows))
+      else if (!schema.containsField(c))
+        if (c == pcolOfFile) None else Some(("-\t-", rows))
+      else convOf(c).flatMap(conv => colStats(c, Some(conv)))
+        .map { case (mn, mx, z) => (boundField(mn, mx), z) }
+    }
+    val physIds = lineage && present(RowIdCol)
+    val missing: Option[Long] =
+      if (physIds)
+        if (schema.containsField(RowIdCol)) colStats(RowIdCol, None).map(_._3)
+        else Some(rows)
+      else if (lineage) Some(rows) // no physical column: all rows need ids
+      else Some(0L)
+    if (perCol.exists(_.isEmpty) || missing.isEmpty) None
+    else Some(rows -> FileStats(perCol.map(_.get._1),
+      if (nullStats) Some(perCol.map(_.get._2).mkString(",")) else None,
+      if (lineage || nullStats) Some(rows) else None, missing.get))
+  }
+
+  /** [[FileStats]] of `files` (root-relative, under `qualified`) from
+    * their rows, for a layout declaring `tableMeta`'s stats, lineage and
+    * null counts: ONE grouped aggregate over those files only, every
+    * column and count together, read under `written` (footer inference
+    * would cost a job of its own) and keyed back to each entry through
+    * [[relFileOf]]. The fallback for files [[footerStats]] cannot
+    * derive; a zero-row file yields no entry. */
+  private[graft] def aggregateStats(spark: SparkSession, qualified: String,
+      files: Seq[String], tableMeta: Map[String, String],
+      written: org.apache.spark.sql.types.StructType): Map[String, FileStats] =
+    if (files.isEmpty) Map.empty
+    else {
+      val cols = statsColsOf(tableMeta)
+      val lineage = rowIdsOn(tableMeta)
+      val nullStats = tableMeta.get("nullstats").contains("on")
       val df = spark.read.option("basePath", qualified).schema(written)
-        .parquet(moved.map(f => s"$qualified/$f"): _*)
+        .parquet(files.map(f => s"$qualified/$f"): _*)
       val present = df.columns.toSet
       // a rewrite's files carry the materialized row-id column; an
       // append's don't (virtual ids — zero stored bytes)
@@ -2205,12 +2474,10 @@ object Snapshot {
       // per-column mode from the batch's own schema: STRING columns
       // record UTF-8-byte-order bounds (Spark's string min/max order),
       // everything else keeps the LONG cast (timestamps → epoch seconds)
-      val isStr = cols.map(c => present(c) &&
-        df.schema(c).dataType == org.apache.spark.sql.types.StringType)
       val boundAggs = cols.zipWithIndex.flatMap { case (c, i) =>
         val v =
           if (!present(c)) lit(null).cast(LongType)
-          else if (isStr(i)) col(c)
+          else if (df.schema(c).dataType == org.apache.spark.sql.types.StringType) col(c)
           else col(c).cast(LongType)
         Seq(fmin(v).as(s"__mn$i"), fmax(v).as(s"__mx$i"))
       }
@@ -2225,82 +2492,27 @@ object Snapshot {
         (if (physIds)
           Seq(sum(when(col(RowIdCol).isNull, 1L).otherwise(0L)).as("__miss"))
         else Nil)
-      // ONE job over the new files only, all columns + counts together
       val aggs = boundAggs ++ nullAggs ++ countAggs
       // grouped by the raw URI, so each file's path decodes once
-      val byFile = df.groupBy(col("_metadata.file_path").as("__uri"))
+      df.groupBy(col("_metadata.file_path").as("__uri"))
         .agg(aggs.head, aggs.tail: _*)
         .withColumn("__file", relFileOf(qualified, col("__uri")))
         .collect()
         .map { r =>
-          val bounds = cols.indices.map { i =>
-            if (r.isNullAt(r.fieldIndex(s"__mn$i"))) "-\t-"
-            else if (isStr(i)) {
-              val up = strUpperBound(r.getString(r.fieldIndex(s"__mx$i")))
-                .map(encStrBound).getOrElse("-")
-              if (up == "-") "-\t-"
-              else {
-                val lo = encStrBound(
-                  strLowerBound(r.getString(r.fieldIndex(s"__mn$i"))))
-                s"$lo\t$up"
-              }
-            } else {
-              val mn = r.getLong(r.fieldIndex(s"__mn$i"))
-              val mx = r.getLong(r.fieldIndex(s"__mx$i"))
-              s"$mn\t$mx"
-            }
-          }
-          val nulls =
-            if (!nullStats) None
-            else Some(cols.indices
-              .map(i => r.getLong(r.fieldIndex(s"__z$i")).toString)
-              .mkString(","))
+          def at(name: String): Any = r.get(r.fieldIndex(name))
           val n =
             if (lineage || nullStats) Some(r.getLong(r.fieldIndex("__n")))
             else None
-          val missing =
+          r.getString(r.fieldIndex("__file")) -> FileStats(
+            cols.indices.map(i => boundField(at(s"__mn$i"), at(s"__mx$i"))),
+            if (!nullStats) None
+            else Some(cols.indices.map(i => at(s"__z$i").toString).mkString(",")),
+            n,
             if (physIds) r.getLong(r.fieldIndex("__miss"))
             else if (lineage) n.get // no physical column: all rows need ids
-            else 0L
-          r.getString(r.fieldIndex("__file")) ->
-            ((bounds, nulls, n, missing))
+            else 0L)
         }.toMap
-      // id-base allocation: ONE claimed range covers every file that
-      // needs fresh ids this commit (a file with fully-materialized ids
-      // needs none → `r:p`); per-file bases are assigned in sorted-file
-      // order inside the range, each sized by the file's ROW COUNT so
-      // `base + position` stays unique even for rows whose physical id
-      // is non-null (their slots simply go unused)
-      val needIds = moved.sorted.filter(f =>
-        lineage && byFile.get(f).exists(_._4 > 0))
-      val baseOf: Map[String, Long] =
-        if (needIds.isEmpty) Map.empty
-        else {
-          val counts = needIds.map(f => f -> byFile(f)._3.get)
-          var acc = allocateRowIds(fs, root, counts.map(_._2).sum)
-          counts.map { case (f, c) => val b = acc; acc += c; f -> b }.toMap
-        }
-      moved.map { f =>
-        byFile.get(f) match {
-          case None if lineage || nullStats =>
-            // a zero-row file never reaches the aggregate — record it
-            // explicitly (no rows → no ids to assign, zero nulls)
-            val extras = (if (lineage) Seq("r:p") else Nil) ++ Seq("n:0") ++
-              (if (nullStats) Seq("z:" + cols.map(_ => "0").mkString(","))
-               else Nil)
-            (Seq(f) ++ cols.map(_ => "-\t-") ++ extras).mkString("\t")
-          case None => f
-          case Some((bounds, nulls, n, _)) =>
-            val extras =
-              (if (!lineage) Nil
-               else Seq("r:" + baseOf.get(f).map(_.toString).getOrElse("p"))) ++
-              n.map(v => s"n:$v").toSeq ++
-              nulls.map(z => s"z:$z").toSeq
-            (Seq(f) ++ bounds ++ extras).mkString("\t")
-        }
-      }
     }
-  }
 
   // ----- SCHEMA EVOLUTION: RENAME + TYPE PROMOTION ----------------------
   // Add-column evolution ([[widenRecordedSchema]]) covers a table's
@@ -2709,14 +2921,18 @@ object Snapshot {
     * maintenance preserves clustering without every caller re-knowing
     * it. A Z-order clusters on the Morton key of its columns, so every
     * output file gets a tight bounding box in all of them and the
-    * declared stats columns record those boxes. Every dir in `touched`
-    * must restage under its own name before the commit removes its old
-    * entries, unless `rows` holds none of its rows (its files emptied
-    * out — legal, and checked only for dirs that did not restage): a
-    * miss with survivors (non-canonical dir name from an external
-    * writer) aborts with the snapshot untouched; the moved files are
-    * unreferenced and retire via expire. Returns the moved files'
-    * manifest entry lines ([[statLines]]). */
+    * declared stats columns record those boxes. Survivors restage under
+    * their value's CANONICAL dir name (the partitioned writer's
+    * escaping), so a dir an external writer escaped another way
+    * (`day=a'b`, which a write names `a%27b`) moves to its canonical
+    * dir in the commit that removes its old entries; readers decode
+    * both names to the same value. Every partition value in `touched`
+    * must restage before that commit, unless `rows` holds none of its
+    * rows (its files emptied out — legal, and checked only for values
+    * that did not restage): a miss with survivors aborts with the
+    * snapshot untouched; the moved files are unreferenced and retire
+    * via expire. Returns the moved files' manifest entry lines
+    * ([[statLines]]). */
   private def rewriteSurvivors(h: Head, tag: String, rows: DataFrame,
       partitionCol: String, sortCols: Seq[String], zOrderCols: Seq[String],
       targets: Map[String, Int], touched: Iterable[String]): Seq[String] = {
@@ -2729,18 +2945,17 @@ object Snapshot {
       Sink.packPartitioned(keyed, partitionCol,
         if (z.isEmpty) lin else Seq("__z"), targets).drop("__z"),
       partitionCol)
-    val movedParts = moved.map(_.split("/")(0)).toSet
-    val unstaged = touched.toSeq.distinct.filterNot(movedParts)
+    val movedValues = moved.map(f => partValueOf(f, partitionCol)).toSet
+    val unstaged = touched.toSeq.distinct
+      .map(d => d -> partValueOf(d, partitionCol))
+      .filterNot { case (_, value) => movedValues(value) }
     if (unstaged.nonEmpty) {
-      val values = unstaged.map(d => org.apache.spark.sql.catalyst.catalog
-        .ExternalCatalogUtils.unescapePathName(d.stripPrefix(s"$partitionCol=")))
-      val kept = rows.where(col(partitionCol).isin(values: _*))
+      val kept = rows.where(col(partitionCol).isin(unstaged.map(_._2): _*))
         .select(col(partitionCol)).distinct().collect().map(_.getString(0)).toSet
-      unstaged.zip(values).find { case (_, value) => kept(value) }.foreach {
+      unstaged.find { case (_, value) => kept(value) }.foreach {
         case (part, _) => throw new IllegalStateException(
-          s"staged rewrite missing for partition '$part' (non-canonical " +
-          "dir name?) — aborting before the commit; the snapshot is " +
-          "unchanged")
+          s"staged rewrite missing for partition '$part' — aborting " +
+          "before the commit; the snapshot is unchanged")
       }
     }
     statLines(rows.sparkSession, h.fs, h.root, moved, h.meta, rows.schema)
@@ -2787,8 +3002,7 @@ object Snapshot {
     if (plan.isEmpty) return Seq.empty
     val oldFiles = plan.flatMap(_._2)
     val targets = plan.map { case (part, _, nTarget) =>
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(part.stripPrefix(s"$partitionCol=")) -> nTarget
+      partValueOf(part, partitionCol) -> nTarget
     }.toMap
     // maintenance read: partition column typed STRING (raw dir value,
     // no inference) so the plan key ↔ routed value ↔ staged dir name
@@ -2799,11 +3013,12 @@ object Snapshot {
       readForMaintenanceLineage(spark, h.qualified, oldFiles, partitionCol,
         h.meta, h.lines),
       partitionCol, sortCols, zOrderCols, targets, plan.map(_._1))
-    val movedByPart = lines.map(pathOf).groupBy(_.split("/")(0))
+    val movedByValue = lines.map(pathOf).groupBy(partValueOf(_, partitionCol))
     commit(h.fs, h.root, Some(h.v), oldFiles.toSet, lines,
       Map("op" -> "compact")): Unit
     plan.map { case (part, fsOfPart, _) =>
-      (part, fsOfPart.size, movedByPart.get(part).fold(0)(_.size))
+      (part, fsOfPart.size,
+        movedByValue.get(partValueOf(part, partitionCol)).fold(0)(_.size))
     }
   }
 
@@ -2879,33 +3094,51 @@ object Snapshot {
     dirty.toSeq.map { case (value, nDel, _) => (partDirName(value), nDel) }
   }
 
+  /** The staged part files under a write's output dir. */
+  private def partFiles(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(dir).toSeq.filter(f => f.isFile &&
+      !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+
+  /** Stage a row-level write's matches under `dir` with the scan's
+    * parallelism — no single task funnels the match set — in ONE job
+    * that also reports what the commit needs: how many rows landed,
+    * summed from the staged footers (exact under task retries), and the
+    * data files `fileCol` references, observed on the same write as a
+    * set (a retried task cannot skew it) — the commit's `mustBeLive`
+    * and `dvRefs`. */
+  private def stageMatches(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path, rows: DataFrame,
+      fileCol: String): (Long, Set[String]) = {
+    val seen = org.apache.spark.sql.Observation()
+    rows.observe(seen, collect_set(col(fileCol)).as("files"))
+      .write.parquet(dir.toString)
+    val n = footersOf(rows.sparkSession,
+      partFiles(fs, dir).map(_.getPath.toString)).map(rowsOf).sum
+    (n, seen.get("files").asInstanceOf[scala.collection.Seq[String]].toSet)
+  }
+
   /** The one deletion-vector write: pack `n` staged `(dv_file, dv_pos)`
-    * pairs into [[vectorFileCount]] files under `stg` — no single task
-    * funnels an unbounded match set, and a forget-user sized vector
-    * stays one sidecar — then move them under `_deletes/`. Returns the
-    * moved vectors' root-relative paths and the data files their
-    * positions are valid against (the commit's `mustBeLive` and
-    * `dvRefs`), collected from the staged `pairs` — a re-read of the
-    * moved files would pay a parquet schema-inference job. The caller
-    * owns `stg` and deletes it. */
+    * pairs into [[vectorFileCount]] files under `stg`, then move them
+    * under `_deletes/`. A vector of at most `cap` rows is one file
+    * written by one task without a shuffle (a single job); a larger one
+    * spreads over ceil(n / cap) tasks, so no single task funnels an
+    * unbounded match set. Returns the moved vectors' root-relative
+    * paths. The caller owns `stg` and deletes it. */
   private def writeVectors(h: Head, stg: org.apache.hadoop.fs.Path,
-      pairs: DataFrame, n: Long, cap: Long): (Seq[String], Set[String]) = {
+      pairs: DataFrame, n: Long, cap: Long): Seq[String] = {
     val vecStg = new org.apache.hadoop.fs.Path(stg, "vec")
-    pairs.repartition(vectorFileCount(n, cap)).write.parquet(vecStg.toString)
+    val k = vectorFileCount(n, cap)
+    (if (k == 1) pairs.coalesce(1) else pairs.repartition(k))
+      .write.parquet(vecStg.toString)
     val dvDir = new org.apache.hadoop.fs.Path(h.root, DeletesDir)
     h.fs.mkdirs(dvDir)
-    val moved = h.fs.listStatus(vecStg).toSeq
-      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-        !f.getPath.getName.startsWith("."))
-      .map { f =>
-        val dst = new org.apache.hadoop.fs.Path(dvDir, f.getPath.getName)
-        if (!h.fs.rename(f.getPath, dst))
-          throw new IllegalStateException(s"deletion-vector move failed: $dst")
-        s"$DeletesDir/${f.getPath.getName}"
-      }
-    val referenced = pairs.select(col("dv_file")).distinct().collect()
-      .map(_.getString(0)).toSet
-    (moved, referenced)
+    partFiles(h.fs, vecStg).map { f =>
+      val dst = new org.apache.hadoop.fs.Path(dvDir, f.getPath.getName)
+      if (!h.fs.rename(f.getPath, dst))
+        throw new IllegalStateException(s"deletion-vector move failed: $dst")
+      s"$DeletesDir/${f.getPath.getName}"
+    }
   }
 
   /** MERGE-ON-READ row deletion: where [[deleteWhere]] REWRITES every
@@ -2918,6 +3151,9 @@ object Snapshot {
     * is why Delta/Iceberg v2 made this their default delete path. The
     * read-side anti-join is the price, paid until
     * [[materializeDeletes]] folds the vectors into a file-grain rewrite.
+    * Two jobs when the match set fits one vector file: the scan stages
+    * the matches and reports their count and referenced files
+    * ([[stageMatches]]), and [[writeVectors]] packs them.
     *
     * Idempotent stacking: vectors accumulate across calls, rows an
     * outstanding vector already hides are never re-marked, and a rerun
@@ -2947,16 +3183,13 @@ object Snapshot {
       .select(col("__dv_file").as("dv_file"), col("__dv_pos").as("dv_pos"))
     val marked = vectorsOf(spark, qualified, h.deletes).fold(markedAll)(dv =>
       markedAll.join(dv, Seq("dv_file", "dv_pos"), "left_anti"))
-    // stage the matches with the SCAN's parallelism — no single task
-    // ever funnels the match set — then pack them into vector files
+    // stage the matches, then pack them into vector files
     val stg = stagingDir(h.root, "mor")
     val raw = new org.apache.hadoop.fs.Path(stg, "raw")
-    marked.write.parquet(raw.toString)
-    val staged = readPairFiles(spark, Seq(raw.toString))
-    // footer-only count of what actually landed
-    val n = staged.count()
+    val (n, referenced) = stageMatches(h.fs, raw, marked, "dv_file")
     if (n == 0L) { h.fs.delete(stg, true): Unit; return (h.v, 0L) }
-    val (moved, referenced) = writeVectors(h, stg, staged, n, vectorRowCap)
+    val moved = writeVectors(h, stg, readPairFiles(spark, Seq(raw.toString)),
+      n, vectorRowCap)
     h.fs.delete(stg, true): Unit
     val nv = commit(h.fs, h.root, Some(h.v), Set.empty, moved,
       Map("op" -> "mor-delete"), mustBeLive = referenced,
@@ -2978,9 +3211,10 @@ object Snapshot {
     * re-files every dirty partition, which for a cross-partition
     * correction at 100 TB is a table-width rewrite for a few thousand
     * changed rows (the [[deleteWhereMoR]] asymmetry, generalized). ONE
-    * scan of the table finds the matches; the vector and the new images
-    * both derive from the staged match set, so everything after the scan
-    * is O(matched).
+    * scan of the table stages the matches ([[stageMatches]], which also
+    * reports their count and referenced files); the vector and the new
+    * images both derive from the staged match set and are written at
+    * the same time, so everything after the scan is O(matched).
     *
     * `set` maps existing DATA columns to their new expressions
     * (evaluated against the row's CURRENT image — `value * 2` doubles
@@ -3035,20 +3269,20 @@ object Snapshot {
     // image); vector and new images derive from the staged copy
     val stg = stagingDir(h.root, "update")
     val matchedDir = new org.apache.hadoop.fs.Path(stg, "matched")
-    hits.write.parquet(matchedDir.toString)
-    val matched = spark.read.schema(hits.schema).parquet(matchedDir.toString)
-    val n = matched.count() // footer-only
+    val (n, referenced) = stageMatches(h.fs, matchedDir, hits, "__dv_file")
     if (n == 0L) { h.fs.delete(stg, true): Unit; return (h.v, 0L) }
-    // the vector hiding the old images — deleteWhereMoR's sidecar shape
-    val (dvMoved, referenced) = writeVectors(h, stg,
-      matched.select(col("__dv_file").as("dv_file"),
-        col("__dv_pos").as("dv_pos")), n, vectorRowCap)
+    val matched = spark.read.schema(hits.schema).parquet(matchedDir.toString)
     // the new images: SET expressions over the old image, clustered one
     // file per touched partition
     val images = set.foldLeft(matched) { case (df, (k, e)) => df.withColumn(k, e) }
       .drop("__dv_file", "__dv_pos")
-    val moved = stagePartitioned(h.fs, h.root, "update",
-      images.repartition(col(partitionCol)), partitionCol)
+    // the vector hiding the old images (deleteWhereMoR's sidecar shape)
+    // and the images are independent writes: they run at once
+    val (dvMoved, moved) = concurrently(spark)(writeVectors(h, stg,
+        matched.select(col("__dv_file").as("dv_file"),
+          col("__dv_pos").as("dv_pos")), n, vectorRowCap))(
+      stagePartitioned(h.fs, h.root, "update",
+        images.repartition(col(partitionCol)), partitionCol))
     h.fs.delete(stg, true): Unit
     val nv = commit(h.fs, h.root, Some(h.v), Set.empty,
       dvMoved ++ statLines(spark, h.fs, h.root, moved, h.meta, images.schema),
@@ -3078,25 +3312,29 @@ object Snapshot {
     * jobs regardless of how many files the vectors touch. Returns
     * (partition dir, vector rows applied). */
   def materializeDeletes(spark: SparkSession, path: String,
-      partitionCol: String, sortCols: Seq[String] = Nil): Seq[(String, Long)] = {
-    val h = headOf(spark, path)
+      partitionCol: String, sortCols: Seq[String] = Nil): Seq[(String, Long)] =
+    materializeAt(spark, headOf(spark, path), partitionCol, sortCols, None)
+
+  /** [[materializeDeletes]] at `h`. `perFileKnown` is the vectors' per-file
+    * row counts ([[vectorCounts]]) when the caller already holds them —
+    * [[maintain]] hands over its audit's pass — else computed here. */
+  private def materializeAt(spark: SparkSession, h: Head,
+      partitionCol: String, sortCols: Seq[String],
+      perFileKnown: Option[Seq[(String, Long)]]): Seq[(String, Long)] = {
     val dvs = h.deletes
     if (dvs.isEmpty) return Seq.empty
-    requireNoEqDeletes(h.lines, path, "materializeDeletes")
+    requireNoEqDeletes(h.lines, h.root.toString, "materializeDeletes")
     requireUniformSpec(h.files, partitionCol, "materializeDeletes")
     // every delete entry is a position vector here (no equality tier)
     val dvDf = vectorsOf(spark, h.qualified, dvs).get
     // O(touched files) driver state — the vectors' reference set
-    val perFile = dvDf.groupBy(col("dv_file")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1)
+    val perFile = perFileKnown.getOrElse(vectorCounts(spark, h))
     val affected = perFile.map(_._1)
     val live = h.files.toSet
     affected.foreach(f => require(live(f),
       s"deletion vector references non-live file $f — corrupted manifest?"))
-    def partValue(f: String): String =
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(f.split("/")(0).stripPrefix(s"$partitionCol="))
-    val targets = affected.groupBy(partValue).view.mapValues(_.size).toMap
+    val targets = affected.groupBy(partValueOf(_, partitionCol))
+      .view.mapValues(_.size).toMap
     // lineage-aware read surfaces `_row_id` so the rewrite carries it;
     // the (file, pos) keys it materializes double as the DV-subtract
     // join key (one derivation, shared — _metadata would no longer
@@ -3331,12 +3569,11 @@ object Snapshot {
       .select(col("__dv_file").as("dv_file"), col("__dv_pos").as("dv_pos"))
     val stg = stagingDir(h.root, "eqconv")
     val raw = new org.apache.hadoop.fs.Path(stg, "raw")
-    marked.write.parquet(raw.toString)
-    val staged = readPairFiles(spark, Seq(raw.toString))
-    val n = staged.count()
-    val (moved, referenced) =
-      if (n == 0L) (Nil, Set.empty[String])
-      else writeVectors(h, stg, staged, n, vectorRowCap)
+    val (n, referenced) = stageMatches(h.fs, raw, marked, "dv_file")
+    val moved =
+      if (n == 0L) Nil
+      else writeVectors(h, stg, readPairFiles(spark, Seq(raw.toString)),
+        n, vectorRowCap)
     h.fs.delete(stg, true): Unit
     val nv = commit(h.fs, h.root, Some(h.v), eqs.map(_.file).toSet, moved,
       Map("op" -> "eq-convert"), mustBeLive = referenced,
@@ -3440,7 +3677,7 @@ object Snapshot {
     * `touched` partitions at `h` (with their ids on a lineage layout —
     * the rewrite keeps them), drop every row whose key is in `keys`,
     * union the `updates` images (a batch without `_row_id` gets fresh
-    * ids: NULL here, allocated by the commit's stat job), cluster one
+    * ids: NULL here, allocated by the commit's [[statLines]]), cluster one
     * file per touched partition — a merge batch's rewrite should repair
     * file shape, not degrade it — and commit through
     * [[replacePartitions]]. `h` is both what the survivors read AND the
@@ -4429,23 +4666,32 @@ object Snapshot {
       if (liveFiles == 0) 0.0 else referencedFiles.toDouble / liveFiles
   }
 
-  def dvAudit(spark: SparkSession, path: String): DvAudit = {
-    val h = headOf(spark, path)
-    val nLive = h.dataLines.size.toLong
-    // POSITION vectors only: equality sidecars carry key columns, not
-    // (dv_file, dv_pos) — their debt is audited by their count (each is
-    // one reader anti-join) and folded by convertEqDeletes
-    vectorsOf(spark, h.qualified, h.deletes)
-      .fold(DvAudit(h.v, 0L, 0L, 0L, nLive)) { dv =>
-        // one tiny aggregate over the O(hidden rows) sidecars, in one
-        // task: a single input partition needs no exchange, so the audit
-        // is one Spark job where a shuffled aggregate would be three
-        val r = dv.coalesce(1).agg(count(lit(1)).as("n"),
-          count_distinct(col("dv_file")).as("nf")).collect()(0)
-        DvAudit(h.v, h.deletes.count(f => !isEqFile(f)).toLong,
-          r.getLong(0), r.getLong(1), nLive)
-      }
+  def dvAudit(spark: SparkSession, path: String): DvAudit =
+    auditAt(spark, headOf(spark, path))._1
+
+  /** [[dvAudit]] at `h`, with the per-file counts its one pass computed
+    * — what a fold at `h` needs ([[materializeAt]]). POSITION vectors
+    * only: equality sidecars carry key columns, not (dv_file, dv_pos) —
+    * their debt is audited by their count (each is one reader
+    * anti-join) and folded by convertEqDeletes. */
+  private def auditAt(spark: SparkSession, h: Head)
+      : (DvAudit, Seq[(String, Long)]) = {
+    val perFile = vectorCounts(spark, h)
+    (DvAudit(h.v, h.deletes.count(f => !isEqFile(f)).toLong,
+      perFile.map(_._2).sum, perFile.size.toLong, h.dataLines.size.toLong),
+      perFile)
   }
+
+  /** Per referenced data file, how many rows the position vectors at
+    * `h` hide, sorted by file — one tiny aggregate over the O(hidden
+    * rows) sidecars, in one task: a single input partition needs no
+    * exchange, so it is one Spark job where a shuffled aggregate would
+    * be two or three. */
+  private def vectorCounts(spark: SparkSession, h: Head): Seq[(String, Long)] =
+    vectorsOf(spark, h.qualified, h.deletes).fold(Seq.empty[(String, Long)]) { dv =>
+      dv.coalesce(1).groupBy(col("dv_file")).agg(count(lit(1)))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).sortBy(_._1).toSeq
+    }
 
   /** THRESHOLD-DRIVEN FOLD: audit the vector debt and call
     * [[materializeDeletes]] exactly when it crosses the policy — more
@@ -4533,12 +4779,14 @@ object Snapshot {
     val eqN = h.lines.count(isEqDeleteEntry).toLong
     val eqFired = eqN > policy.maxEqSidecars || (eqN > 0 && needCompact)
     val eqRows = if (eqFired) convertEqDeletes(spark, path)._2 else 0L
-    // 2. vector tier — audited AFTER the conversion so its vectors count
-    val audit = dvAudit(spark, path)
+    // 2. vector tier — audited AFTER the conversion so its vectors
+    // count; the fold reuses the audit's per-file pass
+    val hv = if (eqFired) headOf(spark, path) else h
+    val (audit, perFile) = auditAt(spark, hv)
     val dvFired = audit.vectors > policy.maxVectors ||
       (audit.vectors > 0 &&
         (audit.referencedShare > policy.maxReferencedShare || needCompact))
-    if (dvFired) materializeDeletes(spark, path, partitionCol): Unit
+    if (dvFired) materializeAt(spark, hv, partitionCol, Nil, Some(perFile)): Unit
     // 3. file shape
     if (needCompact)
       compact(spark, path, partitionCol, policy.compactTargetBytes): Unit

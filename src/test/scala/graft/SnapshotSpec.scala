@@ -436,6 +436,58 @@ class SnapshotSpec extends AnyFunSuite {
     assert(Snapshot.readSnapshot(spark, big2).count() == 9 * 8)
   }
 
+  test("a snapshot write runs only its data writes: pinned job counts, the same at 3 and 9 partitions") {
+    import spark.implicits._
+    // a table with stats and null counts, 2 files per date (both layouts
+    // stay under Spark's 32-path parallel-listing threshold)
+    def build(nParts: Int): String = {
+      val path = s"${tmp("graft-snappins")}/layout"
+      Snapshot.append(spark, path, "event_date",
+        (0 until nParts * 8).map { i =>
+          (i.toLong, Seq(3L, 5L, 7L, 7L)(i % 4), i.toLong,
+            f"2024-01-${i % nParts + 1}%02d")
+        }.toDF("event_id", "user_id", "ts_ms", "event_date").repartition(2),
+        meta = Map("stats" -> "event_id,user_id", "nullstats" -> "on"))
+      path
+    }
+    // each op's pinned count, in order: the append's write; the
+    // delete's staged match write and its one-task vector write; the
+    // update's broadcast of the delete's vector, its staged match write,
+    // and its vector and image writes (the image clusters through a
+    // shuffle: 2); the fold's vector audit (its per-file pass feeds the
+    // fold), survivor routing (2) and rewrite. No op runs a statistics,
+    // count or distinct job.
+    val ops = Seq[(String, Int, String => Unit)](
+      ("append", 1, p => Snapshot.append(spark, p, "event_date",
+        Seq((1000L, 9L, 1000L, "2024-01-01"))
+          .toDF("event_id", "user_id", "ts_ms", "event_date")): Unit),
+      ("deleteWhereMoR", 2, p => assert(Snapshot.deleteWhereMoR(spark, p,
+        "event_date", col("user_id") === 3L)._2 > 0)),
+      ("updateWhere", 5, p => assert(Snapshot.updateWhere(spark, p,
+        "event_date", col("user_id") === 7L,
+        Map("ts_ms" -> (col("ts_ms") + 1L)))._2 > 0)),
+      ("maintain fold", 4, p => assert(Snapshot.maintain(spark, p,
+        "event_date", Snapshot.MaintainPolicy(maxVectors = 0L))
+        .exists(a => a.signal == "deletion_vectors" && a.fired))))
+    val small = build(3)
+    val big = build(9)
+    ops.foreach { case (name, pinned, op) =>
+      Seq(small -> 3, big -> 9).foreach { case (p, n) =>
+        val sites = TestJobs.jobSitesDuring(spark)(op(p))
+        assert(sites.size == pinned,
+          s"$name at $n partitions ran ${sites.size} jobs, pinned $pinned:" +
+            TestJobs.describe(sites))
+      }
+    }
+    // the writes landed: user 3 gone, user 7 re-imaged, the append kept
+    val snap = Snapshot.readSnapshot(spark, big)
+    assert(snap.count() == 9 * 8 * 3 / 4 + 1)
+    assert(snap.where(col("user_id") === 5L).count() == 9 * 8 / 4)
+    assert(snap.where(col("user_id") === 3L).count() == 0)
+    assert(snap.where(col("user_id") === 7L && col("ts_ms") =!= col("event_id") + 1L)
+      .count() == 0)
+  }
+
   test("snapshot reads keep the partition-pruning contract: a date predicate is a PartitionFilter") {
     // manifest isolation must not cost data skipping: readSnapshot feeds
     // Spark an explicit file list, and a partition-column predicate on it
@@ -592,7 +644,7 @@ class SnapshotSpec extends AnyFunSuite {
       "expire left unreferenced deletion vectors behind")
   }
 
-  test("materialize: a partition whose touched files empty out drops; one that kept rows but did not restage aborts") {
+  test("materialize: a partition whose touched files empty out drops; one that kept rows restages under its canonical dir") {
     val path = buildLayout()
     Snapshot.init(spark, path, "event_date")
     val before = ids(Snapshot.readSnapshot(spark, path))
@@ -611,8 +663,8 @@ class SnapshotSpec extends AnyFunSuite {
 
     // an externally-written dir with non-canonical escaping ("a'b",
     // which a partitioned write escapes as "a%27b"): its survivor
-    // restages under the escaped name, not its own — abort before the
-    // commit, snapshot unchanged
+    // restages under the escaped name, and the same commit retires the
+    // old dir's file — the partition moves to its canonical dir
     import spark.implicits._
     val path2 = s"${tmp("graft-snap-matext")}/external"
     val flat = s"${tmp("graft-snap-matext")}/flat"
@@ -626,14 +678,15 @@ class SnapshotSpec extends AnyFunSuite {
       }
     Snapshot.init(spark, path2, "event_date")
     Snapshot.deleteWhereMoR(spark, path2, "event_date", col("event_id") === 3L)
-    val v2 = Snapshot.currentVersion(spark, path2)
-    val ex = intercept[IllegalStateException] {
-      Snapshot.materializeDeletes(spark, path2, "event_date")
-    }
-    assert(ex.getMessage.contains("staged rewrite missing"),
-      s"wrong failure mode: ${ex.getMessage}")
-    assert(Snapshot.currentVersion(spark, path2) == v2)
-    assert(ids(Snapshot.readSnapshot(spark, path2)) == Set(4L))
+    assert(Snapshot.materializeDeletes(spark, path2, "event_date") ==
+      Seq("event_date=a'b" -> 1L))
+    val (v2, files2) = Snapshot.currentFiles(spark, path2)
+    assert(Snapshot.deletesOf(spark, path2, v2).isEmpty)
+    assert(files2.nonEmpty && files2.forall(_.startsWith("event_date=a%27b/")),
+      s"$files2")
+    assert(Snapshot.readSnapshot(spark, path2).select("event_id", "event_date")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq ==
+      Seq((4L, "a'b")))
   }
 
   test("row file identities are manifest paths under escaped dir names: an a%62 dir materializes, a+b round-trips") {
@@ -677,6 +730,49 @@ class SnapshotSpec extends AnyFunSuite {
     assert(Snapshot.readSnapshot(spark, p2).select("event_id", "event_date")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq ==
       Seq((4L, "a+b")))
+  }
+
+  test("a non-canonically escaped dir (day=a'b) folds its vector into its canonical dir, and MERGE works again") {
+    import spark.implicits._
+    // an external writer named the dir `a'b`; a partitioned write names
+    // the same value `a%27b`
+    val wh = tmp("graft-snap-quote")
+    val path = s"$wh/t"
+    val flat = s"${tmp("graft-snap-quote")}/flat"
+    Seq((3L, 30.0), (4L, 40.0)).toDF("id", "value").coalesce(1).write.parquet(flat)
+    val dir = new java.io.File(s"$path/day=a'b")
+    assert(dir.mkdirs())
+    new java.io.File(flat).listFiles().filter(_.getName.endsWith(".parquet"))
+      .foreach(f => Files.move(f.toPath, new java.io.File(dir, f.getName).toPath))
+    Snapshot.init(spark, path, "day", statsCols = Seq("id"))
+    spark.conf.set("spark.sql.catalog.gquote",
+      classOf[graft.sources.sql.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gquote.warehouse", wh)
+    def rows(): Seq[(Long, Double, String)] =
+      spark.sql("SELECT id, value, day FROM gquote.t").collect()
+        .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).sortBy(_._1).toSeq
+    // a DELETE that leaves a row in the dir: a vector over it
+    spark.sql("DELETE FROM gquote.t WHERE id = 3")
+    assert(rows() == Seq((4L, 40.0, "a'b")))
+    Seq((4L, 44.0, "a'b"), (5L, 50.0, "a'b")).toDF("id", "value", "day")
+      .createOrReplaceTempView("quote_src")
+    val merge = """MERGE INTO gquote.t AS t USING quote_src AS s ON t.id = s.id
+                  |WHEN MATCHED THEN UPDATE SET *
+                  |WHEN NOT MATCHED THEN INSERT *""".stripMargin
+    // copy-on-write MERGE refuses over the outstanding vector
+    val ex = intercept[IllegalArgumentException](spark.sql(merge))
+    assert(ex.getMessage.contains("outstanding deletion vector"), ex.getMessage)
+    // the fold restages the survivor under the canonical dir name and
+    // retires the old dir's file in the same commit
+    val fired = spark.sql("CALL gquote.maintain('t')").collect()
+      .map(r => r.getString(1) -> r.getBoolean(2)).toMap
+    assert(fired("deletion_vectors"), s"maintain: $fired")
+    val (v, files) = Snapshot.currentFiles(spark, path)
+    assert(Snapshot.deletesOf(spark, path, v).isEmpty)
+    assert(files.nonEmpty && files.forall(_.startsWith("day=a%27b/")), s"$files")
+    assert(rows() == Seq((4L, 40.0, "a'b")))
+    spark.sql(merge)
+    assert(rows() == Seq((4L, 44.0, "a'b"), (5L, 50.0, "a'b")))
   }
 
   test("vectors read under their declared schema: planning a read over them runs no job; dvAudit runs one") {

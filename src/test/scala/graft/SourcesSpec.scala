@@ -258,7 +258,7 @@ class SourcesSpec extends AnyFunSuite {
       Tables.load(spark, SharedSpark.sf0001, "events").count())
   }
 
-  test("tricky partition values: round-trip-safe ones compact; a non-canonical dir aborts intact") {
+  test("tricky partition values: round-trip-safe ones compact; a non-canonical dir compacts into its canonical dir") {
     import spark.implicits._
     // "01" tempts integer inference (would become 1 and break the
     // plan-key ↔ routed-value match); Spark's round-trip-safe inference
@@ -291,9 +291,9 @@ class SourcesSpec extends AnyFunSuite {
 
     // an EXTERNALLY-written dir with non-canonical escaping ("a%62"
     // unescapes to "ab", which re-escapes to "ab" — a different dir
-    // name): the staged rewrite lands under the canonical name, so the
-    // pre-commit validation must abort with the snapshot unchanged
-    // instead of committing the partition away
+    // name): the staged rewrite lands under the canonical name, and the
+    // same commit retires the old dir's files — the partition moves to
+    // its canonical dir with every row kept
     val path2 = s"${tmp("graft-badpart")}/external"
     val flat = s"${tmp("graft-badpart")}/flat"
     Seq((3L, 30L)).toDF("event_id", "ts_ms").coalesce(1).write.parquet(flat)
@@ -313,13 +313,11 @@ class SourcesSpec extends AnyFunSuite {
           .map(_.getLong(0)).toSet)
     val before = state()
     assert(before == (Some(1L), Set(3L, 4L)))
-    val ex = intercept[IllegalStateException] {
-      Snapshot.compact(spark, path2, "event_date", 1L << 30, Seq("ts_ms"))
-    }
-    assert(ex.getMessage.contains("staged rewrite missing"),
-      s"wrong failure mode: ${ex.getMessage}")
-    // nothing committed: same version, same rows
-    assert(state() == before)
+    assert(Snapshot.compact(spark, path2, "event_date", 1L << 30, Seq("ts_ms")) ==
+      Seq(("event_date=a%62", 2, 1)))
+    assert(state() == (Some(2L), Set(3L, 4L)))
+    val files2 = Snapshot.currentFiles(spark, path2)._2
+    assert(files2.size == 1 && files2.head.startsWith("event_date=ab/"), s"$files2")
   }
 
   test("fingerprint retention sweep keeps current + N, deletes older prints") {
