@@ -1585,9 +1585,10 @@ object Analytics {
   // copy-on-write / q61 merge-on-read), and now keyed upsert — the load
   // pattern every warehouse runs nightly (late-arriving corrections +
   // new facts in one batch). Snapshot.merge replaces-by-key and inserts
-  // in ONE atomic commit, reading and rewriting ONLY the partitions the
-  // batch touches (planning-time isin pruning; untouched partitions
-  // keep their manifest entries and bytes — SnapshotSpec pins it). The
+  // in ONE atomic commit, reading ONLY the partitions the batch touches
+  // (planning-time isin pruning) and rewriting only the files there
+  // that hold a batch key (every other file keeps its manifest entry
+  // and bytes — SnapshotSpec pins both). The
   // batch here is derived from the corpus itself so the oracle can
   // re-derive it: ~1% corrections (value doubled, a binary-exact
   // transform) + ~1% inserts (id-offset copies); the post-merge report
@@ -3401,13 +3402,13 @@ object Analytics {
       |ORDER BY 1, 2""".stripMargin
 
   // ---------------------------------------------------------------------
-  // q88 — CROSS-PARTITION MERGE graded through the hash gate (the r17
-  // ask #4 composition): [[Snapshot.merge]]'s contract requires
-  // partition-stable keys because locating a moved key is O(table);
-  // mergeAnywhere closes it by probing the SECONDARY KEY INDEX for
-  // every update key's current partitions — O(touched partitions),
-  // pinned in-query by file identity (the untouched day's manifest
-  // entries survive the merge byte-identically). The fixture moves the
+  // q88 — CROSS-PARTITION MERGE graded through the hash gate:
+  // [[Snapshot.merge]]'s contract requires partition-stable keys;
+  // mergeAnywhere finds every update key's current files from the
+  // manifest's bounds on the declared `event_id` stats and rewrites
+  // only the files holding a moved key — pinned in-query by file
+  // identity (the untouched days' manifest entries survive the merge
+  // byte-identically). The fixture moves the
   // earliest day's 1-in-50 id cohort to the NEXT day (delete-from-old +
   // insert-into-new inside ONE commit) with a bumped value; the oracle
   // simulates the merge over the raw events.
@@ -3418,7 +3419,6 @@ object Analytics {
     val fp = graft.sources.Sink.corpusFingerprint(s, s"$dir/events.parquet")
     val base = s"${graft.sources.Sink.artifactRoot}/events_xmerge/$tag/fp_$fp"
     val path = s"$base/table"
-    val idx = s"$base/index"
     def baseRows: DataFrame = Tables.load(s, dir, "events")
       .withColumn("event_date", to_date(col("ts")))
       .select(col("event_id"), col("user_id"), col("value"),
@@ -3442,12 +3442,12 @@ object Analytics {
         .withColumn("event_date", date_add(col("event_date"), 1))
         .withColumn("value", col("value") + lit(100.0))
       Snapshot.mergeAnywhere(s, path, "event_date", updates,
-        Seq("event_id"), idx, indexBuckets = 16)
+        Seq("event_id"))
       val after = Snapshot.filesOf(s, path,
         Snapshot.currentVersion(s, path).get).toSet
-      // O(touched partitions), by FILE IDENTITY: only the move's source
-      // day and destination day re-filed; every other day's entries
-      // carried verbatim
+      // by FILE IDENTITY: only files of the move's source and
+      // destination days re-filed; every other day's entries carried
+      // verbatim
       val touchedDirs = Set(s"event_date=$minDate",
         s"event_date=${java.sql.Date.valueOf(minDate.toLocalDate.plusDays(1))}")
       val untouchedBefore = before.filterNot(f =>

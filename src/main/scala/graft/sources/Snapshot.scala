@@ -67,10 +67,11 @@ final class SnapshotConflictException(msg: String)
   * from their parquet footers; [[commit]] swings the pointer. A commit
   * runs only its data writes: every count, file set and statistic it
   * records comes from the write that produced it, not from a job of
-  * its own. SQL MERGE composes them in
-  * [[rewriteKeyed]]: candidate files from the manifest's key bounds,
-  * one [[keyedScan]] of them, one staged write of the new contents of
-  * the files holding an acting row, one commit replacing those files.
+  * its own. SQL MERGE and the library upserts ([[merge]],
+  * [[mergeAnywhere]]) compose them in [[rewriteKeyed]]: candidate
+  * files from the manifest's key bounds, one [[keyedScan]] of them,
+  * one staged write of the new contents of the files holding an acting
+  * row, one commit replacing those files.
   *
   * Every read is likewise built from three private steps:
   * [[vectorsOf]] reads a version's position vectors under the declared
@@ -1541,10 +1542,18 @@ object Snapshot {
     * column. The (file, pos) keys materialize on each scan BEFORE the
     * union (no join can derive `_metadata` through it), the generations
     * union, retired names fold ([[resolveRenames]]), and on lineage each
-    * row's id fills from the caller's `bases`. */
+    * row's id fills from the caller's `bases`. No files: the recorded
+    * schema with the same key (and id) columns and zero rows. */
   private def keyedScan(spark: SparkSession, qualified: String,
       meta: Map[String, String], files: Seq[String],
       bases: Option[Map[String, Long]]): DataFrame = {
+    if (files.isEmpty) {
+      val empty = emptyTyped(spark, qualified, meta)
+        .withColumn("__dv_file", lit(null).cast("string"))
+        .withColumn("__dv_pos", lit(null).cast(LongType))
+      return bases.fold(empty)(_ =>
+        empty.withColumn(RowIdCol, lit(null).cast(LongType)))
+    }
     val bySpec = files.groupBy(specKeyOf).toSeq.sortBy(_._1)
     val schema = bases match {
       case Some(_) => Some(lineageReadSchema(physReadSchema(meta).getOrElse(
@@ -2114,7 +2123,7 @@ object Snapshot {
 
   /** The partition value a root-relative entry path or dir name
     * (`<partitionCol>=<escaped value>[/<file>]`) names. */
-  private def partValueOf(f: String, partitionCol: String): String =
+  private[graft] def partValueOf(f: String, partitionCol: String): String =
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       .unescapePathName(f.split("/")(0).stripPrefix(s"$partitionCol="))
 
@@ -3476,7 +3485,8 @@ object Snapshot {
     * applies strictly below it). Cost is O(batch): the batch's
     * partitioned write plus one key sidecar — the table is never read,
     * which is what makes per-micro-batch MERGE affordable at 100 TB
-    * (the [[merge]] path reads and rewrites every touched partition).
+    * (the [[merge]] path reads the candidate files and rewrites every
+    * file that holds a batch key).
     * Within-batch duplicate keys all survive — dedup the batch first
     * if downstream expects one row per key. Schema evolution matches
     * [[append]] (the recorded schema widens). */
@@ -3598,171 +3608,110 @@ object Snapshot {
     * untouched; producing an EMPTY partition is not expressible here
     * (use [[deleteWhere]] to drop rows). */
   def replacePartitions(spark: SparkSession, path: String, partitionCol: String,
-      replacement: DataFrame, meta: Map[String, String] = Map.empty,
-      base: Option[(Long, Seq[String])] = None,
-      alsoReplaceParts: Set[String] = Set.empty): Long = {
+      replacement: DataFrame, meta: Map[String, String] = Map.empty): Long = {
     require(replacement.columns.contains(partitionCol),
       s"replacement rows lack partition column '$partitionCol'")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = fsOf(spark, root)
-    // `base` threads the (version, file list) the REPLACEMENT was
-    // derived from ([[merge]] passes the resolution its survivors read)
-    // — re-resolving here would open a lost-update window: an append
-    // landing between merge's read and this commit would put its file
-    // into `replaced` (partition touched) and silently delete rows the
-    // replacement never saw
-    val (v, files) = base.getOrElse(currentFiles(spark, path))
-    val (vMeta, vLines) = stateOf(spark, path, v)
-    requireNoDeletes(vLines, path, "replacePartitions")
-    requireUniformSpec(files, partitionCol, "replacePartitions")
-    val moved = stagePartitioned(fs, root, "replace", replacement, partitionCol)
-    // `alsoReplaceParts` (dir names, `pcol=value`): partitions the
-    // caller replaces that the replacement happens to hold NO rows for
-    // — a cross-partition merge that drains a partition must still
-    // retire its files ([[mergeAnywhere]])
-    alsoReplaceParts.foreach(d => require(d.startsWith(s"$partitionCol="),
-      s"alsoReplaceParts entry '$d' is not a '$partitionCol=' dir name"))
-    val touched = moved.map(_.split("/")(0)).toSet ++ alsoReplaceParts
-    val replaced = files.filter(f => touched(f.split("/")(0))).toSet
-    val lines = statLines(spark, fs, root, moved, vMeta, replacement.schema)
+    val h = headOf(spark, path, "call Snapshot.init first")
+    requireNoDeletes(h.lines, path, "replacePartitions")
+    requireUniformSpec(h.files, partitionCol, "replacePartitions")
+    val moved = stagePartitioned(h.fs, h.root, "replace", replacement,
+      partitionCol)
+    val touched = moved.map(_.split("/")(0)).toSet
+    val replaced = h.files.filter(f => touched(f.split("/")(0))).toSet
+    val lines = statLines(spark, h.fs, h.root, moved, h.meta,
+      replacement.schema)
     // `replacedParts`: a rebase aborts if a CONCURRENT commit landed a
     // file into a partition this commit replaces wholesale — that file
     // was never read into the replacement, so rebasing would silently
     // drop its rows (the Iceberg validateAddedDataFiles check)
-    commit(fs, root, Some(v), replaced, lines, Map("op" -> "replace") ++ meta,
-      replacedParts = touched)
+    commit(h.fs, h.root, Some(h.v), replaced, lines,
+      Map("op" -> "replace") ++ meta, replacedParts = touched)
   }
 
   /** UPSERT (MERGE INTO) committed through the manifest: every row of
-    * `updates` REPLACES the current row with the same `keyCols` value,
-    * or INSERTS if the key is new — one atomic commit, O(touched
-    * partitions): only partitions holding an update's `partitionCol`
-    * value are read (partition-pruned — the isin is a literal list) and
-    * rewritten; every other partition keeps its exact manifest entries
-    * and bytes. The rewrite is survivors (current touched-partition
-    * rows whose key is not updated, one anti-join) ∪ updates, through
-    * [[replacePartitions]]' staged write.
+    * `updates` REPLACES the current rows with the same `keyCols` value,
+    * or INSERTS if the key is new — one atomic [[rewriteKeyed]] commit.
+    * Only partitions holding an update's `partitionCol` value are read
+    * (the isin is a literal list, so a planning-time partition filter
+    * on the candidate scan), and only the files there that hold an
+    * updated key are rewritten, clustered by `sortCols`: every other
+    * file keeps its exact manifest entry and bytes. Updated keys are
+    * new images with fresh row ids on a lineage layout (a batch's
+    * `_row_id` is dropped); [[updateWhere]] is the id-keeping update.
     *
     * Contract: keys are PARTITION-STABLE — an update must carry the
     * partition value its key already lives under (the date-keyed upsert
-    * every warehouse load runs). A key that moved partitions would need
-    * a cross-partition search, which is O(table), exactly what this op
-    * promises not to pay; moving a row is delete + insert. `updates`
-    * must match the table's column set (use [[append]] for
-    * schema-evolving batches). */
+    * every warehouse load runs); [[mergeAnywhere]] finds keys that
+    * moved. `updates` must match the table's column set (use [[append]]
+    * for schema-evolving batches). */
   def merge(spark: SparkSession, path: String, partitionCol: String,
       updates: DataFrame, keyCols: Seq[String],
-      sortCols: Seq[String] = Nil,
-      meta: Map[String, String] = Map.empty): Long = {
+      sortCols: Seq[String] = Nil): Long = {
     require(keyCols.nonEmpty, "merge needs at least one key column")
     require(updates.columns.contains(partitionCol),
       s"merge updates lack partition column '$partitionCol'")
     // native-typed literal list, so the touched-partition restriction
     // is a planning-time PartitionFilter (a cast would defeat pruning)
     val touched = updates.select(col(partitionCol)).distinct()
-      .collect().map(_.get(0))
-    require(touched.nonEmpty, "merge with an empty updates batch")
-    val h = headOf(spark, path)
-    // fail BEFORE the survivor scan and staged write — the commit-side
-    // [[replacePartitions]] would refuse outstanding deletes anyway
-    requireNoDeletes(h.lines, path, "merge")
-    // the update rows are NEW images under merge's replace-or-insert
-    // contract: without `_row_id` they get FRESH ids
-    mergeTouched(spark, path, partitionCol, h, touched.toIndexedSeq,
-      updates.select(keyCols.map(col): _*).distinct(), keyCols,
-      updates.drop(RowIdCol), sortCols, meta, Set.empty)
-  }
-
-  /** The shared tail of [[merge]] and [[mergeAnywhere]]: read the
-    * `touched` partitions at `h` (with their ids on a lineage layout —
-    * the rewrite keeps them), drop every row whose key is in `keys`,
-    * union the `updates` images (a batch without `_row_id` gets fresh
-    * ids: NULL here, allocated by the commit's [[statLines]]), cluster one
-    * file per touched partition — a merge batch's rewrite should repair
-    * file shape, not degrade it — and commit through
-    * [[replacePartitions]]. `h` is both what the survivors read AND the
-    * commit base, so a concurrent append between this read and the
-    * commit can never slip a file into a replaced partition unseen (it
-    * aborts on rebase) or be silently deleted. */
-  private def mergeTouched(spark: SparkSession, path: String,
-      partitionCol: String, h: Head, touched: Seq[Any], keys: DataFrame,
-      keyCols: Seq[String], updates: DataFrame, sortCols: Seq[String],
-      meta: Map[String, String], alsoReplaceParts: Set[String]): Long = {
-    val lineage = rowIdsOn(h.meta)
-    val cur = (if (lineage) readVersionLineage(spark, path, h.v)
-               else readVersion(spark, path, h.v))
-      .where(col(partitionCol).isin(touched: _*))
-    val survivors = cur.join(keys, keyCols, "left_anti")
-    val images =
-      if (!lineage || updates.columns.contains(RowIdCol)) updates
-      else updates.withColumn(RowIdCol, lit(null).cast(LongType))
-    val replacement = survivors
-      .unionByName(images.select(cur.columns.map(col): _*))
-      .repartition(col(partitionCol))
-      .sortWithinPartitions((partitionCol +: sortCols).map(col): _*)
-    replacePartitions(spark, path, partitionCol, replacement,
-      Map("merge_keys" -> keyCols.mkString(",")) ++ meta,
-      base = Some((h.v, h.files)), alsoReplaceParts = alsoReplaceParts)
-  }
-
-  /** MERGE with CROSS-PARTITION keys — the contract [[merge]] refuses
-    * ("a key that moved partitions would need a cross-partition
-    * search, which is O(table)") closed by COMPOSING the secondary key
-    * index: [[KeyIndex.filesForKeys]] locates every
-    * update key's CURRENT partitions from one bucket-pruned index
-    * probe, so the op stays O(touched partitions) — old locations ∪
-    * new locations — never a table scan. A key that moved is expressed
-    * as delete-from-old + insert-into-new INSIDE ONE commit: the old
-    * partition's survivors rewrite without the key (a fully-drained
-    * partition retires via `alsoReplaceParts` even though the
-    * replacement holds no rows for it), the new partition's rewrite is
-    * its survivors ∪ the update images. Rerun-idempotent: a second run
-    * finds the keys already at their new locations and rewrites the
-    * same touched set to the same state.
-    *
-    * The index refreshes first (incremental on append-shaped gaps; a
-    * rebuild after a previous merge's re-file is the documented
-    * maintenance cadence), and its freshness enforcement guarantees
-    * location COMPLETENESS: every current data file was scanned, so a
-    * key's old image can never hide in an unindexed file. Typed
-    * partition values for the old locations are read from the touched
-    * partitions themselves — no string-to-type dir rendering, and the
-    * isin restriction stays a planning-time partition filter. */
-  def mergeAnywhere(spark: SparkSession, path: String, partitionCol: String,
-      updates: DataFrame, keyCols: Seq[String], idxPath: String,
-      sortCols: Seq[String] = Nil,
-      meta: Map[String, String] = Map.empty,
-      indexBuckets: Int = 32): Long = {
-    require(keyCols.nonEmpty, "mergeAnywhere needs at least one key column")
-    require(updates.columns.contains(partitionCol),
-      s"mergeAnywhere updates lack partition column '$partitionCol'")
-    keyCols.foreach(c => require(updates.columns.contains(c),
-      s"mergeAnywhere updates lack key column '$c'"))
-    KeyIndex.refresh(spark, path, keyCols, idxPath, indexBuckets): Unit
-    val h = headOf(spark, path)
-    requireNoDeletes(h.lines, path, "mergeAnywhere")
-    val keyFrame = updates.select(keyCols.map(col): _*).distinct()
-    val oldFiles = KeyIndex.filesForKeys(spark, idxPath, keyFrame)
-    val oldParts = oldFiles.map(_.split("/")(0)).toSet
-    val oldPartFiles = h.files.filter(f => oldParts(f.split("/")(0)))
-    val oldVals: Seq[Any] =
-      if (oldPartFiles.isEmpty) Seq.empty
-      else readVersionFiles(spark, path, h.v, oldPartFiles)
-        .select(col(partitionCol)).distinct()
-        .collect().map(_.get(0)).toIndexedSeq
-    val newVals: Seq[Any] = updates.select(col(partitionCol)).distinct()
       .collect().map(_.get(0)).toIndexedSeq
-    val touched = (oldVals ++ newVals).distinct
-    require(touched.nonEmpty, "mergeAnywhere with an empty updates batch")
-    // lineage: a batch that declares row ids passes them through; a
-    // plain batch takes fresh ids, the replace-or-insert contract
-    mergeTouched(spark, path, partitionCol, h, touched, keyFrame, keyCols,
-      updates, sortCols, meta, oldParts)
+    val keys = updates.select(keyCols.map(col): _*).distinct()
+    rewriteKeyed(spark, path, partitionCol, keys, sortCols)(
+      upsertRows(keys, updates.drop(RowIdCol),
+        Some(col(partitionCol).isin(touched: _*))))
+      .getOrElse(throw new IllegalArgumentException(
+        "merge with an empty updates batch"))
+  }
+
+  /** MERGE with CROSS-PARTITION keys, the contract [[merge]] does not
+    * serve: an update's key may live under another partition value than
+    * the update carries. Old locations come from the manifest's key
+    * bounds ([[rewriteKeyed]]'s candidates, as for SQL MERGE — declare
+    * stats on the key, or every file is a candidate), and a key that
+    * moved is delete-from-old + insert-into-new inside ONE commit: each
+    * file holding an updated key is rewritten without it (a file left
+    * empty retires), and the images land in their new partitions.
+    * Every other file keeps its exact manifest entry. A batch that
+    * carries `_row_id` passes it through on a lineage layout; a plain
+    * batch takes fresh ids. Rerun-idempotent: a second run finds the
+    * keys at their new locations and lands the same rows again. */
+  def mergeAnywhere(spark: SparkSession, path: String, partitionCol: String,
+      updates: DataFrame, keyCols: Seq[String]): Long = {
+    require(keyCols.nonEmpty, "mergeAnywhere needs at least one key column")
+    (partitionCol +: keyCols).foreach(c => require(updates.columns.contains(c),
+      s"mergeAnywhere updates lack column '$c'"))
+    val keys = updates.select(keyCols.map(col): _*).distinct()
+    rewriteKeyed(spark, path, partitionCol, keys)(upsertRows(keys, updates, None))
+      .getOrElse(throw new IllegalArgumentException(
+        "mergeAnywhere with an empty updates batch"))
+  }
+
+  /** The [[rewriteKeyed]] callback of [[merge]] and [[mergeAnywhere]]:
+    * drop every candidate row (within `scope`, when given) whose key is
+    * in `keys` and add every row of `images` — duplicated batch keys
+    * all land. On lineage an image without `_row_id` takes a fresh id
+    * (NULL, minted at commit). Only the files that held a dropped row
+    * are replaced. */
+  private def upsertRows(keys: DataFrame, images: DataFrame,
+      scope: Option[Column])(cand: DataFrame, scan: Seq[String] => DataFrame)
+      : (Set[String], Option[DataFrame]) = {
+    val keyCols = keys.columns.toSeq
+    val hit = scope.fold(cand)(cand.where).join(keys, keyCols, "left_semi")
+      .select("__dv_file").distinct().collect().map(_.getString(0)).toSet
+    val out = cand.columns.toSeq.filterNot(Set("__dv_file", "__dv_pos"))
+    val withIds =
+      if (!out.contains(RowIdCol) || images.columns.contains(RowIdCol)) images
+      else images.withColumn(RowIdCol, lit(null).cast(LongType))
+    // the kept rows' scan is typed even when no file is hit, so the
+    // union widens the images to the table's types
+    (hit, Some(scan(hit.toSeq.sorted).join(keys, keyCols, "left_anti")
+      .select(out.map(col): _*)
+      .unionByName(withIds.select(out.map(col): _*))))
   }
 
   /** The FILE-GRAIN keyed rewrite under SQL MERGE
-    * ([[graft.sources.sql.GraftMergeIntoCommand]]). `keys` (columns =
-    * the key columns) is a point-lookup set: it collects once, and no
+    * ([[graft.sources.sql.GraftMergeIntoCommand]]) and the library
+    * upserts ([[merge]], [[mergeAnywhere]]). `keys` (columns = the key
+    * columns) is a point-lookup set: it collects once, and no
     * rows means a no-op (None, nothing read). The candidates are the
     * live data files whose manifest bounds can hold a key
     * ([[keyCandidates]]); `rewrite` gets them as ONE [[keyedScan]] at
@@ -3772,7 +3721,8 @@ object Snapshot {
     * replaces and the new rows (those files' new contents plus the rows
     * to add, each carrying the table's columns, plus `_row_id` on
     * lineage — NULL mints a fresh id); no rows commits nothing. The
-    * rows stage in one write, one file per partition they land in, and
+    * rows stage in one write, one file per partition they land in
+    * (sorted by `sortCols` within it, when given), and
     * commit against the head the candidates were read at, removing
     * exactly the returned files: every other file keeps its entry and
     * bytes. A concurrent commit that re-files a removed file or adds a
@@ -3781,7 +3731,7 @@ object Snapshot {
     * Copy-on-write: outstanding deletion vectors refuse first. Returns
     * the committed version, if any. */
   private[graft] def rewriteKeyed(spark: SparkSession, path: String,
-      partitionCol: String, keys: DataFrame)(
+      partitionCol: String, keys: DataFrame, sortCols: Seq[String] = Nil)(
       rewrite: (DataFrame, Seq[String] => DataFrame) =>
         (Set[String], Option[DataFrame]))
       : Option[Long] = {
@@ -3794,22 +3744,17 @@ object Snapshot {
     val lineage = rowIdsOn(h.meta)
     if (lineage) requireLineageEntries(candLines, path)
     def scan(files: Seq[String]): DataFrame =
-      if (files.nonEmpty)
-        keyedScan(spark, h.qualified, h.meta, files,
-          if (lineage) Some(basesOf(candLines)) else None)
-      else {
-        val empty = emptyTyped(spark, h.qualified, h.meta)
-          .withColumn("__dv_file", lit(null).cast("string"))
-          .withColumn("__dv_pos", lit(null).cast(LongType))
-        if (lineage) empty.withColumn(RowIdCol, lit(null).cast(LongType))
-        else empty
-      }
+      keyedScan(spark, h.qualified, h.meta, files,
+        if (lineage) Some(basesOf(candLines)) else None)
     val (removed, rows) = rewrite(scan(cand), scan)
     require(removed.subsetOf(cand.toSet),
       s"keyed rewrite of $path replaces non-candidate files ${removed -- cand}")
     rows.map { r =>
+      val shaped = r.repartition(col(partitionCol))
       val moved = stagePartitioned(h.fs, h.root, "merge",
-        r.repartition(col(partitionCol)), partitionCol)
+        if (sortCols.isEmpty) shaped
+        else shaped.sortWithinPartitions((partitionCol +: sortCols).map(col): _*),
+        partitionCol)
       commit(h.fs, h.root, Some(h.v), removed,
         statLines(spark, h.fs, h.root, moved, h.meta, r.schema),
         Map("op" -> "replace", "merge_keys" -> keys.columns.mkString(",")),

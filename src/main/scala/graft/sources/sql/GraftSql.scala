@@ -140,24 +140,6 @@ object GraftSql {
     case _ => None
   }
 
-  /** Spark's `escapePathName` inverse, %xx only (no '+'-to-space —
-    * that would corrupt literal plus signs). */
-  private[sql] def unescapeDirValue(s: String): String = {
-    if (!s.contains('%')) return s
-    val sb = new java.lang.StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        try {
-          sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-          i += 3
-        } catch { case _: NumberFormatException => sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
   /** MANIFEST FILE PLANNING from the accepted filters, version-pinned:
     * partition-directory pruning (equality / IN on the partition
     * column against the `pcol=value/` entry-path prefix), then min/max
@@ -188,9 +170,8 @@ object GraftSql {
         keepValues match {
           case None => all
           case Some(keep) => all.filter { f =>
-            val dir = f.takeWhile(_ != '/')
-            if (!dir.startsWith(s"$p=")) true // other-spec generation
-            else keep(unescapeDirValue(dir.stripPrefix(s"$p=")))
+            if (!f.startsWith(s"$p=")) true // other-spec generation
+            else keep(Snapshot.partValueOf(f, p))
           }
         }
       case None => all

@@ -698,6 +698,34 @@ class GraftSqlSpec extends AnyFunSuite {
       (9L, 90.0, "ab")), s"MERGE over escaped dirs: $got")
   }
 
+  test("SELECT prunes escaped partition dirs by their unescaped value: a%3Ab is 'a:b', a+b is 'a+b'") {
+    import spark.implicits._
+    val wh = tmp("graft-escselwh")
+    val path = s"$wh/t"
+    Seq("a%3Ab" -> Seq(1L, 2L), "a+b" -> Seq(3L), "c" -> Seq(4L))
+      .foreach { case (d, ids) =>
+        val flat = s"${tmp("graft-escsel")}/flat"
+        ids.toDF("id").coalesce(1).write.parquet(flat)
+        val dir = new java.io.File(s"$path/day=$d")
+        assert(dir.mkdirs())
+        new java.io.File(flat).listFiles()
+          .filter(_.getName.endsWith(".parquet")).foreach { f =>
+            java.nio.file.Files.move(f.toPath, new java.io.File(dir, f.getName).toPath)
+          }
+      }
+    Snapshot.init(spark, path, "day")
+    registerCatalog("gescsel", wh)
+    Seq("a:b" -> Seq(1L, 2L), "a+b" -> Seq(3L)).foreach { case (day, ids) =>
+      val q = spark.sql(s"SELECT id, day FROM gescsel.t WHERE day = '$day'")
+      val plan = q.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
+      assert("""files=1/3""".r.findFirstIn(plan).isDefined,
+        s"day = '$day' did not prune to its one dir:\n$plan")
+      assert(q.collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted ==
+        ids.map(_ -> day), s"day = '$day' read the wrong rows")
+    }
+  }
+
   test("SQL MERGE runs a constant number of jobs: 3 vs 9 touched partitions") {
     import spark.implicits._
     // every day holds 8 rows in 2 files (both layouts stay under Spark's

@@ -119,6 +119,23 @@ class KeyIndexSpec extends AnyFunSuite {
     assert(vOf(3L) == Set(333L))
   }
 
+  test("a refresh asking for a different bucket count refuses") {
+    val base = tmp("graft-keyidx-buckets")
+    val path = s"$base/t"
+    val idx = s"$base/i"
+    Snapshot.append(spark, path, "event_date", rows(1L to 4L))
+    assert(KeyIndex.refresh(spark, path, "event_id", idx, buckets = 4)
+      .mode == "build")
+    Snapshot.append(spark, path, "event_date", rows(5L to 6L))
+    // the bucket count is fixed at build time — a refresh asking for
+    // another one must refuse, not silently mis-bucket
+    val e = intercept[IllegalArgumentException](
+      KeyIndex.refresh(spark, path, "event_id", idx, buckets = 8))
+    assert(e.getMessage.contains("fixed at build time"), e.getMessage)
+    assert(KeyIndex.refresh(spark, path, "event_id", idx, buckets = 4)
+      .mode == "delta")
+  }
+
   // The q87 skipping pin at TWO scale factors — the r18 slot died at the
   // graded sf0.1 because its fixed planned·2 ≤ total margin was tuned
   // against sf0.01's shape only (VERDICT r18 #1). The pin is now

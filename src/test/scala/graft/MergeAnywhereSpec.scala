@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Cross-partition MERGE contracts: a key that moves partitions is
-  * delete+insert in ONE commit, untouched partitions keep their exact
-  * manifest entries (O(touched partitions), pinned by file identity),
-  * a fully-drained partition retires, and the op is rerun-idempotent. */
+  * delete+insert in ONE commit, files holding no batch key keep their
+  * exact manifest entries (pinned by file identity), a fully-drained
+  * partition retires, and the op is rerun-idempotent. */
 class MergeAnywhereSpec extends AnyFunSuite {
   private lazy val spark = SharedSpark.spark
 
@@ -27,7 +27,6 @@ class MergeAnywhereSpec extends AnyFunSuite {
   test("moving keys rewrite only old+new partitions; drained partitions retire; rerun is idempotent") {
     val base = tmp("graft-xmerge")
     val path = s"$base/t"
-    val idx = s"$base/i"
     // d1 holds ONLY key 1 (will drain), d2 holds 2..3, d3 holds 4..6
     Snapshot.append(spark, path, "day", rows(Seq(
       (1L, 10.0, "d1"),
@@ -38,8 +37,7 @@ class MergeAnywhereSpec extends AnyFunSuite {
 
     // key 1 moves d1 -> d2; key 2 stays in d2 with a new image
     Snapshot.mergeAnywhere(spark, path, "day",
-      rows(Seq((1L, 11.0, "d2"), (2L, 22.0, "d2"))), Seq("k"), idx,
-      indexBuckets = 4)
+      rows(Seq((1L, 11.0, "d2"), (2L, 22.0, "d2"))), Seq("k"))
     val v2 = Snapshot.currentVersion(spark, path).get
     val after = Snapshot.filesOf(spark, path, v2).toSet
 
@@ -63,8 +61,7 @@ class MergeAnywhereSpec extends AnyFunSuite {
 
     // rerun with the SAME updates: same final state, d3 still untouched
     Snapshot.mergeAnywhere(spark, path, "day",
-      rows(Seq((1L, 11.0, "d2"), (2L, 22.0, "d2"))), Seq("k"), idx,
-      indexBuckets = 4)
+      rows(Seq((1L, 11.0, "d2"), (2L, 22.0, "d2"))), Seq("k"))
     assert(state() == expected)
     assert(d3Before.subsetOf(
       Snapshot.filesOf(spark, path,
@@ -72,18 +69,16 @@ class MergeAnywhereSpec extends AnyFunSuite {
       "rerun rewrote the untouched partition")
   }
 
-  test("pure inserts with new keys and new partitions need no old locations; bucket-count drift refuses") {
-    val base = tmp("graft-xmerge2")
-    val path = s"$base/t"
-    val idx = s"$base/i"
+  test("pure inserts with new keys and new partitions need no old locations") {
+    val path = s"${tmp("graft-xmerge2")}/t"
     Snapshot.append(spark, path, "day", rows(Seq((1L, 1.0, "d1"))))
+    val before = Snapshot.filesOf(spark, path,
+      Snapshot.currentVersion(spark, path).get).toSet
     Snapshot.mergeAnywhere(spark, path, "day",
-      rows(Seq((7L, 7.0, "d9"))), Seq("k"), idx, indexBuckets = 4)
+      rows(Seq((7L, 7.0, "d9"))), Seq("k"))
     assert(Snapshot.readSnapshot(spark, path).count() == 2L)
-    // the index's bucket count is fixed at build time — a later merge
-    // asking for a different one must refuse, not silently mis-bucket
-    intercept[IllegalArgumentException](
-      Snapshot.mergeAnywhere(spark, path, "day",
-        rows(Seq((8L, 8.0, "d9"))), Seq("k"), idx, indexBuckets = 8))
+    assert(before.subsetOf(Snapshot.filesOf(spark, path,
+      Snapshot.currentVersion(spark, path).get).toSet),
+      "an insert-only merge re-filed a file holding no batch key")
   }
 }

@@ -901,16 +901,67 @@ class SnapshotSpec extends AnyFunSuite {
       .select("ts_ms").as[Long].head() == 99990L, "update did not replace")
     assert(snap.where(col("event_id") === 888L).count() == 1L)
     // untouched partitions keep their exact manifest entries (and so
-    // their bytes); the touched partition is fully re-filed
+    // their bytes); in the touched partition exactly the files that
+    // held an updated key are re-filed
     val after = Snapshot.currentFiles(spark, path)._2
     val untouched = before.filterNot(_.startsWith("event_date=2024-01-01"))
     assert(untouched.forall(after.contains), "merge touched a clean partition")
-    assert(!after.exists(f =>
-      before.contains(f) && f.startsWith("event_date=2024-01-01")))
+    val (holding, clean) = before.filter(_.startsWith("event_date=2024-01-01"))
+      .partition(f => spark.read.parquet(s"$path/$f")
+        .where(col("event_id").isin(130L, 131L)).count() > 0)
+    assert(holding.nonEmpty && !holding.exists(after.contains),
+      "a file holding an updated key kept its entry")
+    assert(clean.nonEmpty && clean.forall(after.contains),
+      "merge re-filed a file holding no batch key")
     // rerun with the same updates: same rows, no duplicates
     Snapshot.merge(spark, path, "event_date", updates, Seq("event_id"))
     assert(ids(Snapshot.readSnapshot(spark, path)) ==
       ids(snap))
+  }
+
+  test("merge reads only the partitions its batch touches") {
+    import spark.implicits._
+    val path = buildLayout()
+    Snapshot.init(spark, path, "event_date")
+    val before = Snapshot.currentFiles(spark, path)._2
+    val updates = Seq((130L, 3L, 1L, "2024-01-01"))
+      .toDF("event_id", "user_id", "ts_ms", "event_date")
+      .withColumn("event_date", col("event_date").cast("date"))
+    val read = TestJobs.recordsReadDuring(spark)(
+      Snapshot.merge(spark, path, "event_date", updates, Seq("event_id")): Unit)
+    val removed = before.filterNot(Snapshot.currentFiles(spark, path)._2.contains)
+    assert(removed.nonEmpty &&
+      removed.forall(_.startsWith("event_date=2024-01-01/")))
+    // the candidate scan reads date-1's 12 rows (of 36), the rewrite the
+    // removed files' rows again
+    val removedRows = spark.read.parquet(removed.map(f => s"$path/$f"): _*).count()
+    assert(read >= 12L && read <= 12L + removedRows,
+      s"merge read $read rows; one partition plus its rewrite is ${12L + removedRows}")
+    assert(Snapshot.readSnapshot(spark, path).count() == 36L)
+  }
+
+  test("deleteWhereMoR and updateWhere on a table maintained down to no files commit nothing") {
+    import spark.implicits._
+    Seq(false, true).foreach { lineage =>
+      val path = s"${tmp("graft-snap-nofiles")}/t"
+      Seq((1L, 3L, 10L, "2024-01-01"))
+        .toDF("event_id", "user_id", "ts_ms", "event_date")
+        .write.partitionBy("event_date").parquet(path)
+      Snapshot.init(spark, path, "event_date", rowIds = lineage)
+      assert(Snapshot.deleteWhereMoR(spark, path, "event_date",
+        col("event_id") === 1L)._2 == 1L)
+      Snapshot.maintain(spark, path, "event_date")
+      val v = Snapshot.currentVersion(spark, path).get
+      assert(Snapshot.filesOf(spark, path, v).isEmpty &&
+        Snapshot.deletesOf(spark, path, v).isEmpty,
+        s"maintain left entries behind (lineage=$lineage)")
+      assert(Snapshot.deleteWhereMoR(spark, path, "event_date", lit(true)) ==
+        (v, 0L))
+      assert(Snapshot.updateWhere(spark, path, "event_date", lit(true),
+        Map("ts_ms" -> lit(0L))) == (v, 0L))
+      assert(Snapshot.currentVersion(spark, path).get == v)
+      assert(Snapshot.readSnapshot(spark, path).count() == 0L)
+    }
   }
 
   test("schema evolution: an appended column widens the table; old files read NULL; maintenance keeps it") {
