@@ -2815,8 +2815,9 @@ object Analytics {
 
   // ---------------------------------------------------------------------
   // q81 — EQUALITY DELETES / STREAMING UPSERT graded through the hash
-  // gate: q63's MERGE reads and rewrites every touched partition, which
-  // a per-micro-batch upsert cannot afford at 100 TB. The equality-
+  // gate: q63's MERGE reads every touched partition and rewrites each
+  // file there holding a batch key, which a per-micro-batch upsert
+  // cannot afford at 100 TB. The equality-
   // delete tier (Iceberg v2) makes the upsert O(batch): land the new
   // images + equality-delete their keys in ONE commit, ZERO table
   // reads; readers subtract the key sidecars from files older than

@@ -3643,18 +3643,23 @@ object Snapshot {
     * partition value its key already lives under (the date-keyed upsert
     * every warehouse load runs); [[mergeAnywhere]] finds keys that
     * moved. `updates` must match the table's column set (use [[append]]
-    * for schema-evolving batches). */
+    * for schema-evolving batches). The batch's distinct keys collect to
+    * the driver once, O(batch) memory, as for SQL MERGE. */
   def merge(spark: SparkSession, path: String, partitionCol: String,
       updates: DataFrame, keyCols: Seq[String],
       sortCols: Seq[String] = Nil): Long = {
     require(keyCols.nonEmpty, "merge needs at least one key column")
     require(updates.columns.contains(partitionCol),
       s"merge updates lack partition column '$partitionCol'")
-    // native-typed literal list, so the touched-partition restriction
-    // is a planning-time PartitionFilter (a cast would defeat pruning)
-    val touched = updates.select(col(partitionCol)).distinct()
-      .collect().map(_.get(0)).toIndexedSeq
-    val keys = updates.select(keyCols.map(col): _*).distinct()
+    // one collect of the distinct (partition, key) pairs gives the
+    // touched partitions as a native-typed literal list (a planning-time
+    // PartitionFilter; a cast would defeat pruning) and the keys
+    val pairs = updates.select((partitionCol +: keyCols).map(col): _*)
+      .distinct().collect()
+    val touched = pairs.map(_.get(0)).distinct.toIndexedSeq
+    val keys = localRows(spark,
+      pairs.map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.tail)).distinct,
+      updates.select(keyCols.map(col): _*).schema)
     rewriteKeyed(spark, path, partitionCol, keys, sortCols)(
       upsertRows(keys, updates.drop(RowIdCol),
         Some(col(partitionCol).isin(touched: _*))))
@@ -3679,10 +3684,21 @@ object Snapshot {
     require(keyCols.nonEmpty, "mergeAnywhere needs at least one key column")
     (partitionCol +: keyCols).foreach(c => require(updates.columns.contains(c),
       s"mergeAnywhere updates lack column '$c'"))
-    val keys = updates.select(keyCols.map(col): _*).distinct()
+    val distinct = updates.select(keyCols.map(col): _*).distinct()
+    val keys = localRows(spark, distinct.collect(), distinct.schema)
     rewriteKeyed(spark, path, partitionCol, keys)(upsertRows(keys, updates, None))
       .getOrElse(throw new IllegalArgumentException(
         "mergeAnywhere with an empty updates batch"))
+  }
+
+  /** `rows` as a local relation: the batch keys' later reads (the
+    * candidate probe, the hit semi-join, the survivors' anti-join) take
+    * no job and never recompute the batch. */
+  private def localRows(spark: SparkSession,
+      rows: Array[org.apache.spark.sql.Row],
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.toSeq.asJava, schema)
   }
 
   /** The [[rewriteKeyed]] callback of [[merge]] and [[mergeAnywhere]]:
@@ -3728,7 +3744,8 @@ object Snapshot {
     * bytes. A concurrent commit that re-files a removed file or adds a
     * file to a partition this one rewrote or wrote into aborts it
     * ([[commit]]'s `replacedParts`); commits elsewhere rebase.
-    * Copy-on-write: outstanding deletion vectors refuse first. Returns
+    * Copy-on-write: outstanding deletion vectors refuse first, and so
+    * does a mid-evolution layout ([[requireUniformSpec]]). Returns
     * the committed version, if any. */
   private[graft] def rewriteKeyed(spark: SparkSession, path: String,
       partitionCol: String, keys: DataFrame, sortCols: Seq[String] = Nil)(
@@ -3739,6 +3756,10 @@ object Snapshot {
     if (probe.isEmpty) return None
     val h = headOf(spark, path)
     requireNoDeletes(h.lines, path, "MERGE")
+    // an old-spec row reads the active partition column as NULL, so a
+    // scope on it would miss the row and its survivors would restage
+    // into the default partition
+    requireUniformSpec(h.files, partitionCol, "MERGE")
     val candLines = keyCandidates(h, keys.schema, probe)
     val cand = candLines.map(pathOf)
     val lineage = rowIdsOn(h.meta)

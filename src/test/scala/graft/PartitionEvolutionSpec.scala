@@ -17,8 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    on the other's rows);
   *  - directory pruning survives on BOTH generations — each
   *    generation's scan keeps a partition filter on ITS spec column;
-  *  - partition-grain maintenance refuses mixed layouts LOUDLY and
-  *    works again after [[Snapshot.migratePartitionSpec]];
+  *  - partition-grain maintenance and the keyed merges refuse mixed
+  *    layouts LOUDLY; maintenance works again after
+  *    [[Snapshot.migratePartitionSpec]];
   *  - migration preserves rows byte-identically (the old partition
   *    column becomes a stored data column, recorded type), is
   *    row-preserving for the change feed, and carries row ids.
@@ -143,6 +144,26 @@ class PartitionEvolutionSpec extends AnyFunSuite {
     // single-spec again: maintenance works
     assert(Snapshot.migratePartitionSpec(spark, path, hourExpr).isEmpty)
     Snapshot.compact(spark, path, "event_hour", 1L << 30): Unit
+    assert(Snapshot.readSnapshot(spark, path).count() == 7)
+  }
+
+  test("merge and mergeAnywhere refuse the mixed layout before committing") {
+    val path = build("graft-pe-merge")
+    Snapshot.evolvePartitionSpec(spark, path, "event_hour")
+    val v = Snapshot.append(spark, path, "event_hour",
+      hourly(100L, "2024-01-04", 7))
+    // event_id 0 lives in an old-spec file: a merge scoped on the new
+    // column would miss it and keep both rows
+    val batch = hourly(0L, "2024-01-01", 0)
+    for (pcol <- Seq("event_hour", "event_date")) {
+      val ex = intercept[IllegalArgumentException](
+        Snapshot.merge(spark, path, pcol, batch, Seq("event_id")))
+      assert(ex.getMessage.contains("migratePartitionSpec"), ex.getMessage)
+    }
+    val ex = intercept[IllegalArgumentException](
+      Snapshot.mergeAnywhere(spark, path, "event_hour", batch, Seq("event_id")))
+    assert(ex.getMessage.contains("migratePartitionSpec"), ex.getMessage)
+    assert(Snapshot.currentVersion(spark, path).contains(v))
     assert(Snapshot.readSnapshot(spark, path).count() == 7)
   }
 
